@@ -32,86 +32,34 @@ from pyspark.sql import functions as F
 
 from ..functions import pq
 from ..functions import vectors as V
+from ..sources import cache
 
 _FIT_CAP = 4096
 
-# ---- deterministic artifact layout (r10, VERDICT r9 #5) -------------------
-# Index dirs are keyed by corpus path + CONTENT FINGERPRINT (r11, ADVICE:
-# path-only keys silently served stale codes after a corpus regeneration —
-# and the replay oracles read the same stale artifacts through the symlink,
-# so the value gate structurally could not catch it). The fingerprint folds
-# each source table's file list, byte sizes, and mtimes, so a regenerated
-# corpus gets a fresh dir and a rebuild. A per-kind `<kind>-current`
-# SYMLINK is atomically re-pointed at whichever corpus' artifacts were
-# built last; the registered DuckDB oracles replay the scan arithmetic by
-# reading through the symlink (engine always runs strictly before its
-# oracle in the gate and in the driver). The root is PER-USER (r11,
-# ADVICE: a fixed world-writable /tmp path lets a second user's runs
-# cross-contaminate replays).
-def _default_ann_root() -> str:
-    import tempfile
-
-    uid = os.getuid() if hasattr(os, "getuid") else "u"
-    return os.path.join(tempfile.gettempdir(), f"etlbs-annidx-{uid}")
+# Index artifacts live in the engine's one artifact store
+# (sources/cache.py): directories are keyed on the source tables'
+# content fingerprint, so a regenerated corpus gets a fresh directory
+# and a rebuild. A per-kind `<kind>-current` SYMLINK is atomically
+# re-pointed at whichever corpus' artifacts were used last; the
+# registered DuckDB oracles replay the scan arithmetic by reading
+# through the symlink (the engine always runs strictly before its oracle
+# in the gate and in the driver). ANN_ROOT is the store's root, which
+# the oracle SQL renders at import.
+ANN_ROOT = cache.ROOT
 
 
-ANN_ROOT = _default_ann_root()
-_ANN_FMT = "v2"  # bump to invalidate cached dirs on layout changes
-
-
-def corpus_fingerprint(sf_dir: str, tables=("embeddings",)) -> str:
-    """Content fingerprint of the artifact's source tables: file names,
-    sizes, and mtimes per table (footer-cheap — no data read), listed
-    RECURSIVELY so nested/hive-partitioned layouts fingerprint their
-    real parts (a top-level glob would see them as empty and resurrect
-    the stale-artifact bug — r11 code-review finding). Any rewrite of
-    the corpus changes the fingerprint and therefore the artifact
-    directory."""
-    import hashlib
-
-    from ..sources.catalog import parquet_part_files
-
-    parts = []
-    for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        for f in parquet_part_files(p):
-            try:
-                st = os.stat(f)
-                parts.append(f"{t}:{os.path.relpath(f, sf_dir)}"
-                             f":{st.st_size}:{st.st_mtime_ns}")
-            except FileNotFoundError:
-                parts.append(f"{t}:{os.path.relpath(f, sf_dir)}:missing")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
-
-
-def index_dir_for(kind: str, sf_dir: str, tables=("embeddings",),
-                  root: str | None = None) -> str:
-    """Deterministic per-(kind, corpus-content) artifact directory.
-    ``root`` overrides ANN_ROOT — registry callers pass the SAME
-    import-time constant their static oracle SQL was rendered with, so
-    engine writes and oracle reads can never disagree about the root
-    even if the module global is rebound later."""
-    import hashlib
-
-    tag = hashlib.md5(
-        f"{_ANN_FMT}:{os.path.abspath(sf_dir)}"
-        f":{corpus_fingerprint(sf_dir, tables)}".encode()
-    ).hexdigest()[:10]
-    d = os.path.join(root or ANN_ROOT, f"{kind}-{tag}")
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
-def point_current(kind: str, d: str, root: str | None = None) -> None:
-    """Atomically re-point <root>/<kind>-current at d, then garbage-
-    collect same-kind sibling dirs that are no longer referenced —
-    fingerprint-keyed dirs would otherwise accumulate one corpus-sized
-    artifact set per regeneration, forever (r11 code-review finding).
-    Safe under the single-writer protocol (the gate and the driver run
-    queries sequentially)."""
+def point_current(kind: str, d: str) -> None:
+    """Atomically re-point ``<kind>-current`` (beside ``d``) at d, then
+    garbage-collect same-kind sibling dirs that are no longer referenced
+    — fingerprint-keyed dirs would otherwise accumulate one corpus-sized
+    artifact set per regeneration, forever. Only names of the exact form
+    ``<kind>-<tag>`` are collected, so another kind sharing the prefix
+    (``ivfpq-incr`` under ``ivfpq``, or any other kind in the shared
+    root) always survives. Safe under the single-writer protocol (the
+    gate and the driver run queries sequentially)."""
     import shutil
 
-    root = root or ANN_ROOT
+    root = os.path.dirname(d)
     os.makedirs(root, exist_ok=True)
     tmp = os.path.join(root, f".{kind}-current.tmp")
     try:
@@ -121,19 +69,11 @@ def point_current(kind: str, d: str, root: str | None = None) -> None:
     os.symlink(d, tmp)
     os.replace(tmp, os.path.join(root, f"{kind}-current"))
     keep = os.path.basename(os.path.realpath(d))
-    prefix = f"{kind}-"
     for name in os.listdir(root):
-        if (name.startswith(prefix) and name != keep
-                and name != f"{kind}-current"
-                and not os.path.islink(os.path.join(root, name))
-                and os.path.isdir(os.path.join(root, name))):
-            # another kind sharing the prefix (e.g. 'ivfpq-incr' under
-            # 'ivfpq-') must survive: tags are fixed-width hex with no
-            # further dashes
-            rest = name[len(prefix):]
-            if "-" in rest:
-                continue
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+        p = os.path.join(root, name)
+        if (name != keep and cache.is_entry(kind, name)
+                and not os.path.islink(p) and os.path.isdir(p)):
+            shutil.rmtree(p, ignore_errors=True)
 
 
 # Write-side executed plans per artifact directory, keyed by realpath —
@@ -219,13 +159,10 @@ def write_artifact(df: DataFrame, dirpath: str,
 def _staged_overwrite(df: DataFrame, dirpath: str,
                       partition_by: str | None = None,
                       extra_files: dict[str, str] | None = None) -> None:
-    """The stage-and-swap write protocol, factored out of write_artifact
-    (r13 review) so the INDEX TABLE writes (build_pq_index /
-    build_ivfpq_index codes) use it too: a bare ``mode("overwrite")`` on
-    a shared fingerprint-keyed dir deletes a concurrent same-user
-    session's ``_temporary`` staging mid-write (observed on the qlr
-    weights dir, r11), and the registry's exists()-gated rebuilds are a
-    TOCTOU window where two sessions both decide to build. Staging is
+    """The stage-and-swap write protocol behind write_artifact: a bare
+    ``mode("overwrite")`` on a shared fingerprint-keyed dir deletes a
+    concurrent same-user session's ``_temporary`` staging mid-write
+    (observed on the qlr weights dir, r11). Staging is
     process-private; the swap is move-old-away + rename-new-in with a
     bounded retry. Moved-away dirs are deleted ONLY after the new
     artifact renamed in; if all attempts fail for a persistent
@@ -320,8 +257,8 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def build_pq_index(spark: SparkSession, sf_dir: str, index_dir: str,
                    m: int = 8, k: int = 16) -> dict:
-    """Fit + encode + persist. Returns the manifest dict. Idempotent per
-    directory (rebuild overwrites)."""
+    """Fit + encode + persist into ``index_dir`` (a private build dir of
+    the artifact store). Returns the manifest dict."""
     from ..sources.catalog import parquet_num_rows
 
     corpus = _corpus(spark, sf_dir)
@@ -333,17 +270,14 @@ def build_pq_index(spark: SparkSession, sf_dir: str, index_dir: str,
     sample = np.array([r.nv for r in fit_df.collect()])
     books = pq.fit_codebooks(sample, m=m, k=k, iters=10, seed=42)
 
-    _staged_overwrite(
-        corpus.select(
-            "vec_id", pq.encode_pandas(books)(F.col("nv")).alias("codes")
-        ), os.path.join(index_dir, "codes"))
+    corpus.select(
+        "vec_id", pq.encode_pandas(books)(F.col("nv")).alias("codes")
+    ).write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
 
     manifest = {"m": m, "k": k, "n": n, "dim": int(sample.shape[1]),
                 "books": books.tolist()}
-    tmp = os.path.join(index_dir, "_codebooks.tmp")
-    with open(tmp, "w") as f:
+    with open(os.path.join(index_dir, "codebooks.json"), "w") as f:
         json.dump(manifest, f)
-    os.replace(tmp, os.path.join(index_dir, "codebooks.json"))
     return manifest
 
 
@@ -476,13 +410,13 @@ def append_ivfpq_batch(spark: SparkSession, sf_dir: str, index_dir: str,
     (the text-index append contract at the vector layer). ``id_filter``
     is a Column predicate selecting the batch rows.
 
-    CALLER CONTRACT (r13 review): the append itself is NOT idempotent —
-    a retried batch duplicates vec_ids in the codes table, which makes
-    the engine top-k emit duplicate (q_id, vec_id) rows while the
-    replay oracle's GROUP BY folds them into one doubled ADC score (a
-    guaranteed gate divergence). Callers MUST guard with a sentinel the
-    way q_sim_index_incremental does: rmtree the codes dir on an
-    unmarked retry, append exactly once, then write `_BATCH_APPLIED`."""
+    CALLER CONTRACT: the append itself is NOT idempotent — a retried
+    batch duplicates vec_ids in the codes table, which makes the engine
+    top-k emit duplicate (q_id, vec_id) rows while the replay oracle's
+    GROUP BY folds them into one doubled ADC score (a guaranteed gate
+    divergence). q_sim_index_incremental therefore builds and appends
+    inside one private artifact-store build, which publishes the index
+    only after the append succeeded."""
     with open(os.path.join(index_dir, "ivfpq.json")) as f:
         manifest = json.load(f)
     cents = np.array(manifest["cents"], dtype=np.float64)
@@ -533,18 +467,18 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str, index_dir: str,
     books = pq.fit_codebooks(sample - cents[assign], m=m, k=k,
                              iters=10, seed=42)
 
-    _staged_overwrite(
+    (
         corpus.select("vec_id", "nv")
         .mapInPandas(_encode_with(cents, books),
-                     schema="vec_id long, cell int, codes array<int>"),
-        os.path.join(index_dir, "codes"), partition_by="cell")
+                     schema="vec_id long, cell int, codes array<int>")
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(os.path.join(index_dir, "codes"))
+    )
     manifest = {"n_cells": n_cells, "m": m, "k": k, "n": n,
                 "dim": int(sample.shape[1]),
                 "cents": cents.tolist(), "books": books.tolist()}
-    tmp = os.path.join(index_dir, "_ivfpq.tmp")
-    with open(tmp, "w") as f:
+    with open(os.path.join(index_dir, "ivfpq.json"), "w") as f:
         json.dump(manifest, f)
-    os.replace(tmp, os.path.join(index_dir, "ivfpq.json"))
     return manifest
 
 

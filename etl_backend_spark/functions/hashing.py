@@ -24,6 +24,7 @@ Scale notes
 
 from __future__ import annotations
 
+import functools
 from functools import reduce
 
 import numpy as np
@@ -240,9 +241,7 @@ MINHASH_A = [((2654435761 * (i + 1)) % (1 << 31)) | 1 for i in range(MINHASH_N)]
 MINHASH_B = [(40503 * (i + 7)) % (1 << 31) for i in range(MINHASH_N)]
 
 
-_MINHASH_UDF_CACHE: dict = {}
-
-
+@functools.cache
 def minhash_sig_py(k: int = 3, n: int = MINHASH_N):
     """Arrow-batched text → MinHash signature (array<long>): shingle in
     Python, ONE md5 per shingle (base hash = first 8 hex chars as uint32,
@@ -253,12 +252,11 @@ def minhash_sig_py(k: int = 3, n: int = MINHASH_N):
     sub-second at sf0.1 (the expression form re-hashed every shingle n
     times, interpreted).
 
-    MEMOIZED per (k, n): builders that persist the signature DataFrame rely
-    on Spark's cache manager matching the analyzed plan — a fresh UDF object
-    per call makes every invocation a distinct plan, so repeated builds
-    (bench reruns) would each leak a new cache entry instead of reusing one."""
-    if (k, n) in _MINHASH_UDF_CACHE:
-        return _MINHASH_UDF_CACHE[(k, n)]
+    MEMOIZED per (k, n) (functools.cache: it holds UDF identity, not
+    data): builders that persist the signature DataFrame rely on Spark's
+    cache manager matching the analyzed plan — a fresh UDF object per call
+    makes every invocation a distinct plan, so repeated builds (bench
+    reruns) would each leak a new cache entry instead of reusing one."""
     import hashlib
     import re
 
@@ -283,7 +281,6 @@ def minhash_sig_py(k: int = 3, n: int = MINHASH_N):
             out.append(perms.min(axis=1).astype(np.int64).tolist())
         return pd.Series(out)
 
-    _MINHASH_UDF_CACHE[(k, n)] = sig
     return sig
 
 
@@ -357,18 +354,6 @@ def minhash_oracle_sql_v2(shingle_cte: str, threshold: float,
     JOIN sig sb ON sb.doc_id = doc_b
     WHERE ({agree}) / {float(n)} >= {threshold}
     """
-
-
-def minhash_bands_long(sig: Column, bands: int = MINHASH_BANDS,
-                       rows: int = MINHASH_ROWS) -> Column:
-    """Band keys over a long-valued signature: ':'-joined decimal strings."""
-    keys = []
-    for b in range(bands):
-        parts = [
-            F.element_at(sig, b * rows + r + 1).cast("string") for r in range(rows)
-        ]
-        keys.append(F.concat_ws(":", *parts))
-    return F.array(*keys)
 
 
 def minhash_band_pairs(sig: Column, bands: int = MINHASH_BANDS,

@@ -222,10 +222,11 @@ def band_keys_pandas(bits: int, nbands: int, flips: int = 0):
         fl[b*flips:(b+1)*flips].
 
     The embedding column passes through untouched (same Arrow buffer
-    values), so downstream cosine kernels see identical bits. Assumes
-    finite embeddings: Spark/DuckDB order NaN above all numbers while
-    numpy comparisons return false — the corpus contract (and the
-    value-gating oracle) holds no NaN/inf vectors.
+    values), so downstream cosine kernels see identical bits. Requires
+    finite embeddings and raises ValueError on a batch holding NaN or
+    inf: Spark/DuckDB order NaN above all numbers while numpy
+    comparisons return false, and inf overflows the flip sort keys, so
+    a non-finite row would silently change bucket membership.
 
     Output schema (caller passes it to mapInPandas):
     ``vec_id long, embedding array<float>, keys array<long>[, fl
@@ -238,6 +239,11 @@ def band_keys_pandas(bits: int, nbands: int, flips: int = 0):
             if not len(pdf):
                 continue
             mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            if not np.isfinite(mat).all():
+                bad = pdf["vec_id"].to_numpy()[~np.isfinite(mat).all(axis=1)]
+                raise ValueError(
+                    f"band_keys_pandas: non-finite embedding values in "
+                    f"vec_id {bad[:5].tolist()}")
             n = len(pdf)
             keys = np.empty((n, nbands), dtype=np.int64)
             fl = (np.empty((n, nbands * flips), dtype=np.int32)

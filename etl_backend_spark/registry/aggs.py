@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..ann.index import ANN_ROOT as _ANN_ROOT
 from ..operators import aggregates, windows
+from ..sources import cache
 from ..sources.catalog import Catalog
 from . import register
 
@@ -3292,9 +3293,8 @@ def q_recsys_als(spark, sf_dir):
 
     model, types, ratings = als_recommendations(spark, sf_dir)
     users = ratings.select("user").distinct().orderBy("user").limit(5)
-    d = ann_index.index_dir_for(
-        "als", sf_dir, tables=("lineitem", "orders", "part"),
-        root=_ANN_ROOT)
+    d = cache.path("als", "v2",
+                   cache.fingerprint(sf_dir, ("lineitem", "orders", "part")))
     uf = (
         model.userFactors
         .join(F.broadcast(users.withColumnRenamed("user", "id")), "id")
@@ -3310,7 +3310,7 @@ def q_recsys_als(spark, sf_dir):
     )
     ann_index.write_artifact(uf.coalesce(1), os.path.join(d, "user_f"))
     ann_index.write_artifact(itf.coalesce(1), os.path.join(d, "item_f"))
-    ann_index.point_current("als", d, root=_ANN_ROOT)
+    ann_index.point_current("als", d)
     uf_p = spark.read.parquet(os.path.join(d, "user_f"))
     itf_p = spark.read.parquet(os.path.join(d, "item_f"))
     scored = (

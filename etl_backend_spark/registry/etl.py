@@ -11,6 +11,7 @@ import datetime
 
 from pyspark.sql import Row, functions as F
 
+from ..sources import cache
 from ..sources.catalog import SCHEMAS, Catalog
 from . import register
 
@@ -822,19 +823,17 @@ def ensure_bloom_table(spark, sf_dir):
     blooms sized to the keys-per-file load, into a tmp dir keyed by the
     SOURCE FINGERPRINT — rebuilds happen only when the testdata changes,
     every other call (including every timed lookup) just reopens the
-    manifest. Returns (ManifestTable, built: bool)."""
-    import hashlib
+    manifest. Returns (ManifestTable, built: bool).
+
+    The directory comes from the artifact store's key, but the table
+    publishes through its own ``_CURRENT`` pointer rather than a dir
+    rename: manifest entries hold absolute file paths, which a rename
+    would break."""
     import os
-    import tempfile
 
     from ..etl.manifest import ManifestTable
-    from ..sources.cache import file_fingerprint
 
-    src = f"{sf_dir}/orders.parquet"
-    key = hashlib.md5(f"v1:{file_fingerprint(src)}".encode()).hexdigest()[:12]
-    root = os.path.join(
-        tempfile.gettempdir(), f"etlbs-u{os.getuid()}-bloomtbl-{key}"
-    )
+    root = cache.path("bloomtbl", "v1", cache.fingerprint(sf_dir, ("orders",)))
     o = Catalog(spark, sf_dir).table("orders")
     if os.path.exists(os.path.join(root, "orders", "_CURRENT")):
         # reopen: probe geometry comes from the manifest entries, so the
@@ -930,20 +929,6 @@ def q_etl_backfill_day(spark, sf_dir):
     one-shot rollup: hash-equality proves the restatement healed the
     corrupted day without collateral damage. At 100 TB this is the
     difference between rewriting one day and rewriting years."""
-    import os
-    import tempfile
-
-    from ..sources.cache import file_fingerprint
-
-    src = f"{sf_dir}/events.parquet"
-    key = __import__("hashlib").md5(
-        f"bf1:{file_fingerprint(src)}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(
-        tempfile.gettempdir(), f"etlbs-u{os.getuid()}-backfill-{key}"
-    )
-    marker = os.path.join(out, "_BACKFILLED")
-
     ev = Catalog(spark, sf_dir).table("events")
     day = F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
 
@@ -953,7 +938,7 @@ def q_etl_backfill_day(spark, sf_dir):
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
 
-    if not os.path.exists(marker):
+    def build(out: str) -> None:
         bad_day = ev.select(day.alias("d")).agg(F.min("d")).collect()[0][0]
         corrupted = rollup(
             ev.filter(~((day == bad_day) & (F.col("event_type") == "click")))
@@ -965,7 +950,9 @@ def q_etl_backfill_day(spark, sf_dir):
             .option("partitionOverwriteMode", "dynamic")
             .parquet(out)
         )
-        open(marker, "w").close()
+
+    out, _ = cache.build("backfill", "bf1",
+                         cache.fingerprint(sf_dir, ("events",)), build)
     return (
         spark.read.parquet(out)
         # partition-type inference may read d back as DATE; the contract

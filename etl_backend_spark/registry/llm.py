@@ -18,6 +18,7 @@ from ..functions import hashing as H
 from ..functions import text as T
 from ..functions import vectors as V
 from ..functions.semdedup import EPS as _SEMDEDUP_EPS
+from ..sources import cache
 from ..sources.catalog import Catalog, parquet_num_rows
 from . import _md5_hex64_sql, register
 
@@ -480,8 +481,9 @@ MINHASH_INCR_BCAST_CAND = 1_000_000
 # ``_kb_meta.json`` sidecar STAGED INSIDE the bands dir (atomic with
 # the data); the ingest probe reads B back from the sidecar — kb is
 # engine-internal (no oracle replays it), so writer and prober only
-# have to agree with each other. Artifacts without a sidecar are
-# legacy 64-bucket builds.
+# have to agree with each other. A bands dir without a valid sidecar
+# is an error, never a guess: a wrong modulus would silently prune away
+# true duplicate pairs.
 #
 # Honest scale note (SCALE.md r14, still true per-B): a batch of K
 # distinct uniform band keys touches min(K, B) buckets, so pruning
@@ -491,7 +493,6 @@ MINHASH_INCR_BCAST_CAND = 1_000_000
 # index is ~8·10^11 rows, so B caps at 1024 (~15 GB per bucket dir,
 # multiple files inside) — directory-level pruning granularity; finer
 # skipping comes from row-group stats within buckets.
-MINHASH_BAND_KB_BUCKETS = 64  # legacy fixed count (pre-r15 artifacts)
 MINHASH_KB_TARGET_ROWS = 2_000_000
 MINHASH_KB_MIN, MINHASH_KB_MAX = 8, 1024
 _KB_META_NAME = "_kb_meta.json"
@@ -508,53 +509,54 @@ def _kb_buckets_for_rows(n_band_rows: int) -> int:
 
 
 def _read_kb_buckets(art: str) -> int:
-    """Bucket count the band index at ``art`` was written with — from
-    the staged sidecar, else the legacy fixed count."""
+    """Bucket count the band index at ``art`` was written with, from the
+    staged sidecar. Raises ValueError when the sidecar is missing or
+    invalid."""
     import json
     import os
 
+    meta = os.path.join(art, "bands", _KB_META_NAME)
     try:
-        with open(os.path.join(art, "bands", _KB_META_NAME)) as fh:
-            return int(json.load(fh)["kb_buckets"])
-    except (OSError, KeyError, ValueError):
-        return MINHASH_BAND_KB_BUCKETS
+        with open(meta) as fh:
+            b = int(json.load(fh)["kb_buckets"])
+    except (OSError, KeyError, TypeError, ValueError) as exc:
+        raise ValueError(f"band index sidecar {meta} missing or invalid: "
+                         f"{exc!r}") from exc
+    if b < 1:
+        raise ValueError(f"band index sidecar {meta}: kb_buckets={b}")
+    return b
 
 
 def minhash_base_sig_path(art: str) -> str:
-    """Base-signature dir of a minhash/clusters incremental artifact —
-    the r15 combined layout (``sig/is_base=true``) or the legacy
-    separate ``sig`` dir."""
+    """Base-signature dir of a minhash/clusters incremental artifact."""
     import os
 
-    p = os.path.join(art, "sig", "is_base=true")
-    return p if os.path.isdir(p) else os.path.join(art, "sig")
+    return os.path.join(art, "sig", "is_base=true")
 
 
 def minhash_batch_sig_path(art: str) -> str:
     """Staged batch-signature dir of a minhash/clusters incremental
-    artifact — r15 combined layout (``sig/is_base=false``) or the
-    legacy separate ``sig_batch`` dir. Shared with the O(batch)
-    receipt scripts and the layout-pinning tests."""
+    artifact. The combined is_base-partitioned write creates no
+    directory for an empty batch; ``_read_sig`` reads that as an empty
+    frame. Shared with the layout-pinning tests."""
     import os
 
-    p = os.path.join(art, "sig", "is_base=false")
-    return p if os.path.isdir(p) else os.path.join(art, "sig_batch")
+    return os.path.join(art, "sig", "is_base=false")
 
 
-def _band_kb(key):
-    """Partition bucket of a legacy STRING band key — md5-derived (same
-    formula family as the text index's _term_bucket). Kept for reading
-    pre-r14 artifacts (always 64 buckets); new artifacts use the
-    long-pair form below."""
-    return (
-        F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
-        % MINHASH_BAND_KB_BUCKETS
-    ).cast("int")
+def _read_sig(spark, path: str):
+    """(doc_id, sig) signatures at ``path`` — an empty frame when the
+    partition dir is absent (an empty batch writes no directory)."""
+    import os
+
+    if not os.path.isdir(path):
+        return spark.createDataFrame([], "doc_id long, sig array<long>")
+    return spark.read.parquet(path)
 
 
-def _band_kb_longs(k1, k2, buckets: int = MINHASH_BAND_KB_BUCKETS):
-    """Partition bucket of a LONG-PAIR band key (r14 artifact format —
-    see functions/hashing.minhash_band_pairs): xxhash64 is deterministic
+def _band_kb_longs(k1, k2, buckets: int):
+    """Partition bucket of a LONG-PAIR band key (see
+    functions/hashing.minhash_band_pairs): xxhash64 is deterministic
     (fixed seed 42) and engine-internal — no oracle ever replays kb, so
     it only has to agree between the artifact writer and the ingest
     probe (the writer stages the bucket count into the artifact's
@@ -574,11 +576,16 @@ def _band_explode(sig_df):
 
 
 def _parquet_dir_rows(path: str) -> int:
-    """Footer row count of an arbitrary parquet dir (no Spark job)."""
+    """Footer row count of an arbitrary parquet dir (no Spark job); 0
+    for an absent dir."""
+    import os
+
     import pyarrow.parquet as pq
 
     from ..sources.catalog import parquet_part_files
 
+    if not os.path.isdir(path):
+        return 0
     return sum(pq.ParquetFile(f).metadata.num_rows
                for f in parquet_part_files(path))
 
@@ -598,8 +605,8 @@ def minhash_incr_pairs(spark, art, batch_sig_path):
     signatures reach the estimate join through a broadcast semi-join on
     candidate ids. Above the gates every join falls back to the
     shuffle plan — same rows either way. Shared by the registered query
-    and scripts/bench_incr_obatch.py's fixed-batch-growing-base
-    receipt. The checkpoint blocks ride the returned plan; consumers
+    and clusters_incr_update. The checkpoint blocks ride the returned
+    plan; consumers
     that loop (bench's run_full, clusters_incr_update) release them via
     release_plan_checkpoints."""
     import os
@@ -608,56 +615,41 @@ def minhash_incr_pairs(spark, art, batch_sig_path):
 
     base_p = spark.read.parquet(minhash_base_sig_path(art))
     bands_base = spark.read.parquet(os.path.join(art, "bands"))
-    batch_sig = spark.read.parquet(batch_sig_path)
+    batch_sig = _read_sig(spark, batch_sig_path)
     # one footer pass, reused by the broadcast gate AND the kb
     # saturation estimate below (r14 ADVICE: it was computed twice)
     batch_rows = _parquet_dir_rows(batch_sig_path)
     small_batch = batch_rows <= MINHASH_INCR_BCAST_DOCS
 
-    # r14 artifact format: band keys as raw long PAIRS (k1, k2) instead
-    # of the ':'-joined decimal string — same candidate set (bijective),
-    # ~2.5x less band-index bytes scanned per ingest and long hashing
-    # instead of string hashing in the probe. Legacy string artifacts
-    # still read through the "key" branch.
-    legacy = "key" in bands_base.columns
-    if legacy:
-        bands_new = batch_sig.select(
-            "doc_id",
-            F.posexplode(H.minhash_bands_long(F.col("sig")))
-            .alias("band", "key"),
-        )
-        jk = ("band", "key")
-        kb_expr = _band_kb(F.col("key"))
-    else:
-        bands_new = _band_explode(batch_sig)
-        jk = ("band", "k1", "k2")
-        # bucket count from the artifact's staged sidecar (r15 — the
-        # writer adapts it to the base size); legacy artifacts are 64
-        kb_buckets = _read_kb_buckets(art)
-        kb_expr = _band_kb_longs(F.col("k1"), F.col("k2"), kb_buckets)
-    if "kb" in bands_base.columns:
-        if legacy:
-            kb_buckets = MINHASH_BAND_KB_BUCKETS
-        # kb-bucket partition pruning (r13 VERDICT #1): the batch's
-        # distinct kb set is bounded by the bucket count, so the collect
-        # is a ≤B-row O(batch) job, and the isin on the partition
-        # column prunes base DIRECTORIES — a small batch opens only the
-        # buckets its band keys hash to. Every base row that can
-        # equi-join a batch key satisfies the filter by construction
-        # (kb is a pure function of the key), so rows are unchanged.
-        # SATURATION GATE (r14): with K uniform band keys over B buckets
-        # the chance any bucket stays untouched is B*(1-1/B)^K — under
-        # 3% once K >= 8B — so a batch that big pays the collect job for
-        # an isin that prunes nothing; skip it (the filter is a pure
-        # optimization, rows identical either way) and scan all buckets.
-        # k_est over-counts distinct keys (duplicate-heavy batches), so
-        # the skip is conservative — it can only scan buckets a tighter
-        # estimate would have pruned, never drop one (r14 ADVICE).
-        k_est = batch_rows * H.MINHASH_BANDS
-        if k_est < 8 * kb_buckets:
-            kbs = [r[0] for r in bands_new
-                   .select(kb_expr.alias("kb")).distinct().collect()]
-            bands_base = bands_base.filter(F.col("kb").isin(kbs))
+    # band keys as raw long PAIRS (k1, k2): ~2.5x less band-index bytes
+    # scanned per ingest than a ':'-joined decimal string, and long
+    # hashing instead of string hashing in the probe
+    bands_new = _band_explode(batch_sig)
+    jk = ("band", "k1", "k2")
+    # bucket count from the artifact's staged sidecar (the writer adapts
+    # it to the base size); a missing sidecar raises
+    kb_buckets = _read_kb_buckets(art)
+    kb_expr = _band_kb_longs(F.col("k1"), F.col("k2"), kb_buckets)
+    # kb-bucket partition pruning (r13 VERDICT #1): the batch's
+    # distinct kb set is bounded by the bucket count, so the collect
+    # is a ≤B-row O(batch) job, and the isin on the partition
+    # column prunes base DIRECTORIES — a small batch opens only the
+    # buckets its band keys hash to. Every base row that can
+    # equi-join a batch key satisfies the filter by construction
+    # (kb is a pure function of the key), so rows are unchanged.
+    # SATURATION GATE (r14): with K uniform band keys over B buckets
+    # the chance any bucket stays untouched is B*(1-1/B)^K — under
+    # 3% once K >= 8B — so a batch that big pays the collect job for
+    # an isin that prunes nothing; skip it (the filter is a pure
+    # optimization, rows identical either way) and scan all buckets.
+    # k_est over-counts distinct keys (duplicate-heavy batches), so
+    # the skip is conservative — it can only scan buckets a tighter
+    # estimate would have pruned, never drop one (r14 ADVICE).
+    k_est = batch_rows * H.MINHASH_BANDS
+    if k_est < 8 * kb_buckets:
+        kbs = [r[0] for r in bands_new
+               .select(kb_expr.alias("kb")).distinct().collect()]
+        bands_base = bands_base.filter(F.col("kb").isin(kbs))
 
     def on(a, b, *extra):
         cond = None
@@ -767,8 +759,8 @@ def q_dedup_minhash_incremental(spark, sf_dir):
         "doc_id", (bucket < 90).alias("is_base"),
         H.minhash_sig_py(3)(F.col("text")).alias("sig"),
     )
-    art = ann_index.index_dir_for(
-        "mhlsh-incr", sf_dir, tables=("documents",), root=_ANN_ROOT)
+    art = cache.path("mhlsh-incr", "v2",
+                     cache.fingerprint(sf_dir, ("documents",)))
     # ONE combined signature write, hive-partitioned by is_base (r15,
     # r14 VERDICT #1 — was TWO stage-and-swap writes, base and batch,
     # each re-running its slice of the minhash pass and paying its own
@@ -786,8 +778,7 @@ def q_dedup_minhash_incremental(spark, sf_dir):
     # the just-persisted sig parquet (no second minhash pass), so every
     # later ingest streams it map-side instead of re-exploding and
     # shuffling the base per batch — the difference between O(batch)
-    # and O(corpus) ingest at 100 TB (receipt:
-    # scripts/bench_incr_obatch.py). Bucket count adapts to the base
+    # and O(corpus) ingest at 100 TB. Bucket count adapts to the base
     # size (footer rows, no job) and is staged into the artifact as
     # _kb_meta.json for the ingest probe (r15, r14 VERDICT #1).
     base_sig_dir = minhash_base_sig_path(art)
@@ -800,7 +791,7 @@ def q_dedup_minhash_incremental(spark, sf_dir):
         .repartition(buckets, F.col("kb")),
         os.path.join(art, "bands"), partition_by="kb",
         extra_files={_KB_META_NAME: json.dumps({"kb_buckets": buckets})})
-    ann_index.point_current("mhlsh-incr", art, root=_ANN_ROOT)
+    ann_index.point_current("mhlsh-incr", art)
     return minhash_incr_pairs(spark, art, minhash_batch_sig_path(art))
 
 
@@ -1036,8 +1027,8 @@ def q_sim_topk_ivf(spark, sf_dir):
 
     e = Catalog(spark, sf_dir).table("embeddings")
     corpus = e.select("vec_id", V.as_double(F.col("embedding")).alias("v"))
-    d = ann_index.index_dir_for("ivf", sf_dir, root=_ANN_ROOT)
-    if not os.path.exists(os.path.join(d, "_READY")):
+
+    def build(b):
         import pandas as pd
 
         from pyspark.ml.clustering import KMeans
@@ -1059,7 +1050,7 @@ def q_sim_topk_ivf(spark, sf_dir):
         (
             model.transform(feat).select("vec_id", "centroid")
             .write.mode("overwrite")
-            .parquet(os.path.join(d, "assign"))
+            .parquet(os.path.join(b, "assign"))
         )
         centroids = model.clusterCenters()
         queries = corpus.filter(F.col("vec_id") < 5).select(
@@ -1072,11 +1063,13 @@ def q_sim_topk_ivf(spark, sf_dir):
             for cid in np.argsort(dists)[:2]:
                 rows.append((int(r.q_id), int(cid)))
         _write_small_parquet(
-            os.path.join(d, "probes"),
+            os.path.join(b, "probes"),
             pd.DataFrame(rows, columns=["q_id", "centroid"]),
         )
-        open(os.path.join(d, "_READY"), "w").close()
-    ann_index.point_current("ivf", d, root=_ANN_ROOT)
+
+    d, _ = cache.build(
+        "ivf", "v2", cache.fingerprint(sf_dir, ("embeddings",)), build)
+    ann_index.point_current("ivf", d)
 
     assign = spark.read.parquet(os.path.join(d, "assign"))
     probes = spark.read.parquet(os.path.join(d, "probes"))
@@ -1105,10 +1098,10 @@ def q_sim_topk_ivf(spark, sf_dir):
 
 # PQ fit contract at scale: identical to IVF — codebooks fit on a bounded
 # seeded sample (k-means quality saturates at a few hundred points per
-# centroid) and cached per (sf_dir, n); at 100 TB the codebooks are a
-# ~KB artifact persisted next to the index and broadcast to every encoder.
+# centroid) and memoized per corpus content fingerprint; at 100 TB the
+# codebooks are a ~KB artifact persisted next to the index and broadcast
+# to every encoder.
 _PQ_FIT_CAP = 4096
-_PQ_CODEBOOK_CACHE: dict = {}
 
 
 @register("sim_topk_pq")  # rows-only: k-means codebooks are seed-stable in
@@ -1142,8 +1135,7 @@ def q_sim_topk_pq(spark, sf_dir):
     # halves (float32 embedding vs float64 nv).
     n = parquet_num_rows(sf_dir, "embeddings")  # footer read, no Spark job
 
-    books = _PQ_CODEBOOK_CACHE.get((sf_dir, n))
-    if books is None:
+    def fit():
         fit_df = e.select("embedding")
         if n > _PQ_FIT_CAP:
             fit_df = fit_df.sample(fraction=min(1.0, 1.1 * _PQ_FIT_CAP / n),
@@ -1152,8 +1144,10 @@ def q_sim_topk_pq(spark, sf_dir):
         # order, same doubles as the collected JVM-normalized form
         sample = V.l2_normalize_np_seq(
             np.stack(fit_df.toPandas()["embedding"].to_numpy()))
-        books = pq.fit_codebooks(sample, m=8, k=16, iters=10, seed=42)
-        _PQ_CODEBOOK_CACHE[(sf_dir, n)] = books
+        return pq.fit_codebooks(sample, m=8, k=16, iters=10, seed=42)
+
+    books = cache.memo(
+        "pq-books", cache.fingerprint(sf_dir, ("embeddings",)), fit)
 
     # one bounded collect serves both the ADC tables (normalized) and the
     # exact-rerank query vectors (raw); both derived driver-side from the
@@ -1915,9 +1909,7 @@ def exact_incr_new(spark, art, batch_path):
     occur in the batch, bounded by |batch|) broadcasts back into the
     anti-join, so every shuffle in the plan is batch-sized. Above the
     gate every join falls back to the plain shuffle anti-join — same
-    rows either way. Within-batch dedup keeps min doc_id per hash.
-    Shared by the registered query and
-    scripts/bench_incr_obatch.py's fixed-batch-growing-base receipt."""
+    rows either way. Within-batch dedup keeps min doc_id per hash."""
     import os
 
     base = spark.read.parquet(os.path.join(art, "hashes"))
@@ -1987,8 +1979,8 @@ def q_dedup_incremental(spark, sf_dir):
         "doc_id", F.sha2(F.col("text"), 256).alias("h"),
         (bucket < 90).alias("is_existing"),
     )
-    art = ann_index.index_dir_for(
-        "exact-incr", sf_dir, tables=("documents",), root=_ANN_ROOT)
+    art = cache.path("exact-incr", "v2",
+                     cache.fingerprint(sf_dir, ("documents",)))
     ann_index.write_artifact(
         tagged.filter(F.col("is_existing")).select("doc_id", "h"),
         os.path.join(art, "hashes"))
@@ -1998,7 +1990,7 @@ def q_dedup_incremental(spark, sf_dir):
     ann_index.write_artifact(
         tagged.filter(~F.col("is_existing")).select("doc_id", "h"),
         os.path.join(art, "batch"))
-    ann_index.point_current("exact-incr", art, root=_ANN_ROOT)
+    ann_index.point_current("exact-incr", art)
     return exact_incr_new(spark, art, os.path.join(art, "batch"))
 
 
@@ -2212,8 +2204,7 @@ def clusters_incr_update(spark, art, batch_sig_path=None):
     merged cluster id, plus one row per TOUCHED base cluster whose id
     participates in a merged component (kind='base_cluster'; its
     cluster_id is the new merged label, which every downstream consumer
-    applies as a remap old->new). Shared by the registered query and
-    scripts/bench_incr_obatch.py's fixed-batch-growing-base receipt."""
+    applies as a remap old->new)."""
     import os
 
     from ..operators.windows import release_plan_checkpoints
@@ -2255,7 +2246,7 @@ def clusters_incr_update(spark, art, batch_sig_path=None):
         raise RuntimeError(
             "dedup_clusters_incremental: contracted-graph propagation "
             "did not converge in 50 rounds — an invariant broke")
-    batch_docs = spark.read.parquet(batch_sig_path).select("doc_id")
+    batch_docs = _read_sig(spark, batch_sig_path).select("doc_id")
     # comp is the contracted-graph labels — bounded by 2x|batch pairs|,
     # so it broadcasts and the batch-docs hydration join stays map-side
     out_batch = (
@@ -2339,8 +2330,8 @@ def q_dedup_clusters_incremental(spark, sf_dir):
         "doc_id", (_clinc_bucket(F.col("doc_id")) < 90).alias("is_base"),
         H.minhash_sig_py(3)(F.col("text")).alias("sig"),
     )
-    art = ann_index.index_dir_for(
-        "clinc-incr", sf_dir, tables=("documents",), root=_ANN_ROOT)
+    art = cache.path("clinc-incr", "v2",
+                     cache.fingerprint(sf_dir, ("documents",)))
     # ONE combined is_base-partitioned signature write + size-adaptive
     # band-index bucket count with the staged _kb_meta.json sidecar —
     # the r15 layout, see q_dedup_minhash_incremental for the full
@@ -2408,7 +2399,7 @@ def q_dedup_clusters_incremental(spark, sf_dir):
                         F.col("lbl").alias("cluster_id")),
         os.path.join(art, "labels"))
     release_plan_checkpoints(base_lbl)
-    ann_index.point_current("clinc-incr", art, root=_ANN_ROOT)
+    ann_index.point_current("clinc-incr", art)
     return clusters_incr_update(spark, art)
 
 
@@ -2859,12 +2850,9 @@ def _mmr_candidates(spark, sf_dir):
 # recall pytests; this gate value-checks the whole QUERY path — scan,
 # candidate selection, rerank, ordering — the dedup_embedding
 # "oracle replays the approximation" precedent applied to artifacts.
-# single source of truth for the artifact root (r11 ADVICE): the oracle
-# paths are f-strings over ann.index.ANN_ROOT, rendered at IMPORT time —
-# and every engine call site passes the SAME import-time constant
-# (root=_ANN_ROOT) into index_dir_for/point_current, so rebinding
-# ann.index.ANN_ROOT later cannot desync engine writes from oracle
-# reads: both sides are frozen to the value this module imported
+# the oracle paths are f-strings over the artifact store's ROOT
+# (ann.index.ANN_ROOT), rendered at import; the store resolves ROOT once
+# at import too, so engine writes and oracle reads share one root
 _PQ_REPLAY_ORACLE = f"""
     WITH wt AS (
       SELECT q_id, sub, code, w
@@ -2956,15 +2944,13 @@ def q_sim_topk_pq_indexed(spark, sf_dir):
     persisted artifacts (_PQ_REPLAY_ORACLE above) — index dirs are
     deterministic per corpus and the query path re-points the
     `pq-current` symlink the static SQL reads."""
-    import os
-
     from ..ann import index as ann_index
 
-    d = ann_index.index_dir_for("pq", sf_dir, root=_ANN_ROOT)
-    if not os.path.exists(os.path.join(d, "codebooks.json")):
-        ann_index.build_pq_index(spark, sf_dir, d)
+    d, _ = cache.build(
+        "pq", "v2", cache.fingerprint(sf_dir, ("embeddings",)),
+        lambda b: ann_index.build_pq_index(spark, sf_dir, b))
     out = ann_index.query_pq_index(spark, sf_dir, d)
-    ann_index.point_current("pq", d, root=_ANN_ROOT)
+    ann_index.point_current("pq", d)
     return out
 
 
@@ -2986,15 +2972,13 @@ def q_sim_topk_ivfpq(spark, sf_dir):
     artifacts through the `ivfpq-current` symlink — including the
     nprobe cell restriction, which the oracle applies by joining the
     probes artifact exactly where the engine prunes hive partitions."""
-    import os
-
     from ..ann import index as ann_index
 
-    d = ann_index.index_dir_for("ivfpq", sf_dir, root=_ANN_ROOT)
-    if not os.path.exists(os.path.join(d, "ivfpq.json")):
-        ann_index.build_ivfpq_index(spark, sf_dir, d)
+    d, _ = cache.build(
+        "ivfpq", "v2", cache.fingerprint(sf_dir, ("embeddings",)),
+        lambda b: ann_index.build_ivfpq_index(spark, sf_dir, b))
     out = ann_index.query_ivfpq_index(spark, sf_dir, d)
-    ann_index.point_current("ivfpq", d, root=_ANN_ROOT)
+    ann_index.point_current("ivfpq", d)
     return out
 
 
@@ -3016,24 +3000,22 @@ def q_sim_index_incremental(spark, sf_dir):
     (base + appended cell files together) via `ivfpq-incr-current` —
     so the gate also proves the appended codes rank identically to
     base ones in the scan."""
-    import os
-
     from ..ann import index as ann_index
 
-    d = ann_index.index_dir_for("ivfpq-incr", sf_dir, root=_ANN_ROOT)
-    if not os.path.exists(os.path.join(d, "_BATCH_APPLIED")):
-        import shutil  # deterministic dir: an interrupted build+append
-        # must not double-append on retry — start clean
-        shutil.rmtree(os.path.join(d, "codes"), ignore_errors=True)
+    def build(b):
+        # base build + append in ONE private build: an interrupted
+        # sequence publishes nothing, so a retry never double-appends
         ann_index.build_ivfpq_index(
-            spark, sf_dir, d, id_filter=F.col("vec_id") % 10 != 0
+            spark, sf_dir, b, id_filter=F.col("vec_id") % 10 != 0
         )
         ann_index.append_ivfpq_batch(
-            spark, sf_dir, d, F.col("vec_id") % 10 == 0
+            spark, sf_dir, b, F.col("vec_id") % 10 == 0
         )
-        open(os.path.join(d, "_BATCH_APPLIED"), "w").close()
+
+    d, _ = cache.build(
+        "ivfpq-incr", "v2", cache.fingerprint(sf_dir, ("embeddings",)), build)
     out = ann_index.query_ivfpq_index(spark, sf_dir, d)
-    ann_index.point_current("ivfpq-incr", d, root=_ANN_ROOT)
+    ann_index.point_current("ivfpq-incr", d)
     return out
 
 
@@ -3528,8 +3510,8 @@ def q_graph_pagerank(spark, sf_dir):
     from ..operators.windows import release_plan_checkpoints
 
     ranks = pagerank_ranks(spark, sf_dir)
-    d = ann_index.index_dir_for(
-        "pagerank", sf_dir, tables=("orders", "lineitem"), root=_ANN_ROOT)
+    d = cache.path("pagerank", "v2",
+                   cache.fingerprint(sf_dir, ("orders", "lineitem")))
     # attribute=False: the 15-round checkpoint chain released its
     # source-plan entries as it went, so write-side scans cannot be
     # recovered — the audit reports this artifact's consumers as
@@ -3537,7 +3519,7 @@ def q_graph_pagerank(spark, sf_dir):
     ann_index.write_artifact(ranks, os.path.join(d, "ranks"),
                              attribute=False)
     release_plan_checkpoints(ranks)
-    ann_index.point_current("pagerank", d, root=_ANN_ROOT)
+    ann_index.point_current("pagerank", d)
     persisted = spark.read.parquet(os.path.join(d, "ranks"))
     return (
         persisted.orderBy(F.col("r").desc(), F.col("n").asc())
@@ -3673,9 +3655,6 @@ def q_graph_reachability(spark, sf_dir):
     """)
 
 
-_SEMDEDUP_CENT_CACHE: dict = {}
-
-
 # Assignment-artifact replay oracle (r11, the _PAGERANK_REPLAY_ORACLE
 # precedent applied to a DECISION PROCEDURE): the engine persists the
 # per-vector assignment record (vec_id, cell, sub, prio) — cell/sub from
@@ -3803,15 +3782,10 @@ def q_semdedup_kmeans(spark, sf_dir):
     n = parquet_num_rows(sf_dir, "embeddings")  # footer read, no Spark job
     k = sd.k_schedule(n)
 
-    # cache key is the corpus CONTENT fingerprint, not (path, rowcount):
+    # memo key is the corpus CONTENT fingerprint, not (path, rowcount):
     # a corpus regenerated in-process at the same path with the same row
-    # count must refit, matching the artifact dirs' fingerprint
-    # discipline (r12, ADVICE)
-    from ..ann.index import corpus_fingerprint
-
-    _ck = (corpus_fingerprint(sf_dir, ("embeddings",)), n)
-    cents = _SEMDEDUP_CENT_CACHE.get(_ck)
-    if cents is None:
+    # count must refit
+    def fit():
         fit_df = e.select("embedding")
         cap = min(n, max(8 * k, 4096), sd.FIT_CAP)
         if n > cap:
@@ -3822,8 +3796,10 @@ def q_semdedup_kmeans(spark, sf_dir):
         # sf10 — r12 profile of the incremental sibling)
         sample = V.l2_normalize_np_seq(
             np.stack(fit_df.toPandas()["embedding"].to_numpy()))
-        cents = sd.fit_centroids(sample, k=min(k, len(sample)), seed=11)
-        _SEMDEDUP_CENT_CACHE[_ck] = cents
+        return sd.fit_centroids(sample, k=min(k, len(sample)), seed=11)
+
+    cents = cache.memo(
+        "semdedup-cents", cache.fingerprint(sf_dir, ("embeddings",)), fit)
 
     def tag(batches):
         for pdf in batches:
@@ -3869,10 +3845,10 @@ def q_semdedup_kmeans(spark, sf_dir):
 
     from ..ann import index as ann_index
 
-    d = ann_index.index_dir_for(
-        "semdedup", sf_dir, tables=("embeddings",), root=_ANN_ROOT)
+    d = cache.path("semdedup", "v2",
+                   cache.fingerprint(sf_dir, ("embeddings",)))
     ann_index.write_artifact(pruned, os.path.join(d, "assign"))
-    ann_index.point_current("semdedup", d, root=_ANN_ROOT)
+    ann_index.point_current("semdedup", d)
     return (
         spark.read.parquet(os.path.join(d, "assign"))
         .select("vec_id", "cell", "keep", "dup_of")
@@ -3966,8 +3942,7 @@ def semdedup_incr_batch_rec(spark, d: str, batch, kept_src=None):
     ids, bounded by |batch|) before the cogroup, so the cell shuffle
     moves O(touched kept), not O(base kept) — measured: without the
     prune a fixed batch against a 10x base cost 2.4x; with it, flat
-    (receipt in BASELINE.md r12). Shared by q_semdedup_incremental
-    and scripts/bench_incr_obatch.py.
+    (receipt in BASELINE.md r12). Shared by q_semdedup_incremental.
 
     ``kept_src`` (r15): optional in-memory base record (same schema as
     the persisted artifact) — the registered query passes the
@@ -4146,10 +4121,8 @@ def q_semdedup_incremental(spark, sf_dir):
     n = parquet_num_rows(sf_dir, "embeddings")  # footer read, no Spark job
     n_base = max(1, (n * 9) // 10)  # deterministic k-schedule estimate
 
-    # content-fingerprint cache key — see q_semdedup_kmeans (r12, ADVICE)
-    _ck = (ann_index.corpus_fingerprint(sf_dir, ("embeddings",)), "incr", n)
-    cents = _SEMDEDUP_CENT_CACHE.get(_ck)
-    if cents is None:
+    # content-fingerprint memo key — see q_semdedup_kmeans
+    def fit():
         k = sd.k_schedule(n_base)
         fit_df = raw.filter(F.col("is_base")).select("embedding")
         cap = min(n_base, max(8 * k, 4096), sd.FIT_CAP)
@@ -4161,8 +4134,10 @@ def q_semdedup_incremental(spark, sf_dir):
         # sf10 (r12 profile); same rows, same driver order
         sample = V.l2_normalize_np_seq(
             np.stack(fit_df.toPandas()["embedding"].to_numpy()))
-        cents = sd.fit_centroids(sample, k=min(k, len(sample)), seed=11)
-        _SEMDEDUP_CENT_CACHE[_ck] = cents
+        return sd.fit_centroids(sample, k=min(k, len(sample)), seed=11)
+
+    cents = cache.memo(
+        "semdedup-incr-cents", cache.fingerprint(sf_dir, ("embeddings",)), fit)
 
     def tag(batches):
         for pdf in batches:
@@ -4203,8 +4178,8 @@ def q_semdedup_incremental(spark, sf_dir):
                                      "nv array<double>")
     )
 
-    d = ann_index.index_dir_for(
-        "semdedup-incr", sf_dir, tables=("embeddings",), root=_ANN_ROOT)
+    d = cache.path("semdedup-incr", "v2",
+                   cache.fingerprint(sf_dir, ("embeddings",)))
     # the base artifact IS the dedup index: per row it carries the
     # greedy record (cell, sub, prio, keep) AND the normalized vector,
     # so a later ingest never touches a base corpus row (r12 — the
@@ -4242,7 +4217,7 @@ def q_semdedup_incremental(spark, sf_dir):
         for f in futs:
             f.result()
     semdedup_incr_save_cents(d, cents)
-    ann_index.point_current("semdedup-incr", d, root=_ANN_ROOT)
+    ann_index.point_current("semdedup-incr", d)
     tagged.unpersist()
     release_plan_checkpoints(base_cp)
     return (
@@ -4309,14 +4284,8 @@ def q_embedding_pca(spark, sf_dir):
     e = Catalog(spark, sf_dir).table("embeddings")
     corpus = e.select("vec_id", V.as_double(F.col("embedding")).alias("v"))
     d, q = 64, 8
-    idx = ann_index.index_dir_for("pca", sf_dir, root=_ANN_ROOT)
-    comp_path = os.path.join(idx, "components")
-    if os.path.exists(os.path.join(idx, "_READY")):
-        pdf = pd.read_parquet(comp_path)
-        pdf = pdf.sort_values(["c", "dim"])
-        mean = pdf[pdf["c"] == 0]["mean"].to_numpy(dtype=np.float64)
-        comp = pdf["w"].to_numpy(dtype=np.float64).reshape(q, d)
-    else:
+
+    def build(out):
         def moments(batches):
             from pyspark import TaskContext
             pid = TaskContext.get().partitionId()
@@ -4344,14 +4313,22 @@ def q_embedding_pca(spark, sf_dir):
         comp = evecs[:, ::-1][:, :q].T              # (q, d), desc variance
         flip = np.sign(comp[np.arange(q), np.abs(comp).argmax(axis=1)])
         comp = comp * flip[:, None]
-        _write_small_parquet(comp_path, pd.DataFrame({
+        _write_small_parquet(os.path.join(out, "components"), pd.DataFrame({
             "c": np.repeat(np.arange(q, dtype=np.int32), d),
             "dim": np.tile(np.arange(d, dtype=np.int32), q),
             "mean": np.tile(mean, q),
             "w": comp.reshape(-1),
         }))
-        open(os.path.join(idx, "_READY"), "w").close()
-    ann_index.point_current("pca", idx, root=_ANN_ROOT)
+
+    idx, _ = cache.build(
+        "pca", "v2", cache.fingerprint(sf_dir, ("embeddings",)), build)
+    # the fitted components are read back from the artifact on every
+    # call (an exact float64 parquet round-trip), built or reused
+    pdf = pd.read_parquet(os.path.join(idx, "components"))
+    pdf = pdf.sort_values(["c", "dim"])
+    mean = pdf[pdf["c"] == 0]["mean"].to_numpy(dtype=np.float64)
+    comp = pdf["w"].to_numpy(dtype=np.float64).reshape(q, d)
+    ann_index.point_current("pca", idx)
 
     def project(batches):
         for pdf in batches:

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from ..functions import auth
 from ..multimodal import media as M
+from ..sources import cache
 from ..sources.catalog import Catalog
 from . import register
 
@@ -309,16 +310,13 @@ def q_source_files_binary(spark, sf_dir):
     (reference src/routes/ads.ts:12-39) exercised through the actual file
     source, not a path filter. The upload dir is keyed by sf_dir and built
     once; file content is deterministic per id so rebuilds converge."""
-    from ..sources.cache import cached_tmp_build, file_fingerprint
-
     p = Catalog(spark, sf_dir).table("part").filter(F.col("p_partkey") <= 200)
     media = M.synthesize_media(p, "p_partkey", "p_partkey")
-    # fingerprint = generator version (bump on payload-format change) +
-    # source-file identity, so neither an old checkout's dir nor a
+    # key = generator version (bump on payload-format change) + source
+    # content fingerprint, so neither an old checkout's dir nor a
     # regenerated testdata set can serve stale bytes
-    out_dir = cached_tmp_build(
-        "media",
-        f"v2:{file_fingerprint(f'{sf_dir}/part.parquet')}",
+    out_dir, _ = cache.build(
+        "media", "v2", cache.fingerprint(sf_dir, ("part",)),
         lambda b: M.write_media_dir(media, b),
     )
     files = M.read_binary_dir(spark, out_dir)

@@ -10,11 +10,14 @@ partitionings), and packing uses running-total windows.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..ann.index import ANN_ROOT as _ANN_ROOT
 from ..functions import text as T
+from ..sources import cache
 from ..sources.catalog import Catalog
 from . import _md5_hex64_sql, register
 
@@ -1052,39 +1055,14 @@ def ensure_text_index(spark, sf_dir):
     postings, written PARTITIONED BY an md5 term bucket so a keyword
     lookup prunes to one directory per query term — the third member of
     the index-vs-scan family (bloom point lookup, z-order range,
-    inverted-index keyword search). Fingerprint-cached like
-    ensure_bloom_table; at 100 TB each bucket splits into many files and
-    the posting scan stays fully parallel. Returns (postings_dir,
+    inverted-index keyword search). An artifact-store entry keyed on the
+    documents fingerprint; at 100 TB each bucket splits into many files
+    and the posting scan stays fully parallel. Returns (postings_dir,
     built: bool)."""
-    import hashlib as _hl
-    import os
-    import tempfile
-
-    from ..sources.cache import file_fingerprint
-
-    src = f"{sf_dir}/documents.parquet"
-    key = _hl.md5(f"v1:{file_fingerprint(src)}".encode()).hexdigest()[:12]
-    out = os.path.join(
-        tempfile.gettempdir(), f"etlbs-u{os.getuid()}-txtidx-{key}"
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out, False
     d = Catalog(spark, sf_dir).table("documents")
-    term = F.explode(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    ).alias("term")
-    postings = (
-        d.select("doc_id", term)
-        .filter(F.length("term") > 0)
-        .dropDuplicates(["term", "doc_id"])
-        .withColumn(
-            "tb",
-            (F.conv(F.substring(F.md5("term"), 1, 8), 16, 10)
-             .cast("long") % _TEXT_INDEX_BUCKETS).cast("int"),
-        )
-    )
-    postings.write.mode("overwrite").partitionBy("tb").parquet(out)
-    return out, True
+    return cache.build(
+        "txtidx", "v1", cache.fingerprint(sf_dir, ("documents",)),
+        lambda out: boolean_postings(d).write.partitionBy("tb").parquet(out))
 
 
 def _term_bucket_py(term: str) -> int:
@@ -1136,31 +1114,20 @@ def ensure_text_index_incremental(spark, sf_dir):
     partitionBy(tb) write. Parquet's append adds files inside touched
     bucket directories without rewriting existing ones (pytest-pinned:
     the base files survive byte-identical), so maintenance cost is
-    O(batch postings), not O(corpus). A `_BATCH_APPLIED` marker makes
-    the append idempotent across reruns — the manifest txn-token
-    pattern at the index layer. Returns (postings_dir, built)."""
-    import hashlib as _hl
-    import os
-    import tempfile
-
-    from ..sources.cache import file_fingerprint
-
-    src = f"{sf_dir}/documents.parquet"
-    key = _hl.md5(f"v1incr:{file_fingerprint(src)}".encode()).hexdigest()[:12]
-    out = os.path.join(
-        tempfile.gettempdir(), f"etlbs-u{os.getuid()}-txtinc-{key}"
-    )
-    marker = os.path.join(out, "_BATCH_APPLIED")
-    if os.path.exists(marker):
-        return out, False
-
+    O(batch postings), not O(corpus). Base build and append run inside
+    one private artifact-store build, so the index publishes exactly
+    once, with the batch applied exactly once. Returns (postings_dir,
+    built)."""
     d = Catalog(spark, sf_dir).table("documents")
-    base = boolean_postings(d.filter(F.col("doc_id") % 10 != 0))
-    base.write.mode("overwrite").partitionBy("tb").parquet(out)
-    batch = boolean_postings(d.filter(F.col("doc_id") % 10 == 0))
-    batch.write.mode("append").partitionBy("tb").parquet(out)
-    open(marker, "w").close()
-    return out, True
+
+    def build(out):
+        boolean_postings(d.filter(F.col("doc_id") % 10 != 0)).write \
+            .partitionBy("tb").parquet(out)
+        boolean_postings(d.filter(F.col("doc_id") % 10 == 0)).write \
+            .mode("append").partitionBy("tb").parquet(out)
+
+    return cache.build(
+        "txtinc", "v1", cache.fingerprint(sf_dir, ("documents",)), build)
 
 
 def boolean_postings(docs):
@@ -1239,37 +1206,22 @@ def ensure_text_index_positional(spark, sf_dir):
 
     Like a real IR index, BUILD TIME also materializes what scoring
     needs so no query re-touches corpus text or runs an extra stats
-    action: a ``<dir>-len`` table (doc_id, dl) from the same
-    tokenization pass, and ``<dir>-len/_stats.json`` holding n_docs and
-    the EXACT integer token sum (avgdl derived in python — engine-
-    independent). Fingerprint-cached; returns (postings_dir, built);
-    ``doc_length_dir()``/``load_index_stats()`` derive the rest."""
-    import hashlib as _hl
-    import json
-    import os
-    import tempfile
-
-    from ..sources.cache import file_fingerprint
-
-    src = f"{sf_dir}/documents.parquet"
-    key = _hl.md5(f"v2pos:{file_fingerprint(src)}".encode()).hexdigest()[:12]
-    out = os.path.join(
-        tempfile.gettempdir(), f"etlbs-u{os.getuid()}-txtpos-{key}"
-    )
-    len_dir = doc_length_dir(out)
-    if os.path.exists(os.path.join(out, "_SUCCESS")) and \
-            os.path.exists(os.path.join(len_dir, "_stats.json")):
-        return out, False
+    action: a ``len`` table (doc_id, dl) beside ``postings`` inside the
+    artifact, from the same tokenization pass, and ``len/_stats.json``
+    holding n_docs and the EXACT integer token sum (avgdl derived in
+    python — engine-independent). An artifact-store entry; returns
+    (postings_dir, built); ``doc_length_dir()``/``load_index_stats()``
+    derive the rest."""
     d = Catalog(spark, sf_dir).table("documents")
-    positional_postings(d).write.mode(
-        "overwrite").partitionBy("tb").parquet(out)
-    dl = doc_lengths(d)
-    dl.write.mode("overwrite").parquet(len_dir)
-    st = dl.agg(F.count(F.lit(1)).alias("n"),
-                F.sum("dl").alias("s")).collect()[0]  # bounded 1-row
-    with open(os.path.join(len_dir, "_stats.json"), "w") as fh:
-        json.dump({"n_docs": int(st.n), "dl_sum": int(st.s)}, fh)
-    return out, True
+
+    def build(out):
+        idx = os.path.join(out, "postings")
+        positional_postings(d).write.partitionBy("tb").parquet(idx)
+        _write_index_stats(idx, [_append_doc_lengths(idx, d)])
+
+    art, built = cache.build(
+        "txtpos", "v3", cache.fingerprint(sf_dir, ("documents",)), build)
+    return os.path.join(art, "postings"), built
 
 
 def positional_postings(docs):
@@ -1314,99 +1266,50 @@ def ensure_text_index_positional_incremental(spark, sf_dir):
     INTEGER adds (n_docs += batch count, dl_sum += batch sum) — exact
     and order-independent, so the maintained stats equal a full
     rebuild's bit-for-bit and every downstream float (avgdl, idf)
-    matches. A `_BATCH_APPLIED` marker makes the append idempotent
-    across reruns. Returns (postings_dir, built)."""
-    import hashlib as _hl
-    import json
-    import os
-    import tempfile
+    matches. Build, append and stats run inside one private
+    artifact-store build, so concurrent builders never interleave and
+    a crash publishes nothing. Returns (postings_dir, built)."""
+    d = Catalog(spark, sf_dir).table("documents")
+    base = d.filter(F.col("doc_id") % 10 != 0)
+    batch = d.filter(F.col("doc_id") % 10 == 0)
 
-    from ..sources.cache import file_fingerprint
-
-    src = f"{sf_dir}/documents.parquet"
-    key = _hl.md5(f"v1posinc:{file_fingerprint(src)}".encode()).hexdigest()[:12]
-    out = os.path.join(
-        tempfile.gettempdir(), f"etlbs-u{os.getuid()}-txtposinc-{key}"
-    )
-    len_dir = doc_length_dir(out)
-    marker = os.path.join(out, "_BATCH_APPLIED")
-    if os.path.exists(marker):
-        return out, False
-
-    # The build+append+marker sequence below is NOT safe to interleave:
-    # two sessions that both miss the marker (TOCTOU) would race a bare
-    # overwrite against a bare append on the shared fingerprint-keyed
-    # dir — duplicated batch postings plus a stats sidecar that no
-    # longer matches the files (r13 ADVICE; the same race
-    # _staged_overwrite closed for the other artifacts). An O_EXCL lock
-    # file serializes builders; the loser waits (bounded) for the
-    # winner's marker instead of writing.
-    import shutil
-    import time
-
-    lock = f"{out}.lock"
-    fd = None
-    deadline = time.monotonic() + 600
-    while fd is None:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, str(os.getpid()).encode())
-        except FileExistsError:
-            if os.path.exists(marker):
-                return out, False
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"positional-index build lock {lock} held past the "
-                    "600s bound with no _BATCH_APPLIED marker — a peer "
-                    "builder crashed without cleanup; remove the lock "
-                    "file to retry"
-                )
-            time.sleep(0.5)
-    try:
-        if os.path.exists(marker):  # peer finished between check & lock
-            return out, False
-        # a previous builder that died mid-sequence leaves a partial
-        # dir with no marker — start clean under the lock
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(len_dir, ignore_errors=True)
-
-        d = Catalog(spark, sf_dir).table("documents")
-        base = d.filter(F.col("doc_id") % 10 != 0)
-        batch = d.filter(F.col("doc_id") % 10 == 0)
-
-        positional_postings(base).write.mode(
-            "overwrite").partitionBy("tb").parquet(out)
-        dl_base = doc_lengths(base)
-        dl_base.write.mode("overwrite").parquet(len_dir)
-        st = dl_base.agg(F.count(F.lit(1)).alias("n"),
-                         F.sum("dl").alias("s")).collect()[0]
-        stats = {"n_docs": int(st.n), "dl_sum": int(st.s)}
-
+    def build(out):
+        idx = os.path.join(out, "postings")
+        positional_postings(base).write.partitionBy("tb").parquet(idx)
+        base_st = _append_doc_lengths(idx, base)
         # the ingest: O(batch) appended files + two integer adds
         positional_postings(batch).write.mode(
-            "append").partitionBy("tb").parquet(out)
-        dl_batch = doc_lengths(batch)
-        dl_batch.write.mode("append").parquet(len_dir)
-        bst = dl_batch.agg(F.count(F.lit(1)).alias("n"),
-                           F.sum("dl").alias("s")).collect()[0]
-        stats = {"n_docs": stats["n_docs"] + int(bst.n),
-                 "dl_sum": stats["dl_sum"] + int(bst.s or 0)}
-        tmp = os.path.join(len_dir, "._stats.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(stats, fh)
-        os.replace(tmp, os.path.join(len_dir, "_stats.json"))
-        open(marker, "w").close()
-    finally:
-        os.close(fd)
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
-    return out, True
+            "append").partitionBy("tb").parquet(idx)
+        _write_index_stats(idx, [base_st, _append_doc_lengths(idx, batch)])
+
+    art, built = cache.build(
+        "txtposinc", "v2", cache.fingerprint(sf_dir, ("documents",)), build)
+    return os.path.join(art, "postings"), built
 
 
 def doc_length_dir(idx_dir: str) -> str:
-    return f"{idx_dir}-len"
+    """The (doc_id, dl) table beside a positional index's postings."""
+    return os.path.join(os.path.dirname(idx_dir), "len")
+
+
+def _append_doc_lengths(idx_dir: str, docs) -> tuple[int, int]:
+    """Append ``docs``' (doc_id, dl) rows to the index's length table;
+    returns their (count, token sum) from one bounded 1-row job."""
+    dl = doc_lengths(docs)
+    dl.write.mode("append").parquet(doc_length_dir(idx_dir))
+    st = dl.agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")) \
+        .collect()[0]
+    return int(st.n), int(st.s or 0)
+
+
+def _write_index_stats(idx_dir: str, parts) -> None:
+    """Sum per-part (count, token sum) into ``len/_stats.json``."""
+    import json
+
+    with open(os.path.join(doc_length_dir(idx_dir), "_stats.json"),
+              "w") as fh:
+        json.dump({"n_docs": sum(n for n, _ in parts),
+                   "dl_sum": sum(t for _, t in parts)}, fh)
 
 
 def load_index_stats(idx_dir: str) -> dict:
@@ -1573,8 +1476,6 @@ def q_bm25_incremental(spark, sf_dir):
     return _bm25_over_index(spark, idx_dir, ["spark", "merge"])
 
 
-_BPE_MERGES_CACHE: dict = {}
-
 #: symbol separator for the BPE replay oracle's string-encoded
 #: segmentations — chr(31) (unit separator), a control character the
 #: whitespace-split word stream cannot produce from any realistic text
@@ -1661,23 +1562,19 @@ def q_tokenize_bpe(spark, sf_dir):
     order by a recursive CTE — so per-document token counts are
     integer-exact cross-engine. Only the train (which merges win)
     stays pinned by the pure-Python reference pytest."""
-    from ..ann import index as ann_index
-    from ..functions import bpe
-    from ..sources.cache import file_fingerprint
-
-    key = file_fingerprint(f"{sf_dir}/documents.parquet")
-    merges = _BPE_MERGES_CACHE.get(key)
-    if merges is None:
-        d = Catalog(spark, sf_dir).table("documents")
-        merges = bpe.train_merges(bpe.word_freq_table(d), n_merges=32)
-        _BPE_MERGES_CACHE[key] = merges
-
     import os
 
     import pandas as pd
 
-    art = ann_index.index_dir_for(
-        "bpe", sf_dir, tables=("documents",), root=_ANN_ROOT)
+    from ..ann import index as ann_index
+    from ..functions import bpe
+
+    d = Catalog(spark, sf_dir).table("documents")
+    fp = cache.fingerprint(sf_dir, ("documents",))
+    merges = cache.memo("bpe", fp, lambda: bpe.train_merges(
+        bpe.word_freq_table(d), n_merges=32))
+
+    art = cache.path("bpe", "v2", fp)
     ann_index._write_small_parquet(
         os.path.join(art, "merges"),
         pd.DataFrame({
@@ -1685,9 +1582,8 @@ def q_tokenize_bpe(spark, sf_dir):
             "a": [a for a, _ in merges],
             "b": [b for _, b in merges],
         }))
-    ann_index.point_current("bpe", art, root=_ANN_ROOT)
+    ann_index.point_current("bpe", art)
 
-    d = Catalog(spark, sf_dir).table("documents")
     words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     return d.select(
         "doc_id",
@@ -1695,8 +1591,6 @@ def q_tokenize_bpe(spark, sf_dir):
         bpe.token_count_udf(merges)(words).alias("n_tokens"),
     )
 
-
-_UNIGRAM_CACHE: dict = {}
 
 # Viterbi replay oracle (r12, the _BPE_REPLAY_ORACLE's probabilistic
 # sibling): the hard-EM TRAIN is float/iterative (not SQL-expressible);
@@ -1793,32 +1687,24 @@ def q_tokenize_unigram(spark, sf_dir):
     EM fit (which pieces survive, their probabilities) stays pinned by
     the hand-computable-corpus + reconstruction + determinism
     pytests."""
-    from ..functions import unigram
-    from ..sources.cache import file_fingerprint
-
-    key = file_fingerprint(f"{sf_dir}/documents.parquet")
-    logp = _UNIGRAM_CACHE.get(key)
-    if logp is None:
-        from ..functions import bpe
-
-        d = Catalog(spark, sf_dir).table("documents")
-        logp = unigram.train_unigram(bpe.word_freq_table(d))
-        _UNIGRAM_CACHE[key] = logp
-
     import os
 
     import pandas as pd
 
     from ..ann import index as ann_index
+    from ..functions import bpe, unigram
 
-    art = ann_index.index_dir_for(
-        "unigram", sf_dir, tables=("documents",), root=_ANN_ROOT)
+    d = Catalog(spark, sf_dir).table("documents")
+    fp = cache.fingerprint(sf_dir, ("documents",))
+    logp = cache.memo("unigram", fp, lambda: unigram.train_unigram(
+        bpe.word_freq_table(d)))
+
+    art = cache.path("unigram", "v2", fp)
     ann_index._write_small_parquet(
         os.path.join(art, "vocab"),
         pd.DataFrame({"piece": list(logp), "lp": list(logp.values())}))
-    ann_index.point_current("unigram", art, root=_ANN_ROOT)
+    ann_index.point_current("unigram", art)
 
-    d = Catalog(spark, sf_dir).table("documents")
     words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     return d.select(
         "doc_id",
@@ -1983,15 +1869,14 @@ def q_quality_classifier_lr(spark, sf_dir):
     lr = LogisticRegression(maxIter=20, regParam=0.0, standardization=True)
     model = lr.fit(vec.filter(F.col("split") == "train"))
     w = [float(x) for x in model.coefficients]
-    d = ann_index.index_dir_for(
-        "qlr", sf_dir, tables=("documents",), root=_ANN_ROOT)
+    d = cache.path("qlr", "v2", cache.fingerprint(sf_dir, ("documents",)))
     ann_index.write_artifact(
         spark.createDataFrame(
             [(w[0], w[1], w[2], w[3], float(model.intercept))],
             "w1 double, w2 double, w3 double, w4 double, b double",
         ).coalesce(1),
         os.path.join(d, "weights"))
-    ann_index.point_current("qlr", d, root=_ANN_ROOT)
+    ann_index.point_current("qlr", d)
     wt = spark.read.parquet(os.path.join(d, "weights"))
     margin = (
         F.col("w1") * F.col("f_nwords") + F.col("w2") * F.col("f_wordlen")

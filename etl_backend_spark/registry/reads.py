@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from ..functions import scalars
 from ..operators import filters, joins, pagination, scans
 from ..plans.query_builder import SearchParams, ads_search, ads_search_total
+from ..sources import cache
 from ..sources.catalog import Catalog
 from . import register
 
@@ -1161,12 +1162,9 @@ def q_sink_orc_roundtrip(spark, sf_dir):
     (integer-exact columns, so no float-order caveats). Completes the
     format matrix: parquet (everywhere), JSON (source/sink), CSV
     (roundtrip), binaryFile (source_files_binary), ORC here."""
-    from ..sources.cache import cached_tmp_build, file_fingerprint
-
     o = Catalog(spark, sf_dir).table("orders")
-    out = cached_tmp_build(
-        "orc",
-        f"v1:{file_fingerprint(f'{sf_dir}/orders.parquet')}",
+    out, _ = cache.build(
+        "orc", "v1", cache.fingerprint(sf_dir, ("orders",)),
         lambda d: o.write.mode("overwrite").orc(d),
     )
     back = spark.read.orc(out)
@@ -1187,12 +1185,9 @@ def q_source_text_lines(spark, sf_dir):
     read back via ``spark.read.text`` (one row per line, a single `value`
     column — the log-file intake shape) and re-parsed with split/cast.
     Round-trip parity against the parquet original is the oracle."""
-    from ..sources.cache import cached_tmp_build, file_fingerprint
-
     d = Catalog(spark, sf_dir).table("documents").filter(F.col("doc_id") < 200)
-    out = cached_tmp_build(
-        "text",
-        f"v1:{file_fingerprint(f'{sf_dir}/documents.parquet')}",
+    out, _ = cache.build(
+        "text", "v1", cache.fingerprint(sf_dir, ("documents",)),
         lambda b: d.select(
             F.concat_ws("\t", F.col("doc_id"), F.col("n_chars")).alias("value")
         ).write.mode("overwrite").text(b),
@@ -1222,14 +1217,11 @@ def q_source_xml_roundtrip(spark, sf_dir):
     reader parses it back to the identical bits. Extends the format
     matrix: parquet / JSON / CSV / text / ORC / binaryFile / VARIANT /
     XML."""
-    from ..sources.cache import cached_tmp_build, file_fingerprint
-
     c = Catalog(spark, sf_dir).table("customer").select(
         "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
     )
-    out = cached_tmp_build(
-        "xml",
-        f"v1:{file_fingerprint(f'{sf_dir}/customer.parquet')}",
+    out, _ = cache.build(
+        "xml", "v1", cache.fingerprint(sf_dir, ("customer",)),
         lambda d: c.write.mode("overwrite").format("xml")
         .option("rootTag", "customers").option("rowTag", "customer").save(d),
     )
@@ -1269,7 +1261,7 @@ def q_join_salted(spark, sf_dir):
     measured no better than full salting at 10M rows). Manual salting is
     the recipe for the cases AQE's skew-join can't rescue: streaming
     state, aggregation skew, or a build side that arrives pre-partitioned
-    (BASELINE.md skew A/B: scripts/bench_skew_ab.py). Plan-gated in
+    (BASELINE.md skew A/B). Plan-gated in
     tests/test_skew.py (one sequence-explode, no union)."""
     from ..operators import joins
 

@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from . import cache
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 SCHEMAS: dict[str, StructType] = {
@@ -297,7 +299,7 @@ def _events_granularity(path: str) -> str:
 
     The sidecar is written into the private build directory BEFORE the
     atomic rename that publishes the layout (see events_partitioned_path /
-    cached_tmp_build), so a published layout always carries it. If it is
+    cache.build), so a published layout always carries it. If it is
     ever absent anyway (hand-deleted, foreign layout), fall back to the
     WIDEST granularity: "month" slop only over-widens the event_date
     bounds (extra directories scanned, rows re-filtered by the exact ts
@@ -337,8 +339,6 @@ def events_partitioned_path(spark: SparkSession, sf_dir: str) -> str:
     table collapses to one dir instead of 30 tiny per-file tasks). The
     chosen unit is recorded in a ``_GRANULARITY`` sidecar so the
     time-range loader can derive correct event_date bounds."""
-    from .cache import cached_tmp_build, file_fingerprint
-
     src = f"{sf_dir}/events.parquet"
 
     def build(out: str) -> None:
@@ -369,7 +369,7 @@ def events_partitioned_path(spark: SparkSession, sf_dir: str) -> str:
                 .write.partitionBy("event_date")
                 .parquet(out)
             )
-            # `out` here is cached_tmp_build's PRIVATE build dir: the
+            # `out` here is the artifact store's PRIVATE build dir: the
             # sidecar lands before the atomic rename publishes the layout,
             # so no reader can ever see partitioned data without it. A
             # crash on this line leaves only the unpublished build dir
@@ -381,7 +381,8 @@ def events_partitioned_path(spark: SparkSession, sf_dir: str) -> str:
 
     # v3: adaptive granularity (v2 wrote one dir per day regardless of
     # volume; v1 assumed a nanos source)
-    return cached_tmp_build("events-daily", f"v3:{file_fingerprint(src)}", build)
+    return cache.build("events-daily", "v3",
+                       cache.fingerprint(sf_dir, ("events",)), build)[0]
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
@@ -462,46 +463,75 @@ def bucketed_fact_tables(spark: SparkSession, sf_dir: str | None = None,
     target-partition-size), set once at ingest.
 
     Returns (lineitem_table_name, orders_table_name) — session-catalog
-    names; data dirs are cached per (source fingerprint, n_buckets) so
-    rebuilds only happen when the testdata changes."""
-    from .layout import ensure_bucketed_table
-
+    names; data dirs are artifact-store entries per (source fingerprint,
+    n_buckets), so rebuilds only happen when the testdata changes."""
     sf_dir = sf_dir or DEFAULT_SF_DIR
     if n_buckets is None:
         n_buckets = adaptive_bucket_count(
             spark, f"{sf_dir}/lineitem.parquet", f"{sf_dir}/orders.parquet"
         )
-    names = []
-    for tbl, col in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
-        name, loc = _bucket_cache_name(
-            "bkt", tbl, f"etlbs_{tbl}_b", n_buckets,
-            f"{sf_dir}/{tbl}.parquet")
-        ensure_bucketed_table(
-            spark, load_table(spark, tbl, sf_dir), name, loc, col, n_buckets
-        )
-        names.append(name)
-    return names[0], names[1]
-
-
-def _bucket_cache_name(prefix: str, tbl: str, name_prefix: str,
-                       n_buckets: int, src: str) -> tuple[str, str]:
-    """(table name, tempdir location) for a fingerprint-keyed bucketed
-    layout — ONE definition of the md5 cache key + path template (r13
-    review: three verbatim copies meant a version bump or key-scheme
-    change applied to one copy silently left the others serving stale
-    layouts)."""
-    import hashlib
-    import tempfile
-
-    from .cache import file_fingerprint
-
-    key = hashlib.md5(
-        f"v1:{n_buckets}:{file_fingerprint(src)}".encode()
-    ).hexdigest()[:12]
-    loc = os.path.join(
-        tempfile.gettempdir(), f"etlbs-u{os.getuid()}-{prefix}-{tbl}-{key}"
+    return tuple(
+        _bucketed_table(spark, load_table(spark, tbl, sf_dir), f"bkt-{tbl}",
+                        sf_dir, tbl, col, n_buckets)
+        for tbl, col in (("lineitem", "l_orderkey"), ("orders", "o_orderkey"))
     )
-    return f"{name_prefix}{key}", loc
+
+
+def _bucketed_table(spark: SparkSession, df: DataFrame, kind: str,
+                    sf_dir: str, src_table: str, bucket_col: str,
+                    n_buckets: int, partition_col: str | None = None) -> str:
+    """Declare a bucketed+sorted (optionally also partitioned) EXTERNAL
+    parquet table over an artifact-store entry, writing the data first
+    if the entry is not published yet. Returns the session-catalog name.
+
+    Bucket metadata lives in the session catalog, not in the files — so
+    the data is written once (into the store's private build dir, under
+    a throwaway table name that is dropped before the dir is published)
+    and every session then declares the same CLUSTERED BY spec over the
+    published LOCATION (a metadata-only CREATE TABLE; Spark trusts the
+    spec because the bucket id is encoded in the file names its own
+    bucketed write produced). A build that crashes halfway publishes
+    nothing, so it can never be declared as a table.
+
+    The pre-write ``repartition(n_buckets, bucket_col)`` matters twice:
+    DataFrame hash-repartitioning and bucketing use the same
+    pmod(murmur3) assignment, so each task holds exactly one bucket and
+    writes exactly ONE file per bucket — the condition under which Spark
+    honors SORTED BY and elides the join's per-partition Sort as well as
+    its Exchange."""
+    version = f"v1:{n_buckets}"
+    fp = cache.fingerprint(sf_dir, (src_table,))
+    name = "etlbs_" + os.path.basename(
+        cache.path(kind, version, fp)).replace("-", "_")
+    if spark.catalog.tableExists(name):
+        return name
+
+    def write(out: str) -> None:
+        tmp_name = f"{name}_build{os.getpid()}"
+        spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")  # an earlier crash
+        w = df.repartition(n_buckets, F.col(bucket_col)).write
+        if partition_col:
+            w = w.partitionBy(partition_col)
+        (
+            w.bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
+            .option("path", out).saveAsTable(tmp_name)
+        )
+        spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
+
+    loc, _ = cache.build(kind, version, fp, write)
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    cols = ", ".join(f"{c} {t}" for c, t in types.items()
+                     if c != partition_col)
+    parts = (f"PARTITIONED BY ({partition_col} {types[partition_col]}) "
+             if partition_col else "")
+    spark.sql(
+        f"CREATE TABLE {name} ({cols}) USING parquet {parts}"
+        f"CLUSTERED BY ({bucket_col}) SORTED BY ({bucket_col}) "
+        f"INTO {n_buckets} BUCKETS LOCATION '{loc}'"
+    )
+    if partition_col:
+        spark.sql(f"MSCK REPAIR TABLE {name}")
+    return name
 
 
 def bucketed_events_table(spark: SparkSession, sf_dir: str | None = None,
@@ -514,19 +544,12 @@ def bucketed_events_table(spark: SparkSession, sf_dir: str | None = None,
     Same one-time-write amortization argument as bucketed_fact_tables;
     at 100 TB the events table is bucketed at ingest and the whole
     per-user analytics family becomes shuffle-free."""
-    from .layout import ensure_bucketed_table
-
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    src = f"{sf_dir}/events.parquet"
     if n_buckets is None:
-        n_buckets = adaptive_bucket_count(spark, src)
-    name, loc = _bucket_cache_name("bkt", "events", "etlbs_events_b",
-                                   n_buckets, src)
-    ensure_bucketed_table(
-        spark, load_table(spark, "events", sf_dir), name, loc,
-        "user_id", n_buckets,
-    )
-    return name
+        n_buckets = adaptive_bucket_count(spark, f"{sf_dir}/events.parquet")
+    return _bucketed_table(spark, load_table(spark, "events", sf_dir),
+                           "bkt-events", sf_dir, "events", "user_id",
+                           n_buckets)
 
 
 def event_date_bounds(spark: SparkSession, sf_dir: str | None,
@@ -564,19 +587,12 @@ def partitioned_bucketed_events_table(spark: SparkSession,
     exchanges, which is exactly the dashboard/metrics query shape at
     100 TB: scan two days of directories, aggregate per user without
     moving a row."""
-    from .layout import ensure_partitioned_bucketed_table
-
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    src = f"{sf_dir}/events.parquet"
     if n_buckets is None:
-        n_buckets = adaptive_bucket_count(spark, src)
-    name, loc = _bucket_cache_name("pbkt", "events", "etlbs_events_pb",
-                                   n_buckets, src)
-    ensure_partitioned_bucketed_table(
-        spark, events_with_date(spark, sf_dir), name, loc,
-        "event_date", "user_id", n_buckets,
-    )
-    return name
+        n_buckets = adaptive_bucket_count(spark, f"{sf_dir}/events.parquet")
+    return _bucketed_table(spark, events_with_date(spark, sf_dir),
+                           "pbkt-events", sf_dir, "events", "user_id",
+                           n_buckets, partition_col="event_date")
 
 
 def events_with_date(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:

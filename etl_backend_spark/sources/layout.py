@@ -46,95 +46,6 @@ def cobucketed_join(spark: SparkSession, left_table: str, right_table: str,
     return spark.table(left_table).join(spark.table(right_table), on=on)
 
 
-def ensure_bucketed_table(spark: SparkSession, df: DataFrame, name: str,
-                          location: str, bucket_col: str,
-                          n_buckets: int) -> str:
-    """Idempotently provide a bucketed+sorted EXTERNAL parquet table.
-
-    Bucket metadata lives in the session catalog, not in the files — so the
-    data is written once (first caller), and every later session merely
-    re-declares the same CLUSTERED BY spec over the existing LOCATION (a
-    metadata-only CREATE TABLE; Spark trusts the spec because the bucket id
-    is encoded in the file names its own bucketed write produced).
-
-    The pre-write ``repartition(n_buckets, bucket_col)`` matters twice:
-    DataFrame hash-repartitioning and bucketing use the same
-    pmod(murmur3) assignment, so each task holds exactly one bucket and
-    writes exactly ONE file per bucket — the condition under which Spark
-    honors SORTED BY and elides the join's per-partition Sort as well as
-    its Exchange. On a real cluster this one-time co-located write is the
-    standard amortization for a fact-fact join that recurs per query."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    if spark.catalog.tableExists(name):
-        return name
-    if os.path.isdir(location):
-        cols = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {name} ({cols}) USING parquet "
-            f"CLUSTERED BY ({bucket_col}) SORTED BY ({bucket_col}) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{location}'"
-        )
-        return name
-    (
-        df.repartition(n_buckets, F.col(bucket_col))
-        .write.bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .option("path", location)
-        .saveAsTable(name)
-    )
-    return name
-
-
-def ensure_partitioned_bucketed_table(spark: SparkSession, df: DataFrame,
-                                      name: str, location: str,
-                                      partition_col: str, bucket_col: str,
-                                      n_buckets: int) -> str:
-    """Idempotent PARTITIONED + BUCKETED external table — the production
-    events layout: partition dirs give plan-time pruning on the time
-    axis, bucketing gives shuffle-free keyed aggregation/joins on the
-    entity axis, in ONE table. Re-declaration over an existing LOCATION
-    is metadata-only plus a partition recovery (the dirs are
-    self-describing); Spark trusts the bucket spec from its own file
-    naming, same as ensure_bucketed_table."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    if spark.catalog.tableExists(name):
-        return name
-    if os.path.isdir(location):
-        cols = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.schema.fields if f.name != partition_col
-        )
-        ptype = next(
-            f.dataType.simpleString() for f in df.schema.fields
-            if f.name == partition_col
-        )
-        spark.sql(
-            f"CREATE TABLE {name} ({cols}) USING parquet "
-            f"PARTITIONED BY ({partition_col} {ptype}) "
-            f"CLUSTERED BY ({bucket_col}) SORTED BY ({bucket_col}) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{location}'"
-        )
-        spark.sql(f"MSCK REPAIR TABLE {name}")
-        return name
-    (
-        df.repartition(n_buckets, F.col(bucket_col))
-        .write.partitionBy(partition_col)
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .option("path", location)
-        .saveAsTable(name)
-    )
-    return name
-
-
 def zorder_value(a, b, bits: int = 18):
     """Morton (Z-order) interleave of two non-negative integer columns:
     bit k of `a` lands at position 2k, bit k of `b` at 2k+1. Sorting by this

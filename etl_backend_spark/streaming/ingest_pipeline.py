@@ -48,8 +48,7 @@ keys broadcast (micro-batches are broadcast-sized by construction; the
 ``broadcast_batch=False`` escape hatch plans the plain shuffle instead),
 the indexes stream map-side through semi-joins, and the only O(corpus)
 touch per batch is the columnar scan of the joined index columns — the
-same measured shape as exact_incr_new / minhash_incr_pairs
-(scripts/bench_incr_obatch.py receipts).
+same measured shape as exact_incr_new / minhash_incr_pairs.
 """
 
 from __future__ import annotations

@@ -113,12 +113,11 @@ def test_crashed_build_publishes_nothing(monkeypatch, tmp_path):
     """A builder that dies AFTER writing data but BEFORE the sidecar leaves
     no published layout at all: the private build dir is discarded and the
     next caller rebuilds from scratch — a reader can never observe
-    partitioned data without its _GRANULARITY."""
-    import tempfile
+    partitioned data without its _GRANULARITY. Also: a builder that loses
+    the publish race discards its own copy and the winner's stays."""
+    from etl_backend_spark.sources import cache
 
-    from etl_backend_spark.sources.cache import cached_tmp_build
-
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(cache, "ROOT", str(tmp_path))
     calls = []
 
     def dying_build(build_dir: str) -> None:
@@ -127,7 +126,7 @@ def test_crashed_build_publishes_nothing(monkeypatch, tmp_path):
         raise RuntimeError("killed between data write and sidecar")
 
     with pytest.raises(RuntimeError, match="killed between"):
-        cached_tmp_build("crashtest", "v1:x", dying_build)
+        cache.build("crashtest", "v1", "x", dying_build)
     assert not os.path.isdir(calls[0])  # build dir cleaned up
     published = [p for p in os.listdir(tmp_path) if "crashtest" in p]
     assert published == []  # nothing renamed into place
@@ -137,8 +136,104 @@ def test_crashed_build_publishes_nothing(monkeypatch, tmp_path):
         with open(os.path.join(build_dir, "_GRANULARITY"), "w") as fh:
             fh.write("day")
 
-    out = cached_tmp_build("crashtest", "v1:x", good_build)
-    assert _events_granularity(out) == "day"  # rebuild succeeds
+    out, built = cache.build("crashtest", "v1", "x", good_build)
+    assert built and _events_granularity(out) == "day"  # rebuild succeeds
+    assert cache.build("crashtest", "v1", "x", dying_build) == (out, False)
+
+    # racing loser: a peer publishes while this builder is still writing;
+    # the rename fails, the loser's private copy is removed and the
+    # winner's published dir is what every caller sees
+    def losing_build(build_dir: str) -> None:
+        os.makedirs(build_dir)
+        with open(os.path.join(build_dir, "_GRANULARITY"), "w") as fh:
+            fh.write("week")
+        winner = cache.path("racetest", "v1", "x")
+        os.makedirs(winner)
+        with open(os.path.join(winner, "_GRANULARITY"), "w") as fh:
+            fh.write("day")
+
+    out, _ = cache.build("racetest", "v1", "x", losing_build)
+    assert _events_granularity(out) == "day"
+    assert [p for p in os.listdir(tmp_path) if "racetest" in p] == [
+        os.path.basename(out)]
+
+
+def test_point_current_gc_spares_other_kinds(monkeypatch, tmp_path):
+    """point_current's sibling cleanup collects only ``<kind>-<tag>``
+    dirs of its own kind: in the shared store root, kinds that share a
+    prefix (``ivfpq`` / ``ivfpq-incr``), other stores' entries and
+    in-flight private build dirs all survive."""
+    from etl_backend_spark.ann.index import point_current
+    from etl_backend_spark.sources import cache
+
+    monkeypatch.setattr(cache, "ROOT", str(tmp_path))
+    old, new = (cache.path("ivfpq", "v2", fp) for fp in ("a", "b"))
+    others = [cache.path(k, "v2", "a") for k in
+              ("ivfpq-incr", "events-daily", "bkt-events", "pq")]
+    building = cache.path("ivfpq", "v2", "c") + ".build-123"
+    for d in [old, new, building, *others]:
+        os.makedirs(d)
+    point_current("ivfpq", new)
+    assert not os.path.isdir(old)
+    assert all(os.path.isdir(d) for d in [new, building, *others])
+    assert os.path.realpath(os.path.join(tmp_path, "ivfpq-current")) == \
+        os.path.realpath(new)
+
+
+def test_crashed_bucketed_build_is_rebuilt(spark, monkeypatch, tmp_path):
+    """A bucketed-table write that dies halfway (half its bucket files
+    on disk) must not be declared as a finished table by a later call:
+    the next call rebuilds, and the table holds every source row."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from etl_backend_spark.sources import catalog
+
+    sf = tmp_path / "sf"
+    src = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    src.write.parquet(str(sf / "events.parquet"))  # fresh fingerprint
+    want = src.count()
+
+    real_option = DataFrameWriter.option
+    real_save = DataFrameWriter.saveAsTable
+
+    def option(self, key, value):
+        if key == "path":
+            self._crash_path = value
+        return real_option(self, key, value)
+
+    def crash_halfway(self, name, *args, **kwargs):
+        real_save(self, name, *args, **kwargs)
+        parts = sorted(p for p in os.listdir(self._crash_path)
+                       if p.startswith("part-"))
+        for p in parts[: len(parts) // 2]:
+            os.remove(os.path.join(self._crash_path, p))
+        raise RuntimeError("killed mid-write")
+
+    monkeypatch.setattr(DataFrameWriter, "option", option)
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", crash_halfway)
+    with pytest.raises(RuntimeError, match="killed mid-write"):
+        catalog.bucketed_events_table(spark, str(sf), n_buckets=4)
+    monkeypatch.undo()
+
+    name = catalog.bucketed_events_table(spark, str(sf), n_buckets=4)
+    assert spark.table(name).count() == want
+
+
+def test_minhash_missing_kb_sidecar_raises(tmp_path):
+    """A band index without its _kb_meta.json sidecar (or with a
+    corrupt one) is an error, not a silent 64-bucket guess that would
+    prune away true duplicate pairs."""
+    from etl_backend_spark.registry import llm as L
+
+    art = tmp_path / "art"
+    (art / "bands").mkdir(parents=True)
+    with pytest.raises(ValueError, match="sidecar"):
+        L._read_kb_buckets(str(art))
+    (art / "bands" / L._KB_META_NAME).write_text("{\"kb\": 8}")
+    with pytest.raises(ValueError, match="sidecar"):
+        L._read_kb_buckets(str(art))
+    (art / "bands" / L._KB_META_NAME).write_text("{\"kb_buckets\": 16}")
+    assert L._read_kb_buckets(str(art)) == 16
 
 
 def test_published_layout_always_has_sidecar(spark):

@@ -1033,7 +1033,7 @@ def test_pq_indexed_equals_adhoc(spark):
     assert sorted(map(tuple, adhoc)) == sorted(map(tuple, indexed))
 
 
-def test_index_dir_rekeys_on_corpus_change(tmp_path):
+def test_index_dir_rekeys_on_corpus_change(tmp_path, monkeypatch):
     """r11 ADVICE (medium): artifact dirs must be keyed by corpus CONTENT,
     not path alone — a regenerated corpus at the same path previously kept
     serving stale codes (and the replay oracles read the same stale
@@ -1043,6 +1043,7 @@ def test_index_dir_rekeys_on_corpus_change(tmp_path):
     import os
 
     from etl_backend_spark.ann import index as ann_index
+    from etl_backend_spark.sources import cache
 
     # the fingerprint stats names/sizes/mtimes — it never opens parquet,
     # so a dummy part file exercises the rekey logic without fixture
@@ -1053,30 +1054,39 @@ def test_index_dir_rekeys_on_corpus_change(tmp_path):
     victim = sf / "embeddings.parquet" / "part=0" / "part-0.parquet"
     victim.write_bytes(b"x" * 64)
     root = str(tmp_path / "annroot")  # isolated artifact root
+    monkeypatch.setattr(cache, "ROOT", root)
 
-    d1 = ann_index.index_dir_for("pq", str(sf), root=root)
+    def index_dir():
+        d = cache.path("pq", "v2",
+                       cache.fingerprint(str(sf), ("embeddings",)))
+        os.makedirs(d, exist_ok=True)
+        return d
+
+    d1 = index_dir()
     # same content -> same dir (stable cache key)
-    assert ann_index.index_dir_for("pq", str(sf), root=root) == d1
+    assert index_dir() == d1
 
     # rewrite the corpus (size change) -> new dir; a top-level-only
     # lister would fingerprint the nested layout as empty and keep d1
     with open(victim, "ab") as f:
         f.write(b"\0")
-    d2 = ann_index.index_dir_for("pq", str(sf), root=root)
+    d2 = index_dir()
     assert d2 != d1
 
     # mtime-only change (same size, e.g. regenerated identical-size drop)
     # also re-keys
     st = os.stat(victim)
     os.utime(victim, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
-    d3 = ann_index.index_dir_for("pq", str(sf), root=root)
+    d3 = index_dir()
     assert d3 != d2
 
     # point_current garbage-collects unreferenced same-kind siblings
     # (fingerprint-keyed dirs would otherwise leak one corpus-sized
     # artifact set per regeneration) without touching other kinds
-    d_other = ann_index.index_dir_for("pqx", str(sf), root=root)
-    ann_index.point_current("pq", d3, root=root)
+    d_other = cache.path("pqx", "v2",
+                         cache.fingerprint(str(sf), ("embeddings",)))
+    os.makedirs(d_other)
+    ann_index.point_current("pq", d3)
     assert os.path.isdir(d3) and os.path.isdir(d_other)
     assert not os.path.isdir(d1) and not os.path.isdir(d2)
     assert os.path.realpath(os.path.join(root, "pq-current")) == \
@@ -1133,9 +1143,10 @@ def test_sim_topk_ivfpq_recall_and_partition_pruning(spark):
     # partition pruning visible in the plan of the scan
     import os
 
-    from etl_backend_spark.ann import index as ann_index
+    from etl_backend_spark.sources import cache
 
-    d = ann_index.index_dir_for("ivfpq", SF_DIR)
+    d = cache.path("ivfpq", "v2",
+                   cache.fingerprint(SF_DIR, ("embeddings",)))
     assert os.path.exists(os.path.join(d, "ivfpq.json"))
     plan = got_df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell" in plan, plan
@@ -2019,10 +2030,11 @@ def test_unigram_tokenizer_semantics_and_apply(spark):
            for r in QUERIES["tokenize_unigram"](spark, SF_DIR).collect()}
     assert len(out) == 500
     # replay a sample locally with the SAME cached vocab
-    from etl_backend_spark.registry.pipeline import _UNIGRAM_CACHE
-    from etl_backend_spark.sources.cache import file_fingerprint
+    from etl_backend_spark.sources import cache
 
-    vocab = _UNIGRAM_CACHE[file_fingerprint(f"{SF_DIR}/documents.parquet")]
+    vocab = cache.memo(
+        "unigram", cache.fingerprint(SF_DIR, ("documents",)),
+        lambda: pytest.fail("tokenize_unigram did not memoize its vocab"))
     docs = {r.doc_id: r.text for r in
             spark.read.parquet(f"{SF_DIR}/documents.parquet")
             .filter(F.col("doc_id") < 20).collect()}
@@ -2412,9 +2424,9 @@ def test_clusters_incremental_skewed_mega_cluster(spark, tmp_path):
     import duckdb
     import numpy as np
 
-    from etl_backend_spark.ann import index as ann_index
     from etl_backend_spark.registry import ORACLES, QUERIES
     from etl_backend_spark.registry import llm as L
+    from etl_backend_spark.sources import cache
 
     def is_batch(i):
         h = hashlib.md5(f"clinc:{i}".encode()).hexdigest()[:8]
@@ -2459,8 +2471,8 @@ def test_clusters_incremental_skewed_mega_cluster(spark, tmp_path):
 
     # (c) the ingest pair plan under skew: base band index streams
     # map-side through the broadcast gate, never shuffled
-    art = ann_index.index_dir_for(
-        "clinc-incr", str(d), tables=("documents",))
+    art = cache.path(
+        "clinc-incr", "v2", cache.fingerprint(str(d), ("documents",)))
     pairs = L.minhash_incr_pairs(
         spark, art, L.minhash_batch_sig_path(art))
     plan = pairs._jdf.queryExecution().executedPlan().toString()
@@ -2569,9 +2581,9 @@ def test_incremental_ingest_shuffle_fallback_plans(spark, tmp_path,
 
     import numpy as np
 
-    from etl_backend_spark.ann import index as ann_index
     from etl_backend_spark.registry import QUERIES
     from etl_backend_spark.registry import llm as L
+    from etl_backend_spark.sources import cache
 
     rng = np.random.RandomState(13)
     vocab = [f"w{j}" for j in range(5000)]
@@ -2591,10 +2603,10 @@ def test_incremental_ingest_shuffle_fallback_plans(spark, tmp_path,
     ex_rows = sorted(map(tuple,
                          QUERIES["dedup_incremental"](
                              spark, str(d)).collect()))
-    mh_art = ann_index.index_dir_for(
-        "mhlsh-incr", str(d), tables=("documents",))
-    ex_art = ann_index.index_dir_for(
-        "exact-incr", str(d), tables=("documents",))
+    mh_art = cache.path(
+        "mhlsh-incr", "v2", cache.fingerprint(str(d), ("documents",)))
+    ex_art = cache.path(
+        "exact-incr", "v2", cache.fingerprint(str(d), ("documents",)))
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -2696,9 +2708,9 @@ def test_minhash_band_index_kb_pruning(spark, tmp_path):
 
     import numpy as np
 
-    from etl_backend_spark.ann import index as ann_index
     from etl_backend_spark.registry import QUERIES
     from etl_backend_spark.registry import llm as L
+    from etl_backend_spark.sources import cache
 
     rng = np.random.RandomState(7)
     vocab = [f"w{j}" for j in range(5000)]
@@ -2713,8 +2725,8 @@ def test_minhash_band_index_kb_pruning(spark, tmp_path):
 
     full = QUERIES["dedup_minhash_incremental"](spark, str(d))
     full_rows = {tuple(r) for r in full.collect()}
-    art = ann_index.index_dir_for(
-        "mhlsh-incr", str(d), tables=("documents",))
+    art = cache.path(
+        "mhlsh-incr", "v2", cache.fingerprint(str(d), ("documents",)))
 
     # (a) hive layout by kb, bucket count recorded in the staged
     # sidecar (r15: size-adaptive — a 300-doc corpus gets the floor)
@@ -2781,10 +2793,10 @@ def test_positional_incremental_appends_and_maintains_stats(
     from-scratch bm25_search_indexed."""
     import json
     import os
-    import tempfile
 
     from etl_backend_spark.registry import pipeline as P
     from etl_backend_spark.registry import QUERIES
+    from etl_backend_spark.sources import cache
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
@@ -2817,7 +2829,7 @@ def test_positional_incremental_appends_and_maintains_stats(
     assert full.exceptAll(merged).count() == 0
 
     # (c) + (d): the ensure_* path in a fresh tempdir
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(cache, "ROOT", str(tmp_path))
     idx_dir, built = P.ensure_text_index_positional_incremental(spark, sf)
     assert built
     st = json.load(open(os.path.join(P.doc_length_dir(idx_dir),
@@ -2827,7 +2839,7 @@ def test_positional_incremental_appends_and_maintains_stats(
         F.sum(F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
               .cast("long")).alias("s")).collect()[0]
     assert st == {"n_docs": int(want.n), "dl_sum": int(want.s)}
-    # idempotent: a rerun sees the marker and does not rebuild
+    # idempotent: a rerun finds the published artifact, no rebuild
     _, built2 = P.ensure_text_index_positional_incremental(spark, sf)
     assert not built2
 
@@ -2953,3 +2965,107 @@ def test_clusters_incremental_matches_independent_unionfind(
              for k in set(got) ^ set(expected) | {
                  k for k in got if got.get(k) != expected.get(k)}},
         )
+
+
+def test_sim_topk_pq_refits_after_in_place_rewrite(spark, tmp_path):
+    """The PQ codebook memo is keyed on the corpus CONTENT: rewriting
+    embeddings.parquet in place (same path, same row count, different
+    vectors) must refit, so the second run equals a run over a fresh
+    copy of the rewritten corpus — a path-keyed memo would keep scoring
+    with the old corpus' codebooks."""
+    import os
+    import shutil
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from etl_backend_spark.registry import QUERIES
+    from tests.conftest import SF_DIR
+
+    def run(sf):
+        return sorted(map(tuple, QUERIES["sim_topk_pq"](spark, str(sf))
+                          .collect()))
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{SF_DIR}/embeddings.parquet", sf / "embeddings.parquet")
+    run(sf)
+
+    t = papq.read_table(sf / "embeddings.parquet")
+    rng = np.random.RandomState(5)
+    n, dim = t.num_rows, len(t.column("embedding")[0])
+    # anisotropic gaussians: codebooks fit on the old corpus quantize
+    # these badly, so a stale fit changes the ADC shortlist
+    new = (rng.randn(n, dim) * rng.uniform(0.05, 3.0, dim)).astype(np.float32)
+    i = t.schema.get_field_index("embedding")
+    t = t.set_column(i, t.schema.field(i),
+                     pa.array(list(new), type=t.schema.field(i).type))
+    tmp = sf / ".embeddings.parquet.tmp"
+    papq.write_table(t, tmp)
+    os.replace(tmp, sf / "embeddings.parquet")
+    assert t.num_rows == n
+
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    shutil.copy(sf / "embeddings.parquet", fresh / "embeddings.parquet")
+    assert run(sf) == run(fresh)
+
+
+def test_minhash_ingest_reads_absent_batch_partition_as_empty(
+        spark, tmp_path):
+    """An empty batch writes no sig/is_base=false directory. The
+    minhash ingest and the clusters ingest read that as an empty
+    (doc_id, sig) frame: zero pairs and zero batch docs, no exception."""
+    import os
+    import shutil
+
+    import numpy as np
+
+    from etl_backend_spark.registry import QUERIES
+    from etl_backend_spark.registry import llm as L
+    from etl_backend_spark.sources import cache
+
+    rng = np.random.RandomState(11)
+    vocab = [f"w{j}" for j in range(400)]
+    d = tmp_path / "sfempty"
+    d.mkdir()
+    spark.createDataFrame(
+        [(i, " ".join(rng.choice(vocab, 20)), "en", "web")
+         for i in range(80)],
+        "doc_id long, text string, lang string, source string",
+    ).write.parquet(str(d / "documents.parquet"))
+    fp = cache.fingerprint(str(d), ("documents",))
+
+    QUERIES["dedup_minhash_incremental"](spark, str(d)).collect()
+    art = cache.path("mhlsh-incr", "v2", fp)
+    shutil.rmtree(L.minhash_batch_sig_path(art))
+    assert not os.path.exists(L.minhash_batch_sig_path(art))
+    pairs = L.minhash_incr_pairs(spark, art, L.minhash_batch_sig_path(art))
+    assert pairs.count() == 0
+
+    QUERIES["dedup_clusters_incremental"](spark, str(d)).collect()
+    art = cache.path("clinc-incr", "v2", fp)
+    shutil.rmtree(L.minhash_batch_sig_path(art))
+    rows = L.clusters_incr_update(spark, art).collect()
+    assert [r for r in rows if r.kind == "batch_doc"] == []
+
+
+def test_band_keys_pandas_rejects_non_finite_embeddings():
+    """NaN sorts above every number in Spark/DuckDB but compares false
+    in numpy, and inf overflows the flip sort keys: either would silently
+    change bucket membership, so a batch holding one raises."""
+    import numpy as np
+    import pandas as pd
+
+    good = [np.linspace(-1, 1, 8, dtype=np.float32) for _ in range(3)]
+    for bad_value in (np.nan, np.inf):
+        rows = [v.copy() for v in good]
+        rows[1][2] = bad_value
+        pdf = pd.DataFrame({"vec_id": [0, 1, 2], "embedding": rows})
+        kernel = V.band_keys_pandas(bits=4, nbands=2, flips=1)
+        with pytest.raises(ValueError, match="non-finite"):
+            next(kernel(iter([pdf])))
+    pdf = pd.DataFrame({"vec_id": [0, 1, 2], "embedding": good})
+    out = next(V.band_keys_pandas(bits=4, nbands=2, flips=1)(iter([pdf])))
+    assert len(out) == 3
