@@ -16,9 +16,15 @@ Neighbor Search", TPAMI 2011):
 3. ADC SCAN: per query, an (M x K) inner-product lookup table; a code's
    approximate score is M table lookups summed — no float vector math
    per candidate. Distributed, vectorized (numpy fancy-indexing per batch).
-4. RERANK: top-(rerank) candidates by ADC join back their raw vectors
-   for exact cosine; window top-k. Only `rerank` rows per query ever
-   touch a raw vector.
+4. RERANK: exact cosine on the top-(rerank) candidates by ADC. The
+   ad-hoc query path does it INSIDE the scan (``encode_topk_scan_pandas``):
+   each batch still holds its raw vectors, so its local top-(rerank)
+   rows leave the kernel with their exact cosine and the corpus is read
+   once; the global shortlist (top-(rerank) by ADC) is always inside the
+   union of the local ones, so a window picks it and the final top-k
+   from those rows alone. The persisted-index path
+   (``ann/index._rerank_topk``) keeps its rerank join on purpose: its
+   scan reads stored codes, not raw vectors.
 
 Everything is deterministic (seeded init, fixed Lloyd iteration count,
 ties broken by lowest index) so results are stable across runs and
@@ -154,47 +160,46 @@ def adc_scores(codes: np.ndarray, tables: np.ndarray) -> np.ndarray:
     return out
 
 
-def encode_topk_scan_pandas(books: np.ndarray, tables: np.ndarray, k: int,
-                            exclude_ids=None, normalize: bool = False):
-    """Fused query-time worker: encode + ADC-score + local top-k in ONE
-    mapInPandas pass over (vec_id, nv). The two-step form (encode_pandas
-    then topk_scan_pandas) crosses the Arrow boundary twice and ships the
-    full code matrix between Python workers; fusing keeps codes in worker
-    memory and halves the Python round-trips. encode_pandas remains the
-    INDEX-BUILD path — at scale you materialize codes once and amortize
-    them across queries; this fused form is the ad-hoc query path where
-    codes are not persisted. Output and total order are bit-identical to
-    the two-step form (same encode, same lexsort).
+def encode_topk_scan_pandas(books: np.ndarray, queries: np.ndarray, k: int,
+                            exclude_ids=None):
+    """Fused query-time worker: normalize + encode + ADC-score + local top-k
+    + exact rerank in ONE mapInPandas pass over (vec_id, embedding).
 
-    ``normalize`` (r15): take the RAW float32 ``embedding`` column and
-    l2-normalize IN-KERNEL with the sequential fold
-    (vectors.l2_normalize_np_seq — bit-identical to the JVM
-    ``l2_normalize`` chain), instead of receiving a pre-normalized
-    float64 ``nv``: the JVM higher-order normalize per corpus row
-    disappears and the Arrow transfer width halves."""
+    ``queries`` are the RAW query vectors (nq, d); their ADC tables are
+    built here from the ``l2_normalize_np_seq`` fold. Each Arrow batch
+    takes the RAW float32 ``embedding`` column, l2-normalizes it in-kernel
+    (bit-identical to the JVM ``l2_normalize`` chain), encodes it, and
+    keeps its local top-k per query under (adc desc, vec_id asc), as
+    ``topk_scan_pandas`` does. The kept rows leave with the exact cosine
+    of the raw query and corpus vectors (``vectors.cosine_np_seq``,
+    bit-identical to the JVM ``cosine``): (qi, vec_id, adc, cos). The
+    global top-k by ADC is inside the union of the local ones, so the
+    caller's windows need no second corpus read and no rerank join.
+    ``encode_pandas`` remains the INDEX-BUILD path, where codes are
+    materialized once and amortized across queries."""
+    from .vectors import cosine_np_seq, l2_normalize_np_seq
+
+    queries = np.asarray(queries, dtype=np.float64)
+    tables = adc_tables(l2_normalize_np_seq(queries), books)
 
     def run(batches):
-        from .vectors import l2_normalize_np_seq
-
         for pdf in batches:
-            if normalize:
-                mat = l2_normalize_np_seq(
-                    np.stack(pdf["embedding"].to_numpy()))
-            else:
-                mat = np.array(pdf["nv"].tolist(), dtype=np.float64)
+            raw = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             ids = pdf["vec_id"].to_numpy()
-            codes = encode(mat, books).astype(np.int32)
+            codes = encode(l2_normalize_np_seq(raw), books)
             scores = adc_scores(codes, tables)
-            out = {"qi": [], "vec_id": [], "adc": []}
-            for qi in range(tables.shape[0]):
-                s, cand = scores[:, qi], ids
+            out = {"qi": [], "vec_id": [], "adc": [], "cos": []}
+            for qi in range(len(queries)):
+                rows = np.arange(len(ids))
                 if exclude_ids is not None:
-                    keep = cand != exclude_ids[qi]
-                    s, cand = s[keep], cand[keep]
-                order = np.lexsort((cand, -s))[:k]
-                out["qi"].extend([qi] * len(order))
-                out["vec_id"].extend(cand[order].tolist())
-                out["adc"].extend(s[order].tolist())
+                    rows = rows[ids != exclude_ids[qi]]
+                s = scores[rows, qi]
+                top = rows[np.lexsort((ids[rows], -s))[:k]]
+                out["qi"].extend([qi] * len(top))
+                out["vec_id"].extend(ids[top].tolist())
+                out["adc"].extend(scores[top, qi].tolist())
+                out["cos"].extend(
+                    cosine_np_seq(raw[top], queries[qi]).tolist())
             yield pd.DataFrame(out)
 
     return run

@@ -104,6 +104,26 @@ def l2_normalize_np_seq(X: np.ndarray) -> np.ndarray:
     return X / n[:, None]
 
 
+def cosine_np_seq(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise numpy cosine BIT-IDENTICAL to the JVM ``cosine``
+    expression: dot and both squared norms fold SEQUENTIALLY over dims
+    in float64 from a 0.0 seed (the ``l2_normalize_np_seq`` rule), the
+    norms are ``sqrt``-ed before their product, and a norm product of
+    exactly 0.0 scores -1.0 (``cosine``'s zero-norm contract, denormal
+    cases included); NaN propagates. ``A`` and ``B`` broadcast by row:
+    (n, d) against (n, d) or (d,)."""
+    A = np.atleast_2d(np.asarray(A, dtype=np.float64))
+    B = np.atleast_2d(np.asarray(B, dtype=np.float64))
+    dot = aa = bb = 0.0
+    for j in range(A.shape[1]):
+        dot = dot + A[:, j] * B[:, j]
+        aa = aa + A[:, j] * A[:, j]
+        bb = bb + B[:, j] * B[:, j]
+    nn = np.sqrt(aa) * np.sqrt(bb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(nn == 0.0, -1.0, dot / nn)
+
+
 def pair_dot_seq_pandas():
     """Arrow-batched pandas UDF computing the per-pair dot product with
     numpy, BIT-IDENTICAL to the sequential ``dot`` fold: accumulation is

@@ -1109,17 +1109,21 @@ _PQ_FIT_CAP = 4096
 def q_sim_topk_pq(spark, sf_dir):
     """ANN top-k via product quantization + ADC scan + exact rerank
     (functions/pq.py) — the MEMORY-BOUND scale path: corpus vectors are
-    replaced by M=8 nearest-centroid ids (~64x smaller), the distributed
-    scan scores candidates with table lookups only (no per-candidate vector
-    math) and prunes to its LOCAL top-64 per query inside the scan operator
-    (total-order selection is associative, so the tiny global re-rank is
-    bit-identical to a full window and corpus-sized rows never reach a
-    shuffle — pytest-asserted partition-independence), and just the top-64
-    ADC candidates per query touch a raw vector for the exact-cosine
-    rerank. Complements the data-oblivious sign-LSH
-    and the partition-pruning IVF; recall vs ``sim_topk_brute`` is
-    pytest-asserted. Every collect is bounded: the fit sample (<=4096), 5
-    query vectors."""
+    replaced by M=8 nearest-centroid ids (~64x smaller) and the distributed
+    scan scores candidates with table lookups only. ONE fused pass
+    (pq.encode_topk_scan_pandas) reads the RAW float32 embeddings once,
+    keeps each batch's LOCAL top-64 per query by ADC and attaches their
+    exact cosine (vectors.cosine_np_seq, bit-identical to the JVM
+    ``cosine``) while the raw vectors are still in worker memory. One
+    q_id-partitioned window pass then takes the global top-64 by (adc
+    desc, vec_id asc) and the top-10 of those by (cos_sim desc, vec_id
+    asc): selection by a total order is associative, so the global
+    shortlist is inside the union of the local ones and no corpus rejoin
+    or query broadcast is needed (pytest-asserted partition-independence
+    and plan shape). The persisted-index path (ann/index._rerank_topk)
+    keeps its rerank join: its scan reads stored codes, not raw vectors.
+    Recall vs ``sim_topk_brute`` is pytest-asserted. Every collect is
+    bounded: the fit sample (<=4096), 5 query vectors."""
     import numpy as np
 
     from pyspark.sql import Window
@@ -1127,12 +1131,6 @@ def q_sim_topk_pq(spark, sf_dir):
     from ..functions import pq
 
     e = Catalog(spark, sf_dir).table("embeddings")
-    # RAW float32 embeddings reach the fused Arrow scan; normalization
-    # happens IN-KERNEL with the sequential fold (r15 — bit-identical
-    # to the JVM l2_normalize chain, see vectors.l2_normalize_np_seq
-    # and the semdedup_incremental precedent): the per-row JVM
-    # higher-order normalize disappears and the Arrow transfer width
-    # halves (float32 embedding vs float64 nv).
     n = parquet_num_rows(sf_dir, "embeddings")  # footer read, no Spark job
 
     def fit():
@@ -1149,9 +1147,8 @@ def q_sim_topk_pq(spark, sf_dir):
     books = cache.memo(
         "pq-books", cache.fingerprint(sf_dir, ("embeddings",)), fit)
 
-    # one bounded collect serves both the ADC tables (normalized) and the
-    # exact-rerank query vectors (raw); both derived driver-side from the
-    # raw float32 rows (exact widening + the np_seq fold)
+    # the RAW query vectors (exact float32 widening): the kernel builds the
+    # ADC tables from their normalized form and reranks against them as is
     qraw = sorted(
         (r.vec_id, r.embedding)
         for r in e.filter(F.col("vec_id") < 5)
@@ -1159,58 +1156,26 @@ def q_sim_topk_pq(spark, sf_dir):
     )
     q_ids = [q for q, _ in qraw]
     qmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in qraw])
-    qnv = V.l2_normalize_np_seq(qmat)
-    qrows = [(q_ids[i], [float(x) for x in qmat[i]], qnv[i])
-             for i in range(len(q_ids))]
-    tables = pq.adc_tables(np.stack([nv for _, _, nv in qrows]), books)
 
-    # ADC scan with IN-OPERATOR top-64 pruning: each Arrow batch emits only
-    # its local top-64 per query under (adc desc, vec_id asc) — corpus-sized
-    # rows never reach a shuffle; the global window re-ranks <= 64 x
-    # n_batches skinny rows and is bit-identical to a full-corpus window
-    # (total-order selection is associative).
-    # encode + score + local-prune FUSED in one Python pass (functions/
-    # pq.encode_topk_scan_pandas): one Arrow corpus transfer instead of
-    # two — and the transfer is the RAW float32 column, normalized
-    # in-kernel (r15)
     id_map = F.array(*[F.lit(q) for q in q_ids])
     local_topk = e.select("vec_id", "embedding").mapInPandas(
-        pq.encode_topk_scan_pandas(books, tables, k=64, exclude_ids=q_ids,
-                                   normalize=True),
-        schema="qi int, vec_id long, adc double",
+        pq.encode_topk_scan_pandas(books, qmat, k=64, exclude_ids=q_ids),
+        schema="qi int, vec_id long, adc double, cos double",
     ).select(
-        F.element_at(id_map, F.col("qi") + 1).alias("q_id"), "vec_id", "adc"
+        F.element_at(id_map, F.col("qi") + 1).alias("q_id"), "vec_id", "adc",
+        F.round("cos", 6).alias("cos_sim"),
     )
     w_adc = Window.partitionBy("q_id").orderBy(F.col("adc").desc(),
                                                F.col("vec_id").asc())
-    candidates = (
-        local_topk.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= 64)
-        .select("q_id", "vec_id")
-    )
-
-    qdf = spark.createDataFrame(
-        [(q, v) for q, v, _ in qrows], "q_id long, qv array<double>",
-    )
-    reranked = (
-        candidates.join(
-            e.select("vec_id",
-                     V.as_double(F.col("embedding")).alias("v")),
-            on="vec_id")
-        .join(F.broadcast(qdf), on="q_id")
-        .select(
-            "q_id", "vec_id",
-            F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
-        )
-    )
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(),
                                            F.col("vec_id").asc())
     return (
-        reranked.withColumn("rn", F.row_number().over(w))
+        local_topk.withColumn("rn", F.row_number().over(w_adc))
+        .filter(F.col("rn") <= 64)
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 10)
         .select("q_id", "vec_id", "cos_sim")
     )
-
 
 
 def _coarse_groups(n_rows: int) -> int:

@@ -1002,6 +1002,89 @@ def test_pq_topk_scan_partition_independent(spark):
     assert all(not (r.qi == 1 and r.vec_id == 7) for r in out)
 
 
+def test_cosine_np_seq_bit_equals_jvm_cosine(spark):
+    """vectors.cosine_np_seq (the in-scan PQ rerank scorer) is
+    bit-identical to the JVM ``cosine`` expression, including its
+    zero-norm -1.0 contract on the denormal edge cases pinned in
+    ``cosine``'s comment and NaN propagation."""
+    import numpy as np
+
+    rng = np.random.RandomState(11)
+    rand = [[float(x) for x in rng.randn(64).astype(np.float32)]
+            for _ in range(40)]
+    zero = [0.0] * 64
+    nan = list(rand[0])
+    nan[17] = float("nan")
+    pairs = [(rand[i], rand[i + 1]) for i in range(0, 40, 2)]
+    pairs += [(zero, rand[0]), (rand[1], zero), (zero, zero),
+              ([1e-170, 0.0], [1e-170, 0.0]), ([2e-162, 0.0], [2e-162, 0.0]),
+              (nan, rand[2]), (rand[3], nan)]
+    df = spark.createDataFrame(pairs, "a array<double>, b array<double>")
+    jvm = [r.c for r in df.select(
+        V.cosine(F.col("a"), F.col("b")).alias("c")).collect()]
+    got = [float(V.cosine_np_seq(np.array(a), np.array(b))[0])
+           for a, b in pairs]
+    assert [np.float64(x).tobytes() for x in got] == \
+        [np.float64(x).tobytes() for x in jvm]
+    assert got[20:25] == [-1.0, -1.0, -1.0, -1.0, 1.0]
+    assert math.isnan(got[25]) and math.isnan(got[26])
+    # the row-broadcast form the PQ kernel uses: (n, d) against (d,)
+    A = np.array([a for a, _ in pairs[:20]])
+    assert np.array_equal(V.cosine_np_seq(A, np.array(rand[5])),
+                          [V.cosine_np_seq(np.array(a), np.array(rand[5]))[0]
+                           for a in A])
+
+
+def test_pq_fused_rerank_partition_independent(spark):
+    """The in-scan exact rerank gives the same final top-10 for any
+    partitioning of the corpus: each batch ships its local top-64 with
+    exact cosines, and the global top-64 by ADC is inside their union."""
+    import numpy as np
+
+    from etl_backend_spark.functions import pq
+    from tests.conftest import SF_DIR
+
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet") \
+        .select("vec_id", "embedding")
+    pdf = e.toPandas()
+    raw = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    books = pq.fit_codebooks(V.l2_normalize_np_seq(raw), m=8, k=16,
+                             iters=10, seed=42)
+    q_ids = [0, 1, 2, 3, 4]
+    queries = raw[[int(np.flatnonzero(pdf["vec_id"] == q)[0]) for q in q_ids]]
+    results = []
+    for parts in (1, 3, 8):
+        out = e.repartition(parts).mapInPandas(
+            pq.encode_topk_scan_pandas(books, queries, k=64,
+                                       exclude_ids=q_ids),
+            schema="qi int, vec_id long, adc double, cos double",
+        ).collect()
+        # the query's two windows: global top-64 by (adc desc, vec_id
+        # asc), then top-10 of those by (cos desc, vec_id asc)
+        byq = {}
+        for r in out:
+            byq.setdefault(r.qi, []).append((-r.adc, r.vec_id, r.cos))
+        results.append({q: sorted((-c, v) for _, v, c in sorted(rows)[:64])[:10]
+                        for q, rows in byq.items()})
+    assert results[0] == results[1] == results[2]
+    assert sorted(results[0]) == [0, 1, 2, 3, 4]
+    assert all(len(v) == 10 for v in results[0].values())
+
+
+def test_sim_topk_pq_plan_one_scan_no_join(spark):
+    """sim_topk_pq reads the corpus once: one file scan, no join, no
+    broadcast, and at most one exchange (the q_id window partitioning
+    both windows share)."""
+    from etl_backend_spark.registry import QUERIES
+    from tests.conftest import SF_DIR
+
+    df = QUERIES["sim_topk_pq"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    assert "Join" not in plan and "Broadcast" not in plan, plan
+    assert plan.count("Exchange") <= 1, plan
+
+
 def test_sim_topk_pandas_matches_brute(spark):
     """The numpy fast path (in-scan local top-10 pruning + global re-rank)
     must return the same neighbors as the expression-based exact brute
