@@ -1,3 +1,3 @@
-from . import incremental, manifest, scd, writes
+from . import incremental, manifest, scd
 
-__all__ = ["incremental", "manifest", "scd", "writes"]
+__all__ = ["incremental", "manifest", "scd"]

@@ -1,7 +1,5 @@
-"""Manifest-based table format: Delta/Iceberg-style file-level commits over
-plain parquet — the scale answer for mutations that ``ParquetTableStore``
-(full rewrite) and ``PartitionedTableStore`` (partition rewrite + hard
-links) approximate.
+"""The engine's mutable-table format: Delta/Iceberg-style file-level
+commits over plain parquet.
 
 Layout:
     root/<table>/data/f-<uuid>.parquet          immutable data files
@@ -19,8 +17,10 @@ configured stats columns. Mutations operate at FILE granularity:
 - ``compact``     → bin-pack small files into target-size files; pure
                     metadata swap plus the rewrite of the small files.
 - readers         → ``read`` loads the live file list; ``read_pruned``
-                    additionally skips files by manifest stats before Spark
-                    even sees them (manifest-level partition/zone pruning).
+                    and ``read_pruned_bloom`` additionally skip files by
+                    manifest stats or blooms before Spark even sees them.
+                    Every read takes its entries, schema and deletion
+                    vectors from ONE manifest snapshot (``_read``).
 
 Every commit is a new manifest + atomic pointer swap; old manifests remain
 readable (time travel) until vacuumed.
@@ -39,6 +39,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _bloom_pos(col: str, i: int, m: int):
@@ -149,10 +150,11 @@ class ManifestTable:
                 dvs=_INHERIT_DVS) -> None:
         """Atomic pointer swap with optimistic concurrency: `parent` is the
         manifest id this commit was derived from (None = table creation).
-        A short-lived O_EXCL lock file serializes the check-and-swap, and
-        the swap fails with CommitConflict if _CURRENT no longer points at
-        `parent` — the classic lost-update (two writers both derived from
-        the same snapshot; the second must re-read and retry).
+        An OS ``flock`` on a persistent per-table lock file
+        (``_acquire_lock``) serializes the check-and-swap, and the swap
+        fails with CommitConflict if _CURRENT no longer points at `parent`
+        — the classic lost-update (two writers both derived from the same
+        snapshot; the second must re-read and retry).
 
         `txn` (optional) is an idempotence token recorded in the manifest;
         the committed manifest carries the union of all ancestor tokens so
@@ -292,41 +294,42 @@ class ManifestTable:
     def create(self, df: DataFrame) -> None:
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.manifest_dir, exist_ok=True)
-        # persist the schema so an all-files-deleted table stays readable
-        # (an empty file list gives parquet nothing to infer from)
-        with open(os.path.join(self.dir, "_SCHEMA"), "w") as f:
-            f.write(df.schema.json())
         self._commit(self._write_files(df), parent=None,
                      schema_json=df.schema.json())
 
-    def _schema_of(self, manifest: dict):
-        """Declared schema AS OF a manifest: the per-commit record (schema
-        evolution), else the table-creation _SCHEMA sidecar (pre-evolution
-        tables), else None (infer)."""
-        from pyspark.sql.types import StructType
+    @staticmethod
+    def _schema_of(manifest: dict) -> StructType:
+        """Declared schema AS OF a manifest. Every commit records one:
+        ``create`` sets it, ``_commit`` inherits or evolves it, and
+        ``restore``/``clone_shallow`` copy it — so an all-files-deleted
+        snapshot stays readable with its columns."""
+        return StructType.fromJson(json.loads(manifest["schema"]))
 
-        sj = manifest.get("schema")
-        if sj is None:
-            try:
-                with open(os.path.join(self.dir, "_SCHEMA")) as f:
-                    sj = f.read()
-            except OSError:
-                return None
-        return StructType.fromJson(json.loads(sj))
+    def _read(self, manifest: dict, entries: list[dict]) -> DataFrame:
+        """The one read path: ``entries`` (chosen from ``manifest``) read
+        with the schema ``manifest`` declares, minus ``manifest``'s deletion
+        vectors; an empty frame of that schema when no entry is chosen.
 
-    def _empty_df(self) -> DataFrame:
-        return self.spark.createDataFrame([], self._schema_of({}))
-
-    def _read_entries(self, entries: list[dict], schema=None) -> DataFrame:
+        Entries, schema and DVs must all come from the SAME snapshot: old
+        entries paired with a later commit's DV list (``compact_dv`` clears
+        it) would bring back rows that were already deleted. The declared
+        schema is a superset for files written before an ADD COLUMN;
+        parquet null-fills the missing columns (the read half of additive
+        schema evolution)."""
+        schema = self._schema_of(manifest)
         if not entries:
-            return self._empty_df()
-        reader = self.spark.read
-        if schema is not None:
-            # declared superset schema: files written before an ADD COLUMN
-            # lack the new columns; parquet fills them with null. This is
-            # the read half of additive schema evolution.
-            reader = reader.schema(schema)
-        return reader.parquet(*[e["path"] for e in entries])
+            return self.spark.createDataFrame([], schema)
+        df = self.spark.read.schema(schema).parquet(*[e["path"] for e in entries])
+        return self._apply_dvs(df, manifest)
+
+    @staticmethod
+    def _disjoint(entry: dict, col: str, lo, hi) -> bool:
+        """True iff ``entry``'s [min, max] stats for ``col`` cannot meet
+        [lo, hi] (None bounds are open; all-NULL stats never prune)."""
+        mn, mx = entry["stats"][col]
+        return (lo is not None and mx is not None and mx < lo) or (
+            hi is not None and mn is not None and mn > hi
+        )
 
     # Lossless numeric widenings accepted from a batch column INTO the live
     # type (batch simpleString -> allowed live simpleStrings). Anything not
@@ -356,8 +359,6 @@ class ManifestTable:
         fail at write time, not as a parquet conversion error (or silent
         miscast) on some later read with the declared live schema."""
         live = self._schema_of(manifest)
-        if live is None:
-            return df, None
         live_names = {f.name for f in live.fields}
         batch_fields = {f.name: f for f in df.schema.fields}
         extra = [f for f in df.schema.fields if f.name not in live_names]
@@ -383,7 +384,7 @@ class ManifestTable:
                 "append type mismatch (type evolution is never merged): "
                 + "; ".join(drift)
             )
-        target = type(live)(list(live.fields) + extra)
+        target = StructType(list(live.fields) + extra)
         needs_cast = any(
             f.name in batch_fields
             and batch_fields[f.name].dataType != f.dataType
@@ -575,12 +576,7 @@ class ManifestTable:
 
     def read(self) -> DataFrame:
         manifest = self._live_manifest()
-        return self._apply_dvs(
-            self._read_entries(
-                manifest["entries"], schema=self._schema_of(manifest)
-            ),
-            manifest,
-        )
+        return self._read(manifest, manifest["entries"])
 
     # ------------------------------------------------- deletion vectors
 
@@ -624,8 +620,10 @@ class ManifestTable:
         _metadata.row_index); ``compact_dv`` folds them back into data
         files. SQL DELETE semantics: NULL predicates retain the row."""
         parent, manifest = self._snapshot()
-        live = self._schema_of(manifest)
-        df = self._read_entries(manifest["entries"], schema=live)
+        # positions are read off the raw files, so no DV anti-join here
+        df = self.spark.read.schema(self._schema_of(manifest)).parquet(
+            *[e["path"] for e in manifest["entries"]]
+        )
         marked = (
             df.filter(F.coalesce(where, F.lit(False)))
             .select(
@@ -664,11 +662,7 @@ class ManifestTable:
         }
         touched = [e for e in manifest["entries"] if e["path"] in touched_paths]
         carried = [e for e in manifest["entries"] if e["path"] not in touched_paths]
-        live = self._schema_of(manifest)
-        remaining = self._apply_dvs(
-            self._read_entries(touched, schema=live), manifest
-        )
-        new = self._write_files(remaining)
+        new = self._write_files(self._read(manifest, touched))
         self._commit_or_discard(
             carried + new, new, parent=parent, dvs=[],
         )
@@ -678,21 +672,10 @@ class ManifestTable:
         """Manifest-stats pruning: load only files whose [min,max] for `col`
         intersects [lo, hi]. Returns (df, n_files_skipped). The residual
         filter still applies Spark-side; the win is files never opened."""
-        keep, skipped = [], 0
-        for e in self.files():
-            mn, mx = e["stats"][col]
-            if (lo is not None and mx is not None and mx < lo) or (
-                hi is not None and mn is not None and mn > hi
-            ):
-                skipped += 1
-                continue
-            keep.append(e["path"])
-        if not keep:
-            return self._empty_df(), skipped
         manifest = self._live_manifest()
-        live = self._schema_of(manifest)
-        reader = self.spark.read if live is None else self.spark.read.schema(live)
-        return self._apply_dvs(reader.parquet(*keep), manifest), skipped
+        entries = manifest["entries"]
+        keep = [e for e in entries if not self._disjoint(e, col, lo, hi)]
+        return self._read(manifest, keep), len(entries) - len(keep)
 
     def read_pruned_bloom(self, value) -> tuple[DataFrame, int]:
         """Point-lookup file skipping by the per-file BLOOM, the prune that
@@ -707,30 +690,23 @@ class ManifestTable:
         the stored bit-array's length and k the recorded probe count, so a
         reader opened with different ``bloom_bits`` than the writer (the
         8192 default vs a scaled table) still probes the geometry the file
-        was written with. Legacy entries without a recorded k fall back to
-        the class default (the only k any previous writer used)."""
-        pos_by_geom: dict[tuple[int, int], list[int]] = {}
-        keep, skipped = [], 0
-        for e in self.files():
-            b = e.get("bloom")
-            if b is None:
-                keep.append(e["path"])
-                continue
-            bits = base64.b64decode(b["bits"])
-            geom = (b.get("k", ManifestTable.BLOOM_K), len(bits) * 8)
-            positions = pos_by_geom.get(geom)
-            if positions is None:
-                positions = pos_by_geom[geom] = bloom_positions(value, *geom)
-            if all(bits[p // 8] & (1 << (p % 8)) for p in positions):
-                keep.append(e["path"])
-            else:
-                skipped += 1
-        if not keep:
-            return self._empty_df(), skipped
+        was written with. An entry without a recorded k raises."""
         manifest = self._live_manifest()
-        live = self._schema_of(manifest)
-        reader = self.spark.read if live is None else self.spark.read.schema(live)
-        return self._apply_dvs(reader.parquet(*keep), manifest), skipped
+        entries = manifest["entries"]
+        pos_by_geom: dict[tuple[int, int], list[int]] = {}
+        keep = []
+        for e in entries:
+            b = e.get("bloom")
+            if b is not None:
+                bits = base64.b64decode(b["bits"])
+                geom = (b["k"], len(bits) * 8)
+                positions = pos_by_geom.get(geom)
+                if positions is None:
+                    positions = pos_by_geom[geom] = bloom_positions(value, *geom)
+                if not all(bits[p // 8] & (1 << (p % 8)) for p in positions):
+                    continue  # definitive miss
+            keep.append(e)
+        return self._read(manifest, keep), len(entries) - len(keep)
 
     def delete(self, where: Column, col: str, lo=None, hi=None) -> dict:
         """File-granular delete: rewrite only files whose stats interval for
@@ -740,11 +716,7 @@ class ManifestTable:
         self._require_no_dvs("delete", manifest)
         touched, carried = [], []
         for e in manifest["entries"]:
-            mn, mx = e["stats"][col]
-            disjoint = (lo is not None and mx is not None and mx < lo) or (
-                hi is not None and mn is not None and mn > hi
-            )
-            (carried if disjoint else touched).append(e)
+            (carried if self._disjoint(e, col, lo, hi) else touched).append(e)
         new_entries, new = list(carried), []
         if touched:
             # one rewrite job over all touched files, not one per file;
@@ -753,9 +725,9 @@ class ManifestTable:
             # touched set can mix pre/post-ADD-COLUMN files, and an
             # inferred schema (taken from one file) would silently drop
             # the new column from every rewritten row.
-            remaining = self._read_entries(
-                touched, schema=self._schema_of(manifest)
-            ).filter(~F.coalesce(where, F.lit(False)))
+            remaining = self._read(manifest, touched).filter(
+                ~F.coalesce(where, F.lit(False))
+            )
             new = self._write_files(remaining)
             new_entries += new
         self._commit_or_discard(new_entries, new, parent=parent)
@@ -794,20 +766,16 @@ class ManifestTable:
             )
         touched, carried = [], []
         for e in manifest["entries"]:
-            mn, mx = e["stats"][key]
-            disjoint = (
-                lo is None
-                or (mx is not None and mx < lo)
-                or (mn is not None and mn > hi)
-            )
+            # lo is None only for an empty incoming: nothing to replace
+            disjoint = lo is None or self._disjoint(e, key, lo, hi)
             (carried if disjoint else touched).append(e)
         new_entries, new = list(carried), []
         if touched:
             # declared live schema: see delete() — mixed-schema touched
             # sets must not infer from one file
-            remaining = self._read_entries(
-                touched, schema=self._schema_of(manifest)
-            ).join(incoming.select(key), on=key, how="left_anti")
+            remaining = self._read(manifest, touched).join(
+                incoming.select(key), on=key, how="left_anti"
+            )
             new = self._write_files(remaining)
             new_entries += new
         incoming_files = self._write_files(incoming)
@@ -825,8 +793,7 @@ class ManifestTable:
         mid: str | None = self._live_id()
         while mid is not None:
             out.append(mid)
-            with open(os.path.join(self.manifest_dir, mid)) as f:
-                mid = json.load(f).get("parent")
+            mid = self._manifest_at(mid)["parent"]
         return out
 
     def restore(self, manifest_id: str) -> str:
@@ -838,8 +805,7 @@ class ManifestTable:
         restore commit carries file references. Raises if the target
         snapshot's files were already vacuumed away."""
         try:
-            with open(os.path.join(self.manifest_dir, manifest_id)) as f:
-                target = json.load(f)
+            target = self._manifest_at(manifest_id)
         except FileNotFoundError:
             raise ValueError(
                 f"cannot restore {manifest_id}: the manifest itself was "
@@ -869,7 +835,7 @@ class ManifestTable:
         parent, _ = self._snapshot()
         self._commit_or_discard(
             target["entries"], [], parent=parent,
-            schema_json=target.get("schema"), dvs=target_dvs,
+            schema_json=target["schema"], dvs=target_dvs,
         )
         return self._live_id()
 
@@ -878,14 +844,8 @@ class ManifestTable:
         valid until ``vacuum`` reclaims non-live data). Reads with the
         schema recorded in THAT manifest: columns added later do not
         appear in an older snapshot."""
-        with open(os.path.join(self.manifest_dir, manifest_id)) as f:
-            manifest = json.load(f)
-        return self._apply_dvs(
-            self._read_entries(
-                manifest["entries"], schema=self._schema_of(manifest)
-            ),
-            manifest,
-        )
+        manifest = self._manifest_at(manifest_id)
+        return self._read(manifest, manifest["entries"])
 
     def compact(self, target_rows: int = 100_000) -> dict:
         """Small-file compaction: greedily bin files below target into
@@ -908,9 +868,8 @@ class ManifestTable:
         if cur:
             bins.append(cur)
         new_entries, new = list(large), []
-        live_schema = self._schema_of(manifest)
         for group in bins:
-            merged = self._read_entries(group, schema=live_schema).coalesce(1)
+            merged = self._read(manifest, group).coalesce(1)
             batch = self._write_files(merged)
             new += batch
             new_entries += batch
@@ -980,17 +939,12 @@ def clone_shallow(src: ManifestTable, root: str, name: str) -> ManifestTable:
     consults only the source's reachable manifests, so it can reclaim
     files a clone still references. Vacuuming a cloned-from table is a
     catalog-level coordination concern, stated here rather than hidden."""
-    import shutil
-
     dst = ManifestTable(src.spark, root, name, src.stats_cols,
                         bloom_col=src.bloom_col)
     os.makedirs(dst.data_dir, exist_ok=True)
     os.makedirs(dst.manifest_dir, exist_ok=True)
-    schema_sidecar = os.path.join(src.dir, "_SCHEMA")
-    if os.path.exists(schema_sidecar):
-        shutil.copyfile(schema_sidecar, os.path.join(dst.dir, "_SCHEMA"))
-    _, manifest = src._snapshot()
+    manifest = src._live_manifest()
     dst._commit(manifest["entries"], parent=None,
-                schema_json=manifest.get("schema"),
+                schema_json=manifest["schema"],
                 dvs=manifest.get("dvs", []))
     return dst

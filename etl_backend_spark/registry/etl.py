@@ -1,6 +1,6 @@
 """Registry: write/mutation operators as pure post-state queries
-(SURVEY.md §2.8). The actual rewrite-and-swap machinery lives in
-``etl_backend_spark.etl.writes``; here each mutation's *semantics* (the
+(SURVEY.md §2.8). The physical table format lives in
+``etl_backend_spark.etl.manifest``; here each mutation's *semantics* (the
 post-state relation) is expressed as a DataFrame so the DuckDB oracle can
 check it without either engine mutating shared files.
 """
@@ -833,7 +833,7 @@ def ensure_bloom_table(spark, sf_dir):
 
     from ..etl.manifest import ManifestTable
 
-    root = cache.path("bloomtbl", "v1", cache.fingerprint(sf_dir, ("orders",)))
+    root = cache.path("bloomtbl", "v2", cache.fingerprint(sf_dir, ("orders",)))
     o = Catalog(spark, sf_dir).table("orders")
     if os.path.exists(os.path.join(root, "orders", "_CURRENT")):
         # reopen: probe geometry comes from the manifest entries, so the

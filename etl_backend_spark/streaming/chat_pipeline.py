@@ -288,42 +288,6 @@ def run_available_now(writer, query_name: str = "q"):
     return q
 
 
-def stream_into_store(stream: DataFrame, store, table: str,
-                      checkpoint_dir: str, touch_parent_cfg: dict | None = None):
-    """foreachBatch bridge into the mutation layer: each micro-batch appends
-    to a ``ParquetTableStore`` table and (optionally) refreshes the parent
-    timestamp in the same job — the reference's two untransacted writes
-    (message insert + conversation touch, src/routes/chat.ts:186-208) become
-    one atomic-per-batch unit.
-
-    Exactly-once: foreachBatch is at-least-once (a batch can replay after a
-    failure between the write and the checkpoint commit). The append goes
-    through ``store.append_idempotent`` with the batch_id as token — the
-    batch's files land under batch-id-derived deterministic names, so a
-    replay after a crash mid-append OVERWRITES the partial batch instead of
-    duplicating it. The marker file only short-circuits the recompute (and
-    the parent-touch) for batches known complete; correctness never depends
-    on the marker's write ordering."""
-    from ..etl import writes as W
-
-    markers = os.path.join(checkpoint_dir, "applied")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(markers, exist_ok=True)
-        marker = os.path.join(markers, str(batch_id))
-        if os.path.exists(marker):
-            return  # replayed batch — already fully applied
-        store.append_idempotent(table, batch_df, token=str(batch_id))
-        if touch_parent_cfg:
-            W.touch_parent(store, **touch_parent_cfg)
-        open(marker, "w").close()
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-
-
 def stream_stream_join(left: DataFrame, right: DataFrame,
                        watermark: str = "1 hour",
                        join_window: str = "1 hour") -> DataFrame:

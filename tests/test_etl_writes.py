@@ -1,154 +1,10 @@
-"""Tests for the parquet rewrite-and-swap mutation layer: post-state
-correctness, upsert idempotence, cascade integrity, vacuum, atomic pointer."""
+"""Tests for the ETL building blocks beside the manifest table format:
+SCD2 merge, incremental view maintenance, constraint audits, the
+persisted bloom index and dynamic-partition backfill."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
-
-from etl_backend_spark.etl.writes import ParquetTableStore, cascade_delete_user, touch_parent
-from etl_backend_spark.sources.catalog import Catalog
-from tests.conftest import SF_DIR
-
-
-@pytest.fixture()
-def store(spark, tmp_path):
-    cat = Catalog(spark, SF_DIR)
-    s = ParquetTableStore(spark, str(tmp_path / "store"))
-    for t in ("region", "customer", "orders", "lineitem"):
-        s.create(t, cat.table(t))
-    return s
-
-
-def test_append_adds_rows_without_rewrite(store, spark):
-    before = store.read("region").count()
-    ver_dir_before = store._version_dir("region", store._current_version("region"))
-    new = spark.createDataFrame([(98, "NARNIA")], store.read("region").schema)
-    store.append("region", new)
-    assert store.read("region").count() == before + 1
-    # same version dir — append is file-add, not a rewrite
-    assert store._current_version("region") is not None
-    assert ver_dir_before == store._version_dir("region", store._current_version("region"))
-
-
-def test_update_soft_delete(store):
-    store.update(
-        "orders",
-        {"o_orderstatus": F.lit("deleted")},
-        F.col("o_totalprice") > 400000.0,
-    )
-    out = store.read("orders")
-    assert out.filter((F.col("o_totalprice") > 400000.0)
-                      & (F.col("o_orderstatus") != "deleted")).count() == 0
-    assert out.filter((F.col("o_totalprice") <= 400000.0)
-                      & (F.col("o_orderstatus") == "deleted")).count() == 0
-
-
-def test_delete_removes_only_matching(store):
-    before = store.read("orders")
-    n_f = before.filter(F.col("o_orderstatus") == "F").count()
-    n = before.count()
-    store.delete("orders", F.col("o_orderstatus") == "F")
-    after = store.read("orders")
-    assert after.count() == n - n_f
-    assert after.filter(F.col("o_orderstatus") == "F").count() == 0
-
-
-def test_upsert_idempotent(store, spark):
-    incoming = spark.createDataFrame(
-        [(0, "AFRICA-DUP"), (55, "ATLANTIS")], store.read("region").schema
-    )
-    base = store.read("region").count()
-    store.upsert("region", incoming, ["r_regionkey"])
-    once = store.read("region").count()
-    assert once == base + 1  # key 0 exists already, only 55 inserted
-    store.upsert("region", incoming, ["r_regionkey"])
-    assert store.read("region").count() == once  # run twice == run once
-    name = store.read("region").filter(F.col("r_regionkey") == 0).collect()[0].r_name
-    assert name != "AFRICA-DUP"  # existing row untouched (empty update:{})
-
-
-def test_cascade_delete_referential_integrity(store, spark):
-    doomed = store.read("customer").filter(F.col("c_custkey") % 100 == 0).select("c_custkey")
-    cascade_delete_user(store, doomed)
-    cust = store.read("customer")
-    orders = store.read("orders")
-    li = store.read("lineitem")
-    assert cust.join(doomed, "c_custkey", "left_semi").count() == 0
-    # no orphan orders or lineitems
-    orphans_o = orders.join(cust, orders["o_custkey"] == cust["c_custkey"], "left_anti")
-    assert orphans_o.count() == 0
-    orphans_l = li.join(orders, li["l_orderkey"] == orders["o_orderkey"], "left_anti")
-    assert orphans_l.count() == 0
-
-
-def test_touch_parent_sets_max_child_ts(store, spark):
-    touch_parent(store, "orders", "lineitem", "o_orderkey", "l_orderkey",
-                 "l_shipdate", updated_col="updated_at")
-    out = store.read("orders")
-    sample = (
-        out.join(
-            store.read("lineitem").groupBy("l_orderkey").agg(F.max("l_shipdate").alias("mx")),
-            out["o_orderkey"] == F.col("l_orderkey"),
-        )
-        .filter(F.col("updated_at") != F.col("mx"))
-    )
-    assert sample.count() == 0
-
-
-def test_vacuum_keeps_live_version(store):
-    store.delete("region", F.col("r_regionkey") == 0)   # creates new version
-    n = store.read("region").count()
-    removed = store.vacuum("region")
-    assert removed >= 1
-    assert store.read("region").count() == n  # live version intact
-    live = store._current_version("region")
-    versions = [e for e in os.listdir(store._tdir("region")) if e.startswith("v-")]
-    assert versions == [live]
-
-
-def test_partitioned_update_rewrites_only_affected(spark, tmp_path):
-    import os
-
-    from etl_backend_spark.etl.writes import PartitionedTableStore
-
-    cat = Catalog(spark, SF_DIR)
-    s = PartitionedTableStore(spark, str(tmp_path / "pstore"), "o_orderstatus")
-    s.create("orders", cat.table("orders"))
-    v0 = s._current_version("orders")
-    v0_dir = s._version_dir("orders", v0)
-    f_inode = {
-        f: os.stat(os.path.join(v0_dir, "o_orderstatus=F", f)).st_ino
-        for f in os.listdir(os.path.join(v0_dir, "o_orderstatus=F"))
-        if f.endswith(".parquet")
-    }
-
-    s.update_partitions(
-        "orders", ["O"], {"o_orderpriority": F.lit("5-LOW")},
-        F.col("o_totalprice") > 300000.0,
-    )
-    out = s.read("orders")
-    base = cat.table("orders")
-    # semantics: only status-O rows above the threshold changed
-    changed = out.filter((F.col("o_orderstatus") == "O")
-                         & (F.col("o_totalprice") > 300000.0)
-                         & (F.col("o_orderpriority") != "5-LOW"))
-    assert changed.count() == 0
-    untouched = out.filter(F.col("o_orderstatus") == "F").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    orig = base.filter(F.col("o_orderstatus") == "F").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    assert untouched.subtract(orig).count() == 0
-    assert out.count() == base.count()
-
-    # physical: the F partition's files are HARD LINKS of the old version
-    v1_dir = s._version_dir("orders", s._current_version("orders"))
-    for f, ino in f_inode.items():
-        assert os.stat(os.path.join(v1_dir, "o_orderstatus=F", f)).st_ino == ino
 
 
 def test_scd2_merge_invariants(spark, cat):
@@ -222,57 +78,6 @@ def test_incremental_merge_handles_new_keys(spark):
     state = merge_delta(aggregate_state(base, ["k"], aggs), delta, ["k"], aggs)
     got = {r.k: (r.n, r.s, r.mx) for r in state.collect()}
     assert got == {1: (3, 35.0, 20.0), 2: (1, 7.0, 7.0)}
-
-
-def test_append_idempotent_replay_overwrites_partial_batch(spark, tmp_path):
-    """Crash-replay contract: a partially-applied batch (some files moved,
-    marker never written) must be REPAIRED by replay, not duplicated."""
-    import os
-
-    from etl_backend_spark.etl.writes import ParquetTableStore
-    from etl_backend_spark.sources.catalog import Catalog
-    from tests.conftest import SF_DIR
-
-    store = ParquetTableStore(spark, str(tmp_path))
-    ev = Catalog(spark, SF_DIR).table("region")
-    store.create("t", ev.limit(0))
-
-    batch = ev.repartition(3)
-    n = batch.count()
-    store.append_idempotent("t", batch, token="7")
-    assert store.read("t").count() == n
-
-    # simulate a crashed attempt that moved only SOME of the batch's files:
-    # delete one of the token's destination files, then replay
-    vdir = store._version_dir("t", store._current_version("t"))
-    token_files = sorted(f for f in os.listdir(vdir) if f.startswith("b-7-"))
-    assert len(token_files) >= 2
-    os.remove(os.path.join(vdir, token_files[0]))
-    assert store.read("t").count() < n
-
-    store.append_idempotent("t", batch, token="7")  # replay
-    assert store.read("t").count() == n  # repaired, not duplicated
-
-    store.append_idempotent("t", batch, token="8")  # a genuinely new batch
-    assert store.read("t").count() == 2 * n
-
-
-def test_append_idempotent_replay_with_fewer_files(spark, tmp_path):
-    """A replay that produces FEWER part files than the crashed attempt must
-    remove the stale extras, not leave them as duplicates."""
-    from etl_backend_spark.etl.writes import ParquetTableStore
-    from etl_backend_spark.sources.catalog import Catalog
-    from tests.conftest import SF_DIR
-
-    store = ParquetTableStore(spark, str(tmp_path))
-    ev = Catalog(spark, SF_DIR).table("region")
-    store.create("t", ev.limit(0))
-    n = ev.count()
-    store.append_idempotent("t", ev.repartition(4), token="9")
-    assert store.read("t").count() == n
-    # same batch id, different partitioning (e.g. code change before replay)
-    store.append_idempotent("t", ev.repartition(2), token="9")
-    assert store.read("t").count() == n
 
 
 def test_constraint_checkers_find_planted_violations(spark):

@@ -102,35 +102,6 @@ def test_manifest_vacuum_reclaims_orphans(mtable):
     assert on_disk >= len(t.files())  # only live (+ _SUCCESS markers) remain
 
 
-def test_stream_into_store_skips_replayed_batch(spark, tmp_path):
-    """Calling the foreachBatch handler twice with the same batch_id must
-    append once (the at-least-once replay contract)."""
-    import os
-
-    from etl_backend_spark.etl.writes import ParquetTableStore
-    from etl_backend_spark.sources.catalog import Catalog
-
-    store = ParquetTableStore(spark, str(tmp_path / "store"))
-    ev = Catalog(spark, SF_DIR).table("events").limit(10)
-    store.create("m", ev.limit(0))
-
-    # the marker protocol of chat_pipeline.stream_into_store, driven directly
-    markers = str(tmp_path / "ck" / "applied")
-
-    def handle(batch_df, batch_id):
-        os.makedirs(markers, exist_ok=True)
-        marker = os.path.join(markers, str(batch_id))
-        if os.path.exists(marker):
-            return
-        store.append("m", batch_df)
-        open(marker, "w").close()
-
-    handle(ev, 0)
-    handle(ev, 0)  # replay of the same batch id
-    handle(ev, 1)
-    assert store.read("m").count() == 20
-
-
 def test_manifest_commit_conflict_detected(mtable, spark):
     """Two writers deriving from the same snapshot: the second commit must
     fail with CommitConflict instead of silently dropping the first."""
@@ -205,18 +176,35 @@ def test_manifest_delete_to_empty_file_set(spark, tmp_path):
 
 
 def test_manifest_empty_table_readable(spark, tmp_path):
-    """After deleting every row, read/read_pruned/read_at still work (the
-    persisted schema covers the no-files state)."""
+    """After deleting every row, read/read_pruned/read_pruned_bloom/read_at
+    and a shallow clone still return the declared schema: the schema
+    recorded in every manifest covers the no-files state, with no sidecar
+    file beside the table."""
+    import os
+
+    layout = {"_CURRENT", "_CURRENT.lock", "data", "manifest"}
+
+    from etl_backend_spark.etl.manifest import clone_shallow
+
     df = spark.createDataFrame([(1, 1.0)], "k LONG, v DOUBLE")
-    t = ManifestTable(spark, str(tmp_path), "empty", ["k"])
+    t = ManifestTable(spark, str(tmp_path), "empty", ["k"], bloom_col="k")
     t.create(df)
     pre = t._live_id()
     t.delete(F.col("k") >= 0, "k")
+    emptied = t._live_id()
+    assert set(os.listdir(t.dir)) == layout
     assert t.read().count() == 0
     assert t.read().schema == df.schema
     got, skipped = t.read_pruned("k", lo=100)
     assert got.count() == 0
+    got, skipped = t.read_pruned_bloom(1)
+    assert got.count() == 0 and got.schema == df.schema
+    assert t.read_at(emptied).schema == df.schema
     assert t.read_at(pre).count() == 1
+    clone = clone_shallow(t, str(tmp_path), "empty_clone")
+    assert set(os.listdir(clone.dir)) == layout
+    assert clone.read().schema == df.schema
+    assert clone.read().count() == 0
     t.append(df)  # still writable after empty state
     assert t.read().count() == 1
 
@@ -920,6 +908,59 @@ def test_bloom_probe_uses_written_geometry(spark, tmp_path):
     # absent key: every entry skipped under the written geometry too
     _, skipped_all = reader.read_pruned_bloom(-123456789)
     assert skipped_all == len(reader.files())
+
+
+def test_bloom_entry_without_recorded_k_raises(spark, tmp_path):
+    """Probe geometry is read from the entry only: an entry whose bloom
+    lacks ``k`` raises instead of being probed with the class default."""
+    df = spark.createDataFrame([(i,) for i in range(20)], "k LONG")
+    t = ManifestTable(spark, str(tmp_path), "nok", ["k"], bloom_col="k")
+    t.create(df.repartition(2))
+    parent, manifest = t._snapshot()
+    entries = [dict(e, bloom={f: v for f, v in e["bloom"].items() if f != "k"})
+               for e in manifest["entries"]]
+    t._commit(entries, parent=parent)
+    with pytest.raises(KeyError):
+        t.read_pruned_bloom(3)
+
+
+def test_pruned_reads_take_one_snapshot(spark, tmp_path):
+    """read_pruned and read_pruned_bloom pair entries and deletion vectors
+    from ONE manifest: a compact_dv committing right after the reader
+    loads its snapshot must not pair the old entries with the new, empty
+    DV list (which would bring the deleted key back)."""
+    o = Catalog(spark, SF_DIR).table("orders")
+    t = ManifestTable(spark, str(tmp_path), "snap", ["o_orderkey"],
+                      bloom_col="o_orderkey")
+    t.create(o.repartition(4))
+    writer = ManifestTable(spark, str(tmp_path), "snap", ["o_orderkey"],
+                           bloom_col="o_orderkey")
+    keys = [r.o_orderkey for r in o.select("o_orderkey").limit(2).collect()]
+
+    def compact_after_first_load(table):
+        real = table._manifest_at
+        fired = []
+
+        def once(mid):
+            m = real(mid)
+            if not fired:
+                fired.append(mid)
+                writer.compact_dv()  # commits between reader pointer reads
+            return m
+
+        table._manifest_at = once
+
+    for key, read in zip(keys, (lambda k: t.read_pruned("o_orderkey", k, k),
+                                t.read_pruned_bloom)):
+        assert writer.delete_dv(F.col("o_orderkey") == key)["marked"] == 1
+        compact_after_first_load(t)
+        try:
+            df, _ = read(key)
+            got = df.filter(F.col("o_orderkey") == key).count()
+        finally:
+            del t._manifest_at
+        assert not writer._live_manifest()["dvs"]  # the compaction landed
+        assert got == 0
 
 
 def test_restore_makes_past_snapshot_live_again(spark, tmp_path):

@@ -130,28 +130,6 @@ def test_presence_routing_stateful(spark, tmp_path):
     assert got[9].n_queued == 1
 
 
-def test_stream_into_store_appends_per_batch(spark, tmp_path, event_json_dir):
-    """foreachBatch → ParquetTableStore: all streamed rows land in the
-    mutation layer's live version."""
-    from etl_backend_spark.etl.writes import ParquetTableStore
-
-    store = ParquetTableStore(spark, str(tmp_path / "store"))
-    empty = (
-        Catalog(spark, SF_DIR).table("events").limit(0)
-    )
-    store.create("messages", empty)
-    stream = cp.validate_events(
-        cp.read_json_stream(spark, event_json_dir, max_files_per_trigger=1)
-    )
-    cp.run_available_now(
-        cp.stream_into_store(stream, store, "messages", str(tmp_path / "ck")),
-        "into_store",
-    )
-    got = store.read("messages")
-    expect = Catalog(spark, SF_DIR).table("events")
-    assert got.count() == expect.count()
-
-
 def test_stream_stream_join_matches_batch(spark, tmp_path, event_json_dir):
     """Windowed stream-stream join result == the equivalent batch range
     join (purchases x signups within the preceding hour)."""
