@@ -165,8 +165,7 @@ def cpu_probe() -> dict:
     tries (~10 s) — a cap hit means the host is actively oscillating
     and the reading will fail the drift gate, which is the point.
     bench.py stores before/after probes plus whole-window steal in the
-    artifact; scripts/make_anchor.py refuses to re-base when drift,
-    spread, or steal exceeds its gates."""
+    artifact."""
     import concurrent.futures
 
     import numpy as np

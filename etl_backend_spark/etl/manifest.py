@@ -2,7 +2,8 @@
 commits over plain parquet.
 
 Layout:
-    root/<table>/data/f-<uuid>.parquet          immutable data files
+    root/<table>/data/b-<uuid>/*.parquet        immutable data files
+    root/<table>/dv/dv-<uuid>/                  deletion vectors (positions)
     root/<table>/manifest/m-<uuid>.json         file list + per-file stats
     root/<table>/_CURRENT                       live manifest id (atomic swap)
 
@@ -10,20 +11,23 @@ A manifest entry records, per data file: path, row count, and min/max of the
 configured stats columns. Mutations operate at FILE granularity:
 
 - ``append``      → write new files, commit = old list + new entries.
-- ``delete``      → only files whose [min,max] interval can contain matching
-                    rows are rewritten; all other entries carry over
-                    untouched (zero data movement — the manifest IS the
-                    carry-forward).
-- ``compact``     → bin-pack small files into target-size files; pure
-                    metadata swap plus the rewrite of the small files.
-- readers         → ``read`` loads the live file list; ``read_pruned``
-                    and ``read_pruned_bloom`` additionally skip files by
-                    manifest stats or blooms before Spark even sees them.
-                    Every read takes its entries, schema and deletion
-                    vectors from ONE manifest snapshot (``_read``).
+- ``delete_dv``   → merge-on-read: record the matching rows' (file,
+                    row_index) positions as a deletion vector (DV).
+- ``upsert``      → append the incoming rows plus a DV on the rows they
+                    replace, in one commit; no existing file is rewritten.
+- ``delete``      → copy-on-write: rewrite only files whose [min,max]
+                    interval can contain matching rows; every other entry
+                    carries over untouched.
+- ``compact``     → bin-pack small files into target-size files;
+                    ``compact_dv`` folds the DVs into the data files.
+- readers         → ``read``, ``read_pruned`` and ``read_pruned_bloom``
+                    (the last two skip files by stats or blooms) take
+                    entries, schema and DVs from ONE snapshot (``_read``).
 
-Every commit is a new manifest + atomic pointer swap; old manifests remain
-readable (time travel) until vacuumed.
+DVs compose with every mutation: the rewrites read through ``_read``, so a
+rewritten file drops its DV'd rows, and a DV naming a file that left the
+entry list matches nothing. Every commit is a new manifest + atomic pointer
+swap; old manifests remain readable (time travel) until vacuumed.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ import base64
 import hashlib
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -147,7 +152,7 @@ class ManifestTable:
     def _commit(self, entries: list[dict], parent: str | None,
                 txn: str | None = None,
                 schema_json: str | None = None,
-                dvs=_INHERIT_DVS) -> None:
+                dvs=_INHERIT_DVS, new_dv: str | None = None) -> None:
         """Atomic pointer swap with optimistic concurrency: `parent` is the
         manifest id this commit was derived from (None = table creation).
         An OS ``flock`` on a persistent per-table lock file
@@ -173,9 +178,11 @@ class ManifestTable:
         if schema_json is None:
             schema_json = pm.get("schema")
         # deletion vectors inherit from the parent unless the commit says
-        # otherwise (delete_dv appends one; compact_dv clears them)
+        # otherwise (compact_dv clears them); delete_dv and upsert add one
         if dvs is ManifestTable._INHERIT_DVS:
-            dvs = pm.get("dvs", [])
+            dvs = pm.get("dvs") or []
+        if new_dv is not None:
+            dvs = dvs + [new_dv]
         mpath = os.path.join(self.manifest_dir, mid)
         with open(mpath, "w") as f:
             json.dump(
@@ -270,8 +277,6 @@ class ManifestTable:
         commit lost the CAS — without this every CommitConflict retry leaks
         a full batch of parquet into data_dir (recurring under the
         stream_into_manifest retry loop) until a vacuum runs."""
-        import shutil
-
         for d in {os.path.dirname(e["path"]) for e in entries}:
             # only ever a b-<uuid> dir this writer just created
             shutil.rmtree(d, ignore_errors=True)
@@ -279,14 +284,17 @@ class ManifestTable:
     def _commit_or_discard(self, entries: list[dict], new: list[dict],
                            parent: str | None, txn: str | None = None,
                            schema_json: str | None = None,
-                           dvs=_INHERIT_DVS) -> None:
-        """_commit, deleting this writer's just-written data files if the
-        CAS loses (the retry will rewrite them from the caller's df)."""
+                           dvs=_INHERIT_DVS, new_dv: str | None = None) -> None:
+        """_commit, deleting this writer's just-written data files and DV
+        sidecar ``new_dv`` if the CAS loses (the retry rewrites both from
+        the caller's inputs)."""
         try:
             self._commit(entries, parent=parent, txn=txn,
-                         schema_json=schema_json, dvs=dvs)
+                         schema_json=schema_json, dvs=dvs, new_dv=new_dv)
         except CommitConflict:
             self._discard_batches(new)
+            if new_dv is not None:
+                shutil.rmtree(new_dv, ignore_errors=True)
             raise
 
     # ------------------------------------------------------------- surface
@@ -599,14 +607,34 @@ class ManifestTable:
             "left_anti",
         ).drop("__dv_path", "__dv_row")
 
-    def _require_no_dvs(self, op: str, manifest: dict) -> None:
+    def _mark(self, manifest: dict, entries: list[dict],
+              select) -> tuple[str | None, int]:
+        """The one row-removal step: write a DV sidecar holding the (file,
+        row_index) positions of the rows of ``entries`` that ``select``
+        keeps; return ``(dv_dir, n)``, or ``(None, 0)`` if none. Positions
+        come off the RAW files, projected before ``select`` (a join hides
+        ``_metadata``); positions ``manifest`` already deletes are skipped."""
+        if not entries:
+            return None, 0
+        raw = self.spark.read.schema(self._schema_of(manifest)).parquet(
+            *[e["path"] for e in entries]
+        )
+        marked = select(
+            raw.withColumn("__dv_path", F.col("_metadata.file_path"))
+            .withColumn("__dv_row", F.col("_metadata.row_index"))
+        ).select(F.col("__dv_path").alias("path"),
+                 F.col("__dv_row").alias("row_index"))
         if manifest.get("dvs"):
-            raise ValueError(
-                f"{op} on a table with live deletion vectors would "
-                "rewrite files the DVs reference by ROW INDEX, silently "
-                "resurrecting or double-deleting rows — run compact_dv() "
-                "first to fold the DVs into the data"
-            )
+            marked = marked.join(F.broadcast(self.spark.read.parquet(
+                *manifest["dvs"])), ["path", "row_index"], "left_anti")
+        dv_dir = os.path.join(self.dir, "dv", f"dv-{uuid.uuid4().hex}")
+        marked.write.mode("errorifexists").parquet(dv_dir)
+        n = self.spark.read.schema(
+            "path STRING, row_index BIGINT").parquet(dv_dir).count()
+        if n == 0:
+            shutil.rmtree(dv_dir, ignore_errors=True)
+            return None, 0
+        return dv_dir, n
 
     def delete_dv(self, where: Column) -> dict:
         """Merge-on-read DELETE (Delta/Iceberg deletion-vector pattern):
@@ -620,29 +648,13 @@ class ManifestTable:
         _metadata.row_index); ``compact_dv`` folds them back into data
         files. SQL DELETE semantics: NULL predicates retain the row."""
         parent, manifest = self._snapshot()
-        # positions are read off the raw files, so no DV anti-join here
-        df = self.spark.read.schema(self._schema_of(manifest)).parquet(
-            *[e["path"] for e in manifest["entries"]]
+        dv_dir, n = self._mark(
+            manifest, manifest["entries"],
+            lambda df: df.filter(F.coalesce(where, F.lit(False))),
         )
-        marked = (
-            df.filter(F.coalesce(where, F.lit(False)))
-            .select(
-                F.col("_metadata.file_path").alias("path"),
-                F.col("_metadata.row_index").alias("row_index"),
-            )
-        )
-        dv_dir = os.path.join(self.dir, "dv", f"dv-{uuid.uuid4().hex}")
-        marked.write.mode("errorifexists").parquet(dv_dir)
-        n = int(self.spark.read.parquet(dv_dir).count())
-        if n == 0:
-            import shutil
-
-            shutil.rmtree(dv_dir, ignore_errors=True)
-            return {"marked": 0}
-        self._commit(
-            manifest["entries"], parent=parent,
-            dvs=(manifest.get("dvs") or []) + [dv_dir],
-        )
+        if dv_dir is not None:
+            self._commit_or_discard(manifest["entries"], [], parent=parent,
+                                    new_dv=dv_dir)
         return {"marked": n}
 
     def compact_dv(self) -> dict:
@@ -713,18 +725,14 @@ class ManifestTable:
         `col` can contain matching rows; every other manifest entry carries
         over with zero I/O. Returns {'rewritten': n, 'carried': m}."""
         parent, manifest = self._snapshot()
-        self._require_no_dvs("delete", manifest)
         touched, carried = [], []
         for e in manifest["entries"]:
             (carried if self._disjoint(e, col, lo, hi) else touched).append(e)
         new_entries, new = list(carried), []
         if touched:
-            # one rewrite job over all touched files, not one per file;
-            # SQL DELETE semantics — NULL-predicate rows are retained.
-            # The live schema is DECLARED on the read: post-evolution a
-            # touched set can mix pre/post-ADD-COLUMN files, and an
-            # inferred schema (taken from one file) would silently drop
-            # the new column from every rewritten row.
+            # one rewrite job over all touched files, read through _read
+            # (declared schema, live DVs dropped); SQL DELETE semantics —
+            # NULL-predicate rows are retained
             remaining = self._read(manifest, touched).filter(
                 ~F.coalesce(where, F.lit(False))
             )
@@ -734,12 +742,13 @@ class ManifestTable:
         return {"rewritten": len(touched), "carried": len(carried)}
 
     def upsert(self, incoming: DataFrame, key: str) -> dict:
-        """File-granular MERGE: rows in ``incoming`` replace same-key rows;
-        new keys append. Only files whose [min,max] stats interval for
-        ``key`` intersects incoming's key range are rewritten (matched rows
-        removed via a broadcast-able anti-join in ONE job); every other
-        entry carries over with zero I/O, and incoming lands as new files.
-        ``key`` must be one of the table's stats columns.
+        """Merge-on-read MERGE = DELETE + INSERT in ONE commit: rows in
+        ``incoming`` replace same-key rows; new keys append. A deletion
+        vector marks the live same-key rows (``_mark`` over the files whose
+        stats for ``key`` meet incoming's key range) and incoming lands as
+        new files; no existing file is rewritten. ``key`` must be one of
+        the table's stats columns. Returns {'rewritten': 0, 'carried':
+        <entries>, 'marked': <rows replaced>}.
 
         ``incoming`` must be unique on ``key`` — duplicate source keys have
         no defined MERGE semantics (Delta raises too), and silently landing
@@ -751,7 +760,6 @@ class ManifestTable:
         declared-schema reads), missing columns null-fill, and type drift
         raises at write time."""
         parent, manifest = self._snapshot()
-        self._require_no_dvs("upsert", manifest)
         incoming, _ = self._align_to_live(incoming, manifest, evolve=False)
         lo, hi, n, n_keys = incoming.agg(
             F.min(key), F.max(key), F.count(F.lit(1)), F.count_distinct(key)
@@ -764,25 +772,19 @@ class ManifestTable:
                 f"({n} rows, {n_keys} distinct non-null keys); MERGE "
                 "requires a unique non-null source key — dedup incoming first"
             )
-        touched, carried = [], []
-        for e in manifest["entries"]:
-            # lo is None only for an empty incoming: nothing to replace
-            disjoint = lo is None or self._disjoint(e, key, lo, hi)
-            (carried if disjoint else touched).append(e)
-        new_entries, new = list(carried), []
-        if touched:
-            # declared live schema: see delete() — mixed-schema touched
-            # sets must not infer from one file
-            remaining = self._read(manifest, touched).join(
-                incoming.select(key), on=key, how="left_anti"
-            )
-            new = self._write_files(remaining)
-            new_entries += new
-        incoming_files = self._write_files(incoming)
-        new += incoming_files
-        new_entries += incoming_files
-        self._commit_or_discard(new_entries, new, parent=parent)
-        return {"rewritten": len(touched), "carried": len(carried)}
+        entries = manifest["entries"]
+        # lo is None only for an empty incoming: nothing to replace
+        touched = [] if lo is None else [
+            e for e in entries if not self._disjoint(e, key, lo, hi)
+        ]
+        dv_dir, marked = self._mark(
+            manifest, touched,
+            lambda df: df.join(incoming.select(key), on=key, how="left_semi"),
+        )
+        new = self._write_files(incoming)
+        self._commit_or_discard(entries + new, new, parent=parent,
+                                new_dv=dv_dir)
+        return {"rewritten": 0, "carried": len(entries), "marked": marked}
 
     # ---------------------------------------------------------- time travel
 
@@ -853,7 +855,6 @@ class ManifestTable:
         files carry over untouched. The 100 TB hygiene job that keeps scan
         task counts sane after many streaming appends."""
         parent, manifest = self._snapshot()
-        self._require_no_dvs("compact", manifest)
         entries = manifest["entries"]
         small = [e for e in entries if e["rows"] < target_rows]
         large = [e for e in entries if e["rows"] >= target_rows]
@@ -881,8 +882,6 @@ def vacuum(table: ManifestTable) -> dict:
     """Remove data files referenced by NO manifest reachable from the live
     pointer (i.e., files orphaned by delete/compact commits) and all
     non-live manifests. Time travel ends; space is reclaimed."""
-    import shutil
-
     live_paths = {e["path"] for e in table.files()}
     removed_files = 0
     for batch in os.listdir(table.data_dir):

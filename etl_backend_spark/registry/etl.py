@@ -261,11 +261,11 @@ def q_etl_scd2_merge(spark, sf_dir):
 def q_etl_merge_manifest(spark, sf_dir):
     """MERGE through the REAL manifest table format, verified by the gate:
     create a manifest table from orders in a fresh temp dir, run the
-    file-granular upsert (keys 1–50 zeroed + one brand-new key −1), read
+    merge-on-read upsert (keys 1–50 zeroed + one brand-new key −1), read
     the committed post-state back through the manifest, and emit
     integer-exact aggregates of it. Unlike the semantic etl_* post-state
     queries, this exercises the physical machinery — file stats, interval
-    pruning, anti-join rewrite, atomic commit — end to end under the
+    pruning, deletion-vector marking, atomic commit — end to end under the
     value-hash check. (etl/manifest.py; reference mutation semantics
     src/routes/ads.ts:53-74,259-262 scaled to a table format.)"""
     import shutil

@@ -3,7 +3,15 @@ delete carry-forward, compaction, time-travel pointer."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
+from hypothesis import HealthCheck, settings
+from hypothesis import strategies as st
+from hypothesis.stateful import (
+    RuleBasedStateMachine, initialize, invariant, precondition, rule,
+    run_state_machine_as_test,
+)
 from pyspark.sql import functions as F
 
 from etl_backend_spark.etl.manifest import ManifestTable
@@ -992,11 +1000,10 @@ def test_restore_makes_past_snapshot_live_again(spark, tmp_path):
 def test_deletion_vectors_merge_on_read_and_compact(spark, tmp_path):
     """Merge-on-read DELETE: delete_dv commits positions, not rewrites —
     reads (plain, pruned, time-travel) apply the anti-join; stacked DVs
-    compose; copy-on-write mutations refuse until compact_dv folds the
-    vectors back into data files; after folding the data files actually
-    shrank and reads are unchanged."""
-    import pytest
-
+    compose; a copy-on-write delete and an upsert on a table with live DVs
+    neither resurrect nor lose rows; compact_dv folds the vectors back into
+    data files, after which the files actually shrank and reads are
+    unchanged."""
     o = Catalog(spark, SF_DIR).table("orders")
     t = ManifestTable(spark, str(tmp_path), "dv_orders", ["o_orderkey"])
     t.create(o.repartition(4))
@@ -1025,20 +1032,37 @@ def test_deletion_vectors_merge_on_read_and_compact(spark, tmp_path):
     t.delete_dv(F.col("o_orderpriority") == "1-URGENT")
     assert t.read().count() == n0 - n_f - n_p
 
-    # copy-on-write ops refuse while DVs are live
-    with pytest.raises(ValueError, match="compact_dv"):
-        t.delete(F.col("o_orderkey") < 0, "o_orderkey", lo=None, hi=0)
-    with pytest.raises(ValueError, match="compact_dv"):
-        t.upsert(o.limit(1), "o_orderkey")
+    # copy-on-write delete and merge-on-read upsert compose with live DVs
+    model = {r.o_orderkey: tuple(r) for r in t.read().collect()}
+    live_keys = sorted(model)
+    k_del, k_upd = live_keys[0], live_keys[1]
+    t.delete(F.col("o_orderkey") == k_del, "o_orderkey", lo=k_del, hi=k_del)
+    del model[k_del]
+    incoming = (
+        o.filter(F.col("o_orderkey").isin(k_upd, key))  # live + DV-deleted
+        .unionByName(o.filter(F.col("o_orderkey") == k_upd)
+                     .withColumn("o_orderkey", F.lit(-1).cast("long")))
+        .withColumn("o_totalprice", F.lit(0.0))
+    )
+    res = t.upsert(incoming, "o_orderkey")
+    assert res["rewritten"] == 0 and res["marked"] == 1  # k_upd only
+    model.update({r.o_orderkey: tuple(r) for r in incoming.collect()})
+    assert sorted(map(tuple, t.read().collect())) == sorted(model.values())
+    lo, hi = -1, max(k_upd, key)
+    df, _ = t.read_pruned("o_orderkey", lo=lo, hi=hi)
+    assert sorted(map(tuple, df.filter(F.col("o_orderkey").between(lo, hi))
+                      .collect())) == sorted(
+        v for k, v in model.items() if lo <= k <= hi)
 
     expect = sorted(map(tuple, t.read().collect()))
     res = t.compact_dv()
     assert res["rewritten"] > 0
     assert not t._live_manifest().get("dvs")
     assert sorted(map(tuple, t.read().collect())) == expect
-    # and the fold really dropped the rows from the files
-    assert sum(e["rows"] for e in t.files()) == n0 - n_f - n_p
-    # rewrite ops work again
+    # and the fold really dropped the rows from the files: one deleted,
+    # one brought back by the upsert, one inserted
+    assert sum(e["rows"] for e in t.files()) == n0 - n_f - n_p + 1
+    # a copy-on-write delete on the folded table
     t.delete(F.col("o_orderkey") < 0, "o_orderkey", lo=None, hi=0)
 
 
@@ -1061,6 +1085,36 @@ def test_delete_dv_conflicts_with_concurrent_commit(spark, tmp_path):
         t._commit(manifest["entries"], parent=parent, dvs=["bogus-dv"])
     # the losing DV never became visible
     assert not t._live_manifest().get("dvs")
+
+
+def test_commit_conflict_discards_loser_dv(spark, tmp_path):
+    """A delete_dv or upsert that loses the CAS removes the DV sidecar it
+    just wrote (and upsert its data batch): the retry marks again from the
+    winner's snapshot, so a loser's sidecar would only pile up under dv/
+    until a vacuum."""
+    import os
+
+    from etl_backend_spark.etl.manifest import CommitConflict
+
+    schema = "k LONG, v DOUBLE"
+    t = ManifestTable(spark, str(tmp_path), "dvloser", ["k"])
+    t.create(spark.createDataFrame([(k, 0.0) for k in range(10)], schema)
+             .coalesce(1))
+    stale = t._snapshot()
+    t.append(spark.createDataFrame([(100, 1.0)], schema))  # the winner
+    data_before = set(os.listdir(t.data_dir))
+    t._snapshot = lambda: stale  # both writers derive from the stale snapshot
+    try:
+        with pytest.raises(CommitConflict):
+            t.delete_dv(F.col("k") == 1)
+        with pytest.raises(CommitConflict):
+            t.upsert(spark.createDataFrame([(2, -1.0)], schema), "k")
+    finally:
+        del t._snapshot
+    dv_root = os.path.join(t.dir, "dv")
+    assert not os.path.isdir(dv_root) or os.listdir(dv_root) == []
+    assert set(os.listdir(t.data_dir)) == data_before
+    assert sorted(r.k for r in t.read().collect()) == list(range(10)) + [100]
 
 
 def test_vacuum_reclaims_folded_dv_sidecars(spark, tmp_path):
@@ -1165,3 +1219,148 @@ def test_shallow_clone_is_zero_copy_and_isolated(spark, tmp_path):
     n2 = t2.read().count()
     t2.append_once(o.filter(F.col("o_orderkey") <= 10), txn=tok)
     assert t2.read().count() == n2  # replay within the clone is a no-op
+
+
+# ------------------------------------------------------------ model check
+
+KEYS = 10  # key domain of the model-checked table: small, so writes collide
+
+
+def _rows(min_size=0):
+    return st.dictionaries(st.integers(0, KEYS - 1),
+                           st.integers(-99, 99).map(float),
+                           min_size=min_size, max_size=4)
+
+
+class ManifestModel(RuleBasedStateMachine):
+    """Random mutation sequences on a small keyed ManifestTable (stats and
+    a bloom on ``k``) against a dict model ``{k: v}``. After every step
+    ``read``, ``read_pruned`` and ``read_pruned_bloom`` (residual filter
+    applied) must all equal the model; ``read_at`` of a recorded snapshot
+    must equal the model recorded with it."""
+
+    def __init__(self, spark, root):
+        super().__init__()
+        self.spark = spark
+        self.t = ManifestTable(spark, root, f"m{uuid.uuid4().hex[:8]}",
+                               ["k"], bloom_col="k", bloom_bits=256)
+        self.model: dict[int, float] = {}
+        self.txns: dict[str, dict[int, float]] = {}
+        self.snaps: list[tuple[str, dict[int, float]]] = []
+        self.probe = (0, KEYS - 1)
+
+    def _df(self, rows: dict):
+        # two files per write: several rows per file, so a rewrite of a
+        # file meets rows that a deletion vector marked
+        return self.spark.createDataFrame(
+            sorted(rows.items()), "k LONG, v DOUBLE").coalesce(2)
+
+    def _committed(self, rows=()):
+        """Record the live snapshot with its model; probe the keys touched."""
+        self.snaps.append((self.t._live_id(), dict(self.model)))
+        if rows:
+            self.probe = (min(rows), max(rows))
+
+    @initialize(rows=_rows(min_size=3))
+    def create(self, rows):
+        self.t.create(self._df(rows))
+        self.model = dict(rows)
+        self._committed(rows)
+
+    @rule(rows=_rows())
+    def append(self, rows):
+        fresh = {k: v for k, v in rows.items() if k not in self.model}
+        self.t.append(self._df(fresh))
+        self.model.update(fresh)
+        self._committed(fresh)
+
+    @rule(rows=_rows(), data=st.data())
+    def append_once(self, rows, data):
+        if self.txns and data.draw(st.booleans(), label="replay"):
+            txn = data.draw(st.sampled_from(sorted(self.txns)), label="txn")
+            assert self.t.append_once(self._df(self.txns[txn]), txn) is False
+            return
+        fresh = {k: v for k, v in rows.items() if k not in self.model}
+        txn = f"txn-{len(self.txns)}"
+        assert self.t.append_once(self._df(fresh), txn) is True
+        self.txns[txn] = fresh
+        self.model.update(fresh)
+        self._committed(fresh)
+
+    @rule(rows=_rows(min_size=1))
+    def upsert(self, rows):
+        res = self.t.upsert(self._df(rows), "k")
+        assert res["marked"] == len(rows.keys() & self.model.keys())
+        self.model.update(rows)
+        self._committed(rows)
+
+    @rule(lo=st.integers(0, KEYS - 1), width=st.integers(0, 3),
+          bounded=st.booleans())
+    def delete(self, lo, width, bounded):
+        hi = lo + width
+        # unbounded: every file is rewritten, including rows outside [lo, hi]
+        self.t.delete(F.col("k").between(lo, hi), "k",
+                      lo=lo if bounded else None, hi=hi if bounded else None)
+        self.model = {k: v for k, v in self.model.items() if not lo <= k <= hi}
+        self._committed((lo, hi))
+
+    @rule(lo=st.integers(0, KEYS - 1), width=st.integers(0, 3))
+    def delete_dv(self, lo, width):
+        hi = lo + width
+        res = self.t.delete_dv(F.col("k").between(lo, hi))
+        assert res["marked"] == sum(lo <= k <= hi for k in self.model)
+        self.model = {k: v for k, v in self.model.items() if not lo <= k <= hi}
+        self._committed((lo, hi))
+
+    @rule()
+    def compact_dv(self):
+        self.t.compact_dv()
+        self._committed()
+
+    @rule(target_rows=st.integers(1, 6))
+    def compact(self, target_rows):
+        self.t.compact(target_rows=target_rows)
+        self._committed()
+
+    @precondition(lambda self: self.snaps)
+    @rule(data=st.data())
+    def restore(self, data):
+        # newest first: recent snapshots are the ones still holding DVs
+        mid, model = data.draw(st.sampled_from(self.snaps[::-1]),
+                               label="snapshot")
+        assert sorted((r.k, r.v) for r in self.t.read_at(mid).collect()) \
+            == sorted(model.items())
+        self.t.restore(mid)
+        self.model = dict(model)
+        self._committed()
+
+    @invariant()
+    def reads_match_model(self):
+        lo, hi = self.probe
+        pruned, _ = self.t.read_pruned("k", lo, hi)
+        bloom, _ = self.t.read_pruned_bloom(lo)
+        got: dict[int, list] = {0: [], 1: [], 2: []}
+        # one job for the three reads: each row is tagged with its reader
+        for r in (self.t.read().withColumn("src", F.lit(0))
+                  .unionByName(pruned.filter(F.col("k").between(lo, hi))
+                               .withColumn("src", F.lit(1)))
+                  .unionByName(bloom.filter(F.col("k") == lo)
+                               .withColumn("src", F.lit(2)))
+                  .collect()):
+            got[r.src].append((r.k, r.v))
+        want = sorted(self.model.items())
+        assert sorted(got[0]) == want
+        assert sorted(got[1]) == [kv for kv in want if lo <= kv[0] <= hi]
+        assert sorted(got[2]) == [kv for kv in want if kv[0] == lo]
+
+
+def test_manifest_matches_model(spark_session, tmp_path):
+    """Model check of every ManifestTable mutation, deletion vectors
+    included, through every read path (see ManifestModel)."""
+    run_state_machine_as_test(
+        lambda: ManifestModel(spark_session, str(tmp_path)),
+        settings=settings(max_examples=7, stateful_step_count=12,
+                          deadline=None, suppress_health_check=[
+                              HealthCheck.function_scoped_fixture,
+                              HealthCheck.too_slow]),
+    )
