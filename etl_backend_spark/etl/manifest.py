@@ -11,22 +11,21 @@ A manifest entry records, per data file: path, row count, and min/max of the
 configured stats columns. Mutations operate at FILE granularity:
 
 - ``append``      → write new files, commit = old list + new entries.
-- ``delete_dv``   → merge-on-read: record the matching rows' (file,
-                    row_index) positions as a deletion vector (DV).
+- ``delete_dv``   → the one DELETE, merge-on-read: record the matching
+                    rows' (file, row_index) positions as a deletion vector
+                    (DV), scanning only files whose [min,max] interval can
+                    hold them; no data file is rewritten.
 - ``upsert``      → append the incoming rows plus a DV on the rows they
                     replace, in one commit; no existing file is rewritten.
-- ``delete``      → copy-on-write: rewrite only files whose [min,max]
-                    interval can contain matching rows; every other entry
-                    carries over untouched.
-- ``compact``     → bin-pack small files into target-size files;
-                    ``compact_dv`` folds the DVs into the data files.
+- ``compact``     → the one rewrite: bin-pack the small files and every
+                    file a DV names into target-size files, and clear the
+                    DV list.
 - readers         → ``read``, ``read_pruned`` and ``read_pruned_bloom``
                     (the last two skip files by stats or blooms) take
                     entries, schema and DVs from ONE snapshot (``_read``).
 
-DVs compose with every mutation: the rewrites read through ``_read``, so a
-rewritten file drops its DV'd rows, and a DV naming a file that left the
-entry list matches nothing. Every commit is a new manifest + atomic pointer
+Only ``compact`` drops entries, and it folds every DV as it does, so a live
+DV always names live files. Every commit is a new manifest + atomic pointer
 swap; old manifests remain readable (time travel) until vacuumed.
 """
 
@@ -146,13 +145,11 @@ class ManifestTable:
                     ) from None
                 time.sleep(0.05)
 
-    #: sentinel: commit inherits the parent manifest's deletion vectors
-    _INHERIT_DVS = object()
-
     def _commit(self, entries: list[dict], parent: str | None,
                 txn: str | None = None,
                 schema_json: str | None = None,
-                dvs=_INHERIT_DVS, new_dv: str | None = None) -> None:
+                dvs: list[str] | None = None,
+                new_dv: str | None = None) -> None:
         """Atomic pointer swap with optimistic concurrency: `parent` is the
         manifest id this commit was derived from (None = table creation).
         An OS ``flock`` on a persistent per-table lock file
@@ -178,8 +175,8 @@ class ManifestTable:
         if schema_json is None:
             schema_json = pm.get("schema")
         # deletion vectors inherit from the parent unless the commit says
-        # otherwise (compact_dv clears them); delete_dv and upsert add one
-        if dvs is ManifestTable._INHERIT_DVS:
+        # otherwise (compact clears them); delete_dv and upsert add one
+        if dvs is None:
             dvs = pm.get("dvs") or []
         if new_dv is not None:
             dvs = dvs + [new_dv]
@@ -284,7 +281,8 @@ class ManifestTable:
     def _commit_or_discard(self, entries: list[dict], new: list[dict],
                            parent: str | None, txn: str | None = None,
                            schema_json: str | None = None,
-                           dvs=_INHERIT_DVS, new_dv: str | None = None) -> None:
+                           dvs: list[str] | None = None,
+                           new_dv: str | None = None) -> None:
         """_commit, deleting this writer's just-written data files and DV
         sidecar ``new_dv`` if the CAS loses (the retry rewrites both from
         the caller's inputs)."""
@@ -319,7 +317,7 @@ class ManifestTable:
         vectors; an empty frame of that schema when no entry is chosen.
 
         Entries, schema and DVs must all come from the SAME snapshot: old
-        entries paired with a later commit's DV list (``compact_dv`` clears
+        entries paired with a later commit's DV list (``compact`` clears
         it) would bring back rows that were already deleted. The declared
         schema is a superset for files written before an ADD COLUMN;
         parquet null-fills the missing columns (the read half of additive
@@ -636,20 +634,24 @@ class ManifestTable:
             return None, 0
         return dv_dir, n
 
-    def delete_dv(self, where: Column) -> dict:
-        """Merge-on-read DELETE (Delta/Iceberg deletion-vector pattern):
-        instead of rewriting every touched file (copy-on-write ``delete``),
-        record the matching rows' (file, row_index) positions in a sidecar
-        parquet and commit only the manifest pointer. Cost is one scan +
-        one tiny write regardless of how many multi-GB files contain a
-        matching row — at 100 TB this is the difference between a
-        GDPR-delete rewriting 30 TB and writing 3 MB. Readers apply the
-        DVs as a broadcast anti-join on (_metadata.file_path,
-        _metadata.row_index); ``compact_dv`` folds them back into data
-        files. SQL DELETE semantics: NULL predicates retain the row."""
+    def delete_dv(self, where: Column, col: str | None = None,
+                  lo=None, hi=None) -> dict:
+        """The one DELETE, merge-on-read (Delta/Iceberg deletion-vector
+        pattern): record the matching rows' (file, row_index) positions in
+        a sidecar parquet and commit only the manifest pointer; no data
+        file is rewritten, so a delete touching one row per multi-GB file
+        commits kilobytes. With ``col``, only entries whose stats for
+        ``col`` meet [lo, hi] are scanned (the caller's promise that no
+        matching row lies outside); without, every entry is. Readers apply
+        the DVs as a broadcast anti-join on (_metadata.file_path,
+        _metadata.row_index); ``compact`` folds them back into data files.
+        SQL DELETE semantics: NULL predicates retain the row. Returns
+        {'marked': n}."""
         parent, manifest = self._snapshot()
         dv_dir, n = self._mark(
-            manifest, manifest["entries"],
+            manifest,
+            [e for e in manifest["entries"]
+             if col is None or not self._disjoint(e, col, lo, hi)],
             lambda df: df.filter(F.coalesce(where, F.lit(False))),
         )
         if dv_dir is not None:
@@ -658,27 +660,9 @@ class ManifestTable:
         return {"marked": n}
 
     def compact_dv(self) -> dict:
-        """Fold live deletion vectors into the data (merge-on-read ->
-        copy-on-write): rewrite ONLY the files a DV references, carry
-        every other entry with zero I/O, clear the DV list. The sidecar
-        dirs are left for time travel; vacuum reclaims them."""
-        parent, manifest = self._snapshot()
-        dvs = manifest.get("dvs") or []
-        if not dvs:
-            return {"rewritten": 0, "carried": len(manifest["entries"])}
-        dv = self.spark.read.parquet(*dvs)
-        # file_path is a URI; entries store plain paths
-        touched_paths = {
-            unquote(urlparse(r.path).path)
-            for r in dv.select("path").distinct().collect()
-        }
-        touched = [e for e in manifest["entries"] if e["path"] in touched_paths]
-        carried = [e for e in manifest["entries"] if e["path"] not in touched_paths]
-        new = self._write_files(self._read(manifest, touched))
-        self._commit_or_discard(
-            carried + new, new, parent=parent, dvs=[],
-        )
-        return {"rewritten": len(touched), "carried": len(carried)}
+        """Fold the live DVs alone: ``compact`` with no file counted small
+        rewrites exactly the files a DV names, each into one new file."""
+        return self.compact(target_rows=0)
 
     def read_pruned(self, col: str, lo=None, hi=None) -> tuple[DataFrame, int]:
         """Manifest-stats pruning: load only files whose [min,max] for `col`
@@ -719,27 +703,6 @@ class ManifestTable:
                     continue  # definitive miss
             keep.append(e)
         return self._read(manifest, keep), len(entries) - len(keep)
-
-    def delete(self, where: Column, col: str, lo=None, hi=None) -> dict:
-        """File-granular delete: rewrite only files whose stats interval for
-        `col` can contain matching rows; every other manifest entry carries
-        over with zero I/O. Returns {'rewritten': n, 'carried': m}."""
-        parent, manifest = self._snapshot()
-        touched, carried = [], []
-        for e in manifest["entries"]:
-            (carried if self._disjoint(e, col, lo, hi) else touched).append(e)
-        new_entries, new = list(carried), []
-        if touched:
-            # one rewrite job over all touched files, read through _read
-            # (declared schema, live DVs dropped); SQL DELETE semantics —
-            # NULL-predicate rows are retained
-            remaining = self._read(manifest, touched).filter(
-                ~F.coalesce(where, F.lit(False))
-            )
-            new = self._write_files(remaining)
-            new_entries += new
-        self._commit_or_discard(new_entries, new, parent=parent)
-        return {"rewritten": len(touched), "carried": len(carried)}
 
     def upsert(self, incoming: DataFrame, key: str) -> dict:
         """Merge-on-read MERGE = DELETE + INSERT in ONE commit: rows in
@@ -850,37 +813,49 @@ class ManifestTable:
         return self._read(manifest, manifest["entries"])
 
     def compact(self, target_rows: int = 100_000) -> dict:
-        """Small-file compaction: greedily bin files below target into
-        groups totalling ~target_rows, rewrite each group as one file; large
-        files carry over untouched. The 100 TB hygiene job that keeps scan
-        task counts sane after many streaming appends."""
+        """The one rewrite: the small files (below ``target_rows``) and
+        every file a live DV names are greedily binned into groups
+        totalling ~target_rows, each group read through ``_read`` (its
+        DV'd rows drop out) and written as one file; the commit clears the
+        DV list. Other files carry over untouched; with nothing to
+        rewrite there is no commit. The sidecar dirs stay for time
+        travel; vacuum reclaims them. Returns {'rewritten', 'carried',
+        'bins'}."""
         parent, manifest = self._snapshot()
         entries = manifest["entries"]
-        small = [e for e in entries if e["rows"] < target_rows]
-        large = [e for e in entries if e["rows"] >= target_rows]
+        dvs = manifest.get("dvs") or []
+        # file_path is a URI; entries store plain paths
+        named = {
+            unquote(urlparse(r.path).path)
+            for r in self.spark.read.parquet(*dvs).select("path")
+            .distinct().collect()
+        } if dvs else set()
+        todo, carried = [], []
+        for e in entries:
+            (todo if e["rows"] < target_rows or e["path"] in named
+             else carried).append(e)
+        if not todo:
+            return {"rewritten": 0, "carried": len(carried), "bins": 0}
         bins: list[list[dict]] = []
         cur, cur_rows = [], 0
-        for e in sorted(small, key=lambda e: e["rows"]):
+        for e in sorted(todo, key=lambda e: e["rows"]):
             if cur_rows + e["rows"] > target_rows and cur:
                 bins.append(cur)
                 cur, cur_rows = [], 0
             cur.append(e)
             cur_rows += e["rows"]
-        if cur:
-            bins.append(cur)
-        new_entries, new = list(large), []
+        bins.append(cur)
+        new = []
         for group in bins:
-            merged = self._read(manifest, group).coalesce(1)
-            batch = self._write_files(merged)
-            new += batch
-            new_entries += batch
-        self._commit_or_discard(new_entries, new, parent=parent)
-        return {"compacted_files": len(small), "bins": len(bins)}
+            new += self._write_files(self._read(manifest, group).coalesce(1))
+        self._commit_or_discard(carried + new, new, parent=parent, dvs=[])
+        return {"rewritten": len(todo), "carried": len(carried),
+                "bins": len(bins)}
 
 
 def vacuum(table: ManifestTable) -> dict:
     """Remove data files referenced by NO manifest reachable from the live
-    pointer (i.e., files orphaned by delete/compact commits) and all
+    pointer (i.e., files orphaned by compact and restore commits) and all
     non-live manifests. Time travel ends; space is reclaimed."""
     live_paths = {e["path"] for e in table.files()}
     removed_files = 0
@@ -897,7 +872,7 @@ def vacuum(table: ManifestTable) -> dict:
                     os.remove(f)
                     removed_files += 1
     # deletion-vector sidecars: keep only the dirs the LIVE manifest still
-    # references (compact_dv leaves folded DVs behind for time travel;
+    # references (compact leaves folded DVs behind for time travel;
     # vacuum is where that history ends, same as for data files)
     live_dvs = set(table._live_manifest().get("dvs") or [])
     removed_dvs = 0

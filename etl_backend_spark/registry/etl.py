@@ -312,8 +312,9 @@ def q_etl_merge_manifest(spark, sf_dir):
 )
 def q_etl_time_travel(spark, sf_dir):
     """TIME TRAVEL through the manifest parent chain, value-checked by the
-    gate: create (orders<=500) → append (orders>500) → delete (<=100 and
-    odd), then read BOTH the live table and the creation snapshot
+    gate: create (orders<=500) → append (orders>500) → delete_dv (<=100
+    and odd, a deletion vector over the files whose stats meet <=100),
+    then read BOTH the live table and the creation snapshot
     (``read_at(history()[-1])``). The oracle states each as a plain
     predicate over the source table, so the gate fails if a commit ever
     mutates past snapshots (the immutability contract Iceberg/Delta
@@ -329,7 +330,7 @@ def q_etl_time_travel(spark, sf_dir):
         t = ManifestTable(spark, root, "orders", ["o_orderkey"])
         t.create(o.filter(F.col("o_orderkey") <= 500).repartition(4))
         t.append(o.filter(F.col("o_orderkey") > 500).repartition(4))
-        t.delete(
+        t.delete_dv(
             (F.col("o_orderkey") <= 100) & (F.col("o_orderkey") % 2 == 1),
             "o_orderkey", lo=None, hi=100,
         )
@@ -360,7 +361,7 @@ def q_etl_time_travel(spark, sf_dir):
 )
 def q_etl_snapshot_diff(spark, sf_dir):
     """CHANGE FEED between two manifest snapshots, value-checked: after
-    create (<=500) → append (500..1000] → delete (<=100 odd), diff the
+    create (<=500) → append (500..1000] → delete_dv (<=100 odd), diff the
     creation snapshot against live by key anti-joins over read_at/read —
     the poor-man's CDC every downstream incremental consumer wants from
     a table format. The oracle states both change sets as plain
@@ -382,7 +383,7 @@ def q_etl_snapshot_diff(spark, sf_dir):
             o.filter((F.col("o_orderkey") > 500) & (F.col("o_orderkey") <= 1000))
             .repartition(2)
         )
-        t.delete(
+        t.delete_dv(
             (F.col("o_orderkey") <= 100) & (F.col("o_orderkey") % 2 == 1),
             "o_orderkey", lo=None, hi=100,
         )
@@ -779,12 +780,12 @@ def q_etl_incremental_cascade(spark, sf_dir):
 def q_etl_delete_dv(spark, sf_dir):
     """DELETION-VECTOR delete, value-checked by the gate (r6): mark rows
     by (file, row_index) position in a sidecar instead of rewriting data
-    files (etl/manifest.py delete_dv/_apply_dvs/compact_dv). The read
+    files (etl/manifest.py delete_dv/_apply_dvs/compact). The read
     back applies the DV as a broadcast anti-join on parquet's
     _metadata.row_index; the check asserts no data file was rewritten AND
     the post-delete scan matches the oracle's row-level delete exactly —
-    then folds the DV (compact_dv) and asserts the fold preserves the
-    same counts. At 100 TB this is the GDPR/right-to-be-forgotten path:
+    then folds the DV (compact, which rewrites the DV'd files with the
+    small ones) and asserts the fold preserves the same counts. At 100 TB this is the GDPR/right-to-be-forgotten path:
     a delete touching one row per multi-GB file commits kilobytes."""
     import shutil
     import tempfile
@@ -803,10 +804,10 @@ def q_etl_delete_dv(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("o_totalprice"), 2).alias("s"),
         ).collect()[0]
-        fold = t.compact_dv()
+        fold = t.compact()
         assert fold["rewritten"] > 0
         row2 = t.read().agg(F.count(F.lit(1)).alias("n")).collect()[0]
-        assert row2.n == row.n, "compact_dv changed the row set"
+        assert row2.n == row.n, "compact changed the row set"
         return spark.createDataFrame(
             [(int(row.n), int(res["marked"]), float(row.s))],
             "n_remaining LONG, n_marked LONG, sum_remaining DOUBLE",

@@ -1,10 +1,12 @@
-"""Manifest table format: file-level commits, stats pruning, file-granular
-delete carry-forward, compaction, time-travel pointer."""
+"""Manifest table format: file-level commits, stats pruning, deletion-vector
+deletes, compaction that folds them, time-travel pointer."""
 
 from __future__ import annotations
 
 import uuid
+from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, settings
 from hypothesis import strategies as st
@@ -48,25 +50,30 @@ def test_manifest_stats_pruning_skips_files(mtable):
 
 
 def test_manifest_delete_carries_disjoint_files(mtable):
+    """A bounded delete_dv marks rows only in the files whose stats meet
+    [lo, hi]: a predicate row in a stats-disjoint file stays, and the
+    entry list is unchanged (no file is rewritten)."""
     t, o = mtable
-    before_paths = {e["path"] for e in t.files()}
-    res = t.delete(F.col("o_orderkey").between(1, 100), "o_orderkey", lo=1, hi=100)
-    assert res["carried"] >= 4
-    assert res["rewritten"] >= 1
+    before_paths = [e["path"] for e in t.files()]
+    res = t.delete_dv(
+        (F.col("o_orderkey") <= 100) | (F.col("o_orderkey") > 1400),
+        "o_orderkey", lo=1, hi=100,
+    )
+    n_low = o.filter(F.col("o_orderkey") <= 100).count()
+    assert res["marked"] == n_low > 0
+    assert [e["path"] for e in t.files()] == before_paths
     after = t.read()
-    assert after.filter(F.col("o_orderkey").between(1, 100)).count() == 0
-    expect = o.filter(~F.col("o_orderkey").between(1, 100)).count()
-    assert after.count() == expect
-    # carried files are the SAME physical files (no rewrite)
-    carried_after = {e["path"] for e in t.files()} & before_paths
-    assert len(carried_after) == res["carried"]
+    assert after.filter(F.col("o_orderkey") <= 100).count() == 0
+    assert after.filter(F.col("o_orderkey") > 1400).count() == \
+        o.filter(F.col("o_orderkey") > 1400).count() > 0
+    assert after.count() == o.count() - n_low
 
 
 def test_manifest_compaction_reduces_files(mtable):
     t, o = mtable
     n_before = len(t.files())
     res = t.compact(target_rows=10_000)
-    assert res["compacted_files"] == n_before  # all our chunks are small
+    assert res["rewritten"] == n_before  # all our chunks are small
     assert len(t.files()) < n_before
     assert t.read().count() == o.count()  # content preserved
 
@@ -99,7 +106,8 @@ def test_manifest_vacuum_reclaims_orphans(mtable):
     from etl_backend_spark.etl.manifest import vacuum
 
     t, o = mtable
-    t.delete(F.col("o_orderkey").between(1, 100), "o_orderkey", lo=1, hi=100)
+    t.delete_dv(F.col("o_orderkey").between(1, 100), "o_orderkey", lo=1, hi=100)
+    t.compact()  # rewrites the small and DV'd files, orphaning the old ones
     n = t.read().count()
     res = vacuum(t)
     assert res["data_files"] > 0 and res["manifests"] > 0
@@ -132,7 +140,7 @@ def test_manifest_delete_retains_null_predicate_rows(spark, tmp_path):
     )
     t = ManifestTable(spark, str(tmp_path), "nulls", ["k"])
     t.create(df)
-    t.delete(F.col("v") > 50.0, "k")
+    t.delete_dv(F.col("v") > 50.0, "k")
     kept = sorted(r.k for r in t.read().collect())
     assert kept == [1, 2]  # k=2 has NULL predicate -> retained
 
@@ -166,7 +174,7 @@ def test_manifest_time_travel(mtable, spark):
     t, o = mtable
     n0 = t.read().count()
     past = t._live_id()
-    t.delete(F.col("o_orderkey") <= 500, "o_orderkey", lo=1, hi=500)
+    t.delete_dv(F.col("o_orderkey") <= 500, "o_orderkey", lo=1, hi=500)
     assert t.read().count() < n0
     hist = t.history()
     assert hist[0] == t._live_id() and past in hist
@@ -174,23 +182,25 @@ def test_manifest_time_travel(mtable, spark):
 
 
 def test_manifest_delete_to_empty_file_set(spark, tmp_path):
-    """Deleting every row of every touched file commits an empty rewrite
-    cleanly (no schema-inference crash on a part-less directory)."""
+    """Compacting a table whose every row a DV deletes commits an empty
+    rewrite cleanly (no schema-inference crash on a part-less directory)."""
     df = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k LONG, v DOUBLE")
     t = ManifestTable(spark, str(tmp_path), "wipe", ["k"])
     t.create(df)
-    t.delete(F.col("k") >= 0, "k")
+    t.delete_dv(F.col("k") >= 0, "k")
+    t.compact()
     assert t.files() == []
 
 
 def test_manifest_empty_table_readable(spark, tmp_path):
-    """After deleting every row, read/read_pruned/read_pruned_bloom/read_at
-    and a shallow clone still return the declared schema: the schema
-    recorded in every manifest covers the no-files state, with no sidecar
-    file beside the table."""
+    """After deleting every row and compacting, read/read_pruned/
+    read_pruned_bloom/read_at and a shallow clone still return the
+    declared schema: the schema recorded in every manifest covers the
+    no-files state, with no sidecar file beside the table (``dv`` holds
+    the folded deletion vector, kept for time travel)."""
     import os
 
-    layout = {"_CURRENT", "_CURRENT.lock", "data", "manifest"}
+    layout = {"_CURRENT", "_CURRENT.lock", "data", "dv", "manifest"}
 
     from etl_backend_spark.etl.manifest import clone_shallow
 
@@ -198,8 +208,10 @@ def test_manifest_empty_table_readable(spark, tmp_path):
     t = ManifestTable(spark, str(tmp_path), "empty", ["k"], bloom_col="k")
     t.create(df)
     pre = t._live_id()
-    t.delete(F.col("k") >= 0, "k")
+    t.delete_dv(F.col("k") >= 0, "k")
+    t.compact()
     emptied = t._live_id()
+    assert t.files() == []
     assert set(os.listdir(t.dir)) == layout
     assert t.read().count() == 0
     assert t.read().schema == df.schema
@@ -210,7 +222,7 @@ def test_manifest_empty_table_readable(spark, tmp_path):
     assert t.read_at(emptied).schema == df.schema
     assert t.read_at(pre).count() == 1
     clone = clone_shallow(t, str(tmp_path), "empty_clone")
-    assert set(os.listdir(clone.dir)) == layout
+    assert set(os.listdir(clone.dir)) == layout - {"dv"}
     assert clone.read().schema == df.schema
     assert clone.read().count() == 0
     t.append(df)  # still writable after empty state
@@ -266,8 +278,9 @@ def test_append_once_replay_is_noop(spark, tmp_path):
     assert t.read().count() == 4
     assert t.append_once(df, txn="b-1") is True
     assert t.read().count() == 6
-    # tokens survive further commits (ancestor-set union)
-    t.delete(F.col("k") > 100, "k")
+    # tokens survive further commits (ancestor-set union); the delete
+    # matches a row so that it commits
+    t.delete_dv(F.col("k") == 1, "k")
     assert t.append_once(df, txn="b-1") is False
 
 
@@ -528,7 +541,7 @@ def test_append_rejects_schema_drift_without_evolve(spark, tmp_path):
 def test_additive_evolution_and_snapshot_schemas(spark, tmp_path):
     """ADD COLUMN semantics: old rows read null for the new column, the
     creation snapshot keeps the OLD column set, and a post-evolution
-    mutation (delete rewriting mixed-schema files) must not drop the new
+    mutation (a delete across mixed-schema files) must not drop the new
     column."""
     o = Catalog(spark, SF_DIR).table("orders").select("o_orderkey", "o_totalprice")
     t = ManifestTable(spark, str(tmp_path), "orders", ["o_orderkey"])
@@ -559,7 +572,7 @@ def test_additive_evolution_and_snapshot_schemas(spark, tmp_path):
     t.append(missing)
 
     # mutation across mixed-schema files keeps the evolved column
-    t.delete((F.col("o_orderkey") % 2 == 1), "o_orderkey")
+    t.delete_dv((F.col("o_orderkey") % 2 == 1), "o_orderkey")
     after = t.read()
     assert after.columns == ["o_orderkey", "o_totalprice", "o_channel"]
     assert after.filter(F.col("o_channel") == "web").count() == \
@@ -984,14 +997,14 @@ def test_restore_makes_past_snapshot_live_again(spark, tmp_path):
     t.create(o)
     before = t._live_id()
     n0 = t.read().count()
-    t.delete(F.col("o_orderkey") >= 0, "o_orderkey")  # nuke everything
+    t.delete_dv(F.col("o_orderkey") >= 0, "o_orderkey")  # nuke everything
     assert t.read().count() == 0
     new_id = t.restore(before)
     assert t.read().count() == n0
     # history moved FORWARD: the delete commit is still an ancestor
     assert before in t.history() and new_id == t.history()[0]
     # vacuumed target refuses loudly
-    t.delete(F.col("o_orderkey") >= 0, "o_orderkey")
+    t.delete_dv(F.col("o_orderkey") >= 0, "o_orderkey")
     vacuum(t)
     with pytest.raises(ValueError, match="vacuumed"):
         t.restore(new_id)
@@ -1000,8 +1013,8 @@ def test_restore_makes_past_snapshot_live_again(spark, tmp_path):
 def test_deletion_vectors_merge_on_read_and_compact(spark, tmp_path):
     """Merge-on-read DELETE: delete_dv commits positions, not rewrites —
     reads (plain, pruned, time-travel) apply the anti-join; stacked DVs
-    compose; a copy-on-write delete and an upsert on a table with live DVs
-    neither resurrect nor lose rows; compact_dv folds the vectors back into
+    compose; a bounded delete_dv and an upsert on a table with live DVs
+    neither resurrect nor lose rows; compact folds the vectors back into
     data files, after which the files actually shrank and reads are
     unchanged."""
     o = Catalog(spark, SF_DIR).table("orders")
@@ -1032,11 +1045,12 @@ def test_deletion_vectors_merge_on_read_and_compact(spark, tmp_path):
     t.delete_dv(F.col("o_orderpriority") == "1-URGENT")
     assert t.read().count() == n0 - n_f - n_p
 
-    # copy-on-write delete and merge-on-read upsert compose with live DVs
+    # a bounded delete and an upsert compose with live DVs
     model = {r.o_orderkey: tuple(r) for r in t.read().collect()}
     live_keys = sorted(model)
     k_del, k_upd = live_keys[0], live_keys[1]
-    t.delete(F.col("o_orderkey") == k_del, "o_orderkey", lo=k_del, hi=k_del)
+    assert t.delete_dv(F.col("o_orderkey") == k_del, "o_orderkey",
+                       lo=k_del, hi=k_del)["marked"] == 1
     del model[k_del]
     incoming = (
         o.filter(F.col("o_orderkey").isin(k_upd, key))  # live + DV-deleted
@@ -1055,15 +1069,16 @@ def test_deletion_vectors_merge_on_read_and_compact(spark, tmp_path):
         v for k, v in model.items() if lo <= k <= hi)
 
     expect = sorted(map(tuple, t.read().collect()))
-    res = t.compact_dv()
+    res = t.compact()
     assert res["rewritten"] > 0
     assert not t._live_manifest().get("dvs")
     assert sorted(map(tuple, t.read().collect())) == expect
     # and the fold really dropped the rows from the files: one deleted,
     # one brought back by the upsert, one inserted
     assert sum(e["rows"] for e in t.files()) == n0 - n_f - n_p + 1
-    # a copy-on-write delete on the folded table
-    t.delete(F.col("o_orderkey") < 0, "o_orderkey", lo=None, hi=0)
+    # a bounded delete on the folded table: the inserted key -1 only
+    assert t.delete_dv(F.col("o_orderkey") < 0, "o_orderkey",
+                       lo=None, hi=0)["marked"] == 1
 
 
 def test_delete_dv_conflicts_with_concurrent_commit(spark, tmp_path):
@@ -1145,6 +1160,33 @@ def test_vacuum_reclaims_folded_dv_sidecars(spark, tmp_path):
     assert res["dv_dirs"] == 0
     assert len(os.listdir(dv_root)) == 1
     assert t.read().count() == n2
+
+
+def test_compact_leaves_no_dead_dvs(spark, tmp_path):
+    """compact rewrites every file a live DV names and commits an empty DV
+    list: after a delete_dv and an upsert, a compaction of every file
+    leaves no sidecar for a later read to open, and reads match the
+    model."""
+    schema = "k LONG, v DOUBLE"
+    t = ManifestTable(spark, str(tmp_path), "fold", ["k"])
+    t.create(spark.createDataFrame([(k, 0.0) for k in range(4)], schema)
+             .coalesce(1))
+    t.append(spark.createDataFrame([(k, 0.0) for k in range(4, 8)], schema)
+             .coalesce(1))
+    model = {k: 0.0 for k in range(8)}
+    assert t.delete_dv(F.col("k") == 1)["marked"] == 1
+    del model[1]
+    assert t.upsert(spark.createDataFrame([(5, 5.0)], schema), "k")["marked"] == 1
+    model[5] = 5.0
+    assert len(t._live_manifest()["dvs"]) == 2
+    res = t.compact(target_rows=100)  # above every file
+    assert t._live_manifest()["dvs"] == []
+    assert res["rewritten"] == 3 and res["carried"] == 0
+    assert sorted((r.k, r.v) for r in t.read().collect()) == sorted(model.items())
+    df, _ = t.read_pruned("k", 2, 6)
+    assert sorted((r.k, r.v) for r in df.filter(F.col("k").between(2, 6))
+                  .collect()) == [(k, v) for k, v in sorted(model.items())
+                                  if 2 <= k <= 6]
 
 
 def test_restore_carries_target_snapshot_dvs(spark, tmp_path):
@@ -1236,8 +1278,9 @@ class ManifestModel(RuleBasedStateMachine):
     """Random mutation sequences on a small keyed ManifestTable (stats and
     a bloom on ``k``) against a dict model ``{k: v}``. After every step
     ``read``, ``read_pruned`` and ``read_pruned_bloom`` (residual filter
-    applied) must all equal the model; ``read_at`` of a recorded snapshot
-    must equal the model recorded with it."""
+    applied) must all equal the model, and every path the live DV sidecars
+    name must be a live entry; ``read_at`` of a recorded snapshot must
+    equal the model recorded with it."""
 
     def __init__(self, spark, root):
         super().__init__()
@@ -1296,30 +1339,20 @@ class ManifestModel(RuleBasedStateMachine):
 
     @rule(lo=st.integers(0, KEYS - 1), width=st.integers(0, 3),
           bounded=st.booleans())
-    def delete(self, lo, width, bounded):
+    def delete_dv(self, lo, width, bounded):
         hi = lo + width
-        # unbounded: every file is rewritten, including rows outside [lo, hi]
-        self.t.delete(F.col("k").between(lo, hi), "k",
-                      lo=lo if bounded else None, hi=hi if bounded else None)
-        self.model = {k: v for k, v in self.model.items() if not lo <= k <= hi}
-        self._committed((lo, hi))
-
-    @rule(lo=st.integers(0, KEYS - 1), width=st.integers(0, 3))
-    def delete_dv(self, lo, width):
-        hi = lo + width
-        res = self.t.delete_dv(F.col("k").between(lo, hi))
+        # bounded: only files whose stats meet [lo, hi] are scanned
+        res = self.t.delete_dv(F.col("k").between(lo, hi),
+                               *(("k", lo, hi) if bounded else ()))
         assert res["marked"] == sum(lo <= k <= hi for k in self.model)
         self.model = {k: v for k, v in self.model.items() if not lo <= k <= hi}
         self._committed((lo, hi))
 
-    @rule()
-    def compact_dv(self):
-        self.t.compact_dv()
-        self._committed()
-
-    @rule(target_rows=st.integers(1, 6))
+    # 0 counts no file small: the DV'd files alone are rewritten (compact_dv)
+    @rule(target_rows=st.integers(0, 6))
     def compact(self, target_rows):
         self.t.compact(target_rows=target_rows)
+        assert self.t._live_manifest()["dvs"] == []
         self._committed()
 
     @precondition(lambda self: self.snaps)
@@ -1333,6 +1366,17 @@ class ManifestModel(RuleBasedStateMachine):
         self.t.restore(mid)
         self.model = dict(model)
         self._committed()
+
+    @invariant()
+    def dvs_name_live_entries(self):
+        """Every position in the live DV sidecars names a live entry, so
+        no read opens a sidecar that can match nothing."""
+        manifest = self.t._live_manifest()
+        named = {unquote(urlparse(p).path)
+                 for d in manifest["dvs"]
+                 for p in pq.read_table(d, columns=["path"]).column("path")
+                 .to_pylist()}
+        assert named <= {e["path"] for e in manifest["entries"]}
 
     @invariant()
     def reads_match_model(self):
