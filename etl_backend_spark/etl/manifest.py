@@ -3,30 +3,34 @@ commits over plain parquet.
 
 Layout:
     root/<table>/data/b-<uuid>/*.parquet        immutable data files
-    root/<table>/dv/dv-<uuid>/                  deletion vectors (positions)
     root/<table>/manifest/m-<uuid>.json         file list + per-file stats
     root/<table>/_CURRENT                       live manifest id (atomic swap)
 
-A manifest entry records, per data file: path, row count, and min/max of the
-configured stats columns. Mutations operate at FILE granularity:
+A manifest entry records, per data file: path, row count, min/max of the
+configured stats columns, optionally a bloom, and optionally a deletion
+vector (DV): ``entry["dv"]``, a base64 bitmap of ceil(rows/8) bytes whose
+bit i marks row i deleted (the bloom's bit order). Mutations operate at
+FILE granularity:
 
 - ``append``      → write new files, commit = old list + new entries.
-- ``delete_dv``   → the one DELETE, merge-on-read: record the matching
-                    rows' (file, row_index) positions as a deletion vector
-                    (DV), scanning only files whose [min,max] interval can
-                    hold them; no data file is rewritten.
-- ``upsert``      → append the incoming rows plus a DV on the rows they
-                    replace, in one commit; no existing file is rewritten.
+- ``delete_dv``   → the one DELETE, merge-on-read: set the matching rows'
+                    bits in their entries' DVs, scanning only files whose
+                    [min,max] interval can hold them; no data file is
+                    rewritten.
+- ``upsert``      → append the incoming rows and set the DV bits of the
+                    rows they replace, in one commit; no existing file is
+                    rewritten.
 - ``compact``     → the one rewrite: bin-pack the small files and every
-                    file a DV names into target-size files, and clear the
-                    DV list.
+                    entry with a DV into target-size files.
 - readers         → ``read``, ``read_pruned`` and ``read_pruned_bloom``
-                    (the last two skip files by stats or blooms) take
-                    entries, schema and DVs from ONE snapshot (``_read``).
+                    (the last two skip files by stats or blooms) read the
+                    chosen entries through ``_read``, whose one filter
+                    drops the rows their DVs mark.
 
-Only ``compact`` drops entries, and it folds every DV as it does, so a live
-DV always names live files. Every commit is a new manifest + atomic pointer
-swap; old manifests remain readable (time travel) until vacuumed.
+A DV lives in the entry it deletes from, so it is committed, restored,
+cloned and vacuumed with that entry. Every commit is a new manifest +
+atomic pointer swap; old manifests remain readable (time travel) until
+vacuumed.
 """
 
 from __future__ import annotations
@@ -147,9 +151,7 @@ class ManifestTable:
 
     def _commit(self, entries: list[dict], parent: str | None,
                 txn: str | None = None,
-                schema_json: str | None = None,
-                dvs: list[str] | None = None,
-                new_dv: str | None = None) -> None:
+                schema_json: str | None = None) -> None:
         """Atomic pointer swap with optimistic concurrency: `parent` is the
         manifest id this commit was derived from (None = table creation).
         An OS ``flock`` on a persistent per-table lock file
@@ -174,17 +176,11 @@ class ManifestTable:
         # the column set AS OF that snapshot
         if schema_json is None:
             schema_json = pm.get("schema")
-        # deletion vectors inherit from the parent unless the commit says
-        # otherwise (compact clears them); delete_dv and upsert add one
-        if dvs is None:
-            dvs = pm.get("dvs") or []
-        if new_dv is not None:
-            dvs = dvs + [new_dv]
         mpath = os.path.join(self.manifest_dir, mid)
         with open(mpath, "w") as f:
             json.dump(
                 {"entries": entries, "parent": parent, "txns": txns,
-                 "schema": schema_json, "dvs": dvs},
+                 "schema": schema_json},
                 f,
             )
         lock = self._pointer() + ".lock"
@@ -280,19 +276,15 @@ class ManifestTable:
 
     def _commit_or_discard(self, entries: list[dict], new: list[dict],
                            parent: str | None, txn: str | None = None,
-                           schema_json: str | None = None,
-                           dvs: list[str] | None = None,
-                           new_dv: str | None = None) -> None:
-        """_commit, deleting this writer's just-written data files and DV
-        sidecar ``new_dv`` if the CAS loses (the retry rewrites both from
-        the caller's inputs)."""
+                           schema_json: str | None = None) -> None:
+        """_commit, deleting this writer's just-written data files ``new``
+        if the CAS loses (the retry rewrites them from the caller's
+        inputs)."""
         try:
             self._commit(entries, parent=parent, txn=txn,
-                         schema_json=schema_json, dvs=dvs, new_dv=new_dv)
+                         schema_json=schema_json)
         except CommitConflict:
             self._discard_batches(new)
-            if new_dv is not None:
-                shutil.rmtree(new_dv, ignore_errors=True)
             raise
 
     # ------------------------------------------------------------- surface
@@ -313,20 +305,16 @@ class ManifestTable:
 
     def _read(self, manifest: dict, entries: list[dict]) -> DataFrame:
         """The one read path: ``entries`` (chosen from ``manifest``) read
-        with the schema ``manifest`` declares, minus ``manifest``'s deletion
-        vectors; an empty frame of that schema when no entry is chosen.
-
-        Entries, schema and DVs must all come from the SAME snapshot: old
-        entries paired with a later commit's DV list (``compact`` clears
-        it) would bring back rows that were already deleted. The declared
-        schema is a superset for files written before an ADD COLUMN;
-        parquet null-fills the missing columns (the read half of additive
-        schema evolution)."""
+        with the schema ``manifest`` declares, minus the rows their
+        deletion vectors mark; an empty frame of that schema when no entry
+        is chosen. The declared schema is a superset for files written
+        before an ADD COLUMN; parquet null-fills the missing columns (the
+        read half of additive schema evolution)."""
         schema = self._schema_of(manifest)
         if not entries:
             return self.spark.createDataFrame([], schema)
         df = self.spark.read.schema(schema).parquet(*[e["path"] for e in entries])
-        return self._apply_dvs(df, manifest)
+        return self._apply_dvs(df, entries)
 
     @staticmethod
     def _disjoint(entry: dict, col: str, lo, hi) -> bool:
@@ -586,77 +574,83 @@ class ManifestTable:
 
     # ------------------------------------------------- deletion vectors
 
-    def _apply_dvs(self, df: DataFrame, manifest: dict) -> DataFrame:
-        """Merge-on-read: anti-join out the (file, row_index) positions
-        recorded by ``delete_dv`` commits. The DV table is tiny relative
-        to the data (it lists deleted POSITIONS, not rows), so the
-        anti-join broadcasts; with no DVs the plan is untouched."""
-        dvs = manifest.get("dvs") or []
-        if not dvs:
+    @staticmethod
+    def _apply_dvs(df: DataFrame, entries: list[dict]) -> DataFrame:
+        """Merge-on-read: one filter drops the rows that ``entries``'
+        deletion vectors mark. Each row looks its part file's bitmap up in
+        a map literal (one binary per DV'd entry) and tests the bit at its
+        ``_metadata.row_index``; no join, no file listing. With no DV the
+        plan is untouched."""
+        pairs = [x for e in entries if "dv" in e
+                 for x in (F.lit(os.path.basename(e["path"])),
+                           F.lit(base64.b64decode(e["dv"])))]
+        if not pairs:
             return df
-        dv = self.spark.read.parquet(*dvs)
-        keyed = df.withColumn(
-            "__dv_path", F.col("_metadata.file_path")
-        ).withColumn("__dv_row", F.col("_metadata.row_index"))
-        return keyed.join(
-            F.broadcast(dv),
-            (keyed["__dv_path"] == dv["path"])
-            & (keyed["__dv_row"] == dv["row_index"]),
-            "left_anti",
-        ).drop("__dv_path", "__dv_row")
+        # file_name, not file_path: the path is a percent-encoded URI, and
+        # part names are unique (each carries its write job's UUID)
+        bitmap = F.create_map(*pairs)[F.col("_metadata.file_name")]
+        row = F.col("_metadata.row_index")
+        byte = bitmap.substr(F.shiftright(row, 3).cast("int") + 1, F.lit(1))
+        bit = F.bit_get(F.conv(F.hex(byte), 16, 10).cast("int"),
+                        row.bitwiseAND(7).cast("int"))
+        # a file without a DV looks up NULL: its rows stay
+        return df.filter(F.coalesce(bit, F.lit(0)) == 0)
 
     def _mark(self, manifest: dict, entries: list[dict],
-              select) -> tuple[str | None, int]:
-        """The one row-removal step: write a DV sidecar holding the (file,
+              select) -> tuple[list[dict], int]:
+        """The one row-removal step: one job collects the (part file,
         row_index) positions of the rows of ``entries`` that ``select``
-        keeps; return ``(dv_dir, n)``, or ``(None, 0)`` if none. Positions
-        come off the RAW files, projected before ``select`` (a join hides
-        ``_metadata``); positions ``manifest`` already deletes are skipped."""
+        keeps, and their bits are ORed into copies of the entries' DVs.
+        Returns ``manifest``'s entry list with those copies, and the
+        number of bits that flipped (a row already deleted flips none).
+        Positions come off the RAW files, projected before ``select`` (a
+        join hides ``_metadata``)."""
         if not entries:
-            return None, 0
+            return manifest["entries"], 0
         raw = self.spark.read.schema(self._schema_of(manifest)).parquet(
             *[e["path"] for e in entries]
         )
-        marked = select(
-            raw.withColumn("__dv_path", F.col("_metadata.file_path"))
+        positions: dict[str, list[int]] = {}
+        for name, i in select(
+            raw.withColumn("__dv_name", F.col("_metadata.file_name"))
             .withColumn("__dv_row", F.col("_metadata.row_index"))
-        ).select(F.col("__dv_path").alias("path"),
-                 F.col("__dv_row").alias("row_index"))
-        if manifest.get("dvs"):
-            marked = marked.join(F.broadcast(self.spark.read.parquet(
-                *manifest["dvs"])), ["path", "row_index"], "left_anti")
-        dv_dir = os.path.join(self.dir, "dv", f"dv-{uuid.uuid4().hex}")
-        marked.write.mode("errorifexists").parquet(dv_dir)
-        n = self.spark.read.schema(
-            "path STRING, row_index BIGINT").parquet(dv_dir).count()
-        if n == 0:
-            shutil.rmtree(dv_dir, ignore_errors=True)
-            return None, 0
-        return dv_dir, n
+        ).select("__dv_name", "__dv_row").collect():
+            positions.setdefault(name, []).append(i)
+        out, n = [], 0
+        for e in manifest["entries"]:
+            rows = positions.get(os.path.basename(e["path"]))
+            if rows:
+                bits = bytearray(base64.b64decode(e["dv"]) if "dv" in e
+                                 else (e["rows"] + 7) // 8)
+                for i in rows:
+                    if not bits[i // 8] & (1 << (i % 8)):
+                        bits[i // 8] |= 1 << (i % 8)
+                        n += 1
+                e = dict(e, dv=base64.b64encode(bytes(bits)).decode())
+            out.append(e)
+        return out, n
 
     def delete_dv(self, where: Column, col: str | None = None,
                   lo=None, hi=None) -> dict:
         """The one DELETE, merge-on-read (Delta/Iceberg deletion-vector
-        pattern): record the matching rows' (file, row_index) positions in
-        a sidecar parquet and commit only the manifest pointer; no data
-        file is rewritten, so a delete touching one row per multi-GB file
-        commits kilobytes. With ``col``, only entries whose stats for
-        ``col`` meet [lo, hi] are scanned (the caller's promise that no
-        matching row lies outside); without, every entry is. Readers apply
-        the DVs as a broadcast anti-join on (_metadata.file_path,
-        _metadata.row_index); ``compact`` folds them back into data files.
-        SQL DELETE semantics: NULL predicates retain the row. Returns
-        {'marked': n}."""
+        pattern): set the matching rows' bits in their entries' DVs and
+        commit the updated entries; no data file is rewritten, so a delete
+        touching one row per multi-GB file commits a bitmap. With ``col``,
+        only entries whose stats for ``col`` meet [lo, hi] are scanned (the
+        caller's promise that no matching row lies outside); without, every
+        entry is. Readers filter the marked rows out by
+        (_metadata.file_name, _metadata.row_index); ``compact`` folds them
+        back into data files. SQL DELETE semantics: NULL predicates retain
+        the row. Returns {'marked': n}; with n == 0 nothing is committed."""
         parent, manifest = self._snapshot()
-        dv_dir, n = self._mark(
+        entries, n = self._mark(
             manifest,
             [e for e in manifest["entries"]
              if col is None or not self._disjoint(e, col, lo, hi)],
             lambda df: df.filter(F.coalesce(where, F.lit(False))),
         )
-        if dv_dir is not None:
-            self._commit_or_discard(manifest["entries"], [], parent=parent,
-                                    new_dv=dv_dir)
+        if n:
+            self._commit(entries, parent=parent)
         return {"marked": n}
 
     def compact_dv(self) -> dict:
@@ -706,12 +700,13 @@ class ManifestTable:
 
     def upsert(self, incoming: DataFrame, key: str) -> dict:
         """Merge-on-read MERGE = DELETE + INSERT in ONE commit: rows in
-        ``incoming`` replace same-key rows; new keys append. A deletion
-        vector marks the live same-key rows (``_mark`` over the files whose
-        stats for ``key`` meet incoming's key range) and incoming lands as
-        new files; no existing file is rewritten. ``key`` must be one of
-        the table's stats columns. Returns {'rewritten': 0, 'carried':
-        <entries>, 'marked': <rows replaced>}.
+        ``incoming`` replace same-key rows; new keys append. The live
+        same-key rows are marked in their entries' deletion vectors
+        (``_mark`` over the files whose stats for ``key`` meet incoming's
+        key range) and incoming lands as new files; no existing file is
+        rewritten. ``key`` must be one of the table's stats columns.
+        Returns {'rewritten': 0, 'carried': <entries>, 'marked': <rows
+        replaced>}.
 
         ``incoming`` must be unique on ``key`` — duplicate source keys have
         no defined MERGE semantics (Delta raises too), and silently landing
@@ -740,13 +735,12 @@ class ManifestTable:
         touched = [] if lo is None else [
             e for e in entries if not self._disjoint(e, key, lo, hi)
         ]
-        dv_dir, marked = self._mark(
+        entries, marked = self._mark(
             manifest, touched,
             lambda df: df.join(incoming.select(key), on=key, how="left_semi"),
         )
         new = self._write_files(incoming)
-        self._commit_or_discard(entries + new, new, parent=parent,
-                                new_dv=dv_dir)
+        self._commit_or_discard(entries + new, new, parent=parent)
         return {"rewritten": 0, "carried": len(entries), "marked": marked}
 
     # ---------------------------------------------------------- time travel
@@ -767,8 +761,9 @@ class ManifestTable:
         files and schema — history moves forward (the bad commits stay
         inspectable in the parent chain; nothing is rewritten or
         deleted), only the pointer's view changes. Zero data I/O: the
-        restore commit carries file references. Raises if the target
-        snapshot's files were already vacuumed away."""
+        restore commit carries file references, and with them the target's
+        deletion vectors. Raises if the target snapshot's files were
+        already vacuumed away."""
         try:
             target = self._manifest_at(manifest_id)
         except FileNotFoundError:
@@ -784,24 +779,9 @@ class ManifestTable:
                 f"cannot restore {manifest_id}: {len(missing)} data files "
                 f"were vacuumed (first: {missing[0]})"
             )
-        # deletion vectors are part of the snapshot's VIEW: the restore
-        # commit must carry the TARGET's dv list, not inherit the current
-        # live one — inheriting would apply post-snapshot deletes to the
-        # restored entries (silently wrong rows) or resurrect rows the
-        # target had deleted. A target dv dir lost to vacuum blocks the
-        # restore the same way a lost data file does.
-        target_dvs = target.get("dvs") or []
-        lost = [d for d in target_dvs if not os.path.isdir(d)]
-        if lost:
-            raise ValueError(
-                f"cannot restore {manifest_id}: {len(lost)} deletion-vector "
-                f"sidecars were vacuumed (first: {lost[0]})"
-            )
         parent, _ = self._snapshot()
-        self._commit_or_discard(
-            target["entries"], [], parent=parent,
-            schema_json=target["schema"], dvs=target_dvs,
-        )
+        self._commit(target["entries"], parent=parent,
+                     schema_json=target["schema"])
         return self._live_id()
 
     def read_at(self, manifest_id: str) -> DataFrame:
@@ -814,25 +794,16 @@ class ManifestTable:
 
     def compact(self, target_rows: int = 100_000) -> dict:
         """The one rewrite: the small files (below ``target_rows``) and
-        every file a live DV names are greedily binned into groups
+        every entry with a deletion vector are greedily binned into groups
         totalling ~target_rows, each group read through ``_read`` (its
-        DV'd rows drop out) and written as one file; the commit clears the
-        DV list. Other files carry over untouched; with nothing to
-        rewrite there is no commit. The sidecar dirs stay for time
-        travel; vacuum reclaims them. Returns {'rewritten', 'carried',
+        DV'd rows drop out) and written as one file, so no DV outlives a
+        compaction. Other files carry over untouched; with nothing to
+        rewrite there is no commit. Returns {'rewritten', 'carried',
         'bins'}."""
         parent, manifest = self._snapshot()
-        entries = manifest["entries"]
-        dvs = manifest.get("dvs") or []
-        # file_path is a URI; entries store plain paths
-        named = {
-            unquote(urlparse(r.path).path)
-            for r in self.spark.read.parquet(*dvs).select("path")
-            .distinct().collect()
-        } if dvs else set()
         todo, carried = [], []
-        for e in entries:
-            (todo if e["rows"] < target_rows or e["path"] in named
+        for e in manifest["entries"]:
+            (todo if e["rows"] < target_rows or "dv" in e
              else carried).append(e)
         if not todo:
             return {"rewritten": 0, "carried": len(carried), "bins": 0}
@@ -848,7 +819,7 @@ class ManifestTable:
         new = []
         for group in bins:
             new += self._write_files(self._read(manifest, group).coalesce(1))
-        self._commit_or_discard(carried + new, new, parent=parent, dvs=[])
+        self._commit_or_discard(carried + new, new, parent=parent)
         return {"rewritten": len(todo), "carried": len(carried),
                 "bins": len(bins)}
 
@@ -871,18 +842,6 @@ def vacuum(table: ManifestTable) -> dict:
                 if f not in live_paths:
                     os.remove(f)
                     removed_files += 1
-    # deletion-vector sidecars: keep only the dirs the LIVE manifest still
-    # references (compact leaves folded DVs behind for time travel;
-    # vacuum is where that history ends, same as for data files)
-    live_dvs = set(table._live_manifest().get("dvs") or [])
-    removed_dvs = 0
-    dv_root = os.path.join(table.dir, "dv")
-    if os.path.isdir(dv_root):
-        for d in os.listdir(dv_root):
-            p = os.path.join(dv_root, d)
-            if p not in live_dvs:
-                shutil.rmtree(p, ignore_errors=True)
-                removed_dvs += 1
     with open(table._pointer()) as f:
         live_manifest = f.read().strip()
     removed_manifests = 0
@@ -890,22 +849,22 @@ def vacuum(table: ManifestTable) -> dict:
         if m != live_manifest:
             os.remove(os.path.join(table.manifest_dir, m))
             removed_manifests += 1
-    return {"data_files": removed_files, "manifests": removed_manifests,
-            "dv_dirs": removed_dvs}
+    return {"data_files": removed_files, "manifests": removed_manifests}
 
 
 def clone_shallow(src: ManifestTable, root: str, name: str) -> ManifestTable:
     """Zero-copy table clone (Delta ``SHALLOW CLONE``): the clone gets its
     OWN pointer/manifest lineage whose initial commit references the
-    source's live data files — and live deletion vectors — by absolute
-    path. No data is read or copied, so cloning a 100 TB table is an
-    O(metadata) driver operation: one snapshot read, one manifest write.
+    source's live data files by absolute path, each entry with its
+    deletion vector. No data is read or copied, so cloning a 100 TB table
+    is an O(metadata) driver operation: one snapshot read, one manifest
+    write.
 
     Divergence is free by construction: every write path lands files under
-    the writing table's own ``data_dir`` (``_write_files``) and DV sidecars
-    under its own ``dv/``, so clone mutations never touch source storage
-    and vice versa; ``vacuum`` walks only its table's ``data_dir`` and can
-    never reclaim the other side's files. ``txn`` idempotence tokens are
+    the writing table's own ``data_dir`` (``_write_files``) and a DV is a
+    field of the writing table's own manifest entries, so clone mutations
+    never touch source storage and vice versa; ``vacuum`` walks only its
+    table's ``data_dir`` and can never reclaim the other side's files. ``txn`` idempotence tokens are
     deliberately NOT inherited (parent=None ⇒ fresh namespace): a batch
     replayed against the clone is a new write against a new table.
 
@@ -919,6 +878,5 @@ def clone_shallow(src: ManifestTable, root: str, name: str) -> ManifestTable:
     os.makedirs(dst.manifest_dir, exist_ok=True)
     manifest = src._live_manifest()
     dst._commit(manifest["entries"], parent=None,
-                schema_json=manifest["schema"],
-                dvs=manifest.get("dvs", []))
+                schema_json=manifest["schema"])
     return dst

@@ -779,10 +779,11 @@ def q_etl_incremental_cascade(spark, sf_dir):
 )
 def q_etl_delete_dv(spark, sf_dir):
     """DELETION-VECTOR delete, value-checked by the gate (r6): mark rows
-    by (file, row_index) position in a sidecar instead of rewriting data
-    files (etl/manifest.py delete_dv/_apply_dvs/compact). The read
-    back applies the DV as a broadcast anti-join on parquet's
-    _metadata.row_index; the check asserts no data file was rewritten AND
+    by (file, row_index) position in a bitmap inside each file's manifest
+    entry instead of rewriting data files (etl/manifest.py
+    delete_dv/_apply_dvs/compact). The read back applies the DVs as one
+    filter on parquet's _metadata.file_name and _metadata.row_index; the
+    check asserts no data file was rewritten AND
     the post-delete scan matches the oracle's row-level delete exactly —
     then folds the DV (compact, which rewrites the DV'd files with the
     small ones) and asserts the fold preserves the same counts. At 100 TB this is the GDPR/right-to-be-forgotten path:

@@ -3,10 +3,9 @@ deletes, compaction that folds them, time-travel pointer."""
 
 from __future__ import annotations
 
+import base64
 import uuid
-from urllib.parse import unquote, urlparse
 
-import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, settings
 from hypothesis import strategies as st
@@ -16,7 +15,7 @@ from hypothesis.stateful import (
 )
 from pyspark.sql import functions as F
 
-from etl_backend_spark.etl.manifest import ManifestTable
+from etl_backend_spark.etl.manifest import ManifestTable, clone_shallow, vacuum
 from etl_backend_spark.sources.catalog import Catalog
 from tests.conftest import SF_DIR
 
@@ -196,11 +195,11 @@ def test_manifest_empty_table_readable(spark, tmp_path):
     """After deleting every row and compacting, read/read_pruned/
     read_pruned_bloom/read_at and a shallow clone still return the
     declared schema: the schema recorded in every manifest covers the
-    no-files state, with no sidecar file beside the table (``dv`` holds
-    the folded deletion vector, kept for time travel)."""
+    no-files state, with no sidecar file beside the table (deletion
+    vectors live in the manifest entries, so there is no ``dv`` dir)."""
     import os
 
-    layout = {"_CURRENT", "_CURRENT.lock", "data", "dv", "manifest"}
+    layout = {"_CURRENT", "_CURRENT.lock", "data", "manifest"}
 
     from etl_backend_spark.etl.manifest import clone_shallow
 
@@ -222,7 +221,7 @@ def test_manifest_empty_table_readable(spark, tmp_path):
     assert t.read_at(emptied).schema == df.schema
     assert t.read_at(pre).count() == 1
     clone = clone_shallow(t, str(tmp_path), "empty_clone")
-    assert set(os.listdir(clone.dir)) == layout - {"dv"}
+    assert set(os.listdir(clone.dir)) == layout
     assert clone.read().schema == df.schema
     assert clone.read().count() == 0
     t.append(df)  # still writable after empty state
@@ -946,10 +945,10 @@ def test_bloom_entry_without_recorded_k_raises(spark, tmp_path):
 
 
 def test_pruned_reads_take_one_snapshot(spark, tmp_path):
-    """read_pruned and read_pruned_bloom pair entries and deletion vectors
-    from ONE manifest: a compact_dv committing right after the reader
-    loads its snapshot must not pair the old entries with the new, empty
-    DV list (which would bring the deleted key back)."""
+    """read_pruned and read_pruned_bloom read entries (and the deletion
+    vectors they carry) from ONE manifest: a compact_dv committing right
+    after the reader loads its snapshot must not bring the deleted key
+    back."""
     o = Catalog(spark, SF_DIR).table("orders")
     t = ManifestTable(spark, str(tmp_path), "snap", ["o_orderkey"],
                       bloom_col="o_orderkey")
@@ -980,7 +979,7 @@ def test_pruned_reads_take_one_snapshot(spark, tmp_path):
             got = df.filter(F.col("o_orderkey") == key).count()
         finally:
             del t._manifest_at
-        assert not writer._live_manifest()["dvs"]  # the compaction landed
+        assert not any("dv" in e for e in writer.files())  # compaction landed
         assert got == 0
 
 
@@ -1012,7 +1011,7 @@ def test_restore_makes_past_snapshot_live_again(spark, tmp_path):
 
 def test_deletion_vectors_merge_on_read_and_compact(spark, tmp_path):
     """Merge-on-read DELETE: delete_dv commits positions, not rewrites —
-    reads (plain, pruned, time-travel) apply the anti-join; stacked DVs
+    reads (plain, pruned, time-travel) apply the DV filter; stacked DVs
     compose; a bounded delete_dv and an upsert on a table with live DVs
     neither resurrect nor lose rows; compact folds the vectors back into
     data files, after which the files actually shrank and reads are
@@ -1071,7 +1070,7 @@ def test_deletion_vectors_merge_on_read_and_compact(spark, tmp_path):
     expect = sorted(map(tuple, t.read().collect()))
     res = t.compact()
     assert res["rewritten"] > 0
-    assert not t._live_manifest().get("dvs")
+    assert not any("dv" in e for e in t.files())
     assert sorted(map(tuple, t.read().collect())) == expect
     # and the fold really dropped the rows from the files: one deleted,
     # one brought back by the upsert, one inserted
@@ -1084,7 +1083,8 @@ def test_deletion_vectors_merge_on_read_and_compact(spark, tmp_path):
 def test_delete_dv_conflicts_with_concurrent_commit(spark, tmp_path):
     """delete_dv rides the same CAS as every other mutation: a commit
     landing between its snapshot and its pointer swap must raise
-    CommitConflict, never silently drop either change."""
+    CommitConflict, never silently drop either change; the retry from
+    the winner's snapshot applies the delete on top of the winner."""
     import pytest
 
     from etl_backend_spark.etl.manifest import CommitConflict
@@ -1092,21 +1092,29 @@ def test_delete_dv_conflicts_with_concurrent_commit(spark, tmp_path):
     o = Catalog(spark, SF_DIR).table("orders").limit(50)
     t = ManifestTable(spark, str(tmp_path), "dvc", ["o_orderkey"])
     t.create(o)
-    parent, manifest = t._snapshot()
+    stale = t._snapshot()
+    key = o.first().o_orderkey
     # competing writer lands first
     t.append(o.limit(3).withColumn("o_orderkey",
                                    F.col("o_orderkey") + 5_000_000))
-    with pytest.raises(CommitConflict):
-        t._commit(manifest["entries"], parent=parent, dvs=["bogus-dv"])
-    # the losing DV never became visible
-    assert not t._live_manifest().get("dvs")
+    t._snapshot = lambda: stale
+    try:
+        with pytest.raises(CommitConflict):
+            t.delete_dv(F.col("o_orderkey") == key)
+    finally:
+        del t._snapshot
+    # the losing DV never became visible; the winner's rows are all there
+    assert not any("dv" in e for e in t.files())
+    assert t.read().count() == 53
+    assert t.delete_dv(F.col("o_orderkey") == key)["marked"] == 1
+    assert t.read().count() == 52
 
 
 def test_commit_conflict_discards_loser_dv(spark, tmp_path):
-    """A delete_dv or upsert that loses the CAS removes the DV sidecar it
-    just wrote (and upsert its data batch): the retry marks again from the
-    winner's snapshot, so a loser's sidecar would only pile up under dv/
-    until a vacuum."""
+    """A delete_dv or upsert that loses the CAS leaves nothing behind: its
+    DV lived only in the never-committed manifest (removed with it), and
+    upsert's data batch is removed too. The retry marks again from the
+    winner's snapshot."""
     import os
 
     from etl_backend_spark.etl.manifest import CommitConflict
@@ -1118,6 +1126,7 @@ def test_commit_conflict_discards_loser_dv(spark, tmp_path):
     stale = t._snapshot()
     t.append(spark.createDataFrame([(100, 1.0)], schema))  # the winner
     data_before = set(os.listdir(t.data_dir))
+    manifests_before = set(os.listdir(t.manifest_dir))
     t._snapshot = lambda: stale  # both writers derive from the stale snapshot
     try:
         with pytest.raises(CommitConflict):
@@ -1126,47 +1135,40 @@ def test_commit_conflict_discards_loser_dv(spark, tmp_path):
             t.upsert(spark.createDataFrame([(2, -1.0)], schema), "k")
     finally:
         del t._snapshot
-    dv_root = os.path.join(t.dir, "dv")
-    assert not os.path.isdir(dv_root) or os.listdir(dv_root) == []
+    assert set(os.listdir(t.manifest_dir)) == manifests_before
+    assert not any("dv" in e for e in t.files())
     assert set(os.listdir(t.data_dir)) == data_before
     assert sorted(r.k for r in t.read().collect()) == list(range(10)) + [100]
 
 
-def test_vacuum_reclaims_folded_dv_sidecars(spark, tmp_path):
-    """After compact_dv folds the vectors, the sidecar dirs remain for
-    time travel; vacuum removes every DV dir the LIVE manifest no longer
-    references (and keeps live ones)."""
-    import os
-
+def test_vacuum_keeps_live_dvs(spark, tmp_path):
+    """vacuum after compact_dv reclaims the folded files and reads stay
+    intact; a LIVE (unfolded) DV survives vacuum with its entry, and
+    reads still drop its rows."""
     from etl_backend_spark.etl.manifest import vacuum
 
     o = Catalog(spark, SF_DIR).table("orders").limit(100)
     t = ManifestTable(spark, str(tmp_path), "dvv", ["o_orderkey"])
     t.create(o.repartition(4))
     t.delete_dv(F.col("o_orderstatus") == "F")
-    dv_root = os.path.join(t.dir, "dv")
-    assert len(os.listdir(dv_root)) == 1
     n = t.read().count()
     t.compact_dv()
-    res = vacuum(t)
-    assert res["dv_dirs"] == 1
-    assert not os.listdir(dv_root)
+    assert vacuum(t)["data_files"] > 0
     assert t.read().count() == n  # live data intact
 
-    # a LIVE (unfolded) DV must survive vacuum
     t.delete_dv(F.col("o_orderpriority") == "1-URGENT")
     n2 = t.read().count()
-    res = vacuum(t)
-    assert res["dv_dirs"] == 0
-    assert len(os.listdir(dv_root)) == 1
+    dvs = {e["path"]: e["dv"] for e in t.files() if "dv" in e}
+    assert dvs and n2 < n
+    vacuum(t)
+    assert {e["path"]: e["dv"] for e in t.files() if "dv" in e} == dvs
     assert t.read().count() == n2
 
 
 def test_compact_leaves_no_dead_dvs(spark, tmp_path):
-    """compact rewrites every file a live DV names and commits an empty DV
-    list: after a delete_dv and an upsert, a compaction of every file
-    leaves no sidecar for a later read to open, and reads match the
-    model."""
+    """compact rewrites every entry that carries a DV: after a delete_dv
+    and an upsert, a compaction of every file leaves no DV for a later
+    read to apply, and reads match the model."""
     schema = "k LONG, v DOUBLE"
     t = ManifestTable(spark, str(tmp_path), "fold", ["k"])
     t.create(spark.createDataFrame([(k, 0.0) for k in range(4)], schema)
@@ -1178,15 +1180,66 @@ def test_compact_leaves_no_dead_dvs(spark, tmp_path):
     del model[1]
     assert t.upsert(spark.createDataFrame([(5, 5.0)], schema), "k")["marked"] == 1
     model[5] = 5.0
-    assert len(t._live_manifest()["dvs"]) == 2
+    assert sum("dv" in e for e in t.files()) == 2
     res = t.compact(target_rows=100)  # above every file
-    assert t._live_manifest()["dvs"] == []
+    assert not any("dv" in e for e in t.files())
     assert res["rewritten"] == 3 and res["carried"] == 0
     assert sorted((r.k, r.v) for r in t.read().collect()) == sorted(model.items())
     df, _ = t.read_pruned("k", 2, 6)
     assert sorted((r.k, r.v) for r in df.filter(F.col("k").between(2, 6))
                   .collect()) == [(k, v) for k, v in sorted(model.items())
                                   if 2 <= k <= 6]
+
+
+def test_dv_read_plan_has_no_join(spark, tmp_path):
+    """A live deletion vector costs a read one filter: the physical plans
+    of read and read_pruned hold no join and no broadcast exchange, and
+    the marked row is gone from both."""
+    schema = "k LONG, v DOUBLE"
+    t = ManifestTable(spark, str(tmp_path), "plan", ["k"])
+    t.create(spark.createDataFrame([(k, 0.0) for k in range(8)], schema)
+             .repartition(2))
+    assert t.delete_dv(F.col("k") == 3)["marked"] == 1
+    for df in (t.read(), t.read_pruned("k", 0, 7)[0]):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+        assert sorted(r.k for r in df.collect()) == [0, 1, 2, 4, 5, 6, 7]
+
+
+def test_dvs_in_root_with_space_and_percent(spark, tmp_path):
+    """In a table root holding a space and a ``%`` (both percent-encoded
+    in ``_metadata.file_path``), delete_dv, upsert, read_pruned and
+    compact match a dict model, and no operation leaves anything beside
+    the data and manifest dirs."""
+    import os
+
+    schema = "k LONG, v DOUBLE"
+    t = ManifestTable(spark, str(tmp_path / "a b%c"), "t", ["k"])
+    t.create(spark.createDataFrame([(k, 0.0) for k in range(8)], schema)
+             .repartition(2))
+    model = {k: 0.0 for k in range(8)}
+
+    def check():
+        assert sorted((r.k, r.v) for r in t.read().collect()) \
+            == sorted(model.items())
+        df, _ = t.read_pruned("k", 2, 6)
+        assert sorted((r.k, r.v) for r in df.filter(F.col("k").between(2, 6))
+                      .collect()) == sorted(
+            kv for kv in model.items() if 2 <= kv[0] <= 6)
+
+    assert t.delete_dv(F.col("k").isin(1, 6))["marked"] == 2
+    del model[1], model[6]
+    check()
+    res = t.upsert(spark.createDataFrame([(2, 2.0), (6, 6.0), (9, 9.0)],
+                                         schema), "k")
+    assert res["marked"] == 1
+    model.update({2: 2.0, 6: 6.0, 9: 9.0})
+    check()
+    assert t.compact(target_rows=0)["rewritten"] > 0
+    assert not any("dv" in e for e in t.files())
+    check()
+    assert set(os.listdir(t.dir)) == {"_CURRENT", "_CURRENT.lock", "data",
+                                      "manifest"}
 
 
 def test_restore_carries_target_snapshot_dvs(spark, tmp_path):
@@ -1238,7 +1291,9 @@ def test_shallow_clone_is_zero_copy_and_isolated(spark, tmp_path):
     n_extra = o.filter(F.col("o_orderkey") <= 100).count()
     assert c.read().count() == 500 - n_f + n_extra
     assert t.read().count() == 500                      # source untouched
-    assert not os.path.isdir(os.path.join(t.dir, "dv"))  # DVs under clone
+    # the DVs live in the clone's entries only
+    assert any("dv" in e for e in c.files())
+    assert not any("dv" in e for e in t.files())
 
     # source-side append invisible to the clone
     n_clone = c.read().count()
@@ -1278,13 +1333,16 @@ class ManifestModel(RuleBasedStateMachine):
     """Random mutation sequences on a small keyed ManifestTable (stats and
     a bloom on ``k``) against a dict model ``{k: v}``. After every step
     ``read``, ``read_pruned`` and ``read_pruned_bloom`` (residual filter
-    applied) must all equal the model, and every path the live DV sidecars
-    name must be a live entry; ``read_at`` of a recorded snapshot must
-    equal the model recorded with it."""
+    applied) must all equal the model, and the live entries' row counts
+    minus their DV bits must count the model's rows; ``read_at`` of a
+    recorded snapshot must equal the model recorded with it. ``vacuum``
+    leaves only the live snapshot restorable, and a shallow clone reads
+    as the model and deletes without changing the source's reads."""
 
     def __init__(self, spark, root):
         super().__init__()
         self.spark = spark
+        self.root = root
         self.t = ManifestTable(spark, root, f"m{uuid.uuid4().hex[:8]}",
                                ["k"], bloom_col="k", bloom_bits=256)
         self.model: dict[int, float] = {}
@@ -1348,12 +1406,39 @@ class ManifestModel(RuleBasedStateMachine):
         self.model = {k: v for k, v in self.model.items() if not lo <= k <= hi}
         self._committed((lo, hi))
 
-    # 0 counts no file small: the DV'd files alone are rewritten (compact_dv)
-    @rule(target_rows=st.integers(0, 6))
-    def compact(self, target_rows):
+    # 0 counts no file small: the DV'd files alone are rewritten
+    # (compact_dv); a DV'd entry's row count leaves that entry, and every
+    # larger one, outside the small set, so only its DV puts it in the
+    # rewrite
+    @rule(data=st.data())
+    def compact(self, data):
+        dv_rows = {e["rows"] for e in self.t.files() if "dv" in e}
+        target_rows = data.draw(
+            st.sampled_from(sorted(dv_rows)) | st.integers(0, 6)
+            if dv_rows else st.integers(0, 6), label="target_rows")
         self.t.compact(target_rows=target_rows)
-        assert self.t._live_manifest()["dvs"] == []
+        assert not any("dv" in e for e in self.t.files())
         self._committed()
+
+    @rule()
+    def vacuum(self):
+        vacuum(self.t)
+        live = self.t._live_id()
+        for mid, _ in self.snaps:
+            if mid != live:
+                with pytest.raises(ValueError, match="vacuumed"):
+                    self.t.restore(mid)
+        self.snaps = [(mid, m) for mid, m in self.snaps if mid == live]
+
+    @rule(lo=st.integers(0, KEYS - 1), width=st.integers(0, 3))
+    def clone_shallow(self, lo, width):
+        # the invariants then check that the source reads are unchanged
+        hi = lo + width
+        clone = clone_shallow(self.t, self.root, f"c{uuid.uuid4().hex[:8]}")
+        assert sorted((r.k, r.v) for r in clone.read().collect()) \
+            == sorted(self.model.items())
+        assert clone.delete_dv(F.col("k").between(lo, hi))["marked"] \
+            == sum(lo <= k <= hi for k in self.model)
 
     @precondition(lambda self: self.snaps)
     @rule(data=st.data())
@@ -1368,15 +1453,15 @@ class ManifestModel(RuleBasedStateMachine):
         self._committed()
 
     @invariant()
-    def dvs_name_live_entries(self):
-        """Every position in the live DV sidecars names a live entry, so
-        no read opens a sidecar that can match nothing."""
-        manifest = self.t._live_manifest()
-        named = {unquote(urlparse(p).path)
-                 for d in manifest["dvs"]
-                 for p in pq.read_table(d, columns=["path"]).column("path")
-                 .to_pylist()}
-        assert named <= {e["path"] for e in manifest["entries"]}
+    def dvs_fit_entries(self):
+        """Each live DV is a bitmap of exactly ceil(rows/8) bytes, and the
+        live entries' rows minus their set bits count the model's rows."""
+        live = 0
+        for e in self.t.files():
+            bits = base64.b64decode(e.get("dv", ""))
+            assert len(bits) == ((e["rows"] + 7) // 8 if "dv" in e else 0)
+            live += e["rows"] - sum(bin(b).count("1") for b in bits)
+        assert live == len(self.model)
 
     @invariant()
     def reads_match_model(self):
@@ -1403,7 +1488,7 @@ def test_manifest_matches_model(spark_session, tmp_path):
     included, through every read path (see ManifestModel)."""
     run_state_machine_as_test(
         lambda: ManifestModel(spark_session, str(tmp_path)),
-        settings=settings(max_examples=7, stateful_step_count=12,
+        settings=settings(max_examples=8, stateful_step_count=12,
                           deadline=None, suppress_health_check=[
                               HealthCheck.function_scoped_fixture,
                               HealthCheck.too_slow]),
