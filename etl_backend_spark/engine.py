@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import auth
-from .operators import aggregates, filters, joins, pagination, windows
+from .operators import aggregates, pagination, windows
 from .plans.query_builder import SearchParams, ads_search, ads_search_total
 from .sources.catalog import Catalog
 

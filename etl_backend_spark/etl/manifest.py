@@ -86,7 +86,6 @@ class ManifestTable:
         self.manifest_dir = os.path.join(self.dir, "manifest")
         self.stats_cols = stats_cols
         self.bloom_col = bloom_col
-        self.table_checks: list[tuple] = []
         if bloom_bits is not None:
             # size to the expected distinct keys PER FILE: a bloom whose
             # fill ratio approaches 1 hits on every probe and prunes
@@ -397,140 +396,12 @@ class ManifestTable:
             ])
         return df, (target.json() if extra else None)
 
-    def check_batch(self, df: DataFrame) -> None:
-        """Delta-style table CONSTRAINTS enforced at write time: run the
-        table's declared checks (``table_checks``) against the batch in
-        ONE aggregation pass and raise with per-rule counts on any
-        violation — bad data must fail the COMMIT, not surface as a
-        quarantine report three jobs later. Checks:
-          ("not_null", [cols...])   ("enum", col, [allowed...])
-          ("unique", [cols...])     — uniqueness WITHIN the batch (the
-        per-key cross-batch form is upsert's job; a global uniqueness
-        scan per append is O(history) and exactly what a 100 TB writer
-        must not do)."""
-        from . import constraints as C
-
-        named = []
-        for chk in self.table_checks:
-            if chk[0] == "not_null":
-                for c in chk[1]:
-                    named.append((f"not_null({c})",
-                                  df.filter(F.col(c).isNull())))
-            elif chk[0] == "enum":
-                named.append((f"enum({chk[1]})",
-                              C.enum_violations(df, chk[1], chk[2])))
-            elif chk[0] == "unique":
-                named.append((f"unique({','.join(chk[1])})",
-                              C.unique_violations(df, chk[1])))
-            else:
-                raise ValueError(f"unknown table check {chk[0]!r}")
-        if not named:
-            return
-        bad = {
-            r.rule: r.n_violations
-            for r in C.summarize(named).collect()
-            if r.n_violations > 0
-        }
-        if bad:
-            raise ValueError(
-                f"append violates table constraints: {bad} — reject the "
-                "batch or route violations to a quarantine sink first"
-            )
-
-    def _violation_pred(self, df: DataFrame):
-        """One Column that is true iff a row violates ANY declared check
-        (unique rules excluded — uniqueness is a batch property, not a
-        row property; check_batch still enforces it)."""
-        pred = F.lit(False)
-        for chk in self.table_checks:
-            if chk[0] == "not_null":
-                for c in chk[1]:
-                    pred = pred | F.col(c).isNull()
-            elif chk[0] == "enum":
-                pred = pred | (
-                    F.col(chk[1]).isNotNull()
-                    & ~F.col(chk[1]).isin(*chk[2])
-                )
-        return pred
-
-    def append_with_quarantine(self, df: DataFrame,
-                               quarantine: "ManifestTable",
-                               evolve: bool = False,
-                               txn: str | None = None) -> dict:
-        """The production alternative to check_batch's hard reject: rows
-        violating any row-level check land in the ``quarantine`` table
-        (same commit protocol, auditable, replayable after a fix) and
-        only clean rows enter this table. Returns {'appended': n,
-        'quarantined': m}. Batch-level rules (unique) still hard-fail via
-        ``check_batch`` on the CLEAN slice — a duplicate key is not a row
-        you can route, it is an upstream bug.
-
-        Ordering and determinism contract: the input is materialized ONCE
-        (persisted, released in the finally), so a non-deterministic
-        source cannot route rows differently between the two tables, and
-        the unique rule is checked on the clean slice BEFORE either table
-        commits — a batch with both row-level violations and duplicate
-        keys aborts with NOTHING durably written, instead of leaving bad
-        rows committed to quarantine while the main append raises.
-
-        Scope of that atomicity claim (ADVICE r6): it covers the
-        CHECK-failure path only. The quarantine append and the main
-        append are two independent manifest commits, so if the main
-        append loses its commit race (CommitConflict) AFTER the
-        quarantine committed, a TOKENLESS caller retry re-quarantines
-        the same rows — duplicate quarantine rows, never duplicate or
-        lost CLEAN rows.
-
-        Pass ``txn`` for exactly-once under retries (r7, closing the
-        ADVICE item): both commits then route through ``append_once``
-        with per-table derived tokens (``{txn}:quarantine`` /
-        ``{txn}:clean``), so a retry after ANY crash/conflict point
-        no-ops whichever side already committed and applies the other —
-        at-most-once per table per token, matching the streaming sink's
-        idempotency contract. The returned counts reflect what THIS call
-        durably applied (a fully-replayed batch returns zeros)."""
-        df = df.persist()
-        try:
-            bad_pred = self._violation_pred(df)
-            good = df.filter(~bad_pred)
-            bad = df.filter(bad_pred)
-            n_bad = bad.count()  # materializes the persisted split once
-            n_good = good.count()
-            checks = self.table_checks
-            self.table_checks = [c for c in checks if c[0] == "unique"]
-            q_applied = bool(n_bad)
-            try:
-                self.check_batch(good)  # hard-fail BEFORE any commit
-                if n_bad:
-                    if txn is not None:
-                        q_applied = quarantine.append_once(
-                            bad, txn=f"{txn}:quarantine")
-                    else:
-                        quarantine.append(bad)
-                # row checks don't apply to good by construction and
-                # unique was just verified — skip the re-check in append
-                self.table_checks = []
-                if txn is not None:
-                    applied = self.append_once(
-                        good, txn=f"{txn}:clean", evolve=evolve)
-                else:
-                    self.append(good, evolve=evolve)
-                    applied = True
-            finally:
-                self.table_checks = checks
-            return {"appended": n_good if applied else 0,
-                    "quarantined": n_bad if q_applied else 0}
-        finally:
-            df.unpersist()
-
     def append(self, df: DataFrame, evolve: bool = False) -> None:
         """Append a batch with Delta-style schema handling (see
-        ``_align_to_live``) and table-constraint enforcement
-        (``check_batch``); past snapshots keep their own column set
+        ``_align_to_live``); past snapshots keep their own column set
         (read_at reads with the schema recorded in THAT manifest)."""
         parent, manifest = self._snapshot()
         df, schema_json = self._align_to_live(df, manifest, evolve)
-        self.check_batch(df)
         new = self._write_files(df)
         self._commit_or_discard(
             manifest["entries"] + new, new, parent=parent,
@@ -553,11 +424,10 @@ class ManifestTable:
         parent, manifest = self._snapshot()
         if txn in manifest.get("txns", {}):
             return False  # replayed batch — already committed
-        # same alignment AND constraint contract as append (a streaming
-        # producer that missed an ADD COLUMN keeps working; drift and
-        # declared-check violations still rejected before any file lands)
+        # same alignment contract as append (a streaming producer that
+        # missed an ADD COLUMN keeps working; drift is still rejected
+        # before any file lands)
         df, schema_json = self._align_to_live(df, manifest, evolve=evolve)
-        self.check_batch(df)
         new = self._write_files(df)
         self._commit_or_discard(
             manifest["entries"] + new, new, parent=parent, txn=txn,

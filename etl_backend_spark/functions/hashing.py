@@ -43,86 +43,12 @@ SIGN_BUCKET_BITS = 8
 
 # ------------------------------------------------------------------ MinHash
 
-def minhash_signature(shingles: Column, n: int = MINHASH_N) -> Column:
-    """n-component MinHash signature of a distinct-shingle array.
-
-    Component i = min over shingles of the first 16 hex chars of
-    md5("{i}:" + shingle); lexicographic min over lowercase hex equals
-    numeric min over the 64-bit prefix, identically in Spark and DuckDB.
-    """
-    def component(prefix: str) -> Column:
-        # NB: the lambda must take exactly ONE parameter — a second parameter
-        # makes PySpark pass the array index into it instead of the closure.
-        return F.array_min(
-            F.transform(
-                shingles,
-                lambda s: F.substring(F.md5(F.concat(F.lit(prefix), s)), 1, 16),
-            )
-        )
-
-    return F.array(*[component(f"{i}:") for i in range(n)])
-
-
-def minhash_bands(sig: Column, bands: int = MINHASH_BANDS,
-                  rows: int = MINHASH_ROWS) -> Column:
-    """Array of per-band bucket keys: band b's key is the concatenation of its
-    `rows` signature components. posexplode → (band, key) join keys."""
-    keys = []
-    for b in range(bands):
-        parts = [F.element_at(sig, b * rows + r + 1) for r in range(rows)]
-        keys.append(F.concat(*parts))
-    return F.array(*keys)
-
-
 def minhash_est_jaccard(sig_a: Column, sig_b: Column,
                         n: int = MINHASH_N) -> Column:
     """Estimated Jaccard = fraction of agreeing signature components."""
     agree = F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y),
                             lambda v: v))
     return agree / F.lit(float(n))
-
-
-def minhash_oracle_sql(shingle_cte: str, threshold: float,
-                       n: int = MINHASH_N, bands: int = MINHASH_BANDS,
-                       rows: int = MINHASH_ROWS) -> str:
-    """DuckDB SQL implementing the identical MinHash-LSH pipeline.
-
-    ``shingle_cte`` must define ``sh(doc_id, shingle)`` (distinct rows).
-    """
-    sig_cols = ",\n        ".join(
-        f"min(substr(md5('{i}:' || shingle), 1, 16)) AS s{i}" for i in range(n)
-    )
-    band_keys = " ".join(
-        "WHEN {b} THEN {expr}".format(
-            b=b, expr=" || ".join(f"s{b * rows + r}" for r in range(rows))
-        )
-        for b in range(bands)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END)" for i in range(n)
-    )
-    return f"""
-    WITH {shingle_cte},
-    sig AS (
-      SELECT doc_id, {sig_cols}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, b AS band, CASE b {band_keys} END AS key
-      FROM sig CROSS JOIN generate_series(0, {bands - 1}) t(b)
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-        AND a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b,
-           round(({agree}) / {float(n)}, 4) AS est_jaccard
-    FROM pairs
-    JOIN sig sa ON sa.doc_id = doc_a
-    JOIN sig sb ON sb.doc_id = doc_b
-    WHERE ({agree}) / {float(n)} >= {threshold}
-    """
 
 
 # ------------------------------------------------------------------ SimHash

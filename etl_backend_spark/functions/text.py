@@ -9,8 +9,6 @@ to the regex subset Java and RE2 interpret identically.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -65,12 +63,6 @@ def punct_ratio(text: Column) -> Column:
     return F.when(n > 0, punct / n).otherwise(F.lit(0.0))
 
 
-def upper_ratio(text: Column) -> Column:
-    n = F.length(text)
-    upper = F.length(F.regexp_replace(text, r"[^A-Z]", ""))
-    return F.when(n > 0, upper / n).otherwise(F.lit(0.0))
-
-
 def stopword_ratio(text: Column) -> Column:
     """Fraction of whitespace tokens that are english stopwords."""
     words = F.split(F.lower(F.trim(text)), r"\s+")
@@ -94,18 +86,6 @@ def char_shingles(text: Column, k: int = 8) -> Column:
     n = F.greatest(F.length(text) - F.lit(k - 1), F.lit(1))
     return F.array_distinct(
         F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(text, i, k))
-    )
-
-
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct word k-gram shingles (space-joined)."""
-    words = F.split(F.lower(F.trim(text)), r"\s+")
-    n = F.greatest(F.size(words) - F.lit(k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.array_join(F.slice(words, i, k), " "),
-        )
     )
 
 
@@ -140,32 +120,3 @@ def shingle_rows(df: "DataFrame", id_col: str, text_col: str, k: int = 3,
         )
     )
     return out.dropDuplicates([id_col, "shingle"]) if distinct else out
-
-
-def word_shingles_py(k: int = 3):
-    """Arrow-batched pandas-UDF shingle generator — same output as
-    ``word_shingles`` (distinct word k-grams, first-occurrence order
-    irrelevant downstream) but ~6x faster measured at sf0.1: the
-    expression form runs interpreted (higher-order functions are outside
-    whole-stage codegen) while this loop is one Python pass per doc with
-    per-doc dedup, so the downstream ``distinct`` shuffle is avoidable.
-
-    Oracle parity is unaffected: parity is over results, and the shingle
-    SETS are identical; pytest asserts that equivalence.
-    """
-    import re
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def shingles(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            words = re.split(r"\s+", t.strip().lower())
-            n = max(len(words) - (k - 1), 1)
-            seen = dict.fromkeys(" ".join(words[i:i + k]) for i in range(n))
-            out.append(list(seen))
-        return pd.Series(out)
-
-    return shingles

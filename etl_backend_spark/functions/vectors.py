@@ -55,34 +55,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(nn == F.lit(0.0), F.lit(-1.0)).otherwise(dot(a, b) / nn)
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Dot product UNROLLED over a known fixed dimension — bit-identical
-    to ``dot`` (same left-associated sequential adds, same ``lit(0.0)``
-    seed) but built from plain ``element_at`` products. NOTE (r8): tried
-    as the knn_graph_lsh hot path and REJECTED — the 127-node arithmetic
-    chain codegens into one giant method the JIT refuses, and the
-    interpreted-bytecode fallback measured 2x SLOWER than the higher-
-    order ``aggregate`` fold (6.3 vs 3.25 s sf1, interleaved). Kept for
-    small-dim (<16) uses and as the documented negative result; the hot
-    path is ``pair_dot_seq_pandas`` below."""
-    from functools import reduce
-
-    terms = [F.element_at(a, i + 1) * F.element_at(b, i + 1)
-             for i in range(dim)]
-    return reduce(lambda acc, x: acc + x, terms, F.lit(0.0))
-
-
-def norm_unrolled(v: Column, dim: int) -> Column:
-    """``norm`` unrolled over a fixed dimension — bit-identical fold
-    order (seeded left-assoc x*x adds). Same caveat as ``dot_unrolled``:
-    only for small fixed dims."""
-    from functools import reduce
-
-    terms = [F.element_at(v, i + 1) * F.element_at(v, i + 1)
-             for i in range(dim)]
-    return F.sqrt(reduce(lambda acc, x: acc + x, terms, F.lit(0.0)))
-
-
 def l2_normalize_np_seq(X: np.ndarray) -> np.ndarray:
     """numpy l2-normalize BIT-IDENTICAL to the JVM ``l2_normalize``
     chain (and the DuckDB replay oracles that mirror it): the squared
@@ -124,36 +96,6 @@ def cosine_np_seq(A: np.ndarray, B: np.ndarray) -> np.ndarray:
         return np.where(nn == 0.0, -1.0, dot / nn)
 
 
-def pair_dot_seq_pandas():
-    """Arrow-batched pandas UDF computing the per-pair dot product with
-    numpy, BIT-IDENTICAL to the sequential ``dot`` fold: accumulation is
-    vectorized over ROWS but sequential over DIMS (``acc = acc +
-    A[:, j] * B[:, j]`` in increasing j, float64), so every row's sum is
-    the same left-associated IEEE chain the JVM fold and the DuckDB
-    oracle compute — no pairwise/BLAS reordering, no round-tie risk.
-    NOTE (r8): tried as the knn_graph_lsh pair scorer and REJECTED —
-    bit-exact, but it ships ~1 KB of vectors per PAIR through Arrow
-    (4.6 vs 3.9 s at sf1, ~89 GB transfer at the sf10 candidate
-    volume); the shipped fix is bucket-local scoring, where vectors
-    cross once per band instead (``bucket_*_pandas`` below). Kept as a
-    pytest-pinned utility for plans whose pair vectors are ALREADY
-    co-located. Returns a Column factory:
-    ``pair_dot_seq_pandas()(va, vb)``."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.stack(a.to_numpy()).astype(np.float64, copy=False)
-        B = np.stack(b.to_numpy()).astype(np.float64, copy=False)
-        acc = np.zeros(len(A), dtype=np.float64)
-        for j in range(A.shape[1]):  # sequential over dims = fold order
-            acc = acc + A[:, j] * B[:, j]
-        return pd.Series(acc)
-
-    return pair_dot
-
-
 def l2_normalize(v: Column) -> Column:
     # Divisor guarded to >= 1e-300: an all-zero vector would otherwise
     # raise DIVIDE_BY_ZERO under Spark 4's default ANSI mode (killing
@@ -167,54 +109,6 @@ def l2_normalize(v: Column) -> Column:
     # (registry/llm.py) mirrors this exact chain in SQL.
     n = F.greatest(norm(v), F.lit(1e-300))
     return F.transform(v, lambda x: x / n)
-
-
-def cosine_scores_pandas(query_vec):
-    """Factory: Arrow-batched pandas UDF scoring a whole corpus column
-    against one query vector with numpy (SIMD/pairwise summation).
-
-    The expression-based ``cosine`` above is exactly portable to the DuckDB
-    oracle (sequential accumulation) but higher-order-function expressions
-    run interpreted, outside whole-stage codegen; this is the throughput
-    path for large corpora, at the cost of bit-exact oracle parity
-    (pairwise vs sequential float summation). Returns a Column.
-    """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-
-    @pandas_udf(DoubleType())
-    def score(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (batch, dim) float64
-        m = m.astype(np.float64, copy=False)
-        dots = m @ q
-        norms = np.linalg.norm(m, axis=1)
-        return pd.Series(dots / (norms * qn))
-
-    return score
-
-
-def cosine_scores_multi_pandas(query_vecs: list[list[float]]):
-    """Single Arrow-batched pandas UDF scoring every corpus vector against
-    ALL queries at once: one (batch x dim) @ (dim x n_queries) matmul per
-    batch, one scan, one Python worker round — per-query UDFs pay the
-    scan + worker startup n_queries times. Returns array<double> of scores
-    in query order (posexplode downstream)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    qm = np.asarray(query_vecs, dtype=np.float64).T  # (dim, n_q)
-    qn = np.linalg.norm(qm, axis=0)                  # (n_q,)
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def score(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64, copy=False)
-        scores = (m @ qm) / (np.linalg.norm(m, axis=1)[:, None] * qn[None, :])
-        return pd.Series(list(scores))
-
-    return score
 
 
 def band_keys_pandas(bits: int, nbands: int, flips: int = 0):
@@ -1029,8 +923,8 @@ def bucket_discord_nn_pandas(cap: int = 64, wlen: int = 8, topk: int = 10):
 def cosine_topk_scan_pandas(query_vecs: list[list[float]], k: int,
                             exclude_ids=None):
     """mapInPandas worker factory over (vec_id, v): score every corpus
-    vector against ALL queries (one matmul per Arrow batch — same math as
-    ``cosine_scores_multi_pandas``) and emit only the LOCAL top-k rows per
+    vector against ALL queries (one (batch x dim) @ (dim x n_queries)
+    matmul per Arrow batch) and emit only the LOCAL top-k rows per
     query, (qi, vec_id, cos), under the strict total order (cos desc,
     vec_id asc).
 

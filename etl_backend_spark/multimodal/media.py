@@ -202,7 +202,7 @@ def decode_one(content: bytes) -> tuple[int, int, int, np.ndarray]:
     if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
         raise TypeError(
             "audio payload routed to the image decode path — use "
-            "decode_audio / audio_features for WAV content"
+            "decode_audio for WAV content"
         )
     return _fake_decode(content)
 
@@ -368,31 +368,6 @@ def resample_audio(media: DataFrame, batch_size: int = 256) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(
         resample_audio_batches, schema=RESAMPLE_SCHEMA
     )
-
-
-def audio_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
-    """FEATURE_DIM-bin energy envelope per audio payload (real decode +
-    windowed mean-square), emitted as ``array<float>`` ready for the
-    sim_topk_* ANN operators — audio dedup is embedding dedup downstream,
-    exactly like the image path."""
-    schema = StructType([
-        StructField("media_id", LongType()),
-        StructField("features", ArrayType(FloatType())),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "features": []}
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                _, _, samples = wav.decode_wav(bytes(content))
-                out["media_id"].append(media_id)
-                out["features"].append(wav.energy_envelope(samples, FEATURE_DIM))
-            yield pd.DataFrame(out)
-
-    media.sparkSession.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size)
-    )
-    return media.select("media_id", "content").mapInPandas(run, schema=schema)
 
 
 RESIZED_SCHEMA = StructType(

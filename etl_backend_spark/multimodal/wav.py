@@ -104,20 +104,3 @@ def pcm16_header(n_samples: int, sample_rate: int = 8000,
                                 sample_rate * channels * 2, channels * 2, 16)
         + b"data" + struct.pack("<I", data_len)
     )
-
-
-def energy_envelope(samples: np.ndarray, n_bins: int) -> np.ndarray:
-    """``n_bins`` mean-square energy bins over the mono mix — the audio
-    feature vector (float32, deterministic: integer sum of squares then one
-    float divide per bin, so cross-run parity is exact)."""
-    mono = samples.sum(axis=1) // samples.shape[1]
-    n = mono.size
-    out = np.zeros(n_bins, dtype=np.float32)
-    if n == 0:
-        return out
-    edges = [(i * n) // n_bins for i in range(n_bins + 1)]
-    for i in range(n_bins):
-        seg = mono[edges[i]:edges[i + 1]]
-        if seg.size:
-            out[i] = float(int((seg.astype(np.int64) ** 2).sum()) / seg.size)
-    return out

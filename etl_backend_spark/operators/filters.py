@@ -55,10 +55,6 @@ def any_of(*preds: Column) -> Column:
     return reduce(lambda a, b: a | b, preds)
 
 
-def all_of(*preds: Column) -> Column:
-    return reduce(lambda a, b: a & b, preds)
-
-
 def apply(df: DataFrame, preds: list[Column]) -> DataFrame:
     """Fold a dynamically-assembled predicate list with AND — the engine's
     query-builder entry point (reference src/routes/ads.ts:99-123)."""

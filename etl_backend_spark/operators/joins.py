@@ -7,8 +7,9 @@ Every reference join is an FK equi-join (Prisma ``include``); Spark strategy:
   nothing shuffles.
 - fact-fact joins (messages-scale) → sort-merge with AQE skew splitting; at
   scale, bucket both sides on the join key to eliminate the shuffle entirely.
-- nested 1:N includes → ``collect_list(struct(...))`` after a groupBy, not a
-  driver-side loop.
+- nested 1:N includes → ``collect_list(struct(...))`` after a repartition
+  on the child key and a groupBy, not a driver-side loop (the registered
+  builders in ``registry/reads.py`` build these inline).
 """
 
 from __future__ import annotations
@@ -35,56 +36,6 @@ def anti(df: DataFrame, existing: DataFrame, on) -> DataFrame:
     """Non-existence guard — create-if-absent
     (reference src/routes/favorites.ts:23-41)."""
     return df.join(existing, on, "left_anti")
-
-
-def self_roles(fact: DataFrame, dim: DataFrame, role_keys: dict[str, str],
-               dim_key: str, select_per_role: dict[str, list[str]]) -> DataFrame:
-    """Join the same dimension under multiple roles — Conversation includes
-    `user1` and `user2`, both -> User (reference src/routes/chat.ts:93-107).
-
-    role_keys: {role_prefix: fact_fk_col}; select_per_role: dim cols to carry,
-    re-aliased ``{prefix}_{col}``.
-    """
-    out = fact
-    for prefix, fk in role_keys.items():
-        d = dim.select(
-            F.col(dim_key).alias(f"__{prefix}_key"),
-            *[F.col(c).alias(f"{prefix}_{c}") for c in select_per_role[prefix]],
-        )
-        out = out.join(F.broadcast(d), out[fk] == d[f"__{prefix}_key"], "left").drop(
-            f"__{prefix}_key"
-        )
-    return out
-
-
-def nested_1n(parent: DataFrame, child: DataFrame, parent_key: str,
-              child_key: str, collect_col, sort: bool = True,
-              out_col: str = "children") -> DataFrame:
-    """One-to-many nested collect — `include:{messages:[...]}` as a
-    struct/array column (reference src/routes/chat.ts:108-111).
-
-    ``collect_col`` is a Column built from child columns (e.g. a struct).
-    Aggregated child lists are sorted for determinism.
-
-    The child is explicitly ``repartition(child_key)``-ed BEFORE the
-    groupBy. For collect_list this is strictly better than the default
-    partial+final plan at any scale: map-side partial_collect_list cannot
-    reduce data (the partial buffer carries every element), so the default
-    pays per-element buffer serialization through the shuffle for zero
-    combine benefit — repartition-first ships raw rows instead and runs
-    the whole aggregation in one post-shuffle stage (measured 2.1x on the
-    sf0.1 nested include, r6). ``repartition`` is given the column only
-    (no count), so AQE still coalesces/extends the partition count at the
-    actual data scale.
-    """
-    agg = F.collect_list(collect_col)
-    if sort:
-        agg = F.sort_array(agg)
-    nested = (
-        child.repartition(F.col(child_key))
-        .groupBy(F.col(child_key).alias("__pk")).agg(agg.alias(out_col))
-    )
-    return parent.join(nested, parent[parent_key] == nested["__pk"], "left").drop("__pk")
 
 
 def detect_heavy_hitters(df: DataFrame, key: str, fraction: float = 0.01,

@@ -12,7 +12,7 @@ Salts are DETERMINISTIC (hash of a row-identity column mod n), never
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # (partial_fn, final_fn) per algebraic aggregate: partial runs per

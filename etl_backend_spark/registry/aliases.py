@@ -157,9 +157,9 @@ def q_fn_regex_match(spark, sf_dir):
 )
 def q_stream_ingest(spark, sf_dir):
     """Batch form of the streaming ingest stage (parse + validate, reference
-    src/websocket.ts:38-63); the live Structured Streaming pipeline with the
+    src/websocket.ts:38-63); the live Structured Streaming path with the
     same transforms is `streaming.chat_pipeline.read_json_stream` →
-    `validate_events` → `append_sink` (availableNow-tested)."""
+    `validate_events` → `stream_into_manifest`."""
     ev = Catalog(spark, sf_dir).table("events")
     valid = ev.filter(
         F.col("event_id").isNotNull() & F.col("user_id").isNotNull()
@@ -195,9 +195,9 @@ def q_stream_ingest(spark, sf_dir):
 def q_stream_route_keyed(spark, sf_dir):
     """Batch form of keyed presence routing (reference src/websocket.ts:11,
     71-77): a user is online after their first 'signup' event; later events
-    are delivered, earlier ones queued. The live keyed-state form is
-    `streaming.chat_pipeline.presence_routing` (applyInPandasWithState,
-    stateful-tested)."""
+    are delivered, earlier ones queued. There is no streaming form: the
+    live streaming path is `streaming.chat_pipeline.stream_into_manifest`,
+    which persists messages without routing them."""
     from pyspark.sql import Window
 
     ev = Catalog(spark, sf_dir).table("events")

@@ -7,8 +7,6 @@ check it without either engine mutating shared files.
 
 from __future__ import annotations
 
-import datetime
-
 from pyspark.sql import Row, functions as F
 
 from ..sources import cache

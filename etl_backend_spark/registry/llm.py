@@ -22,7 +22,7 @@ from ..sources import cache
 from ..sources.catalog import Catalog, parquet_num_rows
 from . import _md5_hex64_sql, register
 
-# DuckDB CTE mirroring functions.text.word_shingles(text, 3) row-wise
+# DuckDB CTE mirroring functions.text.shingle_rows(df, id, text, 3)
 _SHINGLE_CTE = """sh AS (
       SELECT DISTINCT doc_id,
         unnest(list_transform(generate_series(1, greatest(len(words) - 2, 1)),
@@ -1356,10 +1356,8 @@ def _route_degenerate_buckets(bands, n_band_rows, extra_cols=(),
 # (functions/vectors.py bucket_*_pandas kernels) and never materializes
 # hydrated pairs at all (sf10: dedup 5.4 s, multiprobe 13 s, knn 6.3 s;
 # BASELINE.md r8). Two other r8 alternatives were A/B'd and rejected on
-# the way: the 64-term codegen unroll (V.dot_unrolled — de-JITs) and
-# the Arrow per-pair dot (V.pair_dot_seq_pandas — ~1 KB/pair transfer);
-# both survive in vectors.py as pytest-pinned documented negative
-# results.
+# the way: the 64-term codegen unroll (de-JITs) and
+# the Arrow per-pair dot (~1 KB/pair transfer); neither is kept.
 
 
 @register(
@@ -2051,7 +2049,6 @@ def min_label_components(edges, max_rounds: int = 50):
         if changed == 0:
             return labels, True
     return labels, False
-
 
 
 @register(
@@ -3833,69 +3830,6 @@ def q_semdedup_kmeans(spark, sf_dir):
 # greedy over the batch visit order — so dup_of attribution (base rep
 # vs earlier-accepted new vector, earliest-kept tie-break) is replayed
 # bit-exactly, not read back.
-def semdedup_incr_save_cents(d: str, cents) -> None:
-    """Persist the frozen centroid matrix beside the base record — the
-    third leg of the index (record + kept vectors + centroids), so an
-    ingest session can tag a new batch without refitting or touching
-    the base corpus (r12; loaded by semdedup_incr_load_cents)."""
-    import numpy as np
-    import pandas as pd
-
-    import os
-
-    from ..ann import index as ann_index
-
-    k, dim = cents.shape
-    ann_index._write_small_parquet(
-        os.path.join(d, "cents"),
-        pd.DataFrame({
-            "c": np.repeat(np.arange(k, dtype=np.int64), dim),
-            "dim": np.tile(np.arange(dim, dtype=np.int64), k),
-            "w": cents.ravel().astype(np.float64),
-        }))
-
-
-def semdedup_incr_load_cents(d: str):
-    """Centroid matrix back from the artifact, bit-exact (float64
-    round-trips through parquet)."""
-    import os
-
-    import numpy as np
-    import pyarrow.parquet as papq
-
-    from ..sources.catalog import parquet_part_files
-    import pyarrow as pa
-
-    tbl = pa.concat_tables([
-        papq.read_table(f)
-        for f in parquet_part_files(os.path.join(d, "cents"))
-    ]).to_pandas().sort_values(["c", "dim"])
-    k = int(tbl["c"].max()) + 1
-    return tbl["w"].to_numpy(dtype=np.float64).reshape(k, -1)
-
-
-def semdedup_incr_tag(corpus_df, cents):
-    """ONE Arrow map pass tagging rows with their nearest frozen cell
-    (vec_id, cell, cdot, nv) — the batch half of an ingest; shared by
-    the registered query and the fixed-batch receipt script."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions import semdedup as sd
-
-    def tag(batches):
-        for pdf in batches:
-            mat = np.stack(pdf["nv"].to_numpy())
-            cell, cdot = sd.assign_cells(mat, cents)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"], "cell": cell, "cdot": cdot,
-                "nv": pdf["nv"],
-            })
-
-    return corpus_df.select("vec_id", "nv").mapInPandas(
-        tag, schema="vec_id long, cell int, cdot double, nv array<double>")
-
-
 def semdedup_incr_batch_rec(spark, d: str, batch, kept_src=None):
     """The INGEST side of incremental SemDeDup, O(batch) by design:
     cogroup a tagged batch (vec_id, cell, prio, nv) with the kept
@@ -4181,7 +4115,6 @@ def q_semdedup_incremental(spark, sf_dir):
         ]
         for f in futs:
             f.result()
-    semdedup_incr_save_cents(d, cents)
     ann_index.point_current("semdedup-incr", d)
     tagged.unpersist()
     release_plan_checkpoints(base_cp)

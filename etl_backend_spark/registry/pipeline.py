@@ -329,7 +329,7 @@ def q_udtf_sentences(spark, sf_dir):
     identical output with zero Python in the plan. Kept registered (out of
     the driver window) so the registry demonstrates the API against an
     oracle-checked twin."""
-    from pyspark.sql.functions import lit, udtf
+    from pyspark.sql.functions import udtf
 
     @udtf(returnType="sent_idx int, sentence string, n_chars int")
     class SentenceSplit:

@@ -631,8 +631,9 @@ def q_join_1n_nested_salted(spark, sf_dir):
             "__salt",
             F.pmod(F.xxhash64("l_orderkey", "l_linenumber"), F.lit(S))
             .cast("int"))
-        # repartition-first, same rationale as nested_1n: collect_list
-        # partials can't combine, so ship raw rows once
+        # repartition-first: map-side partial collect_list cannot reduce
+        # data, so ship raw rows once (measured 2.1x on the sf0.1 nested
+        # include, r6)
         .repartition(F.col("l_orderkey"), F.col("__salt"))
         .groupBy("l_orderkey", "__salt")
         .agg(F.collect_list("l_linenumber").alias("part"))

@@ -24,16 +24,17 @@ def test_dedup_exact_keeps_one_per_hash(spark, cat):
     assert n_groups + dup_rows == n_docs
 
 
+def _shingles(spark, text: str) -> list[str]:
+    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
+    return [r.shingle for r in T.shingle_rows(df, "doc_id", "text", 3).collect()]
+
+
 def test_word_shingles_known_value(spark):
-    df = spark.createDataFrame([("a b c d",)], ["text"])
-    got = df.select(T.word_shingles(F.col("text"), 3).alias("s")).collect()[0].s
-    assert sorted(got) == ["a b c", "b c d"]
+    assert sorted(_shingles(spark, "a b c d")) == ["a b c", "b c d"]
 
 
 def test_shingles_short_doc_single_window(spark):
-    df = spark.createDataFrame([("one two",)], ["text"])
-    got = df.select(T.word_shingles(F.col("text"), 3).alias("s")).collect()[0].s
-    assert got == ["one two"]
+    assert _shingles(spark, "one two") == ["one two"]
 
 
 def test_jaccard_identical_docs_is_one(spark):
@@ -582,29 +583,6 @@ def test_events_discord_one_pass_plan_single_subtree(spark):
     assert "Join" not in plan, plan
 
 
-def test_dot_unrolled_bit_equals_fold(spark):
-    """dot_unrolled / norm_unrolled are bit-identical to the sequential
-    aggregate fold (same seed, same left-assoc order) — pinned so the
-    documented negative result (r8: the 64-term unroll de-JITs and is
-    SLOWER; see vectors.py) keeps its correctness claim testable."""
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    v = V.as_double(F.col("embedding"))
-    pair_dot = V.pair_dot_seq_pandas()
-    bad = (
-        e.select(
-            V.dot(v, F.reverse(v)).alias("f"),
-            V.dot_unrolled(v, F.reverse(v), 64).alias("u"),
-            pair_dot(v, F.reverse(v)).alias("a"),
-            V.norm(v).alias("nf"),
-            V.norm_unrolled(v, 64).alias("nu"),
-        )
-        .filter((F.col("f") != F.col("u")) | (F.col("nf") != F.col("nu"))
-                | (F.col("f") != F.col("a")))
-        .count()
-    )
-    assert bad == 0
-
-
 def test_sim_topk_lsh_recall_vs_brute(spark):
     """Bucketed ANN top-10 vs brute-force top-10.
 
@@ -631,26 +609,6 @@ def test_sim_topk_lsh_recall_vs_brute(spark):
     for r in lsh:
         if (r.q_id, r.vec_id) in score:
             assert r.cos_sim == score[(r.q_id, r.vec_id)]
-
-
-def test_word_shingles_py_equals_expression(spark, cat):
-    """The pandas-UDF shingler and the expression shingler must produce the
-    same shingle SETS (the fast path can't drift from the oracle-mirrored
-    definition)."""
-    d = cat.table("documents").limit(100)
-    a = {
-        (r.doc_id, r.s)
-        for r in d.select(
-            "doc_id", F.explode(T.word_shingles(F.col("text"), 3)).alias("s")
-        ).distinct().collect()
-    }
-    b = {
-        (r.doc_id, r.s)
-        for r in d.select(
-            "doc_id", F.explode(T.word_shingles_py(3)(F.col("text"))).alias("s")
-        ).collect()
-    }
-    assert a == b
 
 
 def test_sim_topk_ivf_recall_vs_brute(spark):

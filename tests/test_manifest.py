@@ -714,22 +714,6 @@ def test_upsert_applies_align_contract(spark, tmp_path):
     assert got == {1: ("b", None), 2: ("c", None)}
 
 
-def test_zorder_n_prunes_on_all_three_dimensions(spark, tmp_path):
-    """3-column Morton layout: manifest stats prune files for a range
-    predicate on EACH of the three interleaved columns."""
-    from etl_backend_spark.sources.layout import zorder_sort_n
-
-    cat = Catalog(spark, SF_DIR)
-    li = cat.table("lineitem")
-    cols = ["l_orderkey", "l_partkey", "l_suppkey"]
-    t = ManifestTable(spark, str(tmp_path), "z3_lineitem", cols)
-    t.create(zorder_sort_n(li, cols, n_files=8))
-    for c in cols:
-        hi = li.agg(F.expr(f"percentile({c}, 0.2)")).collect()[0][0]
-        _, skipped = t.read_pruned(c, lo=None, hi=int(hi))
-        assert skipped > 0, c
-
-
 def test_bloom_prunes_unsorted_point_lookup(spark, tmp_path):
     """The bloom prune works exactly where zone maps fail: an UNSORTED
     layout gives every file a [min,max] interval spanning the whole key
@@ -768,141 +752,6 @@ def test_bloom_positions_python_matches_spark(spark):
     ).collect()
     for r in rows:
         assert [r.p0, r.p1, r.p2, r.p3] == bloom_positions(r.v, 4, 8192)
-
-
-def test_table_constraints_reject_bad_batch_at_append(spark, tmp_path):
-    """Declared table checks fail the COMMIT: a violating batch raises
-    with per-rule counts and leaves the table untouched; a clean batch
-    appends normally."""
-    import pytest
-
-    o = Catalog(spark, SF_DIR).table("orders").limit(50)
-    t = ManifestTable(spark, str(tmp_path), "checked", ["o_orderkey"])
-    t.create(o)
-    t.table_checks = [
-        ("not_null", ["o_orderpriority"]),
-        ("enum", "o_orderstatus", ["O", "F", "P"]),
-        ("unique", ["o_orderkey"]),
-    ]
-    n = t.read().count()
-    bad = o.limit(5).withColumn("o_orderstatus", F.lit("ZZZ"))
-    with pytest.raises(ValueError, match="enum"):
-        t.append(bad)
-    dup = o.limit(2).withColumn("o_orderkey", F.lit(7))
-    with pytest.raises(ValueError, match="unique"):
-        t.append(dup)
-    assert t.read().count() == n  # nothing landed
-    t.append(o.limit(3).withColumn(
-        "o_orderkey", F.col("o_orderkey") + 1_000_000))
-    assert t.read().count() == n + 3
-
-
-def test_append_with_quarantine_routes_bad_rows(spark, tmp_path):
-    """Violating rows land in the quarantine table, clean rows append,
-    counts report both, and a batch-level duplicate key still hard-fails."""
-    import pytest
-
-    o = Catalog(spark, SF_DIR).table("orders").limit(20)
-    t = ManifestTable(spark, str(tmp_path), "main", ["o_orderkey"])
-    t.create(o)
-    q = ManifestTable(spark, str(tmp_path), "quarantine", ["o_orderkey"])
-    q.create(o.limit(0))
-    t.table_checks = [("enum", "o_orderstatus", ["O", "F", "P"]),
-                      ("unique", ["o_orderkey"])]
-    n = t.read().count()
-    batch = (
-        o.limit(6)
-        .withColumn("o_orderkey", F.col("o_orderkey") + 1_000_000)
-        .withColumn(
-            "o_orderstatus",
-            F.when(F.col("o_orderkey") % 2 == 0, F.lit("ZZZ"))
-            .otherwise(F.col("o_orderstatus")),
-        )
-    )
-    res = t.append_with_quarantine(batch, q)
-    assert res["appended"] + res["quarantined"] == 6
-    assert res["quarantined"] > 0
-    assert t.read().count() == n + res["appended"]
-    assert q.read().count() == res["quarantined"]
-    assert t.read().filter(F.col("o_orderstatus") == "ZZZ").count() == 0
-    dup = o.limit(2).withColumn("o_orderkey", F.lit(7))
-    with pytest.raises(ValueError, match="unique"):
-        t.append_with_quarantine(dup, q)
-
-
-def test_quarantine_commits_nothing_when_clean_slice_has_dup_keys(
-        spark, tmp_path):
-    """A batch carrying BOTH row-level violations and duplicate keys in the
-    clean slice must abort with NOTHING durably written: the unique check
-    runs on the clean slice BEFORE the quarantine commit, so the bad rows
-    are not left committed to quarantine while the main append raises."""
-    import pytest
-
-    o = Catalog(spark, SF_DIR).table("orders").limit(20)
-    t = ManifestTable(spark, str(tmp_path), "main2", ["o_orderkey"])
-    t.create(o)
-    q = ManifestTable(spark, str(tmp_path), "quarantine2", ["o_orderkey"])
-    q.create(o.limit(0))
-    t.table_checks = [("enum", "o_orderstatus", ["O", "F", "P"]),
-                      ("unique", ["o_orderkey"])]
-    n_main, n_q = t.read().count(), q.read().count()
-    # 2 clean rows sharing one key (duplicate) + 2 enum-violating rows
-    batch = (
-        o.limit(2).withColumn("o_orderkey", F.lit(9_000_000))
-        .unionByName(
-            o.limit(2)
-            .withColumn("o_orderkey", F.col("o_orderkey") + 8_000_000)
-            .withColumn("o_orderstatus", F.lit("ZZZ"))
-        )
-    )
-    with pytest.raises(ValueError, match="unique"):
-        t.append_with_quarantine(batch, q)
-    assert t.read().count() == n_main  # main untouched
-    assert q.read().count() == n_q     # quarantine untouched too
-
-
-def test_quarantine_with_txn_is_exactly_once_under_retries(spark, tmp_path):
-    """The ADVICE-r6 crash window, closed by the txn token: a retry that
-    arrives AFTER the quarantine commit but with the clean append never
-    landed (simulated by pre-committing the derived quarantine token)
-    must no-op the quarantine side (no duplicate bad rows) and still
-    apply the clean side; a full replay of the same token no-ops both."""
-    o = Catalog(spark, SF_DIR).table("orders").limit(20)
-    t = ManifestTable(spark, str(tmp_path), "main3", ["o_orderkey"])
-    t.create(o)
-    q = ManifestTable(spark, str(tmp_path), "quarantine3", ["o_orderkey"])
-    q.create(o.limit(0))
-    t.table_checks = [("enum", "o_orderstatus", ["O", "F", "P"]),
-                      ("unique", ["o_orderkey"])]
-    n_main = t.read().count()
-    batch = (
-        o.limit(6)
-        .withColumn("o_orderkey", F.col("o_orderkey") + 2_000_000)
-        .withColumn(
-            "o_orderstatus",
-            F.when(F.col("o_orderkey") % 2 == 0, F.lit("ZZZ"))
-            .otherwise(F.col("o_orderstatus")),
-        )
-    )
-    bad = batch.filter(F.col("o_orderstatus") == "ZZZ")
-    n_bad = bad.count()
-    assert 0 < n_bad < 6
-    # attempt 1 crashed between the two commits: quarantine already durable
-    assert q.append_once(bad, txn="b7:quarantine") is True
-    # the caller's retry of the whole batch
-    res = t.append_with_quarantine(batch, q, txn="b7")
-    assert res == {"appended": 6 - n_bad, "quarantined": 0}
-    assert q.read().count() == n_bad          # NOT re-quarantined
-    assert t.read().count() == n_main + 6 - n_bad
-    # full replay: both sides no-op, tables unchanged
-    res2 = t.append_with_quarantine(batch, q, txn="b7")
-    assert res2 == {"appended": 0, "quarantined": 0}
-    assert q.read().count() == n_bad
-    assert t.read().count() == n_main + 6 - n_bad
-    # a fresh token applies normally and reports both sides
-    batch2 = batch.withColumn("o_orderkey", F.col("o_orderkey") + 50)
-    res3 = t.append_with_quarantine(batch2, q, txn="b8")
-    assert res3 == {"appended": 6 - n_bad, "quarantined": n_bad}
 
 
 def test_bloom_probe_uses_written_geometry(spark, tmp_path):
