@@ -19,7 +19,7 @@ from ..functions import text as T
 from ..functions import vectors as V
 from ..functions.semdedup import EPS as _SEMDEDUP_EPS
 from ..sources import cache
-from ..sources.catalog import Catalog, parquet_num_rows
+from ..sources.catalog import Catalog, parquet_num_rows, query_vectors
 from . import _md5_hex64_sql, register
 
 # DuckDB CTE mirroring functions.text.shingle_rows(df, id, text, 3)
@@ -920,7 +920,9 @@ def q_sim_topk_pandas(spark, sf_dir):
     selection (cos desc, vec_id asc) makes the result partition-independent.
     Registered rows-only because pairwise summation's last-ulp differences
     break bit-exact hashing vs the oracle. Recall equivalence vs brute is
-    pytest-checked."""
+    pytest-checked. The 5 query vectors come from a driver-side pyarrow
+    read (catalog.query_vectors), so building the plan starts no Spark
+    job and the corpus is scanned once."""
     from pyspark.sql import Window
 
     e = Catalog(spark, sf_dir).table("embeddings")
@@ -928,10 +930,7 @@ def q_sim_topk_pandas(spark, sf_dir):
     # float64 itself (exact), so the JVM cast pass disappears and the
     # Arrow transfer width halves
     corpus = e.select("vec_id", F.col("embedding").alias("v"))
-    qrows = sorted(
-        (r.vec_id, [float(x) for x in r.embedding])
-        for r in e.filter(F.col("vec_id") < 5).select("vec_id", "embedding").collect()
-    )
+    qrows = query_vectors(sf_dir)
     q_ids = [q for q, _ in qrows]
     id_map = F.array(*[F.lit(q) for q in q_ids])
     local_topk = corpus.mapInPandas(
@@ -1053,15 +1052,12 @@ def q_sim_topk_ivf(spark, sf_dir):
             .parquet(os.path.join(b, "assign"))
         )
         centroids = model.clusterCenters()
-        queries = corpus.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-        ).collect()
         rows = []
-        for r in queries:
-            qv = np.array(r.qv)
+        for q_id, v in query_vectors(sf_dir):
+            qv = np.array(v)
             dists = [float(np.linalg.norm(qv - c)) for c in centroids]
             for cid in np.argsort(dists)[:2]:
-                rows.append((int(r.q_id), int(cid)))
+                rows.append((int(q_id), int(cid)))
         _write_small_parquet(
             os.path.join(b, "probes"),
             pd.DataFrame(rows, columns=["q_id", "centroid"]),
@@ -1122,8 +1118,10 @@ def q_sim_topk_pq(spark, sf_dir):
     or query broadcast is needed (pytest-asserted partition-independence
     and plan shape). The persisted-index path (ann/index._rerank_topk)
     keeps its rerank join: its scan reads stored codes, not raw vectors.
-    Recall vs ``sim_topk_brute`` is pytest-asserted. Every collect is
-    bounded: the fit sample (<=4096), 5 query vectors."""
+    Recall vs ``sim_topk_brute`` is pytest-asserted. The one collect is
+    the bounded fit sample (<=4096, memoized per corpus); the 5 query
+    vectors come from a driver-side pyarrow read (catalog.query_vectors),
+    so a warm build starts no Spark job."""
     import numpy as np
 
     from pyspark.sql import Window
@@ -1149,11 +1147,7 @@ def q_sim_topk_pq(spark, sf_dir):
 
     # the RAW query vectors (exact float32 widening): the kernel builds the
     # ADC tables from their normalized form and reranks against them as is
-    qraw = sorted(
-        (r.vec_id, r.embedding)
-        for r in e.filter(F.col("vec_id") < 5)
-        .select("vec_id", "embedding").collect()
-    )
+    qraw = query_vectors(sf_dir)
     q_ids = [q for q, _ in qraw]
     qmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in qraw])
 

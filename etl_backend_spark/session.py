@@ -18,6 +18,17 @@ unchanged from ``local[32]`` tests to a 1000-executor cluster over ~100 TB:
 - **shuffle.partitions** defaults to 2×cores locally; on a real cluster set
   ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (rule of thumb: ~2-3× total cores, with
   AQE coalescing down).
+- **Python daemon ``etl_backend_spark.pydaemon``**: PySpark's worker calls
+  ``importlib.invalidate_caches()`` before every task, and on CPython 3.11
+  and 3.12 that makes each of the worker's ~16 zip importers re-read its
+  whole archive directory (``pyspark.zip`` and the spark-core jar): ~0.2 s
+  of every Python task, against a few ms for the UDF itself. The daemon
+  re-reads an archive only when its inode, mtime or size changed, which is
+  what CPython 3.13's lazy ``zipimporter.invalidate_caches`` gives: a
+  rewritten archive's new modules still import. The package root goes on
+  ``spark.executorEnv.PYTHONPATH`` so the daemon imports from any working
+  directory. There is no fallback: if the module cannot be imported, Python
+  UDFs fail with Spark's daemon start-up error.
 """
 
 from __future__ import annotations
@@ -25,6 +36,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -77,7 +90,11 @@ def get_spark(
         # some testdata drops store events.ts as TIMESTAMP(NANOS); lets the
         # raw int64 read path work without a per-read conf (µs drops ignore it)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", "etl_backend_spark.pydaemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PKG_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -436,6 +436,23 @@ def parquet_num_rows(sf_dir: str | None, name: str) -> int:
     )
 
 
+def query_vectors(sf_dir: str | None) -> list[tuple[int, list[float]]]:
+    """The similarity family's shared query set: ``(vec_id, embedding)``
+    for the ``embeddings`` rows with ``vec_id < 5``, sorted by vec_id.
+    A driver-side pyarrow read whose ``vec_id`` filter prunes on the
+    row-group stats, NO Spark job (~6 ms, against ~90 ms for the warm
+    collect it replaces). O(files) like the footer reads above. The
+    float32 values widen exactly to Python floats, the same values a
+    Spark collect returns."""
+    import pyarrow.dataset as ds
+
+    path = f"{sf_dir or DEFAULT_SF_DIR}/embeddings.parquet"
+    t = ds.dataset(parquet_part_files(path), format="parquet").to_table(
+        columns=["vec_id", "embedding"], filter=ds.field("vec_id") < 5)
+    return sorted(zip(t.column("vec_id").to_pylist(),
+                      t.column("embedding").to_pylist()))
+
+
 def adaptive_bucket_count(spark: SparkSession, *paths: str) -> int:
     """Bucket count for a (set of co-bucketed) table(s): at least the
     cluster's parallelism (a bucketed scan runs one task per bucket —

@@ -1062,6 +1062,48 @@ def test_sim_topk_pandas_matches_brute(spark):
         assert math.isclose(fast[k], brute[k], abs_tol=2e-6), k
 
 
+def test_sim_topk_builders_start_no_spark_job(spark):
+    """sim_topk_pandas and sim_topk_pq read their 5 query vectors
+    driver-side (catalog.query_vectors), so a warm builder starts no
+    Spark job; the vectors are exactly the ones a Spark collect returns
+    (float32 widened to Python float)."""
+    from etl_backend_spark.registry import QUERIES
+    from etl_backend_spark.sources.catalog import Catalog, query_vectors
+    from tests.conftest import SF_DIR
+
+    e = Catalog(spark, SF_DIR).table("embeddings")
+    collected = sorted(
+        (r.vec_id, r.embedding)
+        for r in e.filter(F.col("vec_id") < 5).select("vec_id", "embedding").collect()
+    )
+    assert query_vectors(SF_DIR) == collected
+    assert [q for q, _ in collected] == [0, 1, 2, 3, 4]
+
+    sc = spark.sparkContext
+    for name in ("sim_topk_pandas", "sim_topk_pq"):
+        QUERIES[name](spark, SF_DIR)  # warm: sim_topk_pq memoizes its fit
+        group = f"test-build-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            QUERIES[name](spark, SF_DIR)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+
+
+def test_doc_chunk_splits_each_document_once(spark):
+    """doc_chunk projects ``words`` before the explode: the executed plan
+    evaluates the regex split once (in one select with the explode it ran
+    in the Generate and again for every chunk row)."""
+    from etl_backend_spark.registry import QUERIES
+    from tests.conftest import SF_DIR
+
+    df = QUERIES["doc_chunk"](spark, SF_DIR)
+    assert df.count() > 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("split(") == 1, plan
+
+
 def test_pq_indexed_equals_adhoc(spark):
     """The persisted-index query path must return EXACTLY the ad-hoc
     sim_topk_pq rows — same seeds, same total order — proving the
