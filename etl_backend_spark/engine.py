@@ -116,15 +116,18 @@ class MarketplaceEngine:
 
     def admin_stats(self) -> DataFrame:
         """GET /api/admin/stats (reference src/routes/admin.ts:131-148): the
-        4 parallel COUNT plans as one conditional-agg pass + tiny cross
-        joins."""
-        cust = self.cat.table("customer").agg(F.count(F.lit(1)).alias("n_users"))
+        4 parallel COUNT plans as one conditional-agg pass over orders;
+        the user and category counts are the footer row counts of
+        customer and region (no scan)."""
         orders = aggregates.multi_count(
             self.cat.table("orders"),
             {"n_ads": None, "n_active_ads": F.col("o_orderstatus") == "O"},
         )
-        cats = self.cat.table("region").agg(F.count(F.lit(1)).alias("n_categories"))
-        return cust.crossJoin(orders).crossJoin(cats)
+        return orders.select(
+            F.lit(self.cat.num_rows("customer")).cast("long").alias("n_users"),
+            "n_ads", "n_active_ads",
+            F.lit(self.cat.num_rows("region")).cast("long").alias("n_categories"),
+        )
 
     def admin_users(self, page: int = 1, limit: int = 20) -> DataFrame:
         """GET /api/admin/users (reference src/routes/admin.ts:11-37): paged
@@ -142,8 +145,9 @@ class MarketplaceEngine:
     def login(self, cust_key: int, password: str, secret: str = "engine-secret") -> DataFrame:
         """POST /api/auth/login (reference src/routes/auth.ts:67-105): point
         lookup → credential verify (pandas UDF) → token sign → password
-        column projected out."""
-        c = self.cat.table("customer").filter(F.col("c_custkey") == cust_key).limit(1)
+        column projected out. ``c_custkey`` is the key, so the lookup needs
+        no limit (one would put an exchange ahead of the UDFs)."""
+        c = self.cat.table("customer").filter(F.col("c_custkey") == cust_key)
         salt = F.sha2(F.col("c_name"), 256).substr(1, 16)
         stored = c.withColumn(
             "password_hash",

@@ -31,11 +31,19 @@ A DV lives in the entry it deletes from, so it is committed, restored,
 cloned and vacuumed with that entry. Every commit is a new manifest +
 atomic pointer swap; old manifests remain readable (time travel) until
 vacuumed.
+
+Commits take their entries from the files they wrote: row counts and
+min/max from the parquet footers (``_STATS_RULE``), bloom bits from a
+driver-side read of the bloom column (one Spark job above
+``BLOOM_DRIVER_ROWS`` rows) and an upsert's keys from its own files. So
+an append is 1 Spark job (the write), an upsert 2 (write, mark), a delete
+1 (mark) and a compaction 1 (one write for every bin).
 """
 
 from __future__ import annotations
 
 import base64
+import functools
 import hashlib
 import json
 import os
@@ -43,11 +51,35 @@ import shutil
 import time
 import uuid
 
-from urllib.parse import unquote, urlparse
-
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    BooleanType, ByteType, DoubleType, FloatType, IntegerType, LongType,
+    ShortType, StringType, StructType,
+)
+
+_INT_TYPES = (ByteType, ShortType, IntegerType, LongType)
+
+#: How a stats column's per-file [min, max] is recorded, by Spark type:
+#: "footer" takes the parquet footer's min/max, merged over row groups;
+#: "open" records [None, None], since parquet's min/max leave NaN out
+#: while Spark orders NaN above every value, so a footer bound could prune
+#: a NaN row that a range filter matches. A type not listed raises.
+_STATS_RULE = {**{t: "footer" for t in (*_INT_TYPES, StringType, BooleanType)},
+               FloatType: "open", DoubleType: "open"}
+
+#: Batch size above which a commit's bloom bits come from one Spark job
+#: instead of a driver-side read. Measured warm on a 4-core local[4]
+#: session with every value distinct: the driver costs ~7 us per value (4
+#: md5s), the job ~0.5 s + ~1 us per row; 10k rows took 107 ms against
+#: 499 for the job, 50k 428 against 552, 150k 1164 against 735. In the
+#: api_rw benchmark the messages ``create`` (100,000 sf0.1 events) takes
+#: the job, and ``send_messages``' appends (a few rows) and the messages
+#: compaction bins (~10,000 rows) take the driver read, as does the
+#: 15,000-row orders table of ``etl_bloom_build`` at sf0.01.
+BLOOM_DRIVER_ROWS = 50_000
 
 
 def _bloom_pos(col: str, i: int, m: int):
@@ -64,6 +96,15 @@ def bloom_positions(value, k: int, m: int) -> list[int]:
         int(hashlib.md5(f"{i}:{value}".encode()).hexdigest()[:8], 16) % m
         for i in range(k)
     ]
+
+
+def _bitmap(positions, n_bits: int) -> bytes:
+    """A bitmap of ``n_bits`` bits with bit ``p % 8`` of byte ``p // 8``
+    set for each position p (the bloom and DV bit order)."""
+    bits = bytearray(n_bits // 8)
+    for p in positions:
+        bits[p // 8] |= 1 << (p % 8)
+    return bytes(bits)
 
 
 class CommitConflict(RuntimeError):
@@ -203,55 +244,49 @@ class ManifestTable:
             os.close(fd)  # releases the flock; the lock file persists
 
     def _write_files(self, df: DataFrame) -> list[dict]:
-        """Write df as data files and return manifest entries with stats.
+        """Write df as one batch of data files and return their manifest
+        entries, sorted by absolute path; 0-row part files get none.
 
-        Stats come from ONE Spark job over the whole batch directory grouped
-        by ``_metadata.file_path`` — not a per-file read/agg/collect loop,
-        which at scale (thousands of files per commit) is a driver-side
-        bottleneck of N sequential jobs."""
-        batch = f"b-{uuid.uuid4().hex}"
-        out = os.path.join(self.data_dir, batch)
+        The only Spark job is the write (and ``_bloom_bits_job`` above
+        ``BLOOM_DRIVER_ROWS`` rows). ValueError before the write for a
+        stats column of a type ``_STATS_RULE`` does not list (booleans are
+        listed; dates, timestamps and decimals are not) or a bloom column
+        that is not an integer or a string; and after it for a footer
+        with no min/max for a stats column that holds values — parquet-mr
+        omits them for a string chunk whose min and max together exceed
+        4 KB — in which case the batch directory is removed first."""
+        rules = self._stats_rules(df.schema)
+        out = os.path.abspath(
+            os.path.join(self.data_dir, f"b-{uuid.uuid4().hex}"))
         df.write.mode("errorifexists").parquet(out)
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in self.stats_cols:
-            aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-        if self.bloom_col:
-            # bloom positions ride the SAME stats job: md5-derived (so the
-            # probe side can recompute them in pure Python — no Spark round
-            # trip per lookup), one collect_set per probe index, each
-            # bounded by min(rows, BLOOM_BITS) ints per file
-            for i in range(self.BLOOM_K):
-                aggs.append(
-                    F.collect_set(
-                        _bloom_pos(self.bloom_col, i, self.BLOOM_BITS)
-                    ).alias(f"__bloom_{i}")
-                )
-        rows = (
-            # explicit schema: an EMPTY df writes a directory with no part
-            # files, where schema inference (plain read.parquet) would fail
-            self.spark.read.schema(df.schema).parquet(out)
-            .groupBy(F.col("_metadata.file_path").alias("__path"))
-            .agg(*aggs)
-            .collect()
-        )
+        try:
+            return self._batch_entries(out, rules, df.schema)
+        except Exception:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
+
+    def _batch_entries(self, out: str, rules: dict[str, str],
+                       schema: StructType) -> list[dict]:
+        """The manifest entries of batch directory ``out``: rows and
+        [min, max] per stats column from each part file's footer, and the
+        bloom bits of each."""
         entries = []
-        for row in rows:
-            r = row.asDict()
-            entries.append({
-                # unquote: _metadata.file_path is a URI, so spaces/% in the
-                # table root arrive percent-encoded
-                "path": unquote(urlparse(r["__path"]).path),
-                "rows": r["__n"],
-                "stats": {
-                    c: [r[f"min_{c}"], r[f"max_{c}"]] for c in self.stats_cols
-                },
-            })
-            if self.bloom_col:
-                bits = bytearray(self.BLOOM_BITS // 8)
-                for i in range(self.BLOOM_K):
-                    for pos in r[f"__bloom_{i}"]:
-                        bits[pos // 8] |= 1 << (pos % 8)
-                entries[-1]["bloom"] = {
+        for name in sorted(os.listdir(out)):
+            if not name.endswith(".parquet"):
+                continue
+            path = os.path.join(out, name)
+            md = pq.ParquetFile(path).metadata
+            if md.num_rows:
+                entries.append({"path": path, "rows": md.num_rows,
+                                "stats": self._footer_stats(md, rules)})
+        if self.bloom_col and entries:
+            if sum(e["rows"] for e in entries) > BLOOM_DRIVER_ROWS:
+                bits = self._bloom_bits_job(out, schema)
+            else:
+                bits = {os.path.basename(e["path"]): self._bloom_bits(e["path"])
+                        for e in entries}
+            for e in entries:
+                e["bloom"] = {
                     "col": self.bloom_col,
                     # k is recorded per entry so a reader probes with the
                     # geometry the file was WRITTEN with (m is recovered
@@ -260,9 +295,82 @@ class ManifestTable:
                     # existing entries are probed — a mod-wrong-m miss
                     # would silently prune files that DO contain the value
                     "k": self.BLOOM_K,
-                    "bits": base64.b64encode(bytes(bits)).decode(),
+                    "bits": base64.b64encode(
+                        bits[os.path.basename(e["path"])]).decode(),
                 }
-        return sorted(entries, key=lambda e: e["path"])
+        return entries
+
+    def _stats_rules(self, schema: StructType) -> dict[str, str]:
+        """{stats column: its ``_STATS_RULE`` entry} for a batch of
+        ``schema``. Raises for a stats column of a type the rule does not
+        list, and for a bloom column that is not an integer or a string:
+        the driver's bloom bits hash ``str(value)``, which equals Spark's
+        cast to string only for those."""
+        types = {f.name: f.dataType for f in schema.fields}
+        rules = {c: _STATS_RULE.get(type(types.get(c))) for c in self.stats_cols}
+        for c, rule in rules.items():
+            if rule is None:
+                raise ValueError(
+                    f"stats column {c!r} has type {types.get(c)}; manifest "
+                    "stats cover integer, string, boolean, float and double "
+                    "columns")
+        if self.bloom_col and not isinstance(types.get(self.bloom_col),
+                                             (*_INT_TYPES, StringType)):
+            raise ValueError(
+                f"bloom column {self.bloom_col!r} has type "
+                f"{types.get(self.bloom_col)}; blooms cover integer and "
+                "string columns")
+        return rules
+
+    @staticmethod
+    def _footer_stats(md, rules: dict[str, str]) -> dict:
+        """{column: [min, max]} for the stats columns, from one file's
+        footer ``md``, each recorded as its rule in ``rules`` says."""
+        index = {md.schema.column(j).path: j for j in range(md.num_columns)}
+        stats = {}
+        for c, rule in rules.items():
+            lo = hi = None
+            for r in range(md.num_row_groups if rule == "footer" else 0):
+                rg = md.row_group(r)
+                if not rg.num_rows:
+                    continue
+                s = rg.column(index[c]).statistics
+                if s is None or not s.has_min_max:
+                    if s is not None and s.null_count == rg.num_rows:
+                        continue  # all NULL in this row group
+                    raise ValueError(
+                        f"parquet footer has no min/max for stats column "
+                        f"{c!r} (row group {r})")
+                lo = s.min if lo is None else min(lo, s.min)
+                hi = s.max if hi is None else max(hi, s.max)
+            stats[c] = [lo, hi]
+        return stats
+
+    def _bloom_bits(self, path: str) -> bytes:
+        """One file's bloom bits, on the driver: the positions
+        ``bloom_positions`` gives each distinct non-NULL value of the
+        bloom column."""
+        col = pq.ParquetFile(path).read(columns=[self.bloom_col]).column(0)
+        return _bitmap(
+            (pos for v in pc.unique(col.drop_null()).to_pylist()
+             for pos in bloom_positions(v, self.BLOOM_K, self.BLOOM_BITS)),
+            self.BLOOM_BITS)
+
+    def _bloom_bits_job(self, out: str, schema: StructType) -> dict[str, bytes]:
+        """Every part file's bloom bits under batch directory ``out``, keyed
+        by file name, from ONE Spark job: one collect_set of
+        ``_bloom_pos`` per probe index, grouped by part file."""
+        rows = (
+            self.spark.read.schema(schema).parquet(out)
+            .groupBy(F.col("_metadata.file_name").alias("__name"))
+            .agg(*[F.collect_set(_bloom_pos(self.bloom_col, i, self.BLOOM_BITS))
+                   .alias(f"__bloom_{i}") for i in range(self.BLOOM_K)])
+            .collect()
+        )
+        return {r["__name"]: _bitmap((pos for i in range(self.BLOOM_K)
+                                      for pos in r[f"__bloom_{i}"]),
+                                     self.BLOOM_BITS)
+                for r in rows}
 
     def _discard_batches(self, entries: list[dict]) -> None:
         """Remove the batch directories behind freshly-written entries whose
@@ -570,18 +678,26 @@ class ManifestTable:
 
     def upsert(self, incoming: DataFrame, key: str) -> dict:
         """Merge-on-read MERGE = DELETE + INSERT in ONE commit: rows in
-        ``incoming`` replace same-key rows; new keys append. The live
-        same-key rows are marked in their entries' deletion vectors
-        (``_mark`` over the files whose stats for ``key`` meet incoming's
-        key range) and incoming lands as new files; no existing file is
-        rewritten. ``key`` must be one of the table's stats columns.
-        Returns {'rewritten': 0, 'carried': <entries>, 'marked': <rows
-        replaced>}.
+        ``incoming`` replace same-key rows; new keys append. ``incoming``
+        is written first, so it is evaluated exactly once (a
+        nondeterministic source marks the keys it wrote, not a second
+        draw); the live same-key rows are then marked in their entries'
+        deletion vectors (``_mark`` over the files whose stats for ``key``
+        meet the written key range). No existing file is rewritten.
+        ``key`` must be one of the table's stats columns. Returns
+        {'rewritten': 0, 'carried': <entries>, 'marked': <rows replaced>}.
 
-        ``incoming`` must be unique on ``key`` — duplicate source keys have
-        no defined MERGE semantics (Delta raises too), and silently landing
-        both copies would corrupt the table's key uniqueness. Checked in
-        the same job as the key-range scan; raises ValueError.
+        The written keys must be unique and non-NULL — duplicate source
+        keys have no defined MERGE semantics (Delta raises too), and
+        landing both copies would corrupt the table's key uniqueness;
+        otherwise the batch is discarded and ValueError raised. The keys
+        are read back from the written files on the driver and the mark
+        selects them with ``isin``: 2 Spark jobs at every size. Measured
+        warm against a 150k-row table, ``isin`` beat a semi-join against
+        the written files (which adds a broadcast job) at 1 key (490-563
+        against 539-610 ms) and at 51 (410-472 against 488-528), the most
+        any benchmark or registered query upserts; it lost at 1,000 keys
+        (829-874 against 474-505), as it builds one literal per key.
 
         Incoming rides the same ``_align_to_live`` contract as append:
         extra columns are rejected loudly (no silent drift invisible on
@@ -589,27 +705,29 @@ class ManifestTable:
         raises at write time."""
         parent, manifest = self._snapshot()
         incoming, _ = self._align_to_live(incoming, manifest, evolve=False)
-        lo, hi, n, n_keys = incoming.agg(
-            F.min(key), F.max(key), F.count(F.lit(1)), F.count_distinct(key)
-        ).collect()[0]
-        if n != n_keys:
-            # count_distinct ignores NULLs, so this also rejects NULL keys —
-            # a NULL merge key matches nothing and has no UPSERT meaning
-            raise ValueError(
-                f"upsert incoming has duplicate or NULL '{key}' rows "
-                f"({n} rows, {n_keys} distinct non-null keys); MERGE "
-                "requires a unique non-null source key — dedup incoming first"
-            )
-        entries = manifest["entries"]
-        # lo is None only for an empty incoming: nothing to replace
-        touched = [] if lo is None else [
-            e for e in entries if not self._disjoint(e, key, lo, hi)
-        ]
-        entries, marked = self._mark(
-            manifest, touched,
-            lambda df: df.join(incoming.select(key), on=key, how="left_semi"),
-        )
         new = self._write_files(incoming)
+        try:
+            keys = [k for e in new for k in pq.ParquetFile(e["path"])
+                    .read(columns=[key]).column(0).to_pylist()]
+            distinct = set(keys) - {None}
+            if len(keys) != len(distinct):
+                # a NULL merge key matches nothing and has no UPSERT meaning
+                raise ValueError(
+                    f"upsert incoming has duplicate or NULL '{key}' rows "
+                    f"({len(keys)} rows, {len(distinct)} distinct non-null "
+                    "keys); MERGE requires a unique non-null source key — "
+                    "dedup incoming first"
+                )
+            # no keys only for an empty incoming: nothing to replace
+            touched = [] if not keys else [
+                e for e in manifest["entries"]
+                if not self._disjoint(e, key, min(keys), max(keys))
+            ]
+            entries, marked = self._mark(
+                manifest, touched, lambda df: df.filter(F.col(key).isin(keys)))
+        except Exception:
+            self._discard_batches(new)
+            raise
         self._commit_or_discard(entries + new, new, parent=parent)
         return {"rewritten": 0, "carried": len(entries), "marked": marked}
 
@@ -666,10 +784,17 @@ class ManifestTable:
         """The one rewrite: the small files (below ``target_rows``) and
         every entry with a deletion vector are greedily binned into groups
         totalling ~target_rows, each group read through ``_read`` (its
-        DV'd rows drop out) and written as one file, so no DV outlives a
-        compaction. Other files carry over untouched; with nothing to
-        rewrite there is no commit. Returns {'rewritten', 'carried',
-        'bins'}."""
+        DV'd rows drop out) and written as one file — all bins in one
+        write job — so no DV outlives a compaction. Other files carry over
+        untouched; with nothing to rewrite there is no commit. Returns
+        {'rewritten', 'carried', 'bins'}.
+
+        The write sets the session's ``spark.sql.unionOutputPartitioning``
+        to false until it ends, so compact must not run alongside other
+        planning on the same SparkSession (a union planned meanwhile
+        would concatenate its partitions; its rows stay the same). No
+        caller does: perfbench runs its requests one at a time, and the
+        registered queries that compact plan nothing else meanwhile."""
         parent, manifest = self._snapshot()
         todo, carried = [], []
         for e in manifest["entries"]:
@@ -686,9 +811,24 @@ class ManifestTable:
             cur.append(e)
             cur_rows += e["rows"]
         bins.append(cur)
-        new = []
-        for group in bins:
-            new += self._write_files(self._read(manifest, group).coalesce(1))
+        # one write job for every bin: each coalesced bin is one partition
+        # of the union, so it lands as one file. Spark 4.1 zips the
+        # partitions of union children that share a partitioning (every
+        # bin is a single partition: all bins in one file), so the write
+        # plans with the concatenating union
+        union = functools.reduce(
+            DataFrame.union,
+            [self._read(manifest, group).coalesce(1) for group in bins])
+        conf, key = self.spark.conf, "spark.sql.unionOutputPartitioning"
+        zip_unions = conf.get(key, None)
+        conf.set(key, "false")
+        try:
+            new = self._write_files(union)
+        finally:
+            if zip_unions is None:
+                conf.unset(key)
+            else:
+                conf.set(key, zip_unions)
         self._commit_or_discard(carried + new, new, parent=parent)
         return {"rewritten": len(todo), "carried": len(carried),
                 "bins": len(bins)}

@@ -623,6 +623,14 @@ def events_with_date(spark: SparkSession, sf_dir: str | None = None) -> DataFram
 class Catalog:
     """Bound catalog: a SparkSession + a scale-factor directory.
 
+    ``table(name)`` resolves each relation (file listing, declared schema,
+    the events layout) once per catalog and memoizes it on
+    ``cache.fingerprint(sf_dir, (name,))``, the source files' names, sizes
+    and mtimes, so a rewritten source is read again. The call that resolves
+    a relation returns it; every later call returns a projection of it
+    with new column ids, so a plan that uses one table twice (a self-join)
+    never gets the same DataFrame on both sides.
+
     ``tbl('nation')`` returns the dimension with a broadcast hint applied so
     downstream equi-joins plan as broadcast hash joins without per-call-site
     hints.
@@ -631,9 +639,20 @@ class Catalog:
     def __init__(self, spark: SparkSession, sf_dir: str | None = None):
         self.spark = spark
         self.sf_dir = sf_dir or DEFAULT_SF_DIR
+        self._tables: dict[str, tuple[str, DataFrame]] = {}
 
     def table(self, name: str) -> DataFrame:
-        return load_table(self.spark, name, self.sf_dir)
+        fp = cache.fingerprint(self.sf_dir, (name,))
+        hit = self._tables.get(name)
+        if hit is None or hit[0] != fp:
+            df = load_table(self.spark, name, self.sf_dir)
+            self._tables[name] = (fp, df)
+            return df
+        return hit[1].toDF(*hit[1].columns)  # new column ids, same names
+
+    def num_rows(self, name: str) -> int:
+        """Row count of a table from its parquet footers, no Spark job."""
+        return parquet_num_rows(self.sf_dir, name)
 
     def tbl(self, name: str) -> DataFrame:
         df = self.table(name)

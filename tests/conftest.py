@@ -30,3 +30,18 @@ def cat(spark):
 def spark_session(spark):
     """Alias for hypothesis tests (function-scoped health check suppressed)."""
     return spark
+
+
+def spark_jobs(spark, fn):
+    """(fn(), the number of Spark jobs fn ran): fn runs under its own job
+    group, and the status tracker lists the group's jobs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -64,6 +64,8 @@ def test_admin_stats_counts(eng, cat):
     assert row.n_ads == cat.table("orders").count()
     assert row.n_active_ads == cat.table("orders").filter(F.col("o_orderstatus") == "O").count()
     assert row.n_categories == cat.table("region").count()
+    assert dict(eng.admin_stats().dtypes) == dict.fromkeys(
+        ["n_users", "n_ads", "n_active_ads", "n_categories"], "bigint")
 
 
 def test_login_roundtrip_and_reject(eng):
@@ -72,6 +74,54 @@ def test_login_roundtrip_and_reject(eng):
     assert "password_hash" not in ok[0].asDict()
     bad = eng.login(1, "wrong").collect()
     assert bad == []
+
+
+def test_login_runs_one_spark_job(eng):
+    """The key lookup carries no limit, so no exchange splits the scan
+    from the credential UDFs: one job, one stage."""
+    from tests.conftest import spark_jobs
+
+    eng.login(2, "pw-2").collect()  # warm
+    rows, jobs = spark_jobs(eng.cat.spark, lambda: eng.login(2, "pw-2").collect())
+    assert [r.c_custkey for r in rows] == [2]
+    assert jobs == 1
+
+
+def test_catalog_resolves_each_relation_once(spark, tmp_path):
+    """Catalog.table memoizes the resolved relation on the source's
+    content fingerprint: a repeat call reuses it, a rewritten source is
+    read again, and every call hands out its own DataFrame, so a
+    self-join resolves each side's columns to its own side."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_backend_spark.sources.catalog import Catalog
+
+    def write_nation(rows):
+        pq.write_table(pa.table({
+            "n_nationkey": pa.array([r[0] for r in rows], pa.int32()),
+            "n_name": [r[1] for r in rows],
+            "n_regionkey": pa.array([r[2] for r in rows], pa.int32()),
+        }), str(tmp_path / "nation.parquet"))
+
+    write_nation([(0, "A", 1), (1, "B", 0)])
+    cat = Catalog(spark, str(tmp_path))
+    a, b = cat.table("nation"), cat.table("nation")
+    assert a is not b
+    resolved = cat._tables["nation"]
+    assert cat.table("nation").count() == 2
+    assert cat._tables["nation"] is resolved  # unchanged source: no re-read
+    # n_regionkey -> n_nationkey: each row's region is the other nation
+    pairs = a.join(b, a["n_regionkey"] == b["n_nationkey"]).select(
+        a["n_name"].alias("x"), b["n_name"].alias("y")).collect()
+    assert sorted((r.x, r.y) for r in pairs) == [("A", "B"), ("B", "A")]
+
+    write_nation([(0, "A", 1), (1, "B", 0), (2, "C", 2)])
+    os.utime(tmp_path / "nation.parquet", ns=(1, 1))  # mtime moves too
+    assert cat.table("nation").count() == 3
+    assert cat.num_rows("nation") == 3
 
 
 def test_find_many_where_grammar(spark):

@@ -449,6 +449,8 @@ def test_commit_conflict_discards_loser_batch(mtable, spark):
 def test_upsert_rejects_duplicate_and_null_keys(spark, tmp_path):
     """MERGE requires a unique non-null source key (Delta raises on
     multiple source matches); silent acceptance would land both copies."""
+    import os
+
     df = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k LONG, v DOUBLE")
     t = ManifestTable(spark, str(tmp_path), "dup", ["k"])
     t.create(df)
@@ -456,9 +458,11 @@ def test_upsert_rejects_duplicate_and_null_keys(spark, tmp_path):
     with pytest.raises(ValueError, match="duplicate or NULL"):
         t.upsert(dup, "k")
     withnull = spark.createDataFrame([(None, 9.0), (3, 8.0)], "k LONG, v DOUBLE")
+    batches = set(os.listdir(t.data_dir))
     with pytest.raises(ValueError, match="duplicate or NULL"):
         t.upsert(withnull, "k")
     assert t.read().count() == 2  # table unchanged by the rejected merges
+    assert set(os.listdir(t.data_dir)) == batches  # written batch discarded
 
 
 def test_crash_after_data_write_before_commit_replays_exactly_once(
@@ -1165,6 +1169,230 @@ def test_shallow_clone_is_zero_copy_and_isolated(spark, tmp_path):
     n2 = t2.read().count()
     t2.append_once(o.filter(F.col("o_orderkey") <= 10), txn=tok)
     assert t2.read().count() == n2  # replay within the clone is a no-op
+
+
+# ------------------------------------------------- commit-path entries
+
+def _read_back_entries(t, entries, schema):
+    """Manifest entries for the batch behind ``entries`` as one Spark
+    read-back job computes them (rows, min/max per stats column, bloom
+    bits from ``_bloom_pos``): the reference for the footer path."""
+    import os
+
+    from etl_backend_spark.etl.manifest import _bloom_pos
+
+    out = os.path.dirname(entries[0]["path"])
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for c in t.stats_cols:
+        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+    if t.bloom_col:
+        aggs += [F.collect_set(_bloom_pos(t.bloom_col, i, t.BLOOM_BITS))
+                 .alias(f"__bloom_{i}") for i in range(t.BLOOM_K)]
+    got = []
+    for r in (t.spark.read.schema(schema).parquet(out)
+              .groupBy(F.col("_metadata.file_name").alias("__name"))
+              .agg(*aggs).collect()):
+        e = {"path": os.path.join(out, r["__name"]), "rows": r["__n"],
+             "stats": {c: [r[f"min_{c}"], r[f"max_{c}"]] for c in t.stats_cols}}
+        if t.bloom_col:
+            bits = bytearray(t.BLOOM_BITS // 8)
+            for i in range(t.BLOOM_K):
+                for p in r[f"__bloom_{i}"]:
+                    bits[p // 8] |= 1 << (p % 8)
+            e["bloom"] = {"col": t.bloom_col, "k": t.BLOOM_K,
+                          "bits": base64.b64encode(bytes(bits)).decode()}
+        got.append(e)
+    return sorted(got, key=lambda e: e["path"])
+
+
+def test_footer_entries_match_read_back(spark, tmp_path, monkeypatch):
+    """The commit path's entries (footer stats, driver-side bloom bits)
+    equal the read-back job's on a multi-file integer table with a bloom,
+    byte for byte, and the above-bound bloom job gives the same bits."""
+    import etl_backend_spark.etl.manifest as M
+
+    o = Catalog(spark, SF_DIR).table("orders").repartition(4)
+    t = ManifestTable(spark, str(tmp_path), "o",
+                      ["o_orderkey", "o_custkey", "o_orderstatus"],
+                      bloom_col="o_orderkey")
+    entries = t._write_files(o)
+    assert len(entries) == 4
+    assert entries == _read_back_entries(t, entries, o.schema)
+    assert all(e["path"].startswith(str(tmp_path)) for e in entries)
+    monkeypatch.setattr(M, "BLOOM_DRIVER_ROWS", 0)
+    job = t._write_files(o)
+    assert [e["bloom"] for e in job] == [e["bloom"] for e in entries]
+    assert job == _read_back_entries(t, job, o.schema)
+
+
+def test_footer_entries_edge_batches(spark, tmp_path):
+    """Footer entries on the edge batches: empty part files get no entry
+    (as the read-back never sees them), an all-NULL stats column keeps
+    [None, None], and string and boolean columns take their footer
+    min/max — each equal to the read-back job's entries."""
+    import os
+
+    t = ManifestTable(spark, str(tmp_path), "t", ["k", "s", "n", "b"],
+                      bloom_col="s")
+    # Spark writes partition 0 even when it is empty: here it is (ids 0, 1)
+    df = spark.range(0, 8, 1, 4).filter("id >= 2").selectExpr(
+        "id AS k",
+        "CASE id WHEN 2 THEN 'pear' WHEN 3 THEN 'apple' WHEN 6 THEN 'fig' "
+        "WHEN 7 THEN 'fig' END AS s",
+        "BIGINT(NULL) AS n", "id % 3 = 0 AS b")
+    entries = t._write_files(df)
+    out = os.path.dirname(entries[0]["path"])
+    assert len([f for f in os.listdir(out) if f.endswith(".parquet")]) == 4
+    assert entries == _read_back_entries(t, entries, df.schema)
+    assert [e["rows"] for e in entries] == [2, 2, 2]
+    assert [e["stats"]["s"] for e in entries] == [
+        ["apple", "pear"], [None, None], ["fig", "fig"]]
+    assert all(e["stats"]["n"] == [None, None] for e in entries)
+    assert [e["stats"]["b"] for e in entries] == [
+        [False, True], [False, False], [False, True]]
+    assert t._write_files(df.limit(0)) == []  # one empty file, no entry
+
+
+def test_float_stats_are_open_bounds(spark, tmp_path):
+    """Float stats never prune: parquet footers leave NaN out of min/max
+    while Spark orders NaN above every value, so a range filter matches a
+    NaN row a footer bound would skip. The rule: float and double stats
+    columns record [None, None]; read_pruned keeps the NaN row."""
+    t = ManifestTable(spark, str(tmp_path), "f", ["k", "x"])
+    df = spark.createDataFrame(
+        [(1, 1.5), (2, float("nan")), (3, -2.0)], "k LONG, x DOUBLE").coalesce(1)
+    t.create(df)
+    (entry,) = t.files()
+    assert entry["stats"] == {"k": [1, 3], "x": [None, None]}
+    read_back = _read_back_entries(t, t.files(), df.schema)[0]["stats"]["x"]
+    assert read_back[0] == -2.0 and read_back[1] != read_back[1]  # max NaN
+    got, skipped = t.read_pruned("x", lo=1e9)
+    assert skipped == 0
+    assert [r.k for r in got.filter(F.col("x") >= 1e9).collect()] == [2]
+
+
+def test_footer_path_raises_on_unsupported_stats(spark, tmp_path):
+    """A footer without statistics for a stats column that holds values
+    raises instead of recording open bounds; stats and bloom columns of
+    a type the rules do not cover raise before anything is written."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = ManifestTable(spark, str(tmp_path), "t", ["k"])
+    path = str(tmp_path / "nostats.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), path,
+                   write_statistics=False)
+    with pytest.raises(ValueError, match="no min/max"):
+        t._footer_stats(pq.ParquetFile(path).metadata, {"k": "footer"})
+
+    dates = spark.createDataFrame([(1,)], "k INT").select(
+        F.current_date().alias("d"), "k")
+    os.makedirs(t.data_dir)
+    with pytest.raises(ValueError, match="stats column 'd'"):
+        ManifestTable(spark, str(tmp_path), "t", ["d"])._write_files(dates)
+    with pytest.raises(ValueError, match="bloom column 'x'"):
+        ManifestTable(spark, str(tmp_path), "t", ["k"], bloom_col="x")._write_files(
+            spark.createDataFrame([(1, 1.0)], "k LONG, x DOUBLE"))
+    assert os.listdir(t.data_dir) == []
+
+
+def test_long_string_stats_raise_and_leave_no_batch(spark, tmp_path):
+    """parquet-mr leaves min/max out of a string column chunk whose min
+    and max together exceed 4 KB, so a stats column holding such a value
+    raises after the write; the written batch directory is removed and
+    the table is unchanged, for append and for upsert."""
+    import os
+
+    t = ManifestTable(spark, str(tmp_path), "s", ["k", "s"])
+    t.create(spark.createDataFrame([(1, "a")], "k LONG, s STRING"))
+    batches = set(os.listdir(t.data_dir))
+    long = spark.createDataFrame([(2, "x" * 5000)], "k LONG, s STRING")
+    for write in (t.append, lambda df: t.upsert(df, "k")):
+        with pytest.raises(ValueError, match="no min/max for stats column 's'"):
+            write(long)
+        assert set(os.listdir(t.data_dir)) == batches
+    assert t.read().collect() == [(1, "a")]
+    t.append(spark.createDataFrame([(3, "x" * 1000)], "k LONG, s STRING"))
+    assert t.files()[-1]["stats"]["s"] == ["x" * 1000] * 2
+
+
+def test_upsert_evaluates_incoming_once(spark, tmp_path):
+    """upsert writes ``incoming`` first and marks the keys it wrote: a
+    nondeterministic source (each row draws one of ten live keys) leaves
+    the table's keys unique, and the rows its DVs mark are exactly the
+    written keys. Evaluated once for the key range, again for the mark
+    and again for the write, three draws disagree."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    t = ManifestTable(spark, str(tmp_path), "nd", ["k"])
+    t.create(spark.range(40).selectExpr("id AS k", "DOUBLE(0) AS v").repartition(2))
+    draw = F.udf(lambda i: 10 * i + random.randrange(10), "long").asNondeterministic()
+    before = {e["path"] for e in t.files()}
+    res = t.upsert(spark.range(4).select(draw("id").alias("k"),
+                                         F.lit(1.0).alias("v")), "k")
+    rows = t.read().collect()
+    assert sorted(r.k for r in rows) == list(range(40))
+    written = {r.k for r in rows if r.v == 1.0}
+    assert len(written) == res["marked"] == 4
+    marked = set()
+    for e in t.files():
+        if "dv" in e:
+            assert e["path"] in before
+            bits = base64.b64decode(e["dv"])
+            keys = pq.read_table(e["path"], columns=["k"]).column(0).to_pylist()
+            marked |= {k for i, k in enumerate(keys) if bits[i // 8] >> (i % 8) & 1}
+    assert marked == written
+
+
+def _entry_facts(t):
+    """A table's live entries without their paths: rows, stats, bloom and
+    DV presence, in path order."""
+    return [(e["rows"], e["stats"], e.get("bloom"), "dv" in e) for e in t.files()]
+
+
+def test_commits_run_few_spark_jobs(spark, tmp_path, monkeypatch):
+    """Job-count guard on the commit path: append_once runs 1 job (the
+    write), a 1-row upsert 2 (write and mark), delete_dv 1 (the mark) and
+    a 3-bin compact 1 (one write for every bin). With the bloom row
+    bound forced to 0, the bloom job gives the same table."""
+    import etl_backend_spark.etl.manifest as M
+    from tests.conftest import spark_jobs
+
+    def run(name):
+        t = ManifestTable(spark, str(tmp_path), name, ["k"], bloom_col="k")
+        t.create(spark.range(0, 60, 1, 6).selectExpr("id AS k", "DOUBLE(0) AS v"))
+        counts = [spark_jobs(spark, fn)[1] for fn in (
+            lambda: t.append_once(spark.createDataFrame([(100, 1.0)], "k LONG, v DOUBLE"), "a"),
+            lambda: t.upsert(spark.createDataFrame([(7, 2.0)], "k LONG, v DOUBLE"), "k"),
+            lambda: t.delete_dv(F.col("k") == 8),
+        )]
+        before = {e["path"] for e in t.files()}
+        res, n = spark_jobs(spark, lambda: t.compact(target_rows=25))
+        assert res["bins"] == 3
+        assert len({e["path"] for e in t.files()} - before) == 3
+        return t, counts + [n]
+
+    fast, jobs = run("fast")
+    assert jobs[0] == 1 and jobs[1] <= 2 and jobs[2] == 1 and jobs[3] == 1, jobs
+    monkeypatch.setattr(M, "BLOOM_DRIVER_ROWS", 0)
+    slow, _ = run("slow")
+    assert _entry_facts(slow) == _entry_facts(fast)
+    assert sorted(slow.read().collect()) == sorted(fast.read().collect())
+
+
+def test_append_once_tokens_grow_with_commits(spark, tmp_path):
+    """Pins today's growth: the live manifest carries every ancestor
+    append_once token, so after N commits it holds N (one per batch,
+    where Delta keeps one version per writer)."""
+    t = ManifestTable(spark, str(tmp_path), "s", ["k"])
+    t.create(spark.createDataFrame([(0,)], "k LONG"))
+    for n in range(1, 6):
+        t.append_once(spark.createDataFrame([(n,)], "k LONG"), f"batch-{n}")
+        assert len(t._live_manifest()["txns"]) == n
 
 
 # ------------------------------------------------------------ model check
