@@ -76,54 +76,26 @@ def point_current(kind: str, d: str) -> None:
             shutil.rmtree(p, ignore_errors=True)
 
 
-# Write-side executed plans per artifact directory, keyed by realpath —
-# the CHECKPOINT_SOURCE_PLANS pattern applied to artifact writes
-# (late r11): decision-record queries (pagerank ranks, the semdedup
-# assignment records, ALS factors, LR weights) write their artifact and
-# then RETURN a scan of it, so the measured plan's FileScans see only
-# the KB-scale artifact while the write job scanned the real tables —
-# scripts/shuffle_audit.py resolves artifact scans through this map
-# (transitively: an artifact write may itself scan an earlier artifact)
-# to recover the true scanned-bytes denominator. INDEX builds (pq/ivf)
-# intentionally do NOT record: an indexed query's whole point is that
-# it reads the index, not the corpus, and its amp should say so.
-ARTIFACT_SOURCE_PLANS: dict[str, list[str]] = {}
-# Artifact dirs whose write-side scans CANNOT be attributed: producers
-# built over chained declared checkpoints (pagerank's 15-round loop)
-# release each round's CHECKPOINT_SOURCE_PLANS entry with its blocks —
-# memory over attribution, by design — so the recorded plan bottoms out
-# in unrecorded LogicalRDDs. The audit reports amp = None for queries
-# scanning these (the same honesty rule plain localCheckpoint leaves
-# get) instead of a nonsense ratio against the KB-scale artifact.
-ARTIFACT_UNATTRIBUTED: set[str] = set()
-
-
 def write_artifact(df: DataFrame, dirpath: str,
-                   attribute: bool = True,
                    partition_by: str | None = None,
                    extra_files: dict[str, str] | None = None) -> None:
-    """Write a per-query decision-record artifact and record the
-    write-side executed plan(s) for shuffle attribution (see
-    ARTIFACT_SOURCE_PLANS above).
-
-    The write STAGES into a process-private sibling dir and swaps into
-    place: a bare ``mode("overwrite")`` on the shared fingerprint-keyed
-    dir deletes a concurrent session's _temporary staging mid-write
-    (observed: two same-user Spark sessions racing on the qlr weights
-    dir — FileNotFoundException on _temporary/0). The swap is
-    move-old-away + rename-new-in with a bounded retry: a bare
-    rmtree+rename raised ENOTEMPTY for the LOSING racer (rename onto a
-    dir the winner had just re-created) and could delete the winner's
-    live artifact (r11 second review). Last successful rename wins; the
-    single-writer protocol still governs WHICH bits the oracle replays
-    (engine-before-oracle per session).
-
-    Recorded plans: the write-side executed plan PLUS the pre-checkpoint
-    source plans of any declared localCheckpoint leaves it bottoms out
-    in (CHECKPOINT_SOURCE_PLANS) — without the latter, a
-    checkpoint-built artifact like pagerank's rank vector records a
-    Scan ExistingRDD-only plan and the shuffle audit's transitive
-    resolution silently finds no table scans (r11 second review).
+    """Write a per-query decision-record artifact with the stage-and-swap
+    protocol: a bare ``mode("overwrite")`` on a shared fingerprint-keyed
+    dir deletes a concurrent same-user session's ``_temporary`` staging
+    mid-write (observed on the qlr weights dir, r11). Staging is
+    process-private; the swap is move-old-away + rename-new-in with a
+    bounded retry (a bare rmtree+rename raised ENOTEMPTY for the LOSING
+    racer and could delete the winner's live artifact). Last successful
+    rename wins; the single-writer protocol still governs WHICH bits the
+    oracle replays (engine-before-oracle per session). Moved-away dirs
+    are deleted ONLY after the new artifact renamed in; if all attempts
+    fail for a persistent (non-race) reason, the newest moved-away
+    artifact is restored before raising, so dirpath keeps serving the
+    previous good bits (r12 ADVICE); a restore-failed candidate is swept
+    only when some other candidate was restored — otherwise it stays on
+    disk as the last surviving copy (r13 second review). A write failure
+    cleans up its own stage dir instead of leaking an artifact-sized
+    orphan no later pid would ever match (r13 review).
 
     ``extra_files`` (r15): small sidecar files (name -> text content)
     staged INTO the artifact dir before the swap, so layout metadata
@@ -131,48 +103,6 @@ def write_artifact(df: DataFrame, dirpath: str,
     atomically with the data it describes — a post-swap sidecar write
     would leave a crash window where data and meta disagree. Use
     underscore-prefixed names so Spark's parquet reader ignores them."""
-    _staged_overwrite(df, dirpath, partition_by=partition_by,
-                      extra_files=extra_files)
-
-    real = os.path.realpath(dirpath)
-    if not attribute:
-        ARTIFACT_UNATTRIBUTED.add(real)
-        ARTIFACT_SOURCE_PLANS.pop(real, None)
-        return
-    plans = []
-    try:
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
-    except Exception:
-        pass
-    try:
-        from ..operators.windows import (CHECKPOINT_SOURCE_PLANS,
-                                         iter_logicalrdd_rdds)
-
-        for rdd in iter_logicalrdd_rdds(df):
-            plans.extend(CHECKPOINT_SOURCE_PLANS.get(rdd.id(), []))
-    except Exception:
-        pass
-    ARTIFACT_UNATTRIBUTED.discard(real)
-    ARTIFACT_SOURCE_PLANS[real] = plans
-
-
-def _staged_overwrite(df: DataFrame, dirpath: str,
-                      partition_by: str | None = None,
-                      extra_files: dict[str, str] | None = None) -> None:
-    """The stage-and-swap write protocol behind write_artifact: a bare
-    ``mode("overwrite")`` on a shared fingerprint-keyed dir deletes a
-    concurrent same-user session's ``_temporary`` staging mid-write
-    (observed on the qlr weights dir, r11). Staging is
-    process-private; the swap is move-old-away + rename-new-in with a
-    bounded retry. Moved-away dirs are deleted ONLY after the new
-    artifact renamed in; if all attempts fail for a persistent
-    (non-race) reason, the newest moved-away artifact is restored
-    before raising, so dirpath keeps serving the previous good bits
-    (r12 ADVICE); a restore-failed candidate is swept only when some
-    other candidate was restored — otherwise it stays on disk as the
-    last surviving copy (r13 second review). A write failure cleans up
-    its own stage dir instead of leaking an artifact-sized orphan no
-    later pid would ever match (r13 review)."""
     import shutil
     import uuid
 

@@ -162,4 +162,4 @@ class MarketplaceEngine:
         )
 
 
-__all__ = ["MarketplaceEngine", "PagedResult", "SearchParams", "filters", "joins"]
+__all__ = ["MarketplaceEngine", "PagedResult", "SearchParams"]

@@ -181,7 +181,7 @@ def minhash_sig_py(k: int = 3, n: int = MINHASH_N):
     MEMOIZED per (k, n) (functools.cache: it holds UDF identity, not
     data): builders that persist the signature DataFrame rely on Spark's
     cache manager matching the analyzed plan — a fresh UDF object per call
-    makes every invocation a distinct plan, so repeated builds (bench
+    makes every invocation a distinct plan, so repeated builds (query
     reruns) would each leak a new cache entry instead of reusing one."""
     import hashlib
     import re

@@ -104,16 +104,29 @@ def distributed_global_prefix_sum(df: DataFrame, order_cols: list[str],
     )
 
 
-def iter_logicalrdd_rdds(df: DataFrame):
-    """Yield each distinct LogicalRDD leaf's JVM RDD from ``df``'s
-    logical AND analyzed plans (the analyzed plan expands temp-view
-    indirection — graph_reachability registers its materialized edge
-    table as a view for the recursive-CTE SQL, which hides the leaf
-    from the unresolved plan). The single shared plan-walker for
-    ``release_plan_checkpoints`` and scripts/shuffle_audit.py — plan
-    walking touches Spark internals, so there must be exactly ONE copy
-    to fix on the next internals change. Swallows reflection errors
-    (yields what it saw before the mismatch)."""
+def release_plan_checkpoints(df: DataFrame) -> int:
+    """Best-effort release of localCheckpoint blocks reachable from ``df``'s
+    logical plan (the LogicalRDD leaves that
+    ``distributed_global_rank``/``distributed_global_prefix_sum`` create).
+    The walk covers the logical AND the analyzed plan: the analyzed plan
+    expands temp-view indirection (graph_reachability registers its
+    materialized edge table as a view for the recursive-CTE SQL, which
+    hides the leaf from the unresolved plan).
+
+    Lifetime contract: the helpers above MUST keep their checkpoint alive
+    until the returned DataFrame is consumed — the lineage is truncated, so
+    releasing early would fail the job, not silently drift. Once a caller
+    has collected/written the result, the blocks are dead weight.
+    ``scripts/check_oracle.py`` and perfbench release them here after each
+    query. Callers of ``__spark_entry__.py``'s ``queries()`` consume the
+    returned frames themselves, so those blocks live until Spark's
+    ContextCleaner drops them once the frames are garbage-collected;
+    ``queries()`` is not wrapped, because its keys and their order are
+    part of that contract.
+    Returns the number of RDDs unpersisted; swallows reflection errors
+    (plan-walking touches Spark internals — on any mismatch the worst case
+    is blocks living until GC)."""
+    seen: set[int] = set()
     try:
         qe = df._jdf.queryExecution()
         plans = [qe.logical()]
@@ -121,64 +134,18 @@ def iter_logicalrdd_rdds(df: DataFrame):
             plans.append(qe.analyzed())
         except Exception:
             pass
-        seen: set[int] = set()
         for plan in plans:
             leaves = plan.collectLeaves()
             for i in range(leaves.size()):
                 leaf = leaves.apply(i)
                 if leaf.getClass().getName().endswith(".LogicalRDD"):
                     rdd = leaf.rdd()
-                    if rdd.id() in seen:
-                        continue
-                    seen.add(rdd.id())
-                    yield rdd
+                    if rdd.id() not in seen:
+                        seen.add(rdd.id())
+                        rdd.unpersist(False)
     except Exception:
-        return
-
-
-def release_plan_checkpoints(df: DataFrame) -> int:
-    """Best-effort release of localCheckpoint blocks reachable from ``df``'s
-    logical plan (the LogicalRDD leaves that
-    ``distributed_global_rank``/``distributed_global_prefix_sum`` create).
-
-    Lifetime contract: the helpers above MUST keep their checkpoint alive
-    until the returned DataFrame is consumed — the lineage is truncated, so
-    releasing early would fail the job, not silently drift. Once a caller
-    has collected/written the result, the blocks are dead weight; loop
-    callers (bench, scaling sweeps) that skip this rely on the JVM
-    ContextCleaner, which only fires after GC and can lag a tight loop by
-    many iterations. Returns the number of RDDs unpersisted; swallows
-    reflection errors (plan-walking touches Spark internals — on any
-    mismatch the worst case is the old behavior, blocks living until GC).
-    Also drops the released checkpoint's CHECKPOINT_SOURCE_PLANS entry so
-    the diagnostic dict cannot grow for the process lifetime across bench
-    and sweep loops (r9 code-review finding)."""
-    try:
-        n = 0
-        for rdd in iter_logicalrdd_rdds(df):
-            rdd.unpersist(False)
-            CHECKPOINT_SOURCE_PLANS.pop(rdd.id(), None)
-            n += 1
-        return n
-    except Exception:
-        return 0
-
-
-# rdd_id -> list of PRE-checkpoint executed-plan strings. A checkpointed
-# DataFrame's own plan bottoms out at a LogicalRDD with no FileScan, so
-# audit tooling (scripts/shuffle_audit.py) cannot attribute which tables
-# the materialization actually read — the r8 cost model's one blind spot
-# (graph_reachability, SCALE.md). localcheckpoint_declared records the
-# source plan(s) here at materialization time; the audit resolves
-# LogicalRDD leaves through this map to recover the FileScan
-# denominators. CHAINED declared checkpoints resolve too: capture
-# prepends the entries already recorded for the input's own LogicalRDD
-# leaves (r9 code-review finding — one-level resolution under-counted
-# chained cases). Plain ``localCheckpoint`` calls are NOT recorded, so
-# their consumers still surface as honestly unattributed (amp None).
-# Keyed by the checkpointed RDD's id; entries are dropped by
-# release_plan_checkpoints when the checkpoint is released.
-CHECKPOINT_SOURCE_PLANS: dict[int, list[str]] = {}
+        pass
+    return len(seen)
 
 
 _TYPE_BYTES = {
@@ -259,20 +226,6 @@ def localcheckpoint_declared(
     else:
         cp = pre.localCheckpoint(eager=True)
     try:
-        # record what the materialization READ (FileScan attribution for
-        # shuffle_audit — see CHECKPOINT_SOURCE_PLANS). executedPlan() on
-        # the pre-checkpoint frame only plans, it does not re-execute.
-        # Chain through any checkpoints the INPUT itself was built on so
-        # multi-level declared checkpoints keep full attribution.
-        chained: list[str] = []
-        for rdd in iter_logicalrdd_rdds(pre):
-            chained.extend(CHECKPOINT_SOURCE_PLANS.get(rdd.id(), []))
-        CHECKPOINT_SOURCE_PLANS[
-            cp._jdf.queryExecution().logical().rdd().id()
-        ] = chained + [pre._jdf.queryExecution().executedPlan().toString()]
-    except Exception:
-        pass
-    try:
         leaf = cp._jdf.queryExecution().logical()
         if not leaf.getClass().getName().endswith(".LogicalRDD"):
             return cp
@@ -313,30 +266,6 @@ def localcheckpoint_declared(
         return DataFrame(jds, df.sparkSession)
     except Exception:
         return cp
-
-
-def localcheckpoint_recorded(df: DataFrame) -> DataFrame:
-    """``localCheckpoint(eager)`` that records the pre-checkpoint
-    executed plan in CHECKPOINT_SOURCE_PLANS (chaining through input
-    checkpoints, same as ``localcheckpoint_declared``) WITHOUT
-    declaring any layout — for materializations whose partitioning is
-    irrelevant downstream (scratch frames like the minhash ingest's
-    candidate set, r15). A plain ``localCheckpoint`` here would turn
-    every consumer honestly-unattributed in the shuffle audit
-    (amp None); this keeps the FileScan denominators while skipping
-    the declared-layout rewrap. Release with
-    ``release_plan_checkpoints`` as usual."""
-    cp = df.localCheckpoint(eager=True)
-    try:
-        chained: list[str] = []
-        for rdd in iter_logicalrdd_rdds(df):
-            chained.extend(CHECKPOINT_SOURCE_PLANS.get(rdd.id(), []))
-        CHECKPOINT_SOURCE_PLANS[
-            cp._jdf.queryExecution().logical().rdd().id()
-        ] = chained + [df._jdf.queryExecution().executedPlan().toString()]
-    except Exception:
-        pass
-    return cp
 
 
 def distributed_global_rank(df: DataFrame, order_cols: list[str],

@@ -2975,12 +2975,11 @@ def _data_profile_oracle_valid(sf_dir: str) -> bool:
     ORDER BY col
     """,
 )
-def q_data_profile(spark, sf_dir, force_hll=False):
+def q_data_profile(spark, sf_dir):
     """Column-level data profiling (the Deequ/Great-Expectations analyzer
     core): per column, null count, distinct count, and min/max in long
-    format. ``force_hll`` (bench-only, never set by the registry entry)
-    takes the sketch+footer path regardless of row count so bench.py can
-    regression-watch the >5M-row plan at sf0.1 (r12, VERDICT #3).
+    format. ``test_data_profile_hll_size_gate`` plans the sketch+footer
+    path at small scale by lowering DATA_PROFILE_HLL_ROWS.
 
     EXACT path (n <= DATA_PROFILE_HLL_ROWS): deliberately TWO aggs
     cross-joined (1 row × 1 row), not one — folding the six
@@ -3026,7 +3025,7 @@ def q_data_profile(spark, sf_dir, force_hll=False):
             ]
         return out
 
-    if force_hll or parquet_num_rows(sf_dir, "orders") > DATA_PROFILE_HLL_ROWS:
+    if parquet_num_rows(sf_dir, "orders") > DATA_PROFILE_HLL_ROWS:
         stats = _footer_profile_stats(sf_dir, "orders", cols)
         scan_cols = [c for c in cols if c not in stats]
         lits = []

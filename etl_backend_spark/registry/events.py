@@ -1591,7 +1591,7 @@ def q_events_motif_pairs_slim(spark, sf_dir):
       the shuffle. Measured shuffle amplification 6.2 (SCALE.md cost
       table): right on this VM where exchange bytes are memcpy, wrong
       when the exchange crosses a real network.
-    * THIS plan materializes the window table ONCE as a plan-recorded
+    * THIS plan materializes the window table ONCE as a
       localCheckpoint (r15 — column pruning made the two zx subtrees
       non-identical, defeating exchange reuse, so the r10 form paid
       the events scan AND the per-user window sort twice; interleaved
@@ -1614,11 +1614,10 @@ def q_events_motif_pairs_slim(spark, sf_dir):
     one subtree evaluation beats the saved bytes — sf10 receipts in
     BASELINE.md r9/r10)."""
     from ..functions import vectors as V
-    from ..operators.windows import localcheckpoint_recorded
     from ..sources.catalog import parquet_num_rows
     from .llm import _coarse_groups
 
-    zx = localcheckpoint_recorded(_motif_zx(spark, sf_dir))
+    zx = _motif_zx(spark, sf_dir).localCheckpoint(eager=True)
     rare = (
         zx.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") <= 64)

@@ -599,19 +599,16 @@ def minhash_incr_pairs(spark, art, batch_sig_path):
     shuffle, no recompute): under the measured gates the batch's band
     keys broadcast against the PRE-EXPLODED band artifact (the base
     side never shuffles), the candidate set materializes ONCE as a
-    plan-recorded localCheckpoint whose measured count picks the verify
-    strategy (r15 — was a scratch parquet write + footer read-back:
+    localCheckpoint whose measured count picks the verify strategy
+    (r15 — was a scratch parquet write + footer read-back:
     one fewer write/commit per ingest, same measured gate), and base
     signatures reach the estimate join through a broadcast semi-join on
     candidate ids. Above the gates every join falls back to the
     shuffle plan — same rows either way. Shared by the registered query
     and clusters_incr_update. The checkpoint blocks ride the returned
-    plan; consumers
-    that loop (bench's run_full, clusters_incr_update) release them via
+    plan; consumers that loop (clusters_incr_update) release them via
     release_plan_checkpoints."""
     import os
-
-    from ..operators.windows import localcheckpoint_recorded
 
     base_p = spark.read.parquet(minhash_base_sig_path(art))
     bands_base = spark.read.parquet(os.path.join(art, "bands"))
@@ -688,13 +685,13 @@ def minhash_incr_pairs(spark, art, batch_sig_path):
     if small_batch:
         # the candidate set materializes ONLY to carry the measured
         # count gate that picks broadcast vs shuffle verify and to stop
-        # the verify join re-running the band join — a plan-recorded
-        # localCheckpoint (r15; was a scratch parquet write + footer
+        # the verify join re-running the band join — a localCheckpoint
+        # (r15; was a scratch parquet write + footer
         # read-back — one write job + commit + swap gone per ingest,
         # same measured number). The non-small fallback never consults
         # the gate, so it skips the materialization entirely (r13
         # ADVICE) and stays a lazy distinct.
-        cand = localcheckpoint_recorded(cand_all.distinct())
+        cand = cand_all.distinct().localCheckpoint(eager=True)
         if cand.count() <= MINHASH_INCR_BCAST_CAND:
             ids = cand.select(F.col("doc_match").alias("doc_id")).distinct()
             sb_src = all_sig.join(F.broadcast(ids), "doc_id", "left_semi")
@@ -2216,7 +2213,7 @@ def clusters_incr_update(spark, art, batch_sig_path=None):
         F.col("n").alias("id"), F.lit("base_cluster").alias("kind"),
         F.col("lbl").alias("cluster_id"))
     # comp's checkpoint blocks stay live — the returned plan reads them;
-    # run_full/the noop sink releases them via release_plan_checkpoints
+    # the consumer releases them via release_plan_checkpoints
     return out_batch.unionByName(out_base)
 
 
@@ -3262,7 +3259,7 @@ def q_dedup_graph_triangles(spark, sf_dir):
             ).alias("n_wedges")
         ))
     )
-    # the checkpoint is a leaf of `out`'s plan — bench/gate consumers free
+    # the checkpoint is a leaf of `out`'s plan — gate/perfbench consumers free
     # it via release_plan_checkpoints(result) after the action
     return out
 
@@ -3468,12 +3465,7 @@ def q_graph_pagerank(spark, sf_dir):
     ranks = pagerank_ranks(spark, sf_dir)
     d = cache.path("pagerank", "v2",
                    cache.fingerprint(sf_dir, ("orders", "lineitem")))
-    # attribute=False: the 15-round checkpoint chain released its
-    # source-plan entries as it went, so write-side scans cannot be
-    # recovered — the audit reports this artifact's consumers as
-    # honestly unattributed instead of ratioing against the KB artifact
-    ann_index.write_artifact(ranks, os.path.join(d, "ranks"),
-                             attribute=False)
+    ann_index.write_artifact(ranks, os.path.join(d, "ranks"))
     release_plan_checkpoints(ranks)
     ann_index.point_current("pagerank", d)
     persisted = spark.read.parquet(os.path.join(d, "ranks"))
@@ -4081,7 +4073,7 @@ def q_semdedup_incremental(spark, sf_dir):
     # reads only the named record columns; nv is index payload.
     #
     # r15 (VERDICT #4): the base record materializes ONCE as a
-    # plan-recorded checkpoint shared by BOTH artifact writes — the
+    # checkpoint shared by BOTH artifact writes — the
     # batch cogroup keys off the checkpointed rows instead of
     # re-reading the parquet the base write just committed, which
     # removes the serial base-write -> batch-compute dependency, and
@@ -4091,10 +4083,9 @@ def q_semdedup_incremental(spark, sf_dir):
     # the base artifact persists.
     from concurrent.futures import ThreadPoolExecutor
 
-    from ..operators.windows import (localcheckpoint_recorded,
-                                     release_plan_checkpoints)
+    from ..operators.windows import release_plan_checkpoints
 
-    base_cp = localcheckpoint_recorded(base_rec)
+    base_cp = base_rec.localCheckpoint(eager=True)
     batch = (
         tagged.filter(~F.col("is_base"))
         .select("vec_id", "cell", F.col("cdot").alias("prio"), "nv")

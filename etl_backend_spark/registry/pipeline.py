@@ -2038,8 +2038,6 @@ def q_dsir_importance(spark, sf_dir):
     Interleaved A/Bs at sf0.1: −21.3% / −14.7%, identical rows. The
     raw-side scan-filter pushdown is traded for a filter on the
     checkpoint — strictly less tokenize work, same explode work."""
-    from ..operators.windows import localcheckpoint_recorded
-
     d = Catalog(spark, sf_dir).table("documents")
     w = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     bigrams = F.when(
@@ -2051,9 +2049,9 @@ def q_dsir_importance(spark, sf_dir):
         ),
     ).otherwise(F.array().cast("array<string>"))
     ngrams = F.concat(w, bigrams)
-    toks = localcheckpoint_recorded(d.select(
+    toks = d.select(
         "doc_id", (F.col("lang") == "en").alias("is_t"),
-        ngrams.alias("ngs")))
+        ngrams.alias("ngs")).localCheckpoint(eager=True)
 
     # pass 1: bucket model, no doc_id — combines to <= 8192 rows map-side
     model = (

@@ -214,3 +214,23 @@ def test_include_list_non_string_item_expr(spark):
     ).collect()
     assert [list(r.ns) for r in out] == [[10, 20], []]
     assert [len(r.objs) for r in out] == [2, 0]
+
+
+def test_engine_modules_star_import():
+    """``from <module> import *`` works for every engine module that
+    declares ``__all__``: each listed name must exist on the module."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    declared = []
+    for path in sorted((root / "etl_backend_spark").rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        if any(isinstance(n, ast.Assign)
+               and any(getattr(t, "id", None) == "__all__" for t in n.targets)
+               for n in tree.body):
+            mod = ".".join(path.relative_to(root).with_suffix("").parts)
+            declared.append(mod.removesuffix(".__init__"))
+    assert "etl_backend_spark.engine" in declared
+    for mod in declared:
+        exec(f"from {mod} import *", {})

@@ -145,8 +145,7 @@ def test_write_artifact_restores_prior_artifact_on_persistent_failure(
     dirpath = str(tmp_path / "art" / "sig")
     os.makedirs(os.path.dirname(dirpath), exist_ok=True)
     ann_index.write_artifact(
-        spark.createDataFrame([(1, "old")], ["id", "v"]), dirpath,
-        attribute=False)
+        spark.createDataFrame([(1, "old")], ["id", "v"]), dirpath)
     before = sorted(os.listdir(dirpath))
     assert before  # parquet parts present
 
@@ -161,8 +160,7 @@ def test_write_artifact_restores_prior_artifact_on_persistent_failure(
     import pytest as _pytest
     with _pytest.raises(OSError):
         ann_index.write_artifact(
-            spark.createDataFrame([(2, "new")], ["id", "v"]), dirpath,
-            attribute=False)
+            spark.createDataFrame([(2, "new")], ["id", "v"]), dirpath)
     monkeypatch.undo()
 
     # prior artifact restored, bit-for-bit same part listing, old row

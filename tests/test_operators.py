@@ -302,16 +302,102 @@ def test_file_sink_roundtrips(spark, cat, tmp_path):
         assert rows == expect
 
 
+# Headline set: one per operator family, weighted toward shuffle/join-heavy
+# shapes where plan quality shows.
+HEADLINE = [
+    "ads_search",              # flagship: filter+join+count-join+sort+page
+    "agg_sum_group",           # TPC-H Q1 shape: wide grouped agg
+    "join_self_roles",         # multi-join + dual-role dim (Q7 shape)
+    "join_two_hop",            # fact-fact-dim chain
+    "agg_relation_count",      # pre-agg + join-back
+    "window_latest_per_group", # top-1 per key window
+    "stream_sessionize",       # session_window gaps-and-islands
+    "dedup_exact",             # hash groupBy dedup
+    "dedup_ngram_jaccard",     # shingle explode + self-join (LSH cost shape)
+    "sim_topk_brute",          # broadcast cosine top-k (expression scorer)
+    "sim_topk_pandas",         # same, numpy Arrow-batch scorer (fast path)
+    "sim_topk_pq",             # product-quantized ADC scan + exact rerank
+    "multimodal_audio",        # real WAV decode through mapInPandas
+    "dedup_minhash_lsh",       # signature + band equi-join (LSH scale path)
+    "join_asof",               # union + running-last as-of join
+    "tpch_q3_shape",           # selective filter + 2-hop join + top-k
+    "tpch_q5_shape",           # 6-table star join, broadcast dims
+    "tpch_q1_shape",           # canonical scan-heavy pricing summary
+    "tpch_q6_shape",           # pure pushdown scan-agg
+    "text_stats",              # regexp-heavy scalar pipeline
+    "doc_chunk",               # overlapping-window chunking (explode)
+    "seq_pack",                # shuffle-order + cumsum packing
+    "split_assign",            # md5-bucket train/val/test
+    "paginate_offset",         # TakeOrderedAndProject
+    "join_two_hop_bucketed",   # co-located fact join (zero-shuffle layout)
+    "tpch_q5_bucketed",        # Q5 over the co-located layout (1 exchange)
+    "tpch_q3_bucketed",        # Q3 over the layout (0 exchanges end-to-end)
+    "join_1n_nested",          # nested include, bucketed-default (0 shuffles)
+    "join_1n_nested_plain",    # same over plain parquet (repart-first collect)
+    "join_1n_nested_bucketed", # explicit co-located layout (0 shuffles)
+    "window_rolling_range",    # 1h trailing interval frame per key
+    "window_latest_per_group_bucketed",  # keyed window, zero-shuffle layout
+    "events_user_daily",       # combined layout: pruned dirs + 0 exchanges
+    "events_funnel",           # ordered funnel, single-exchange window chain
+    "multimodal_video",        # real MJPEG-AVI parse + per-frame JPEG decode
+    # round-6 additions
+    "sim_topk_ivfpq",          # persisted IVF-PQ: partition-pruned ADC scan
+    "text_search_indexed",     # inverted-index keyword AND-search
+    "lm_quality_trigram",      # corpus-trained trigram LM scoring
+    "tokenize_bpe",            # BPE train (cached) + memoized Arrow apply
+    "multimodal_webp",         # real VP8L decode, pixel-exact oracle
+    # round-7 additions
+    "semdedup_kmeans",         # SemDeDup: k-means + within-cluster prune
+    "semdedup_incremental",    # ingest shape: batch vs frozen base kept set
+    "dedup_minhash_incremental",  # fuzzy ingest: batch vs persisted band index
+    "dedup_incremental",       # exact ingest: batch vs persisted sha256 index (r13)
+    "embedding_pca",           # distributed moments + 64x64 eigh + project
+    "dsir_importance",         # DSIR hashed-ngram importance selection
+    "knn_graph_lsh",           # full-corpus approximate kNN graph
+    "text_phrase_indexed",     # positional-index phrase adjacency join
+    "bm25_search_indexed",     # ranked OR search, pruned postings tf/df
+    "events_pattern_topk",     # z-norm sliding-window pattern top-k
+    "events_motif_pairs",      # SAX-bucketed motif (closest pair) search
+    "events_discord_topk",     # HOT-SAX discord (anomaly window) search
+    "events_holt_linear",      # 2-state dyadic Holt fold, exact cross-engine
+    "multimodal_augment",      # flip+crop patches over real PNG decode
+    "featurestore_pit",        # point-in-time feature assembly, one window pass
+    "graph_reachability",      # recursive-CTE BFS over a declared edge layout
+    # round-8 additions
+    "tpch_q9",                 # real supplycost profit over derived partsupp
+    "tpch_q20",                # real availqty threshold over derived partsupp
+    "dedup_embedding",         # bucket-local LSH pair scoring (2 exchanges)
+    "dedup_embedding_multiprobe",  # probe-aware bucket-local kernel
+    "data_profile",            # size-gated exact/HLL column profiler
+    "hybrid_search_rrf",       # RRF fusion of BM25 + vector rankings
+    "search_rerank_mmr",       # MMR diversity re-rank over the vector arm
+    "tpch_q2",                 # real min-cost supplier over derived partsupp (r9)
+    "tpch_q11",                # real stock-value fraction over derived partsupp (r9)
+    # round-10 additions
+    "events_motif_pairs_slim", # slim-exchange motif alternate (network-bound pick)
+    "sim_topk_pq_indexed",     # persisted PQ index, value-gated ADC replay (r10)
+    "orders_item_cf",       # co-occurrence CF — twice-flagged row, now watched
+]
+
+
+def test_headline_keys_all_resolve():
+    """Every HEADLINE name resolves to a registered query builder, so a
+    typo fails here instead of skipping a query's plan check."""
+    from etl_backend_spark.registry import QUERIES
+
+    for name in HEADLINE:
+        assert callable(QUERIES.get(name)), name
+    assert "orders_item_cf" in HEADLINE
+
+
 def test_headline_plans_have_no_antipatterns(spark):
     """Every headline query's physical plan is free of CartesianProduct and
-    row-at-a-time Python eval (the explain_audit.py gate as a regression
-    test)."""
-    from bench import BENCH_EXTRA, HEADLINE
+    row-at-a-time Python eval."""
     from etl_backend_spark.registry import QUERIES
 
     bad = {}
     for name in HEADLINE:
-        fn = BENCH_EXTRA.get(name) or QUERIES[name]
+        fn = QUERIES[name]
         plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
         hits = [m for m in ("CartesianProduct", "BatchEvalPython") if m in plan]
         if hits:
@@ -1019,6 +1105,7 @@ def test_data_profile_hll_size_gate(spark, monkeypatch):
     hll_plan = hll_df._jdf.queryExecution().executedPlan().toString()
     assert "Expand" not in hll_plan  # one pass, no 6x row multiply
     assert "CrossJoin" not in hll_plan and "Cartesian" not in hll_plan
+    assert "BatchEvalPython" not in hll_plan
     hll = {r["col"]: r for r in hll_df.collect()}
 
     assert set(hll) == set(exact)

@@ -178,24 +178,19 @@ def test_window_rolling_range_salted_matches_and_splits_key(spark):
 
 
 def test_bench_and_sweep_lists_reference_registered_keys():
-    """A typo in bench.HEADLINE or scaling_check's lists must fail HERE,
-    not silently skip a query from the measurement artifacts."""
-    import bench
-    from scripts import scaling_check as sc
+    """A typo in the headline list (tests/test_operators.py) must fail
+    HERE, not silently skip a query from its plan check."""
     from etl_backend_spark.registry import QUERIES
+    from tests.test_operators import HEADLINE
 
-    for name in bench.HEADLINE:
-        assert name in QUERIES or name in bench.BENCH_EXTRA, \
-            f"bench.HEADLINE: {name}"
-    for name in sc.SF1_QUERIES + sc.EXTRA:
-        assert name in QUERIES, f"scaling_check: {name}"
+    for name in HEADLINE:
+        assert name in QUERIES, f"HEADLINE: {name}"
 
 
 def test_first_50_sequence_equals_correctness_r05_key_list():
-    """The driver window has been byte-stable for three rounds; an import
+    """The first-50 window has been byte-stable since round 5; an import
     reorder could silently rotate it. Pin the EXACT first-50 sequence to
-    the key list the driver recorded in CORRECTNESS_r05.json (VERDICT r5
-    task 8), whose first 50 keys are copied here."""
+    the round-5 key list, inlined below."""
     r05_first_50 = [
         "ads_search", "ads_search_total", "scan_filtered", "scan_full_sorted",
         "lookup_pk", "lookup_unique_composite", "source_json", "sink_json",
