@@ -58,10 +58,16 @@ class MarketplaceEngine:
 
     def my_ads(self, cust_key: int) -> DataFrame:
         """GET /api/ads/user/me (reference src/routes/ads.ts:213-231):
-        owner's rows, soft-deleted excluded, newest first."""
+        owner's rows, soft-deleted excluded, newest first.
+
+        The filtered rows go to one partition before the sort, so the sort
+        needs no range exchange and no bounds-sampling job (which would
+        scan and filter a second time). The scan stays parallel; the one
+        partition holds what the caller collects anyway."""
         o = self.cat.table("orders")
         return (
             o.filter((F.col("o_custkey") == cust_key) & (F.col("o_orderstatus") != "F"))
+            .repartition(1)
             .orderBy(F.col("o_orderdate").desc(), F.col("o_orderkey").desc())
         )
 
@@ -96,20 +102,29 @@ class MarketplaceEngine:
 
     def conversations_list(self, user_id: int) -> DataFrame:
         """GET /api/chat/conversations (reference src/routes/chat.ts:83-124):
-        user's threads with the latest message each, newest-activity first."""
+        user's threads with the latest message each, newest-activity first.
+
+        The window's rows already come out of a shuffle, so ``coalesce(1)``
+        puts them in one partition with no further exchange (and keeps the
+        window's map-side partial limit), and the final sort needs no range
+        exchange. The partition holds what the caller collects anyway."""
         ev = self.cat.table("events")
         mine = ev.filter(F.col("user_id") == user_id)
         latest = windows.latest_per_group(
             mine, "event_type", [F.col("ts").desc(), F.col("event_id").desc()]
         )
-        return latest.orderBy(F.col("ts").desc())
+        return latest.coalesce(1).orderBy(F.col("ts").desc())
 
     def messages_of(self, user_id: int) -> DataFrame:
         """GET /api/chat/messages/:id (reference src/routes/chat.ts:128-148):
-        chronological ascending."""
+        chronological ascending. One partition before the sort, as in
+        ``my_ads``: the scan stays parallel and the partition holds what
+        the caller collects anyway."""
         ev = self.cat.table("events")
-        return ev.filter(F.col("user_id") == user_id).orderBy(
-            F.col("ts").asc(), F.col("event_id").asc()
+        return (
+            ev.filter(F.col("user_id") == user_id)
+            .repartition(1)
+            .orderBy(F.col("ts").asc(), F.col("event_id").asc())
         )
 
     # ---------------------------------------------------------- admin routes
@@ -144,21 +159,19 @@ class MarketplaceEngine:
 
     def login(self, cust_key: int, password: str, secret: str = "engine-secret") -> DataFrame:
         """POST /api/auth/login (reference src/routes/auth.ts:67-105): point
-        lookup → credential verify (pandas UDF) → token sign → password
-        column projected out. ``c_custkey`` is the key, so the lookup needs
-        no limit (one would put an exchange ahead of the UDFs)."""
+        lookup → one pandas UDF that derives the stored hash, verifies the
+        password and signs the token (null on a mismatch) → rows without a
+        token dropped. One Python evaluation per request, and the password
+        hash never leaves the UDF. ``c_custkey`` is the key, so the lookup
+        needs no limit (one would put an exchange ahead of the UDF)."""
         c = self.cat.table("customer").filter(F.col("c_custkey") == cust_key)
-        salt = F.sha2(F.col("c_name"), 256).substr(1, 16)
-        stored = c.withColumn(
-            "password_hash",
-            auth.hash_password(F.concat(F.lit("pw-"), F.col("c_custkey").cast("string")), salt),
+        uid = F.col("c_custkey").cast("string")
+        token = auth.authenticate(
+            F.concat(F.lit("pw-"), uid), F.sha2(F.col("c_name"), 256).substr(1, 16),
+            F.lit(password), uid, F.lit(secret),
         )
-        verified = stored.withColumn(
-            "pw_ok", auth.verify_password(F.lit(password), F.col("password_hash"))
-        ).filter(F.col("pw_ok"))
-        return verified.select(
-            "c_custkey", "c_name",
-            auth.sign_token(F.col("c_custkey").cast("string"), F.lit(secret)).alias("token"),
+        return c.select("c_custkey", "c_name", token.alias("token")).filter(
+            F.col("token").isNotNull()
         )
 
 

@@ -37,18 +37,19 @@ def hash_password(password: pd.Series, salt: pd.Series) -> pd.Series:
     return pd.Series([_hash_one(p, s) for p, s in zip(password, salt)])
 
 
+def _verify_one(password: str, hashed: str) -> bool:
+    try:
+        _, iters, salt, digest = hashed.split("$")
+        dk = hashlib.pbkdf2_hmac("sha256", password.encode(), salt.encode(), int(iters))
+        return hmac.compare_digest(digest, dk.hex())
+    except (ValueError, AttributeError):
+        return False
+
+
 @pandas_udf(BooleanType())
 def verify_password(password: pd.Series, hashed: pd.Series) -> pd.Series:
     """bcrypt.compare analog (reference src/routes/auth.ts:88)."""
-    out = []
-    for p, h in zip(password, hashed):
-        try:
-            _, iters, salt, _ = h.split("$")
-            dk = hashlib.pbkdf2_hmac("sha256", p.encode(), salt.encode(), int(iters))
-            out.append(hmac.compare_digest(h.split("$")[3], dk.hex()))
-        except (ValueError, AttributeError):
-            out.append(False)
-    return pd.Series(out)
+    return pd.Series([_verify_one(p, h) for p, h in zip(password, hashed)])
 
 
 def _b64(data: bytes) -> str:
@@ -68,6 +69,23 @@ def _sign_one(user_id: str, secret: str) -> str:
 def sign_token(user_id: pd.Series, secret: pd.Series) -> pd.Series:
     """jwt.sign analog (reference src/routes/auth.ts:51-55)."""
     return pd.Series([_sign_one(str(u), s) for u, s in zip(user_id, secret)])
+
+
+def _authenticate(stored: pd.Series, salt: pd.Series, password: pd.Series,
+                  user_id: pd.Series, secret: pd.Series) -> pd.Series:
+    """The whole login check in one Python pass (reference
+    src/routes/auth.ts:30,88,51-55): derive the stored hash of ``stored``
+    with ``salt``, verify ``password`` against it and sign ``user_id``'s
+    token with ``secret``; null when the password does not match."""
+    return pd.Series([
+        _sign_one(str(u), k) if _verify_one(p, _hash_one(sp, s)) else None
+        for sp, s, p, u, k in zip(stored, salt, password, user_id, secret)
+    ])
+
+
+# Nondeterministic only so that a filter on its result is not pushed below
+# the projection that computes it: that would evaluate it a second time.
+authenticate = pandas_udf(_authenticate, StringType()).asNondeterministic()
 
 
 @pandas_udf(StringType())

@@ -14,9 +14,11 @@ as sibling plans over one predicate (`:134-156`). We reproduce exactly that
 shape: a predicate list folded with AND, a shared filtered plan, a broadcast
 dimension join, a pre-aggregated relation count, a total-ordered offset page.
 
-Scale: the only shuffles are the lineitem groupBy (partial-agg'd) and the
-orders⋈counts join; customer joins broadcast under AQE when small, SMJ when
-not. Sort+page is TakeOrderedAndProject — never a global sort.
+Scale: the relation count reads only the filtered orders' line items
+(lineitem left-semi-joined to the filtered order keys), so its groupBy
+(partial-agg'd) and the orders⋈counts join see those rows, not all of
+lineitem; customer and the semi join's key side broadcast when small, SMJ
+when not. Sort+page is TakeOrderedAndProject — never a global sort.
 """
 
 from __future__ import annotations
@@ -70,8 +72,12 @@ def ads_search(cat: Catalog, p: SearchParams) -> DataFrame:
     with_user = filtered.join(
         customer, filtered["o_custkey"] == customer["c_custkey"], "inner"
     ).drop("c_custkey")
+    lineitem = cat.table("lineitem")
+    items = lineitem.join(
+        filtered, lineitem["l_orderkey"] == filtered["o_orderkey"], "left_semi"
+    )
     with_counts = aggregates.relation_count(
-        with_user, cat.table("lineitem"), "o_orderkey", "l_orderkey", alias="n_items"
+        with_user, items, "o_orderkey", "l_orderkey", alias="n_items"
     )
     order = pagination.sort_spec(p.sort_by, tie_break="o_orderkey")
     page = pagination.paginate_offset(with_counts, order, p.page, p.limit)

@@ -44,8 +44,8 @@ def q_facade_get_ad(spark, sf_dir):
 )
 def q_facade_my_ads(spark, sf_dir):
     """GET /api/ads/user/me through the facade (reference src/routes/ads.ts:
-    213-231): owner's non-deleted rows, newest first (row order is
-    engine-side; the gate compares order-insensitively)."""
+    213-231): owner's non-deleted rows, newest first (the gate compares
+    order-insensitively; tests/test_engine_facade.py checks the order)."""
     return MarketplaceEngine(spark, sf_dir).my_ads(42)
 
 

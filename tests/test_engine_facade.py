@@ -58,6 +58,101 @@ def test_messages_sorted_ascending(eng):
     assert ts == sorted(ts)
 
 
+def _duck(sql: str) -> list:
+    import duckdb
+
+    with duckdb.connect() as con:
+        for name in ("orders", "events"):
+            con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{SF_DIR}/{name}.parquet'")
+        return [r[0] for r in con.execute(sql).fetchall()]
+
+
+# Keys with the most rows at sf0.001: customer 19 has 14 live orders,
+# user 14 has 88 events over 5 event types.
+MY_ADS_KEY, CHAT_KEY = 19, 14
+
+
+def test_my_ads_order_matches_duckdb(eng):
+    got = [r.o_orderkey for r in eng.my_ads(MY_ADS_KEY).collect()]
+    want = _duck(f"""SELECT o_orderkey FROM orders
+                     WHERE o_custkey = {MY_ADS_KEY} AND o_orderstatus <> 'F'
+                     ORDER BY o_orderdate DESC, o_orderkey DESC""")
+    assert len(want) > 5 and got == want
+
+
+def test_messages_order_matches_duckdb(eng):
+    got = [r.event_id for r in eng.messages_of(CHAT_KEY).collect()]
+    want = _duck(f"""SELECT event_id FROM events WHERE user_id = {CHAT_KEY}
+                     ORDER BY ts, event_id""")
+    assert len(want) > 5 and got == want
+
+
+def test_conversations_one_row_per_type_newest_first(eng):
+    rows = eng.conversations_list(CHAT_KEY).collect()
+    want = _duck(f"""
+        SELECT event_id FROM (
+          SELECT *, row_number() OVER (PARTITION BY event_type
+                                       ORDER BY ts DESC, event_id DESC) AS rn
+          FROM events WHERE user_id = {CHAT_KEY}) WHERE rn = 1
+        ORDER BY ts DESC""")
+    assert len({r.event_type for r in rows}) == len(rows) > 1
+    assert [r.event_id for r in rows] == want
+
+
+def test_sorted_routes_break_ties_by_key(spark, tmp_path):
+    """Rows that tie on the leading sort column come out in key order:
+    ``my_ads`` by ``o_orderkey desc`` within a date, ``messages_of`` by
+    ``event_id`` within a ``ts``. The source files hold the rows in the
+    opposite order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_backend_spark.engine import MarketplaceEngine
+
+    def rewrite(name, key_col, key, col, order_by, ascending):
+        t = pq.read_table(f"{SF_DIR}/{name}.parquet")
+        df = t.to_pandas()
+        mine = df[key_col] == key
+        firsts = df.loc[mine, col].sort_values().iloc[:2].tolist()
+        df.loc[mine, col] = [firsts[i % 2] for i in range(int(mine.sum()))]
+        df = df.sort_values(order_by, ascending=ascending)
+        pq.write_table(pa.Table.from_pandas(df, schema=t.schema, preserve_index=False),
+                       str(tmp_path / f"{name}.parquet"))
+        return df[df[key_col] == key]
+
+    orders = rewrite("orders", "o_custkey", MY_ADS_KEY, "o_orderdate", "o_orderkey", True)
+    events = rewrite("events", "user_id", CHAT_KEY, "ts", "event_id", False)
+    e = MarketplaceEngine(spark, str(tmp_path))
+
+    live = orders[orders.o_orderstatus != "F"]
+    want = live.sort_values(["o_orderdate", "o_orderkey"], ascending=False)
+    assert want.o_orderdate.duplicated().any()
+    assert [r.o_orderkey for r in e.my_ads(MY_ADS_KEY).collect()] == want.o_orderkey.tolist()
+
+    want = events.sort_values(["ts", "event_id"])
+    assert want.ts.duplicated().any()
+    assert [r.event_id for r in e.messages_of(CHAT_KEY).collect()] == want.event_id.tolist()
+
+
+def test_sorted_routes_run_two_jobs_without_range_exchange(eng):
+    """Each of these routes collects its whole answer, so the rows go to
+    one partition ahead of the sort: no range exchange and no job that
+    samples its bounds (a second scan of the source)."""
+    from tests.conftest import spark_jobs
+
+    plans = {}
+    for route, key in ((eng.my_ads, MY_ADS_KEY), (eng.messages_of, CHAT_KEY),
+                       (eng.conversations_list, CHAT_KEY)):
+        route(key).collect()  # warm
+        df = route(key)
+        _, jobs = spark_jobs(eng.cat.spark, df.collect)
+        plan = plans[route.__name__] = df._jdf.queryExecution().executedPlan().toString()
+        assert "rangepartitioning" not in plan, (route.__name__, plan)
+        assert jobs == 2, (route.__name__, jobs)
+    # coalesce(1) above the window keeps the window's map-side partial limit
+    assert "row_number(), 1, Partial" in plans["conversations_list"]
+
+
 def test_admin_stats_counts(eng, cat):
     row = eng.admin_stats().collect()[0]
     assert row.n_users == cat.table("customer").count()
@@ -85,6 +180,34 @@ def test_login_runs_one_spark_job(eng):
     rows, jobs = spark_jobs(eng.cat.spark, lambda: eng.login(2, "pw-2").collect())
     assert [r.c_custkey for r in rows] == [2]
     assert jobs == 1
+
+
+def test_login_evaluates_python_once(eng):
+    """Hash derivation, password check and token signing are one Python
+    UDF, and the token filter stays above it: one ``ArrowEvalPython``."""
+    plan = eng.login(2, "pw-2")._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_ads_search_counts_only_filtered_line_items(eng):
+    """The per-order item count aggregates only the line items of the
+    filtered orders (a left-semi join below the aggregate), not all of
+    lineitem."""
+    plan = eng.search_ads(SearchParams(min_price=1000.0)).rows
+    lines = plan._jdf.queryExecution().executedPlan().toString().splitlines()
+    aggs = [i for i, ln in enumerate(lines)
+            if "HashAggregate(keys=[l_orderkey" in ln and "partial_count" in ln]
+    assert aggs
+    def indent(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    for i in aggs:
+        subtree = []
+        for ln in lines[i + 1:]:
+            if indent(ln) <= indent(lines[i]):
+                break
+            subtree.append(ln)
+        assert any("LeftSemi" in ln for ln in subtree), "\n".join(lines)
 
 
 def test_catalog_resolves_each_relation_once(spark, tmp_path):
