@@ -39,13 +39,15 @@ _FIT_CAP = 4096
 # Index artifacts live in the engine's one artifact store
 # (sources/cache.py): directories are keyed on the source tables'
 # content fingerprint, so a regenerated corpus gets a fresh directory
-# and a rebuild. A per-kind `<kind>-current` SYMLINK is atomically
-# re-pointed at whichever corpus' artifacts were used last; the
-# registered DuckDB oracles replay the scan arithmetic by reading
-# through the symlink (the engine always runs strictly before its oracle
-# in the gate and in the driver). ANN_ROOT is the store's root, which
-# the oracle SQL renders at import.
-ANN_ROOT = cache.ROOT
+# and a rebuild. Every build-once record (indexes, fitted models and
+# the decision records the replay oracles read) is written once,
+# through cache.build. The one write into a published directory is the
+# per-query adc_w/probes tables of query_pq_index/query_ivfpq_index. A
+# per-kind `<kind>-current` SYMLINK is atomically re-pointed at
+# whichever corpus' artifacts were used last; the registered DuckDB
+# oracles replay the scan arithmetic by reading through the symlink
+# under cache.ROOT (the engine always runs strictly before its oracle
+# in the gate and in the driver).
 
 
 def point_current(kind: str, d: str) -> None:
@@ -76,90 +78,15 @@ def point_current(kind: str, d: str) -> None:
             shutil.rmtree(p, ignore_errors=True)
 
 
-def write_artifact(df: DataFrame, dirpath: str,
-                   partition_by: str | None = None,
-                   extra_files: dict[str, str] | None = None) -> None:
-    """Write a per-query decision-record artifact with the stage-and-swap
-    protocol: a bare ``mode("overwrite")`` on a shared fingerprint-keyed
-    dir deletes a concurrent same-user session's ``_temporary`` staging
-    mid-write (observed on the qlr weights dir, r11). Staging is
-    process-private; the swap is move-old-away + rename-new-in with a
-    bounded retry (a bare rmtree+rename raised ENOTEMPTY for the LOSING
-    racer and could delete the winner's live artifact). Last successful
-    rename wins; the single-writer protocol still governs WHICH bits the
-    oracle replays (engine-before-oracle per session). Moved-away dirs
-    are deleted ONLY after the new artifact renamed in; if all attempts
-    fail for a persistent (non-race) reason, the newest moved-away
-    artifact is restored before raising, so dirpath keeps serving the
-    previous good bits (r12 ADVICE); a restore-failed candidate is swept
-    only when some other candidate was restored — otherwise it stays on
-    disk as the last surviving copy (r13 second review). A write failure
-    cleans up its own stage dir instead of leaking an artifact-sized
-    orphan no later pid would ever match (r13 review).
-
-    ``extra_files`` (r15): small sidecar files (name -> text content)
-    staged INTO the artifact dir before the swap, so layout metadata
-    (e.g. the minhash band index's adaptive bucket count) lands
-    atomically with the data it describes — a post-swap sidecar write
-    would leave a crash window where data and meta disagree. Use
-    underscore-prefixed names so Spark's parquet reader ignores them."""
-    import shutil
-    import uuid
-
-    tmp = f"{dirpath}.stage-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(tmp)
-        for name, content in (extra_files or {}).items():
-            with open(os.path.join(tmp, name), "w") as fh:
-                fh.write(content)
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    trashes: list = []
-    try:
-        for attempt in range(4):
-            trash = f"{dirpath}.old-{os.getpid()}-{uuid.uuid4().hex[:6]}"
-            try:
-                os.rename(dirpath, trash)   # atomic move-away if present
-                trashes.append(trash)
-            except FileNotFoundError:
-                pass
-            try:
-                os.rename(tmp, dirpath)
-                break
-            except OSError:
-                if attempt == 3:
-                    raise
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # our own staged bits
-        if not os.path.exists(dirpath):
-            failed: list = []
-            while trashes:
-                cand = trashes.pop()
-                try:
-                    os.rename(cand, dirpath)
-                    break
-                except OSError:
-                    failed.append(cand)
-            if os.path.exists(dirpath):
-                trashes.extend(failed)
-        raise
-    finally:
-        for t in trashes:
-            shutil.rmtree(t, ignore_errors=True)
-
-
 def _write_small_parquet(dirpath: str, pdf) -> None:
     """Driver-side write of a tiny (parameter-bounded) artifact table —
-    no Spark job for a few hundred rows. The tmp name is
-    process+uuid-unique: a FIXED name let two same-user sessions
-    interleave truncating writes into the same staging file and
-    os.replace a torn parquet into place (r13 review — the same
-    cross-session race write_artifact's staging already guarded)."""
+    no Spark job for a few hundred rows. Inside a ``cache.build`` the
+    directory is private; the per-query adc_w/probes tables are written
+    into a published index directory, where two same-user sessions may
+    write at once. So the tmp name is process+uuid-unique and
+    ``os.replace`` puts only a whole file in place (a FIXED name let two
+    sessions interleave truncating writes and publish a torn
+    parquet)."""
     import uuid
 
     import pyarrow as pa

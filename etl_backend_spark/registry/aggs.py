@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..ann.index import ANN_ROOT as _ANN_ROOT
 from ..operators import aggregates, windows
 from ..sources import cache
 from ..sources.catalog import Catalog
@@ -3244,10 +3243,10 @@ def als_recommendations(spark, sf_dir, rank=8, iters=5):
 _ALS_REPLAY_ORACLE = f"""
     WITH uf AS (
       SELECT "user", f
-      FROM read_parquet('{_ANN_ROOT}/als-current/user_f/*.parquet')
+      FROM read_parquet('{cache.ROOT}/als-current/user_f/*.parquet')
     ), itf AS (
       SELECT item, p_type, f
-      FROM read_parquet('{_ANN_ROOT}/als-current/item_f/*.parquet')
+      FROM read_parquet('{cache.ROOT}/als-current/item_f/*.parquet')
     ), scored AS (
       SELECT uf."user", itf.item, itf.p_type,
              list_reduce(list_prepend(0.0,
@@ -3290,25 +3289,28 @@ def q_recsys_als(spark, sf_dir):
     from ..ann import index as ann_index
     from ..functions import vectors as V
 
-    model, types, ratings = als_recommendations(spark, sf_dir)
-    users = ratings.select("user").distinct().orderBy("user").limit(5)
-    d = cache.path("als", "v2",
-                   cache.fingerprint(sf_dir, ("lineitem", "orders", "part")))
-    uf = (
-        model.userFactors
-        .join(F.broadcast(users.withColumnRenamed("user", "id")), "id")
-        .select(F.col("id").alias("user"),
-                V.as_double(F.col("features")).alias("f"))
-    )
-    itf = (
-        model.itemFactors
-        .select(F.col("id").alias("item"),
-                V.as_double(F.col("features")).alias("f"))
-        .join(F.broadcast(types), "item")
-        .select("item", "p_type", "f")
-    )
-    ann_index.write_artifact(uf.coalesce(1), os.path.join(d, "user_f"))
-    ann_index.write_artifact(itf.coalesce(1), os.path.join(d, "item_f"))
+    def build(b):
+        model, types, ratings = als_recommendations(spark, sf_dir)
+        users = ratings.select("user").distinct().orderBy("user").limit(5)
+        (
+            model.userFactors
+            .join(F.broadcast(users.withColumnRenamed("user", "id")), "id")
+            .select(F.col("id").alias("user"),
+                    V.as_double(F.col("features")).alias("f"))
+            .coalesce(1).write.parquet(os.path.join(b, "user_f"))
+        )
+        (
+            model.itemFactors
+            .select(F.col("id").alias("item"),
+                    V.as_double(F.col("features")).alias("f"))
+            .join(F.broadcast(types), "item")
+            .select("item", "p_type", "f")
+            .coalesce(1).write.parquet(os.path.join(b, "item_f"))
+        )
+
+    d, _ = cache.build(
+        "als", "v3",
+        cache.fingerprint(sf_dir, ("lineitem", "orders", "part")), build)
     ann_index.point_current("als", d)
     uf_p = spark.read.parquet(os.path.join(d, "user_f"))
     itf_p = spark.read.parquet(os.path.join(d, "item_f"))

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..ann.index import ANN_ROOT as _ANN_ROOT
 from ..functions import hashing as H
 from ..functions import text as T
 from ..functions import vectors as V
@@ -478,8 +477,9 @@ MINHASH_INCR_BCAST_CAND = 1_000_000
 # small-file/task overhead, guide §6). The writer picks B from the base
 # band-row count (~MINHASH_KB_TARGET_ROWS rows per bucket, power-of-2
 # clamp to [MINHASH_KB_MIN, MINHASH_KB_MAX]) and records it in a
-# ``_kb_meta.json`` sidecar STAGED INSIDE the bands dir (atomic with
-# the data); the ingest probe reads B back from the sidecar — kb is
+# ``_kb_meta.json`` sidecar inside the bands dir of the private build
+# dir, so one rename publishes it with the data; the ingest probe
+# reads B back from the sidecar — kb is
 # engine-internal (no oracle replays it), so writer and prober only
 # have to agree with each other. A bands dir without a valid sidecar
 # is an error, never a guess: a wrong modulus would silently prune away
@@ -509,9 +509,8 @@ def _kb_buckets_for_rows(n_band_rows: int) -> int:
 
 
 def _read_kb_buckets(art: str) -> int:
-    """Bucket count the band index at ``art`` was written with, from the
-    staged sidecar. Raises ValueError when the sidecar is missing or
-    invalid."""
+    """Bucket count the band index at ``art`` was written with, from its
+    sidecar. Raises ValueError when the sidecar is missing or invalid."""
     import json
     import os
 
@@ -590,6 +589,39 @@ def _parquet_dir_rows(path: str) -> int:
                for f in parquet_part_files(path))
 
 
+def _write_sig_bands(spark, b: str, sig_all) -> None:
+    """Write the signature table and band index of an incremental
+    minhash record into build dir ``b`` (shared by
+    dedup_minhash_incremental and dedup_clusters_incremental).
+
+    - ONE signature write, hive-partitioned by is_base: base sigs at
+      sig/is_base=true (the oracle glob), batch sigs at
+      sig/is_base=false. The batch side is not part of the oracle
+      contract (the oracle recomputes batch sigs in SQL). Signatures
+      are read back from disk, so nothing stays pinned in executor
+      storage after the query.
+    - The PRE-EXPLODED band index, written from the persisted base sigs
+      (no second minhash pass), so every later ingest streams it
+      map-side instead of re-exploding and shuffling the base per
+      batch. Its bucket count adapts to the base size (footer rows, no
+      job) and is recorded in the _kb_meta.json sidecar."""
+    import json
+    import os
+
+    sig_all.write.partitionBy("is_base").parquet(os.path.join(b, "sig"))
+    base_sig_dir = minhash_base_sig_path(b)
+    buckets = _kb_buckets_for_rows(
+        _parquet_dir_rows(base_sig_dir) * H.MINHASH_BANDS)
+    (
+        _band_explode(spark.read.parquet(base_sig_dir))
+        .withColumn("kb", _band_kb_longs(F.col("k1"), F.col("k2"), buckets))
+        .repartition(buckets, F.col("kb"))
+        .write.partitionBy("kb").parquet(os.path.join(b, "bands"))
+    )
+    with open(os.path.join(b, "bands", _KB_META_NAME), "w") as fh:
+        json.dump({"kb_buckets": buckets}, fh)
+
+
 def minhash_incr_pairs(spark, art, batch_sig_path):
     """The INGEST side of incremental MinHash-LSH, O(batch) by design:
     near-dup pairs of a signature batch against the persisted index at
@@ -623,7 +655,7 @@ def minhash_incr_pairs(spark, art, batch_sig_path):
     # hashing instead of string hashing in the probe
     bands_new = _band_explode(batch_sig)
     jk = ("band", "k1", "k2")
-    # bucket count from the artifact's staged sidecar (the writer adapts
+    # bucket count from the artifact's sidecar (the writer adapts
     # it to the base size); a missing sidecar raises
     kb_buckets = _read_kb_buckets(art)
     kb_expr = _band_kb_longs(F.col("k1"), F.col("k2"), kb_buckets)
@@ -716,7 +748,7 @@ def minhash_incr_pairs(spark, art, batch_sig_path):
     "dedup_minhash_incremental",
     oracle=H.minhash_incr_oracle_sql(
         f"{_md5_hex64_sql('mhinc:')} % 100 >= 90", 0.5,
-        f"{_ANN_ROOT}/mhlsh-incr-current/sig/is_base=true/*.parquet"),
+        f"{cache.ROOT}/mhlsh-incr-current/sig/is_base=true/*.parquet"),
 )
 def q_dedup_minhash_incremental(spark, sf_dir):
     """INCREMENTAL MinHash-LSH — the fuzzy member of the incremental
@@ -741,9 +773,6 @@ def q_dedup_minhash_incremental(spark, sf_dir):
     generation, and the agreement estimate exactly — component
     agreement / 16 is a dyadic rational, so the estimate is
     bit-identical cross-engine."""
-    import json
-    import os
-
     from ..ann import index as ann_index
 
     d = Catalog(spark, sf_dir).table("documents")
@@ -756,38 +785,9 @@ def q_dedup_minhash_incremental(spark, sf_dir):
         "doc_id", (bucket < 90).alias("is_base"),
         H.minhash_sig_py(3)(F.col("text")).alias("sig"),
     )
-    art = cache.path("mhlsh-incr", "v2",
-                     cache.fingerprint(sf_dir, ("documents",)))
-    # ONE combined signature write, hive-partitioned by is_base (r15,
-    # r14 VERDICT #1 — was TWO stage-and-swap writes, base and batch,
-    # each re-running its slice of the minhash pass and paying its own
-    # job + commit + swap): base sigs live at sig/is_base=true (the
-    # oracle glob), staged batch sigs at sig/is_base=false. Signatures
-    # land on disk and are read back — computed once, shared by band
-    # explode + both est-join sides, and NOTHING stays pinned in
-    # executor storage after the query (a .persist() here leaked one
-    # cached signature frame per bench/gate pass — r12 ADVICE). The
-    # batch side is scratch, not index: it is not part of the oracle
-    # contract (the oracle recomputes batch sigs in SQL).
-    ann_index.write_artifact(sig_all, os.path.join(art, "sig"),
-                             partition_by="is_base")
-    # PRE-EXPLODED band index (r12): written ONCE with the base from
-    # the just-persisted sig parquet (no second minhash pass), so every
-    # later ingest streams it map-side instead of re-exploding and
-    # shuffling the base per batch — the difference between O(batch)
-    # and O(corpus) ingest at 100 TB. Bucket count adapts to the base
-    # size (footer rows, no job) and is staged into the artifact as
-    # _kb_meta.json for the ingest probe (r15, r14 VERDICT #1).
-    base_sig_dir = minhash_base_sig_path(art)
-    buckets = _kb_buckets_for_rows(
-        _parquet_dir_rows(base_sig_dir) * H.MINHASH_BANDS)
-    base_rb = spark.read.parquet(base_sig_dir)
-    ann_index.write_artifact(
-        _band_explode(base_rb)
-        .withColumn("kb", _band_kb_longs(F.col("k1"), F.col("k2"), buckets))
-        .repartition(buckets, F.col("kb")),
-        os.path.join(art, "bands"), partition_by="kb",
-        extra_files={_KB_META_NAME: json.dumps({"kb_buckets": buckets})})
+    art, _ = cache.build(
+        "mhlsh-incr", "v3", cache.fingerprint(sf_dir, ("documents",)),
+        lambda b: _write_sig_bands(spark, b, sig_all))
     ann_index.point_current("mhlsh-incr", art)
     return minhash_incr_pairs(spark, art, minhash_batch_sig_path(art))
 
@@ -969,10 +969,10 @@ _IVF_FIT_CAP = 4096
 _IVF_REPLAY_ORACLE = f"""
     WITH a AS (
       SELECT vec_id, centroid
-      FROM read_parquet('{_ANN_ROOT}/ivf-current/assign/*.parquet')
+      FROM read_parquet('{cache.ROOT}/ivf-current/assign/*.parquet')
     ), p AS (
       SELECT q_id, centroid
-      FROM read_parquet('{_ANN_ROOT}/ivf-current/probes/*.parquet')
+      FROM read_parquet('{cache.ROOT}/ivf-current/probes/*.parquet')
     ), cand AS (
       SELECT p.q_id, a.vec_id
       FROM p JOIN a USING (centroid)
@@ -1893,7 +1893,7 @@ def exact_incr_new(spark, art, batch_path):
       WHERE {_md5_hex64_sql('split:')} % 100 >= 90
     ), base AS (
       SELECT h
-      FROM read_parquet('{_ANN_ROOT}/exact-incr-current/hashes/*.parquet')
+      FROM read_parquet('{cache.ROOT}/exact-incr-current/hashes/*.parquet')
     )
     SELECT min(b.doc_id) AS doc_id, b.h AS text_hash
     FROM batch b
@@ -1933,17 +1933,19 @@ def q_dedup_incremental(spark, sf_dir):
         "doc_id", F.sha2(F.col("text"), 256).alias("h"),
         (bucket < 90).alias("is_existing"),
     )
-    art = cache.path("exact-incr", "v2",
-                     cache.fingerprint(sf_dir, ("documents",)))
-    ann_index.write_artifact(
-        tagged.filter(F.col("is_existing")).select("doc_id", "h"),
-        os.path.join(art, "hashes"))
-    # batch hashes are scratch, not index (the oracle recomputes them
-    # in SQL) — staged to parquet so the ingest path is the same code a
-    # production batch-from-disk runs and the footer count gates it
-    ann_index.write_artifact(
-        tagged.filter(~F.col("is_existing")).select("doc_id", "h"),
-        os.path.join(art, "batch"))
+
+    def build(b):
+        (tagged.filter(F.col("is_existing")).select("doc_id", "h")
+         .write.parquet(os.path.join(b, "hashes")))
+        # batch hashes are scratch, not index (the oracle recomputes
+        # them in SQL) — staged to parquet so the ingest path is the
+        # same code a production batch-from-disk runs and the footer
+        # count gates it
+        (tagged.filter(~F.col("is_existing")).select("doc_id", "h")
+         .write.parquet(os.path.join(b, "batch")))
+
+    art, _ = cache.build(
+        "exact-incr", "v3", cache.fingerprint(sf_dir, ("documents",)), build)
     ann_index.point_current("exact-incr", art)
     return exact_incr_new(spark, art, os.path.join(art, "batch"))
 
@@ -2222,10 +2224,10 @@ def clusters_incr_update(spark, art, batch_sig_path=None):
     oracle=f"""
     WITH RECURSIVE {H.minhash_incr_pairs_ctes(
         _CLINC_PRED, 0.5,
-        f"{_ANN_ROOT}/clinc-incr-current/sig/is_base=true/*.parquet")},
+        f"{cache.ROOT}/clinc-incr-current/sig/is_base=true/*.parquet")},
     base_lbl AS (
       SELECT doc_id, cluster_id
-      FROM read_parquet('{_ANN_ROOT}/clinc-incr-current/labels/*.parquet')
+      FROM read_parquet('{cache.ROOT}/clinc-incr-current/labels/*.parquet')
     ),
     ce AS (
       SELECT p.doc_new AS a, coalesce(bl.cluster_id, p.doc_match) AS b
@@ -2272,7 +2274,6 @@ def q_dedup_clusters_incremental(spark, sf_dir):
     minhash_incr_oracle_sql machinery via its shared CTE chain), reads
     base labels from the persisted labels artifact, and replays the
     contraction + label merge with a recursive CTE."""
-    import json
     import os
 
     from ..ann import index as ann_index
@@ -2283,75 +2284,62 @@ def q_dedup_clusters_incremental(spark, sf_dir):
         "doc_id", (_clinc_bucket(F.col("doc_id")) < 90).alias("is_base"),
         H.minhash_sig_py(3)(F.col("text")).alias("sig"),
     )
-    art = cache.path("clinc-incr", "v2",
-                     cache.fingerprint(sf_dir, ("documents",)))
-    # ONE combined is_base-partitioned signature write + size-adaptive
-    # band-index bucket count with the staged _kb_meta.json sidecar —
-    # the r15 layout, see q_dedup_minhash_incremental for the full
-    # rationale (this builder mirrors it under the 'clinc:' split)
-    ann_index.write_artifact(sig_all, os.path.join(art, "sig"),
-                             partition_by="is_base")
-    base_sig_dir = minhash_base_sig_path(art)
-    buckets = _kb_buckets_for_rows(
-        _parquet_dir_rows(base_sig_dir) * H.MINHASH_BANDS)
-    base_rb = spark.read.parquet(base_sig_dir)
-    ann_index.write_artifact(
-        _band_explode(base_rb)
-        .withColumn("kb", _band_kb_longs(F.col("k1"), F.col("k2"), buckets))
-        .repartition(buckets, F.col("kb")),
-        os.path.join(art, "bands"), partition_by="kb",
-        extra_files={_KB_META_NAME: json.dumps({"kb_buckets": buckets})})
 
-    # base-vs-base pairs from the just-persisted band index (band
-    # equi-join, est verify — the dedup_minhash_lsh shape over the
-    # artifact), then min-label components -> the labels artifact
-    bands_b = spark.read.parquet(os.path.join(art, "bands"))
-    cand = (
-        bands_b.alias("a")
-        .join(bands_b.alias("b"),
-              (F.col("a.band") == F.col("b.band"))
-              & (F.col("a.k1") == F.col("b.k1"))
-              & (F.col("a.k2") == F.col("b.k2"))
-              & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = base_rb.select(F.col("doc_id").alias("__da"),
-                        F.col("sig").alias("sig_a"))
-    sb = base_rb.select(F.col("doc_id").alias("__db"),
-                        F.col("sig").alias("sig_b"))
-    est = H.minhash_est_jaccard(F.col("sig_a"), F.col("sig_b"))
-    # checkpoint the verified pair frame ONCE — the symmetric-edge
-    # union references it twice, and the band self-join + estimate
-    # verify is the expensive half of the base build (r13 second
-    # review; same discipline as the ingest side)
-    base_pairs = (
-        cand.join(sa, F.col("doc_a") == F.col("__da"))
-        .join(sb, F.col("doc_b") == F.col("__db"))
-        .filter(est >= 0.5)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    base_edges = (
-        base_pairs.select(F.col("doc_a").alias("s"),
-                          F.col("doc_b").alias("d"))
-        .union(base_pairs.select(F.col("doc_b").alias("s"),
-                                 F.col("doc_a").alias("d")))
-        .localCheckpoint(eager=True)
-    )
-    release_plan_checkpoints(base_pairs)
-    base_lbl, converged = min_label_components(base_edges)
-    release_plan_checkpoints(base_edges)
-    if not converged:
-        raise RuntimeError(
-            "dedup_clusters_incremental: base label propagation did not "
-            "converge in 50 rounds — an invariant broke")
-    ann_index.write_artifact(
-        base_lbl.select(F.col("n").alias("doc_id"),
-                        F.col("lbl").alias("cluster_id")),
-        os.path.join(art, "labels"))
-    release_plan_checkpoints(base_lbl)
+    def build(b):
+        _write_sig_bands(spark, b, sig_all)
+        # base-vs-base pairs from the just-persisted band index (band
+        # equi-join, est verify — the dedup_minhash_lsh shape over the
+        # artifact), then min-label components -> the labels artifact
+        base_rb = spark.read.parquet(minhash_base_sig_path(b))
+        bands_b = spark.read.parquet(os.path.join(b, "bands"))
+        cand = (
+            bands_b.alias("a")
+            .join(bands_b.alias("b"),
+                  (F.col("a.band") == F.col("b.band"))
+                  & (F.col("a.k1") == F.col("b.k1"))
+                  & (F.col("a.k2") == F.col("b.k2"))
+                  & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
+            .distinct()
+        )
+        sa = base_rb.select(F.col("doc_id").alias("__da"),
+                            F.col("sig").alias("sig_a"))
+        sb = base_rb.select(F.col("doc_id").alias("__db"),
+                            F.col("sig").alias("sig_b"))
+        est = H.minhash_est_jaccard(F.col("sig_a"), F.col("sig_b"))
+        # checkpoint the verified pair frame ONCE — the symmetric-edge
+        # union references it twice, and the band self-join + estimate
+        # verify is the expensive half of the base build (r13 second
+        # review; same discipline as the ingest side)
+        base_pairs = (
+            cand.join(sa, F.col("doc_a") == F.col("__da"))
+            .join(sb, F.col("doc_b") == F.col("__db"))
+            .filter(est >= 0.5)
+            .select("doc_a", "doc_b")
+            .localCheckpoint(eager=True)
+        )
+        base_edges = (
+            base_pairs.select(F.col("doc_a").alias("s"),
+                              F.col("doc_b").alias("d"))
+            .union(base_pairs.select(F.col("doc_b").alias("s"),
+                                     F.col("doc_a").alias("d")))
+            .localCheckpoint(eager=True)
+        )
+        release_plan_checkpoints(base_pairs)
+        base_lbl, converged = min_label_components(base_edges)
+        release_plan_checkpoints(base_edges)
+        if not converged:
+            raise RuntimeError(
+                "dedup_clusters_incremental: base label propagation did "
+                "not converge in 50 rounds — an invariant broke")
+        (base_lbl.select(F.col("n").alias("doc_id"),
+                         F.col("lbl").alias("cluster_id"))
+         .write.parquet(os.path.join(b, "labels")))
+        release_plan_checkpoints(base_lbl)
+
+    art, _ = cache.build(
+        "clinc-incr", "v3", cache.fingerprint(sf_dir, ("documents",)), build)
     ann_index.point_current("clinc-incr", art)
     return clusters_incr_update(spark, art)
 
@@ -2793,7 +2781,7 @@ def _mmr_candidates(spark, sf_dir):
 # DuckDB replay of the persisted ADC scan (VERDICT r9 #5: rows-only ->
 # value-hash). The oracle reads the engine's OWN persisted artifacts —
 # codes table + per-query ADC weight tables — through the
-# ANN_ROOT/<kind>-current symlink (the Spark side always runs first in
+# cache.ROOT/<kind>-current symlink (the Spark side always runs first in
 # the gate and re-points it), and replays the identical arithmetic:
 # adc = left-assoc fold of w[q, sub, codes[vec][sub]] from a 0.0 seed
 # (list_reduce with a prepended 0.0 == numpy's out = 0; out += w[mi]),
@@ -2803,18 +2791,18 @@ def _mmr_candidates(spark, sf_dir):
 # recall pytests; this gate value-checks the whole QUERY path — scan,
 # candidate selection, rerank, ordering — the dedup_embedding
 # "oracle replays the approximation" precedent applied to artifacts.
-# the oracle paths are f-strings over the artifact store's ROOT
-# (ann.index.ANN_ROOT), rendered at import; the store resolves ROOT once
-# at import too, so engine writes and oracle reads share one root
+# the oracle paths are f-strings over the artifact store's ROOT,
+# rendered at import; the store resolves ROOT once at import too, so
+# engine writes and oracle reads share one root
 _PQ_REPLAY_ORACLE = f"""
     WITH wt AS (
       SELECT q_id, sub, code, w
-      FROM read_parquet('{_ANN_ROOT}/pq-current/adc_w/*.parquet')
+      FROM read_parquet('{cache.ROOT}/pq-current/adc_w/*.parquet')
     ), scored AS (
       SELECT wt.q_id, c.vec_id,
              list_reduce(list_prepend(0.0, list(wt.w ORDER BY wt.sub)),
                          (a, x) -> a + x) AS adc
-      FROM read_parquet('{_ANN_ROOT}/pq-current/codes/*.parquet') c
+      FROM read_parquet('{cache.ROOT}/pq-current/codes/*.parquet') c
       JOIN wt ON wt.code = c.codes[wt.sub + 1]
       WHERE c.vec_id != wt.q_id
       GROUP BY wt.q_id, c.vec_id
@@ -2842,7 +2830,7 @@ _PQ_REPLAY_ORACLE = f"""
 
 
 def _ivfpq_replay_oracle(kind: str) -> str:
-    root = f"{_ANN_ROOT}/{kind}-current"
+    root = f"{cache.ROOT}/{kind}-current"
     return f"""
     WITH wt AS (
       SELECT q_id, sub, code, w
@@ -3434,7 +3422,7 @@ _PAGERANK_REPLAY_ORACLE = f"""
     SELECT custkey, rank FROM (
       SELECT n AS custkey, round(r, 6) AS rank,
              row_number() OVER (ORDER BY r DESC, n ASC) AS rn
-      FROM read_parquet('{_ANN_ROOT}/pagerank-current/ranks/*.parquet')
+      FROM read_parquet('{cache.ROOT}/pagerank-current/ranks/*.parquet')
     ) WHERE rn <= 20
     ORDER BY rank DESC, custkey ASC
     """
@@ -3462,11 +3450,14 @@ def q_graph_pagerank(spark, sf_dir):
     from ..ann import index as ann_index
     from ..operators.windows import release_plan_checkpoints
 
-    ranks = pagerank_ranks(spark, sf_dir)
-    d = cache.path("pagerank", "v2",
-                   cache.fingerprint(sf_dir, ("orders", "lineitem")))
-    ann_index.write_artifact(ranks, os.path.join(d, "ranks"))
-    release_plan_checkpoints(ranks)
+    def build(b):
+        ranks = pagerank_ranks(spark, sf_dir)
+        ranks.write.parquet(os.path.join(b, "ranks"))
+        release_plan_checkpoints(ranks)
+
+    d, _ = cache.build(
+        "pagerank", "v3", cache.fingerprint(sf_dir, ("orders", "lineitem")),
+        build)
     ann_index.point_current("pagerank", d)
     persisted = spark.read.parquet(os.path.join(d, "ranks"))
     return (
@@ -3627,7 +3618,7 @@ _SEMDEDUP_REPLAY_ORACLE = f"""
     WITH RECURSIVE
     a AS (
       SELECT vec_id, cell, sub, prio
-      FROM read_parquet('{_ANN_ROOT}/semdedup-current/assign/*.parquet')
+      FROM read_parquet('{cache.ROOT}/semdedup-current/assign/*.parquet')
     ), nv AS (
       SELECT vec_id, list_transform(vd, x -> x / nrm) AS nv
       FROM (
@@ -3715,53 +3706,17 @@ def q_semdedup_kmeans(spark, sf_dir):
     bit-exactly (_SEMDEDUP_REPLAY_ORACLE above); the seeded centroid
     fit stays pinned by the independent-greedy-twin, planted-duplicate,
     and layout-independence pytests."""
+    import os
+
     import numpy as np
     import pandas as pd
 
+    from ..ann import index as ann_index
     from ..functions import semdedup as sd
 
     e = Catalog(spark, sf_dir).table("embeddings")
-    # RAW float32 embeddings reach the Arrow tag pass; normalization
-    # happens IN-KERNEL with the sequential fold (r15 — the
-    # semdedup_incremental discipline applied to the batch variant: the
-    # JVM higher-order normalize per corpus row disappears and the
-    # Arrow transfer width halves; bit-identical doubles, see
-    # vectors.l2_normalize_np_seq)
     n = parquet_num_rows(sf_dir, "embeddings")  # footer read, no Spark job
     k = sd.k_schedule(n)
-
-    # memo key is the corpus CONTENT fingerprint, not (path, rowcount):
-    # a corpus regenerated in-process at the same path with the same row
-    # count must refit
-    def fit():
-        fit_df = e.select("embedding")
-        cap = min(n, max(8 * k, 4096), sd.FIT_CAP)
-        if n > cap:
-            fit_df = fit_df.sample(fraction=min(1.0, 1.1 * cap / n),
-                                   seed=11).limit(cap)
-        # Arrow toPandas, not collect(): same rows in the same driver
-        # order, minus the pickled-Row tax (16.8 s for 22k vectors at
-        # sf10 — r12 profile of the incremental sibling)
-        sample = V.l2_normalize_np_seq(
-            np.stack(fit_df.toPandas()["embedding"].to_numpy()))
-        return sd.fit_centroids(sample, k=min(k, len(sample)), seed=11)
-
-    cents = cache.memo(
-        "semdedup-cents", cache.fingerprint(sf_dir, ("embeddings",)), fit)
-
-    def tag(batches):
-        for pdf in batches:
-            mat = V.l2_normalize_np_seq(
-                np.stack(pdf["embedding"].to_numpy()))
-            cell, cdot = sd.assign_cells(mat, cents)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"], "cell": cell, "cdot": cdot,
-                "nv": list(mat),
-            })
-
-    tagged = e.select("vec_id", "embedding").mapInPandas(
-        tag, schema="vec_id long, cell int, cdot double, nv array<double>"
-    )
 
     def prune(pdf):
         # group row order is layout-dependent — sort before anything
@@ -3777,25 +3732,54 @@ def q_semdedup_kmeans(spark, sf_dir):
             "keep": keep, "dup_of": pd.array(dup_of, dtype="Int64"),
         }).assign(dup_of=lambda d: d["dup_of"].mask(d["dup_of"] < 0))
 
-    pruned = tagged.groupBy("cell").applyInPandas(
-        prune,
-        schema="vec_id long, cell int, sub int, prio double, "
-               "keep boolean, dup_of long",
-    )
-    # Persist the assignment record + decisions ONCE and read the result
-    # back (the pagerank artifact discipline — a single execution of the
-    # prune pass feeds both the gate artifact and the returned frame).
-    # The replay oracle reads ONLY (vec_id, cell, sub, prio) and
-    # re-derives keep/dup_of with its own recursive greedy — the
-    # decision columns in the artifact are the engine's output, never
-    # the oracle's input (see _SEMDEDUP_REPLAY_ORACLE above).
-    import os
+    def build(b):
+        fit_df = e.select("embedding")
+        cap = min(n, max(8 * k, 4096), sd.FIT_CAP)
+        if n > cap:
+            fit_df = fit_df.sample(fraction=min(1.0, 1.1 * cap / n),
+                                   seed=11).limit(cap)
+        # Arrow toPandas, not collect(): same rows in the same driver
+        # order, minus the pickled-Row tax (16.8 s for 22k vectors at
+        # sf10 — r12 profile of the incremental sibling)
+        sample = V.l2_normalize_np_seq(
+            np.stack(fit_df.toPandas()["embedding"].to_numpy()))
+        cents = sd.fit_centroids(sample, k=min(k, len(sample)), seed=11)
 
-    from ..ann import index as ann_index
+        def tag(batches):
+            for pdf in batches:
+                mat = V.l2_normalize_np_seq(
+                    np.stack(pdf["embedding"].to_numpy()))
+                cell, cdot = sd.assign_cells(mat, cents)
+                yield pd.DataFrame({
+                    "vec_id": pdf["vec_id"], "cell": cell, "cdot": cdot,
+                    "nv": list(mat),
+                })
 
-    d = cache.path("semdedup", "v2",
-                   cache.fingerprint(sf_dir, ("embeddings",)))
-    ann_index.write_artifact(pruned, os.path.join(d, "assign"))
+        # RAW float32 embeddings reach the Arrow tag pass; normalization
+        # happens IN-KERNEL with the sequential fold (r15 — the
+        # semdedup_incremental discipline applied to the batch variant:
+        # the JVM higher-order normalize per corpus row disappears and
+        # the Arrow transfer width halves; bit-identical doubles, see
+        # vectors.l2_normalize_np_seq). The assignment record + decisions
+        # persist ONCE and the result is read back (a single execution
+        # of the prune pass feeds both the gate artifact and the
+        # returned frame). The replay oracle reads ONLY (vec_id, cell,
+        # sub, prio) and re-derives keep/dup_of with its own recursive
+        # greedy — the decision columns in the artifact are the
+        # engine's output, never the oracle's input.
+        (
+            e.select("vec_id", "embedding")
+            .mapInPandas(tag, schema="vec_id long, cell int, cdot double, "
+                                     "nv array<double>")
+            .groupBy("cell")
+            .applyInPandas(prune,
+                           schema="vec_id long, cell int, sub int, "
+                                  "prio double, keep boolean, dup_of long")
+            .write.parquet(os.path.join(b, "assign"))
+        )
+
+    d, _ = cache.build(
+        "semdedup", "v3", cache.fingerprint(sf_dir, ("embeddings",)), build)
     ann_index.point_current("semdedup", d)
     return (
         spark.read.parquet(os.path.join(d, "assign"))
@@ -3886,10 +3870,10 @@ _SEMDEDUP_INCR_REPLAY_ORACLE = f"""
     WITH RECURSIVE
     b AS (
       SELECT vec_id, cell, sub, prio, keep
-      FROM read_parquet('{_ANN_ROOT}/semdedup-incr-current/base/*.parquet')
+      FROM read_parquet('{cache.ROOT}/semdedup-incr-current/base/*.parquet')
     ), q AS (
       SELECT vec_id, cell, prio
-      FROM read_parquet('{_ANN_ROOT}/semdedup-incr-current/batch/*.parquet')
+      FROM read_parquet('{cache.ROOT}/semdedup-incr-current/batch/*.parquet')
     ), nv AS (
       SELECT vec_id, list_transform(vd, x -> x / nrm) AS nv
       FROM (
@@ -4006,43 +3990,6 @@ def q_semdedup_incremental(spark, sf_dir):
     n = parquet_num_rows(sf_dir, "embeddings")  # footer read, no Spark job
     n_base = max(1, (n * 9) // 10)  # deterministic k-schedule estimate
 
-    # content-fingerprint memo key — see q_semdedup_kmeans
-    def fit():
-        k = sd.k_schedule(n_base)
-        fit_df = raw.filter(F.col("is_base")).select("embedding")
-        cap = min(n_base, max(8 * k, 4096), sd.FIT_CAP)
-        if n_base > cap:
-            fit_df = fit_df.sample(fraction=min(1.0, 1.1 * cap / n_base),
-                                   seed=11).limit(cap)
-        # Arrow toPandas, not collect(): the pickled-Row path through
-        # the limit's single partition cost 16.8 s for 22k vectors at
-        # sf10 (r12 profile); same rows, same driver order
-        sample = V.l2_normalize_np_seq(
-            np.stack(fit_df.toPandas()["embedding"].to_numpy()))
-        return sd.fit_centroids(sample, k=min(k, len(sample)), seed=11)
-
-    cents = cache.memo(
-        "semdedup-incr-cents", cache.fingerprint(sf_dir, ("embeddings",)), fit)
-
-    def tag(batches):
-        for pdf in batches:
-            mat = V.l2_normalize_np_seq(
-                np.stack(pdf["embedding"].to_numpy()))
-            cell, cdot = sd.assign_cells(mat, cents)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"], "cell": cell, "cdot": cdot,
-                "nv": list(mat), "is_base": pdf["is_base"],
-            })
-
-    # persisted: the centroid-tag pass feeds BOTH the base-record write
-    # job and the batch cogroup job — without the cache it re-runs per
-    # job (r11 second review); released before return (the returned
-    # frame reads only the persisted artifacts)
-    tagged = raw.mapInPandas(
-        tag, schema="vec_id long, cell int, cdot double, "
-                    "nv array<double>, is_base boolean"
-    ).persist()
-
     def prune(pdf):
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         ids = pdf["vec_id"].to_numpy()
@@ -4055,54 +4002,84 @@ def q_semdedup_incremental(spark, sf_dir):
             "keep": keep, "nv": pdf["nv"],
         })
 
-    base_rec = (
-        tagged.filter(F.col("is_base"))
-        .groupBy("cell")
-        .applyInPandas(prune, schema="vec_id long, cell int, sub int, "
-                                     "prio double, keep boolean, "
-                                     "nv array<double>")
-    )
+    def build(b):
+        from concurrent.futures import ThreadPoolExecutor
 
-    d = cache.path("semdedup-incr", "v2",
-                   cache.fingerprint(sf_dir, ("embeddings",)))
-    # the base artifact IS the dedup index: per row it carries the
-    # greedy record (cell, sub, prio, keep) AND the normalized vector,
-    # so a later ingest never touches a base corpus row (r12 — the
-    # previous layout re-derived kept nv by joining the corpus per
-    # ingest, an O(corpus) join on the batch path). The oracle replay
-    # reads only the named record columns; nv is index payload.
-    #
-    # r15 (VERDICT #4): the base record materializes ONCE as a
-    # checkpoint shared by BOTH artifact writes — the
-    # batch cogroup keys off the checkpointed rows instead of
-    # re-reading the parquet the base write just committed, which
-    # removes the serial base-write -> batch-compute dependency, and
-    # the two stage-and-swap writes overlap in a 2-thread pool (guide
-    # §2.6 — the second job's tasks back-fill the first's commit tail).
-    # Rows are identical by construction: the checkpoint IS the bits
-    # the base artifact persists.
-    from concurrent.futures import ThreadPoolExecutor
+        from ..operators.windows import release_plan_checkpoints
 
-    from ..operators.windows import release_plan_checkpoints
+        k = sd.k_schedule(n_base)
+        fit_df = raw.filter(F.col("is_base")).select("embedding")
+        cap = min(n_base, max(8 * k, 4096), sd.FIT_CAP)
+        if n_base > cap:
+            fit_df = fit_df.sample(fraction=min(1.0, 1.1 * cap / n_base),
+                                   seed=11).limit(cap)
+        # Arrow toPandas, not collect(): the pickled-Row path through
+        # the limit's single partition cost 16.8 s for 22k vectors at
+        # sf10 (r12 profile); same rows, same driver order
+        sample = V.l2_normalize_np_seq(
+            np.stack(fit_df.toPandas()["embedding"].to_numpy()))
+        cents = sd.fit_centroids(sample, k=min(k, len(sample)), seed=11)
 
-    base_cp = base_rec.localCheckpoint(eager=True)
-    batch = (
-        tagged.filter(~F.col("is_base"))
-        .select("vec_id", "cell", F.col("cdot").alias("prio"), "nv")
-    )
-    batch_rec = semdedup_incr_batch_rec(spark, d, batch, kept_src=base_cp)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(ann_index.write_artifact, base_cp,
-                        os.path.join(d, "base")),
-            pool.submit(ann_index.write_artifact, batch_rec,
-                        os.path.join(d, "batch")),
-        ]
-        for f in futs:
-            f.result()
+        def tag(batches):
+            for pdf in batches:
+                mat = V.l2_normalize_np_seq(
+                    np.stack(pdf["embedding"].to_numpy()))
+                cell, cdot = sd.assign_cells(mat, cents)
+                yield pd.DataFrame({
+                    "vec_id": pdf["vec_id"], "cell": cell, "cdot": cdot,
+                    "nv": list(mat), "is_base": pdf["is_base"],
+                })
+
+        # persisted: the centroid-tag pass feeds BOTH the base-record
+        # write job and the batch cogroup job — without the cache it
+        # re-runs per job (r11 second review)
+        tagged = raw.mapInPandas(
+            tag, schema="vec_id long, cell int, cdot double, "
+                        "nv array<double>, is_base boolean"
+        ).persist()
+        # the base artifact IS the dedup index: per row it carries the
+        # greedy record (cell, sub, prio, keep) AND the normalized
+        # vector, so a later ingest never touches a base corpus row
+        # (r12 — the previous layout re-derived kept nv by joining the
+        # corpus per ingest, an O(corpus) join on the batch path). The
+        # oracle replay reads only the named record columns; nv is
+        # index payload.
+        #
+        # The base record materializes ONCE as a checkpoint shared by
+        # BOTH artifact writes — the batch cogroup keys off the
+        # checkpointed rows instead of re-reading the parquet the base
+        # write just committed, so the two writes overlap in a 2-thread
+        # pool (the second job's tasks back-fill the first's commit
+        # tail). Rows are identical by construction: the checkpoint IS
+        # the bits the base artifact persists.
+        base_cp = (
+            tagged.filter(F.col("is_base"))
+            .groupBy("cell")
+            .applyInPandas(prune, schema="vec_id long, cell int, sub int, "
+                                         "prio double, keep boolean, "
+                                         "nv array<double>")
+            .localCheckpoint(eager=True)
+        )
+        batch = (
+            tagged.filter(~F.col("is_base"))
+            .select("vec_id", "cell", F.col("cdot").alias("prio"), "nv")
+        )
+        batch_rec = semdedup_incr_batch_rec(spark, b, batch, kept_src=base_cp)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [
+                pool.submit(base_cp.write.parquet, os.path.join(b, "base")),
+                pool.submit(batch_rec.write.parquet,
+                            os.path.join(b, "batch")),
+            ]
+            for f in futs:
+                f.result()
+        tagged.unpersist()
+        release_plan_checkpoints(base_cp)
+
+    d, _ = cache.build(
+        "semdedup-incr", "v3", cache.fingerprint(sf_dir, ("embeddings",)),
+        build)
     ann_index.point_current("semdedup-incr", d)
-    tagged.unpersist()
-    release_plan_checkpoints(base_cp)
     return (
         spark.read.parquet(os.path.join(d, "batch"))
         .select("vec_id", "cell", "keep", "dup_of")
@@ -4120,7 +4097,7 @@ def q_semdedup_incremental(spark, sf_dir):
 _PCA_REPLAY_ORACLE = f"""
     WITH comp AS (
       SELECT c, dim, mean, w
-      FROM read_parquet('{_ANN_ROOT}/pca-current/components/*.parquet')
+      FROM read_parquet('{cache.ROOT}/pca-current/components/*.parquet')
     ), terms AS (
       SELECT e.vec_id, comp.c,
              list_reduce(

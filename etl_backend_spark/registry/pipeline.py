@@ -15,7 +15,6 @@ import os
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..ann.index import ANN_ROOT as _ANN_ROOT
 from ..functions import text as T
 from ..sources import cache
 from ..sources.catalog import Catalog
@@ -1506,7 +1505,7 @@ _BPE_REPLAY_ORACLE = f"""
     WITH RECURSIVE
     m AS (
       SELECT rank, a, b
-      FROM read_parquet('{_ANN_ROOT}/bpe-current/merges/*.parquet')
+      FROM read_parquet('{cache.ROOT}/bpe-current/merges/*.parquet')
     ),
     nm AS (SELECT coalesce(max(rank), 0) AS n FROM m),
     w0 AS (
@@ -1578,14 +1577,15 @@ def q_tokenize_bpe(spark, sf_dir):
     merges = cache.memo("bpe", fp, lambda: bpe.train_merges(
         bpe.word_freq_table(d), n_merges=32))
 
-    art = cache.path("bpe", "v2", fp)
-    ann_index._write_small_parquet(
-        os.path.join(art, "merges"),
-        pd.DataFrame({
-            "rank": range(1, len(merges) + 1),
-            "a": [a for a, _ in merges],
-            "b": [b for _, b in merges],
-        }))
+    art, _ = cache.build(
+        "bpe", "v3", fp,
+        lambda out: ann_index._write_small_parquet(
+            os.path.join(out, "merges"),
+            pd.DataFrame({
+                "rank": range(1, len(merges) + 1),
+                "a": [a for a, _ in merges],
+                "b": [b for _, b in merges],
+            })))
     ann_index.point_current("bpe", art)
 
     words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
@@ -1641,12 +1641,12 @@ _UNIGRAM_REPLAY_ORACLE = f"""
             SELECT coalesce(
               (SELECT v.lp
                FROM read_parquet(
-                 '{_ANN_ROOT}/unigram-current/vocab/*.parquet') v
+                 '{cache.ROOT}/unigram-current/vocab/*.parquet') v
                WHERE v.piece = substring(wk.w, wk.i + 2 - g.l, g.l)),
               CASE WHEN g.l = 1 THEN
                 (SELECT min(lp) - 10.0
                  FROM read_parquet(
-                   '{_ANN_ROOT}/unigram-current/vocab/*.parquet'))
+                   '{cache.ROOT}/unigram-current/vocab/*.parquet'))
               END) AS lp
           ) c2
           WHERE g.l <= wk.i + 1
@@ -1703,10 +1703,11 @@ def q_tokenize_unigram(spark, sf_dir):
     logp = cache.memo("unigram", fp, lambda: unigram.train_unigram(
         bpe.word_freq_table(d)))
 
-    art = cache.path("unigram", "v2", fp)
-    ann_index._write_small_parquet(
-        os.path.join(art, "vocab"),
-        pd.DataFrame({"piece": list(logp), "lp": list(logp.values())}))
+    art, _ = cache.build(
+        "unigram", "v3", fp,
+        lambda out: ann_index._write_small_parquet(
+            os.path.join(out, "vocab"),
+            pd.DataFrame({"piece": list(logp), "lp": list(logp.values())})))
     ann_index.point_current("unigram", art)
 
     words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
@@ -1786,7 +1787,7 @@ def qlr_features(spark, sf_dir):
 _QLR_REPLAY_ORACLE = f"""
     WITH wt AS (
       SELECT w1, w2, w3, w4, b
-      FROM read_parquet('{_ANN_ROOT}/qlr-current/weights/*.parquet')
+      FROM read_parquet('{cache.ROOT}/qlr-current/weights/*.parquet')
     ), t AS (
       SELECT doc_id, coalesce(text, '') AS text,
              string_split_regex(lower(trim(coalesce(text, ''))), '\\s+')
@@ -1856,30 +1857,35 @@ def q_quality_classifier_lr(spark, sf_dir):
     making the arithmetic order cross-engine-deterministic."""
     import os
 
+    import pandas as pd
+
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import VectorAssembler
 
     from ..ann import index as ann_index
 
     feats = qlr_features(spark, sf_dir)
-    asm = VectorAssembler(
-        inputCols=["f_nwords", "f_wordlen", "f_symbols", "f_stop"],
-        outputCol="features",
-    )
-    vec = asm.transform(feats)
-    # 20 LBFGS iterations: rule labels are linearly separable in these
-    # features, and held-out agreement is already saturated well before
-    # 20 (pytest bar 0.95 holds); 50 bought nothing but fit time
-    lr = LogisticRegression(maxIter=20, regParam=0.0, standardization=True)
-    model = lr.fit(vec.filter(F.col("split") == "train"))
-    w = [float(x) for x in model.coefficients]
-    d = cache.path("qlr", "v2", cache.fingerprint(sf_dir, ("documents",)))
-    ann_index.write_artifact(
-        spark.createDataFrame(
-            [(w[0], w[1], w[2], w[3], float(model.intercept))],
-            "w1 double, w2 double, w3 double, w4 double, b double",
-        ).coalesce(1),
-        os.path.join(d, "weights"))
+
+    def build(b):
+        asm = VectorAssembler(
+            inputCols=["f_nwords", "f_wordlen", "f_symbols", "f_stop"],
+            outputCol="features",
+        )
+        # 20 LBFGS iterations: rule labels are linearly separable in
+        # these features, and held-out agreement is already saturated
+        # well before 20 (pytest bar 0.95 holds); 50 bought nothing but
+        # fit time
+        lr = LogisticRegression(maxIter=20, regParam=0.0,
+                                standardization=True)
+        model = lr.fit(asm.transform(feats).filter(F.col("split") == "train"))
+        w = [float(x) for x in model.coefficients]
+        ann_index._write_small_parquet(
+            os.path.join(b, "weights"),
+            pd.DataFrame({"w1": [w[0]], "w2": [w[1]], "w3": [w[2]],
+                          "w4": [w[3]], "b": [float(model.intercept)]}))
+
+    d, _ = cache.build(
+        "qlr", "v3", cache.fingerprint(sf_dir, ("documents",)), build)
     ann_index.point_current("qlr", d)
     wt = spark.read.parquet(os.path.join(d, "weights"))
     margin = (

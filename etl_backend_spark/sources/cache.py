@@ -14,9 +14,14 @@ built once per source content and found again by the same key.
   directory and ``os.rename``s it into place. An existing directory is
   therefore always complete: a crashed build leaves only its private
   copy, which is removed. When two builders race, the loser discards its
-  copy (content is deterministic, so either copy is correct).
+  copy (content is deterministic, so either copy is correct). Every
+  build-once record goes through ``build``: layouts, indexes, fitted
+  models and the decision records the DuckDB oracles replay through a
+  ``<kind>-current`` link (``ann.index.point_current``). The one write
+  into a published directory is the per-query ``adc_w``/``probes``
+  tables of the persisted PQ and IVF-PQ index queries.
 - **Memo:** ``memo(kind, fp, fn)`` keeps a driver-side value (fitted
-  codebooks, centroids, vocabularies) per key for the life of the
+  codebooks, vocabularies) per key for the life of the
   process.
 """
 

@@ -114,7 +114,10 @@ def test_crashed_build_publishes_nothing(monkeypatch, tmp_path):
     no published layout at all: the private build dir is discarded and the
     next caller rebuilds from scratch — a reader can never observe
     partitioned data without its _GRANULARITY. Also: a builder that loses
-    the publish race discards its own copy and the winner's stays."""
+    the publish race discards its own copy and the winner's stays, and a
+    failed build for a new fingerprint leaves the record that
+    ``<kind>-current`` points at intact."""
+    from etl_backend_spark.ann.index import point_current
     from etl_backend_spark.sources import cache
 
     monkeypatch.setattr(cache, "ROOT", str(tmp_path))
@@ -156,6 +159,18 @@ def test_crashed_build_publishes_nothing(monkeypatch, tmp_path):
     assert _events_granularity(out) == "day"
     assert [p for p in os.listdir(tmp_path) if "racetest" in p] == [
         os.path.basename(out)]
+
+    # a failed build for a new fingerprint leaves the record published
+    # for the previous one intact, and <kind>-current still serves it
+    a, _ = cache.build("restoretest", "v1", "a", good_build)
+    point_current("restoretest", a)
+    with pytest.raises(RuntimeError, match="killed between"):
+        cache.build("restoretest", "v1", "b", dying_build)
+    current = os.path.join(tmp_path, "restoretest-current")
+    assert os.path.realpath(current) == os.path.realpath(a)
+    assert os.listdir(current) == ["_GRANULARITY"]
+    assert _events_granularity(current) == "day"
+    assert not os.path.exists(cache.path("restoretest", "v1", "b"))
 
 
 def test_point_current_gc_spares_other_kinds(monkeypatch, tmp_path):

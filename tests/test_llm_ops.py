@@ -131,49 +131,6 @@ def test_cosine_zero_norm_clamps_to_minus_one_like_duckdb(spark):
     assert got[0] < got[3] < got[4]
 
 
-def test_write_artifact_restores_prior_artifact_on_persistent_failure(
-        spark, tmp_path, monkeypatch):
-    """r12 ADVICE: if every swap attempt fails for a persistent
-    (non-race) reason, write_artifact must leave the PREVIOUS good
-    artifact in place (the old finally-rmtree destroyed it, leaving the
-    -current symlink pointing at a dir missing the artifact for any
-    later oracle replay)."""
-    import os
-
-    from etl_backend_spark.ann import index as ann_index
-
-    dirpath = str(tmp_path / "art" / "sig")
-    os.makedirs(os.path.dirname(dirpath), exist_ok=True)
-    ann_index.write_artifact(
-        spark.createDataFrame([(1, "old")], ["id", "v"]), dirpath)
-    before = sorted(os.listdir(dirpath))
-    assert before  # parquet parts present
-
-    real_rename = os.rename
-
-    def failing_rename(src, dst):
-        if src.startswith(dirpath + ".stage"):
-            raise OSError("persistent: simulated EACCES on rename-in")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", failing_rename)
-    import pytest as _pytest
-    with _pytest.raises(OSError):
-        ann_index.write_artifact(
-            spark.createDataFrame([(2, "new")], ["id", "v"]), dirpath)
-    monkeypatch.undo()
-
-    # prior artifact restored, bit-for-bit same part listing, old row
-    assert os.path.isdir(dirpath)
-    assert sorted(os.listdir(dirpath)) == before
-    assert [tuple(r) for r in
-            spark.read.parquet(dirpath).collect()] == [(1, "old")]
-    # no stray trash/stage dirs leak next to the artifact
-    leftovers = [p for p in os.listdir(os.path.dirname(dirpath))
-                 if p != os.path.basename(dirpath)]
-    assert leftovers == [], leftovers
-
-
 def test_l2_normalize_unit_norm(cat):
     e = cat.table("embeddings").limit(20)
     norms = e.select(
@@ -1174,7 +1131,54 @@ def test_index_dir_rekeys_on_corpus_change(tmp_path, monkeypatch):
         os.path.realpath(d3)
 
     # per-user root (r11 ADVICE): no fixed world-writable shared path
-    assert str(os.getuid()) in ann_index.ANN_ROOT
+    assert str(os.getuid()) in cache.ROOT
+
+
+@pytest.mark.parametrize("key,kind", [
+    ("dedup_minhash_incremental", "mhlsh-incr"),
+    ("dedup_incremental", "exact-incr"),
+    ("dedup_clusters_incremental", "clinc-incr"),
+    ("graph_pagerank", "pagerank"),
+    ("semdedup_kmeans", "semdedup"),
+    ("semdedup_incremental", "semdedup-incr"),
+    ("recsys_als", "als"),
+    ("quality_classifier_lr", "qlr"),
+    ("tokenize_bpe", "bpe"),
+    ("tokenize_unigram", "unigram"),
+])
+def test_second_call_reuses_published_record(spark, monkeypatch, key, kind):
+    """A persisted record is keyed on its source fingerprint, so it is
+    built once: the second call of its query finds it published
+    (``cache.build`` returns built=False for its kind) and leaves every
+    file and directory of it as it was."""
+    import os
+
+    from etl_backend_spark.registry import QUERIES
+    from etl_backend_spark.sources import cache
+    from tests.conftest import SF_DIR
+
+    def listing(d):
+        return sorted(
+            (os.path.relpath(os.path.join(dp, n), d),
+             os.stat(os.path.join(dp, n)).st_mtime_ns)
+            for dp, dns, fns in os.walk(d) for n in dns + fns)
+
+    QUERIES[key](spark, SF_DIR).collect()
+    published = os.path.realpath(os.path.join(cache.ROOT, f"{kind}-current"))
+    before = listing(published)
+
+    calls = []
+    real_build = cache.build
+
+    def spy(k, *args):
+        out = real_build(k, *args)
+        calls.append((k, out[1]))
+        return out
+
+    monkeypatch.setattr(cache, "build", spy)
+    QUERIES[key](spark, SF_DIR).collect()
+    assert (kind, False) in calls and (kind, True) not in calls, calls
+    assert before and listing(published) == before
 
 
 def test_min_label_components_long_chain_converges_logarithmically(spark):
@@ -1575,16 +1579,22 @@ def test_semdedup_kmeans_matches_independent_greedy_twin(spark):
         assert got == expected and len(got) == n
 
 
-def test_semdedup_kmeans_partition_layout_independent(spark):
+def test_semdedup_kmeans_partition_layout_independent(spark, monkeypatch,
+                                                      tmp_path):
     """Output must not depend on the shuffle layout: the prune stage sorts
-    each cell group before its order-sensitive greedy pass."""
+    each cell group before its order-sensitive greedy pass. Each call
+    runs under its own fresh store root, so both calls build the record
+    instead of the second reading the first's."""
     from etl_backend_spark.registry import QUERIES
+    from etl_backend_spark.sources import cache
 
     sf = "/root/testdata/sf0.01"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setattr(cache, "ROOT", str(tmp_path / "a"))
     base = sorted(map(tuple, QUERIES["semdedup_kmeans"](spark, sf).collect()))
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
+        monkeypatch.setattr(cache, "ROOT", str(tmp_path / "b"))
         alt = sorted(map(tuple, QUERIES["semdedup_kmeans"](spark, sf).collect()))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -1607,9 +1617,9 @@ def test_semdedup_subsplit_path_replays_in_oracle(spark, tmp_path):
     import duckdb
     import numpy as np
 
-    from etl_backend_spark.ann.index import ANN_ROOT
     from etl_backend_spark.functions import semdedup as sd
     from etl_backend_spark.registry import ORACLES, QUERIES
+    from etl_backend_spark.sources import cache
 
     rng = np.random.RandomState(3)
     hot = rng.randn(64)
@@ -1622,7 +1632,7 @@ def test_semdedup_subsplit_path_replays_in_oracle(spark, tmp_path):
         "vec_id long, embedding array<float>, label string",
     ).write.parquet(str(d / "embeddings.parquet"))
 
-    # NOTE: this runs the registry builder against the global ANN_ROOT,
+    # NOTE: this runs the registry builder against the global cache.ROOT,
     # so semdedup-current now points at THIS corpus' artifacts and
     # point_current's GC reclaims prior dirs — fine under the engine-
     # runs-strictly-before-its-oracle protocol every consumer follows
@@ -1635,7 +1645,7 @@ def test_semdedup_subsplit_path_replays_in_oracle(spark, tmp_path):
     con = duckdb.connect()
     art = con.execute(
         f"SELECT max(sub), count(*) FROM read_parquet("
-        f"'{ANN_ROOT}/semdedup-current/assign/*.parquet')"
+        f"'{cache.ROOT}/semdedup-current/assign/*.parquet')"
     ).fetchone()
     assert art[1] == 450
     # sub > 0 holds because the hot cell captures ~1/7 of the 150
@@ -2553,7 +2563,7 @@ def test_clusters_incremental_skewed_mega_cluster(spark, tmp_path):
     # (c) the ingest pair plan under skew: base band index streams
     # map-side through the broadcast gate, never shuffled
     art = cache.path(
-        "clinc-incr", "v2", cache.fingerprint(str(d), ("documents",)))
+        "clinc-incr", "v3", cache.fingerprint(str(d), ("documents",)))
     pairs = L.minhash_incr_pairs(
         spark, art, L.minhash_batch_sig_path(art))
     plan = pairs._jdf.queryExecution().executedPlan().toString()
@@ -2587,8 +2597,8 @@ def test_dedup_incremental_persisted_index_planted_and_replay(
     import duckdb
     import numpy as np
 
-    from etl_backend_spark.ann.index import ANN_ROOT
     from etl_backend_spark.registry import ORACLES, QUERIES
+    from etl_backend_spark.sources import cache
 
     def is_batch(i):
         h = hashlib.md5(f"split:{i}".encode()).hexdigest()[:8]
@@ -2630,7 +2640,7 @@ def test_dedup_incremental_persisted_index_planted_and_replay(
     assert w2 not in {i for i, _ in got} and w1 in {i for i, _ in got}
 
     # the persisted index: one row per base doc
-    art = os.path.realpath(os.path.join(ANN_ROOT, "exact-incr-current"))
+    art = os.path.realpath(os.path.join(cache.ROOT, "exact-incr-current"))
     import pyarrow.parquet as pq
     from etl_backend_spark.sources.catalog import parquet_part_files
     n_idx = sum(pq.ParquetFile(f).metadata.num_rows
@@ -2685,9 +2695,9 @@ def test_incremental_ingest_shuffle_fallback_plans(spark, tmp_path,
                          QUERIES["dedup_incremental"](
                              spark, str(d)).collect()))
     mh_art = cache.path(
-        "mhlsh-incr", "v2", cache.fingerprint(str(d), ("documents",)))
+        "mhlsh-incr", "v3", cache.fingerprint(str(d), ("documents",)))
     ex_art = cache.path(
-        "exact-incr", "v2", cache.fingerprint(str(d), ("documents",)))
+        "exact-incr", "v3", cache.fingerprint(str(d), ("documents",)))
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -2807,7 +2817,7 @@ def test_minhash_band_index_kb_pruning(spark, tmp_path):
     full = QUERIES["dedup_minhash_incremental"](spark, str(d))
     full_rows = {tuple(r) for r in full.collect()}
     art = cache.path(
-        "mhlsh-incr", "v2", cache.fingerprint(str(d), ("documents",)))
+        "mhlsh-incr", "v3", cache.fingerprint(str(d), ("documents",)))
 
     # (a) hive layout by kb, bucket count recorded in the staged
     # sidecar (r15: size-adaptive — a 300-doc corpus gets the floor)
@@ -3119,14 +3129,14 @@ def test_minhash_ingest_reads_absent_batch_partition_as_empty(
     fp = cache.fingerprint(str(d), ("documents",))
 
     QUERIES["dedup_minhash_incremental"](spark, str(d)).collect()
-    art = cache.path("mhlsh-incr", "v2", fp)
+    art = cache.path("mhlsh-incr", "v3", fp)
     shutil.rmtree(L.minhash_batch_sig_path(art))
     assert not os.path.exists(L.minhash_batch_sig_path(art))
     pairs = L.minhash_incr_pairs(spark, art, L.minhash_batch_sig_path(art))
     assert pairs.count() == 0
 
     QUERIES["dedup_clusters_incremental"](spark, str(d)).collect()
-    art = cache.path("clinc-incr", "v2", fp)
+    art = cache.path("clinc-incr", "v3", fp)
     shutil.rmtree(L.minhash_batch_sig_path(art))
     rows = L.clusters_incr_update(spark, art).collect()
     assert [r for r in rows if r.kind == "batch_doc"] == []
