@@ -28,6 +28,14 @@ def latest_per_group(df: DataFrame, group: str, order: list[Column],
     )
 
 
+def top_per_query(df: DataFrame, score: str, k: int) -> DataFrame:
+    """The similarity family's top-k: rows ranked 1..k (column ``rn``)
+    per ``q_id`` under the (``score`` desc, ``vec_id`` asc) total order."""
+    w = Window.partitionBy("q_id").orderBy(F.col(score).desc(),
+                                           F.col("vec_id").asc())
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+
+
 def rank_topk(df: DataFrame, group: str, order: list[Column], k: int,
               rank_col: str = "rnk") -> DataFrame:
     """rank() top-k per group — extension beyond the reference (absent there,

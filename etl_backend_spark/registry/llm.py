@@ -17,6 +17,7 @@ from ..functions import hashing as H
 from ..functions import text as T
 from ..functions import vectors as V
 from ..functions.semdedup import EPS as _SEMDEDUP_EPS
+from ..operators.windows import top_per_query
 from ..sources import cache
 from ..sources.catalog import Catalog, parquet_num_rows, query_vectors
 from . import _md5_hex64_sql, register
@@ -367,8 +368,6 @@ def q_sim_topk_brute(spark, sf_dir):
     per query with a window. The exact baseline the LSH/IVF paths are
     recall-checked against. Ordering uses the rounded score (+vec_id tie) so
     ranking is stable across engines' float accumulation."""
-    from pyspark.sql import Window
-
     e = Catalog(spark, sf_dir).table("embeddings")
     corpus = e.select("vec_id", V.as_double(F.col("embedding")).alias("v"))
     queries = (
@@ -384,12 +383,8 @@ def q_sim_topk_brute(spark, sf_dir):
             F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("q_id", "vec_id", "cos_sim")
-    )
+    return top_per_query(scored, "cos_sim", 10).select(
+        "q_id", "vec_id", "cos_sim")
 
 
 @register(
@@ -876,8 +871,6 @@ def q_sim_topk_lsh(spark, sf_dir):
     neighbors (9 equi-join keys), scores only candidates, window top-k.
     Deterministic (hence oracle-checkable); recall vs ``sim_topk_brute`` is
     pytest-checked. At 100 TB the probe join shuffles only by bucket key."""
-    from pyspark.sql import Window
-
     e = Catalog(spark, sf_dir).table("embeddings")
     # two-step projection — materialize the cast once (r14, see
     # q_dedup_embedding); values bit-identical
@@ -899,12 +892,8 @@ def q_sim_topk_lsh(spark, sf_dir):
             F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("q_id", "vec_id", "cos_sim")
-    )
+    return top_per_query(scored, "cos_sim", 10).select(
+        "q_id", "vec_id", "cos_sim")
 
 
 @register("sim_topk_pandas")  # rows-only: pairwise float summation differs
@@ -920,8 +909,6 @@ def q_sim_topk_pandas(spark, sf_dir):
     pytest-checked. The 5 query vectors come from a driver-side pyarrow
     read (catalog.query_vectors), so building the plan starts no Spark
     job and the corpus is scanned once."""
-    from pyspark.sql import Window
-
     e = Catalog(spark, sf_dir).table("embeddings")
     # RAW float32 column into the Arrow scan (r15): the kernel widens to
     # float64 itself (exact), so the JVM cast pass disappears and the
@@ -939,23 +926,8 @@ def q_sim_topk_pandas(spark, sf_dir):
     )
     # global re-rank under the SAME total order as the local selection
     # (raw cos, vec_id tiebreak); round only for output
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(),
-                                           F.col("vec_id").asc())
-    return (
-        local_topk.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("q_id", "vec_id", F.round(F.col("cos"), 6).alias("cos_sim"))
-    )
-
-
-# IVF coarse-quantizer fit contract at scale: KMeans NEVER sees the full
-# corpus. The fit input is a deterministic seeded sample capped at
-# _IVF_FIT_CAP vectors (k-means centroid quality saturates at a few
-# hundred points per centroid; 4096 for k=8 is ~512/centroid); the fit
-# products persist as the assign/probes artifacts (fingerprint-keyed per
-# corpus), so repeated invocations — in-process or across sessions —
-# skip the fit and read the artifacts.
-_IVF_FIT_CAP = 4096
+    return top_per_query(local_topk, "cos", 10).select(
+        "q_id", "vec_id", F.round(F.col("cos"), 6).alias("cos_sim"))
 
 
 # Assignment-artifact replay oracle (r11, VERDICT r10 #5): the engine
@@ -1004,8 +976,8 @@ def q_sim_topk_ivf(spark, sf_dir):
     pytest-checked.
 
     At-scale fit contract: the quantizer fits on a seeded sample of at most
-    ``_IVF_FIT_CAP`` vectors (never the full corpus — a 100 TB corpus fits
-    its coarse quantizer on a sample once and persists it). VALUE-GATED
+    ``ann.index.FIT_CAP`` vectors (never the full corpus — a 100 TB corpus
+    fits its coarse quantizer on a sample once and persists it). VALUE-GATED
     since r11: the fitted assignment persists as the inverted-list
     artifact (vec_id, centroid) plus a probes artifact (q_id, centroid),
     the engine scores from the persisted assignment, and the DuckDB
@@ -1016,10 +988,7 @@ def q_sim_topk_ivf(spark, sf_dir):
 
     import numpy as np
 
-    from pyspark.sql import Window
-
     from ..ann import index as ann_index
-    from ..ann.index import _write_small_parquet
 
     e = Catalog(spark, sf_dir).table("embeddings")
     corpus = e.select("vec_id", V.as_double(F.col("embedding")).alias("v"))
@@ -1032,17 +1001,11 @@ def q_sim_topk_ivf(spark, sf_dir):
 
         feat = e.select(
             "vec_id", array_to_vector(F.col("embedding")).alias("features"))
-        n = parquet_num_rows(sf_dir, "embeddings")  # footer read, no Spark job
-        fit_input = feat.select("features")
-        if n > _IVF_FIT_CAP:
-            # seeded Bernoulli sample; 1.1x headroom so the realized draw
-            # almost surely reaches the cap's centroid-quality target
-            fit_input = fit_input.sample(
-                fraction=min(1.0, 1.1 * _IVF_FIT_CAP / n), seed=42
-            )
         km = KMeans(k=8, seed=42, maxIter=10, featuresCol="features",
                     predictionCol="centroid")
-        model = km.fit(fit_input)
+        model = km.fit(ann_index.fit_sample(
+            feat.select("features"),
+            parquet_num_rows(sf_dir, "embeddings")))  # footer, no Spark job
         (
             model.transform(feat).select("vec_id", "centroid")
             .write.mode("overwrite")
@@ -1055,13 +1018,13 @@ def q_sim_topk_ivf(spark, sf_dir):
             dists = [float(np.linalg.norm(qv - c)) for c in centroids]
             for cid in np.argsort(dists)[:2]:
                 rows.append((int(q_id), int(cid)))
-        _write_small_parquet(
+        ann_index._write_small_parquet(
             os.path.join(b, "probes"),
             pd.DataFrame(rows, columns=["q_id", "centroid"]),
         )
 
     d, _ = cache.build(
-        "ivf", "v2", cache.fingerprint(sf_dir, ("embeddings",)), build)
+        "ivf", "v3", cache.fingerprint(sf_dir, ("embeddings",)), build)
     ann_index.point_current("ivf", d)
 
     assign = spark.read.parquet(os.path.join(d, "assign"))
@@ -1080,21 +1043,8 @@ def q_sim_topk_ivf(spark, sf_dir):
             F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("q_id", "vec_id", "cos_sim")
-    )
-
-
-# PQ fit contract at scale: identical to IVF — codebooks fit on a bounded
-# seeded sample (k-means quality saturates at a few hundred points per
-# centroid) and memoized per corpus content fingerprint; at 100 TB the
-# codebooks are a ~KB artifact persisted next to the index and broadcast
-# to every encoder.
-_PQ_FIT_CAP = 4096
+    return top_per_query(scored, "cos_sim", 10).select(
+        "q_id", "vec_id", "cos_sim")
 
 
 @register("sim_topk_pq")  # rows-only: k-means codebooks are seed-stable in
@@ -1115,32 +1065,18 @@ def q_sim_topk_pq(spark, sf_dir):
     or query broadcast is needed (pytest-asserted partition-independence
     and plan shape). The persisted-index path (ann/index._rerank_topk)
     keeps its rerank join: its scan reads stored codes, not raw vectors.
-    Recall vs ``sim_topk_brute`` is pytest-asserted. The one collect is
-    the bounded fit sample (<=4096, memoized per corpus); the 5 query
-    vectors come from a driver-side pyarrow read (catalog.query_vectors),
-    so a warm build starts no Spark job."""
+    Recall vs ``sim_topk_brute`` is pytest-asserted. The codebooks are
+    the ``pq-books`` record (ann/index.pq_codebooks: the bounded fit
+    sample, built once per corpus and shared with the persisted index);
+    the 5 query vectors come from a driver-side pyarrow read
+    (catalog.query_vectors), so a warm build starts no Spark job."""
     import numpy as np
 
-    from pyspark.sql import Window
-
+    from ..ann import index as ann_index
     from ..functions import pq
 
     e = Catalog(spark, sf_dir).table("embeddings")
-    n = parquet_num_rows(sf_dir, "embeddings")  # footer read, no Spark job
-
-    def fit():
-        fit_df = e.select("embedding")
-        if n > _PQ_FIT_CAP:
-            fit_df = fit_df.sample(fraction=min(1.0, 1.1 * _PQ_FIT_CAP / n),
-                                   seed=42).limit(_PQ_FIT_CAP)
-        # Arrow toPandas + in-driver normalize: same rows, same driver
-        # order, same doubles as the collected JVM-normalized form
-        sample = V.l2_normalize_np_seq(
-            np.stack(fit_df.toPandas()["embedding"].to_numpy()))
-        return pq.fit_codebooks(sample, m=8, k=16, iters=10, seed=42)
-
-    books = cache.memo(
-        "pq-books", cache.fingerprint(sf_dir, ("embeddings",)), fit)
+    books = ann_index.pq_codebooks(spark, sf_dir)
 
     # the RAW query vectors (exact float32 widening): the kernel builds the
     # ADC tables from their normalized form and reranks against them as is
@@ -1150,23 +1086,16 @@ def q_sim_topk_pq(spark, sf_dir):
 
     id_map = F.array(*[F.lit(q) for q in q_ids])
     local_topk = e.select("vec_id", "embedding").mapInPandas(
-        pq.encode_topk_scan_pandas(books, qmat, k=64, exclude_ids=q_ids),
+        pq.encode_topk_scan_pandas(books, qmat, k=ann_index.SHORTLIST,
+                                   exclude_ids=q_ids),
         schema="qi int, vec_id long, adc double, cos double",
     ).select(
         F.element_at(id_map, F.col("qi") + 1).alias("q_id"), "vec_id", "adc",
         F.round("cos", 6).alias("cos_sim"),
     )
-    w_adc = Window.partitionBy("q_id").orderBy(F.col("adc").desc(),
-                                               F.col("vec_id").asc())
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(),
-                                           F.col("vec_id").asc())
-    return (
-        local_topk.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= 64)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("q_id", "vec_id", "cos_sim")
-    )
+    shortlist = top_per_query(local_topk, "adc", ann_index.SHORTLIST)
+    return top_per_query(shortlist, "cos_sim", ann_index.TOPK).select(
+        "q_id", "vec_id", "cos_sim")
 
 
 def _coarse_groups(n_rows: int) -> int:
@@ -2468,8 +2397,6 @@ def q_semantic_search(spark, sf_dir):
     in sim_topk_lsh/ivf for the bucketed path at scale); the doc join is an
     equi-join on the id, so at 100 TB only the k x |queries| hit rows fetch
     text."""
-    from pyspark.sql import Window
-
     e = Catalog(spark, sf_dir).table("embeddings")
     d = Catalog(spark, sf_dir).table("documents")
     corpus = e.select("vec_id", V.as_double(F.col("embedding")).alias("v"))
@@ -2485,12 +2412,8 @@ def q_semantic_search(spark, sf_dir):
             F.round(V.cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    topk = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "vec_id", "cos_sim")
-    )
+    topk = top_per_query(scored, "cos_sim", 5).select(
+        "q_id", "vec_id", "cos_sim")
     return topk.join(d, topk["vec_id"] == d["doc_id"]).select(
         "q_id", "vec_id", "cos_sim", "source",
         F.substring("text", 1, 40).alias("snippet"),
@@ -2874,12 +2797,13 @@ def _ivfpq_replay_oracle(kind: str) -> str:
 @register("sim_topk_pq_indexed", oracle=_PQ_REPLAY_ORACLE)
 def q_sim_topk_pq_indexed(spark, sf_dir):
     """ANN top-k from the PERSISTED PQ index (ann/index.py): the build
-    step (sampled fit + distributed encode -> codes parquet + codebook
-    sidecar) runs ONCE per corpus and the query path scans only the
-    ~64x-smaller codes table — the FAISS-style build/query split
+    step (distributed encode with the shared ``pq-books`` codebooks ->
+    codes parquet + the query set's ``adc_w`` lookup tables) runs ONCE
+    per corpus and the query path scans only the ~64x-smaller codes
+    table, writing nothing — the FAISS-style build/query split
     sim_topk_pq inlines. Results are bit-identical to the ad-hoc form
-    (same seeds, same total order — pytest-asserted), so this row proves
-    the artifact round-trip: fit -> persist -> load -> scan.
+    (same codebooks, same total order — pytest-asserted), so this row
+    proves the artifact round-trip: encode -> persist -> load -> scan.
 
     VALUE-GATED since r10: the oracle replays the ADC scan from the
     persisted artifacts (_PQ_REPLAY_ORACLE above) — index dirs are
@@ -2888,7 +2812,7 @@ def q_sim_topk_pq_indexed(spark, sf_dir):
     from ..ann import index as ann_index
 
     d, _ = cache.build(
-        "pq", "v2", cache.fingerprint(sf_dir, ("embeddings",)),
+        "pq", "v3", cache.fingerprint(sf_dir, ("embeddings",)),
         lambda b: ann_index.build_pq_index(spark, sf_dir, b))
     out = ann_index.query_pq_index(spark, sf_dir, d)
     ann_index.point_current("pq", d)
@@ -2916,7 +2840,7 @@ def q_sim_topk_ivfpq(spark, sf_dir):
     from ..ann import index as ann_index
 
     d, _ = cache.build(
-        "ivfpq", "v2", cache.fingerprint(sf_dir, ("embeddings",)),
+        "ivfpq", "v3", cache.fingerprint(sf_dir, ("embeddings",)),
         lambda b: ann_index.build_ivfpq_index(spark, sf_dir, b))
     out = ann_index.query_ivfpq_index(spark, sf_dir, d)
     ann_index.point_current("ivfpq", d)
@@ -2954,7 +2878,7 @@ def q_sim_index_incremental(spark, sf_dir):
         )
 
     d, _ = cache.build(
-        "ivfpq-incr", "v2", cache.fingerprint(sf_dir, ("embeddings",)), build)
+        "ivfpq-incr", "v3", cache.fingerprint(sf_dir, ("embeddings",)), build)
     out = ann_index.query_ivfpq_index(spark, sf_dir, d)
     ann_index.point_current("ivfpq-incr", d)
     return out

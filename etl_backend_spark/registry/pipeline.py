@@ -1556,7 +1556,7 @@ def q_tokenize_bpe(spark, sf_dir):
     an Arrow-batched UDF whose per-batch memoization tokenizes each
     DISTINCT word once. Output (doc_id, n_words, n_tokens) is
     integer-exact; n_tokens < n_chars and > n_words by construction.
-    functions/bpe.py; merge list cached per corpus fingerprint.
+    functions/bpe.py; the merge list is a record built once per corpus.
 
     VALUE-GATED since r12: the merge table persists as a 32-row
     artifact and the DuckDB oracle (_BPE_REPLAY_ORACLE above) replays
@@ -1568,25 +1568,29 @@ def q_tokenize_bpe(spark, sf_dir):
     import os
 
     import pandas as pd
+    import pyarrow.parquet as papq
 
     from ..ann import index as ann_index
     from ..functions import bpe
 
     d = Catalog(spark, sf_dir).table("documents")
-    fp = cache.fingerprint(sf_dir, ("documents",))
-    merges = cache.memo("bpe", fp, lambda: bpe.train_merges(
-        bpe.word_freq_table(d), n_merges=32))
 
-    art, _ = cache.build(
-        "bpe", "v3", fp,
-        lambda out: ann_index._write_small_parquet(
+    def build(out):
+        merges = bpe.train_merges(bpe.word_freq_table(d), n_merges=32)
+        ann_index._write_small_parquet(
             os.path.join(out, "merges"),
             pd.DataFrame({
                 "rank": range(1, len(merges) + 1),
                 "a": [a for a, _ in merges],
                 "b": [b for _, b in merges],
-            })))
+            }))
+
+    art, _ = cache.build(
+        "bpe", "v3", cache.fingerprint(sf_dir, ("documents",)), build)
     ann_index.point_current("bpe", art)
+    # tokenize with the published record, the table the oracle replays
+    m = papq.read_table(os.path.join(art, "merges")).sort_by("rank")
+    merges = list(zip(m.column("a").to_pylist(), m.column("b").to_pylist()))
 
     words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     return d.select(
@@ -1682,7 +1686,7 @@ def q_tokenize_unigram(spark, sf_dir):
     Output (doc_id, n_words, n_pieces) is integer-exact; BPE and unigram
     bracket the two families of production subword tokenizers — merges
     built bottom-up vs an inventory pruned top-down.
-    functions/unigram.py; vocab cached per corpus fingerprint.
+    functions/unigram.py; the vocab is a record built once per corpus.
 
     VALUE-GATED since r12: the fitted piece log-probs persist as a
     ~256-row artifact and the DuckDB oracle (_UNIGRAM_REPLAY_ORACLE
@@ -1694,21 +1698,25 @@ def q_tokenize_unigram(spark, sf_dir):
     import os
 
     import pandas as pd
+    import pyarrow.parquet as papq
 
     from ..ann import index as ann_index
     from ..functions import bpe, unigram
 
     d = Catalog(spark, sf_dir).table("documents")
-    fp = cache.fingerprint(sf_dir, ("documents",))
-    logp = cache.memo("unigram", fp, lambda: unigram.train_unigram(
-        bpe.word_freq_table(d)))
+
+    def build(out):
+        logp = unigram.train_unigram(bpe.word_freq_table(d))
+        ann_index._write_small_parquet(
+            os.path.join(out, "vocab"),
+            pd.DataFrame({"piece": list(logp), "lp": list(logp.values())}))
 
     art, _ = cache.build(
-        "unigram", "v3", fp,
-        lambda out: ann_index._write_small_parquet(
-            os.path.join(out, "vocab"),
-            pd.DataFrame({"piece": list(logp), "lp": list(logp.values())})))
+        "unigram", "v3", cache.fingerprint(sf_dir, ("documents",)), build)
     ann_index.point_current("unigram", art)
+    # tokenize with the published record, the vocab the oracle replays
+    v = papq.read_table(os.path.join(art, "vocab"))
+    logp = dict(zip(v.column("piece").to_pylist(), v.column("lp").to_pylist()))
 
     words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     return d.select(

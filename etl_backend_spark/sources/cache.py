@@ -17,12 +17,8 @@ built once per source content and found again by the same key.
   copy (content is deterministic, so either copy is correct). Every
   build-once record goes through ``build``: layouts, indexes, fitted
   models and the decision records the DuckDB oracles replay through a
-  ``<kind>-current`` link (``ann.index.point_current``). The one write
-  into a published directory is the per-query ``adc_w``/``probes``
-  tables of the persisted PQ and IVF-PQ index queries.
-- **Memo:** ``memo(kind, fp, fn)`` keeps a driver-side value (fitted
-  codebooks, vocabularies) per key for the life of the
-  process.
+  ``<kind>-current`` link (``ann.index.point_current``). Nothing writes
+  into a published directory.
 """
 
 from __future__ import annotations
@@ -35,8 +31,6 @@ import tempfile
 from collections.abc import Callable
 
 ROOT = os.path.join(tempfile.gettempdir(), f"etlbs-u{os.getuid()}")
-
-_MEMO: dict = {}
 
 
 def fingerprint(sf_dir: str, tables) -> str:
@@ -93,11 +87,3 @@ def build(kind: str, version: str, fp: str,
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
     return out, True
-
-
-def memo(kind: str, fp: str, fn: Callable[[], object]):
-    """``fn()`` computed once per (kind, fp) in this process."""
-    key = (kind, fp)
-    if key not in _MEMO:
-        _MEMO[key] = fn()
-    return _MEMO[key]

@@ -1036,7 +1036,7 @@ def test_sim_topk_builders_start_no_spark_job(spark):
 
     sc = spark.sparkContext
     for name in ("sim_topk_pandas", "sim_topk_pq"):
-        QUERIES[name](spark, SF_DIR)  # warm: sim_topk_pq memoizes its fit
+        QUERIES[name](spark, SF_DIR)  # warm: sim_topk_pq publishes its fit
         group = f"test-build-{name}"
         sc.setJobGroup(group, group)
         try:
@@ -1145,6 +1145,9 @@ def test_index_dir_rekeys_on_corpus_change(tmp_path, monkeypatch):
     ("quality_classifier_lr", "qlr"),
     ("tokenize_bpe", "bpe"),
     ("tokenize_unigram", "unigram"),
+    ("sim_topk_pq_indexed", "pq"),
+    ("sim_topk_ivfpq", "ivfpq"),
+    ("sim_index_incremental", "ivfpq-incr"),
 ])
 def test_second_call_reuses_published_record(spark, monkeypatch, key, kind):
     """A persisted record is keyed on its source fingerprint, so it is
@@ -1179,6 +1182,34 @@ def test_second_call_reuses_published_record(spark, monkeypatch, key, kind):
     QUERIES[key](spark, SF_DIR).collect()
     assert (kind, False) in calls and (kind, True) not in calls, calls
     assert before and listing(published) == before
+
+
+def test_fitted_values_come_from_published_records(spark, monkeypatch):
+    """The fitted values (PQ codebooks, BPE merges, unigram vocab) live
+    in their published records, not in process state: with the old
+    in-process memo cleared and every fit patched to raise, a second
+    call reads the records back and returns the same rows."""
+    from etl_backend_spark.functions import bpe, pq, unigram
+    from etl_backend_spark.registry import QUERIES
+    from etl_backend_spark.sources import cache
+    from tests.conftest import SF_DIR
+
+    keys = ("sim_topk_pq", "tokenize_bpe", "tokenize_unigram")
+
+    def rows(key):
+        return sorted(map(tuple, QUERIES[key](spark, SF_DIR).collect()))
+
+    first = {k: rows(k) for k in keys}
+
+    def no_fit(*args, **kwargs):
+        raise AssertionError("refit although the record is published")
+
+    monkeypatch.setattr(cache, "_MEMO", {}, raising=False)
+    monkeypatch.setattr(pq, "fit_codebooks", no_fit)
+    monkeypatch.setattr(bpe, "train_merges", no_fit)
+    monkeypatch.setattr(unigram, "train_unigram", no_fit)
+    for k in keys:
+        assert first[k] and rows(k) == first[k], k
 
 
 def test_min_label_components_long_chain_converges_logarithmically(spark):
@@ -1230,8 +1261,7 @@ def test_sim_topk_ivfpq_recall_and_partition_pruning(spark):
 
     from etl_backend_spark.sources import cache
 
-    d = cache.path("ivfpq", "v2",
-                   cache.fingerprint(SF_DIR, ("embeddings",)))
+    d = os.path.join(cache.ROOT, "ivfpq-current")
     assert os.path.exists(os.path.join(d, "ivfpq.json"))
     plan = got_df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell" in plan, plan
@@ -2120,12 +2150,16 @@ def test_unigram_tokenizer_semantics_and_apply(spark):
     out = {r.doc_id: (r.n_words, r.n_pieces)
            for r in QUERIES["tokenize_unigram"](spark, SF_DIR).collect()}
     assert len(out) == 500
-    # replay a sample locally with the SAME cached vocab
+    # replay a sample locally with the vocab record the query published
+    import os
+
+    import pyarrow.parquet as papq
+
     from etl_backend_spark.sources import cache
 
-    vocab = cache.memo(
-        "unigram", cache.fingerprint(SF_DIR, ("documents",)),
-        lambda: pytest.fail("tokenize_unigram did not memoize its vocab"))
+    v = papq.read_table(os.path.join(cache.ROOT, "unigram-current", "vocab"))
+    vocab = dict(zip(v.column("piece").to_pylist(),
+                     v.column("lp").to_pylist()))
     docs = {r.doc_id: r.text for r in
             spark.read.parquet(f"{SF_DIR}/documents.parquet")
             .filter(F.col("doc_id") < 20).collect()}
@@ -2796,6 +2830,7 @@ def test_minhash_band_index_kb_pruning(spark, tmp_path):
     result == full-batch result restricted to the tiny docs); (d) the
     ingest leaves every base index file byte-identical."""
     import os
+    import re
 
     import numpy as np
 
@@ -2848,10 +2883,32 @@ def test_minhash_band_index_kb_pruning(spark, tmp_path):
     batch_sig.filter(F.col("doc_id").isin(tiny_ids)).write.parquet(
         tiny_path)
 
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    last = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
     tiny = L.minhash_incr_pairs(spark, art, tiny_path)
-    plan = tiny._jdf.queryExecution().executedPlan().toString()
-    # (b) the bands scan is partition-filtered on kb and prunes dirs
-    assert "PartitionFilters" in plan and "kb" in plan
+    # (b) the band-index scan of the candidate job (the returned plan
+    # holds the candidates only as a checkpoint) is partition-filtered
+    # on kb and reads fewer kb= directories than exist: read from the
+    # executed scan's SQL metrics
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    kb_filter = re.compile(r"PartitionFilters: \[[^\]]*\bkb#\d+ IN \(")
+    reads = []
+    execs = store.executionsList()
+    for i in reversed(range(execs.size())):
+        eid = execs.apply(i).executionId()
+        if eid <= last:
+            break
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for node in (nodes.apply(j) for j in range(nodes.size())):
+            if kb_filter.search(node.desc()):
+                ms = node.metrics()
+                reads += [
+                    int(values.apply(m.accumulatorId()).replace(",", ""))
+                    for m in (ms.apply(k) for k in range(ms.size()))
+                    if m.name() == "number of partitions read"]
+    assert reads and all(0 < r < len(kb_dirs) for r in reads), reads
     tiny_rows = {tuple(r) for r in tiny.collect()}
 
     # (c) rows unchanged by pruning: tiny == full restricted to tiny
@@ -3059,11 +3116,11 @@ def test_clusters_incremental_matches_independent_unionfind(
 
 
 def test_sim_topk_pq_refits_after_in_place_rewrite(spark, tmp_path):
-    """The PQ codebook memo is keyed on the corpus CONTENT: rewriting
+    """The PQ codebook record is keyed on the corpus CONTENT: rewriting
     embeddings.parquet in place (same path, same row count, different
     vectors) must refit, so the second run equals a run over a fresh
-    copy of the rewritten corpus — a path-keyed memo would keep scoring
-    with the old corpus' codebooks."""
+    copy of the rewritten corpus — a path-keyed record would keep
+    scoring with the old corpus' codebooks."""
     import os
     import shutil
 

@@ -177,16 +177,6 @@ def test_window_rolling_range_salted_matches_and_splits_key(spark):
     assert a == b and len(a) > 0
 
 
-def test_bench_and_sweep_lists_reference_registered_keys():
-    """A typo in the headline list (tests/test_operators.py) must fail
-    HERE, not silently skip a query from its plan check."""
-    from etl_backend_spark.registry import QUERIES
-    from tests.test_operators import HEADLINE
-
-    for name in HEADLINE:
-        assert name in QUERIES, f"HEADLINE: {name}"
-
-
 def test_first_50_sequence_equals_correctness_r05_key_list():
     """The first-50 window has been byte-stable since round 5; an import
     reorder could silently rotate it. Pin the EXACT first-50 sequence to
